@@ -71,10 +71,10 @@ object Profile {
     * `ts` µs come from `timestampdiff(MICROSECOND, epoch_ntz, ts)` on the
     * ntz value directly — NOT `unix_micros(cast(ts as timestamp))`, whose
     * ntz→ltz cast shifts by the session timezone, making partials from
-    * differently-configured writers unmergeable. Used by
-    * `CdcStream.startProfileMv` per micro-batch and merged on read by
-    * `profileView`; the partial of the WHOLE table is also the batch
-    * truth the replay test compares against. */
+    * differently-configured writers unmergeable. Used by the streaming
+    * profile MV (`Mergeable.profile`) per micro-batch and merged on read
+    * by `CdcStream.mergedView`; the partial of the WHOLE table is also
+    * the batch truth the replay test compares against. */
   def eventsProfilePartial(frame: DataFrame): DataFrame = {
     val nullL = lit(null).cast("long")
     val nullD = lit(null).cast("double")

@@ -39,7 +39,7 @@ object Sketches {
     * across partials by cell-wise addition (which is also why the
     * build is just a count aggregate: Spark's partial/final split IS
     * the sketch merge). Shared by [[cmsTopTerms]] and the streaming MV
-    * ([[graft.streaming.CdcStream.startCmsMv]]) so batch and stream
+    * ([[graft.streaming.Mergeable.cms]]) so batch and stream
     * cannot drift. */
   def cmsCounters(df: DataFrame, key: Column, groupCols: Seq[String],
                   depth: Int = 4, width: Int = 1024): DataFrame =
@@ -133,7 +133,7 @@ object Sketches {
     * partials/shards by word-wise OR (and therefore duplicate-
     * idempotent: re-adding a key re-ORs the same bits). Shared by
     * [[bloomContamination]] and the streaming MV
-    * ([[graft.streaming.CdcStream.startBloomMv]]).
+    * ([[graft.streaming.Mergeable.bloom]]).
     *
     * One METADATA row (word_idx = -1, bits = mWords) rides along so
     * [[bloomProbe]] can reject a geometry mismatch in BOTH directions

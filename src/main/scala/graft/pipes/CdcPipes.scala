@@ -396,7 +396,7 @@ object CdcPipes {
     * distinct absorbs redelivered partials (KMV partials are
     * duplicate-idempotent — the k smallest of a union are unchanged by
     * repeated elements), then the estimator re-ranks. The read view of
-    * the streaming KMV MV ([[graft.streaming.CdcStream.startKmvMv]]),
+    * the streaming KMV MV ([[graft.streaming.Mergeable.kmv]]),
     * and the batch half of its replay==batch spec. */
   private[graft] def kmvMergeEstimate(kept: DataFrame, k: Int = 64): DataFrame =
     kmvEstimate(kept.distinct(), col("time_interval"), k)

@@ -521,12 +521,14 @@ object TpchPipes {
     * (multi-supplier: EXISTS) but no OTHER supplier returned theirs
     * (sole blame: NOT EXISTS).
     *
-    * Decorrelated the way the optimizer should run it at scale: one
-    * LEFT SEMI and one LEFT ANTI join, both hash equi-joins on
-    * orderkey with the supplier inequality as a residual — the fact
-    * table ships only (orderkey, suppkey) into each exchange, every
-    * l1 row emitted at most once, no distinct step, no window. The
-    * supplier name attaches after both correlations shrink the frame. */
+    * Decorrelated into ONE left-semi join on orderkey: both
+    * correlations become predicates on a per-order aggregate (at least
+    * two suppliers, exactly one of them with a returned line), built in
+    * two levels — first to the distinct (orderkey, suppkey) grain, then
+    * per order — so it plans with no Expand and no window. The fact
+    * table ships only (orderkey, suppkey, returnflag) into the
+    * aggregate's exchange, every l1 row is emitted at most once, and
+    * the supplier name attaches after the semi join shrinks the frame. */
   def q21WaitingSuppliers(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
       .select("l_orderkey", "l_suppkey", "l_returnflag")
@@ -550,6 +552,9 @@ object TpchPipes {
     // no Expand, half the shuffled rows — then counts suppliers per
     // order on the already-tiny frame: count(*) == countDistinct(supp)
     // and sum(has_r) == countDistinct(case R then supp) by construction.
+    // The first identity needs l_suppkey non-null (countDistinct skips
+    // nulls, count(lit(1)) would count a null-supplier group); it holds
+    // because TPC-H declares l_suppkey NOT NULL.
     val ord = li.groupBy("l_orderkey", "l_suppkey")
       .agg(max(when(col("l_returnflag") === "R", 1).otherwise(0)).as("__r"))
       .groupBy("l_orderkey")

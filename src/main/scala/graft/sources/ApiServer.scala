@@ -72,6 +72,12 @@ final class ApiServer(spark: SparkSession, sfDir: String,
   private def pipeNames: Seq[String] =
     (graft.SparkEntry.queries.keys ++ dynamicPipes.keys).toSeq.sorted
 
+  // without an executor the JDK server handles requests on its
+  // dispatch thread — one slow query would serialize every client.
+  // A small pool matches the dashboard concurrency the reference
+  // serves; SparkSession is thread-safe for concurrent actions.
+  private[graft] val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+
   private val server: HttpServer = {
     val s = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     s.createContext("/v0/pipes", (ex: HttpExchange) => handle(ex))
@@ -80,21 +86,20 @@ final class ApiServer(spark: SparkSession, sfDir: String,
     s.createContext("/v0/datasources", (ex: HttpExchange) => handleDatasources(ex))
     s.createContext("/v0/dedup_artifacts",
       (ex: HttpExchange) => handleDedupArtifacts(ex))
-    // without an executor the JDK server handles requests on its
-    // dispatch thread — one slow query would serialize every client.
-    // A small pool matches the dashboard concurrency the reference
-    // serves; SparkSession is thread-safe for concurrent actions.
-    s.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+    s.setExecutor(pool)
     s
   }
 
   def start(): Int = { server.start(); server.getAddress.getPort }
+
+  /** Drain, then tear down: the server stops accepting and waits for
+    * in-flight exchanges to answer, the pool finishes its handlers, and
+    * only then are the serving views those handlers read dropped. Each
+    * wait is bounded by `ApiServer.DrainSeconds`. */
   def stop(): Unit = {
-    server.stop(0)
-    server.getExecutor match {
-      case es: java.util.concurrent.ExecutorService => es.shutdown()
-      case _ => ()
-    }
+    server.stop(ApiServer.DrainSeconds)
+    pool.shutdown()
+    pool.awaitTermination(ApiServer.DrainSeconds, java.util.concurrent.TimeUnit.SECONDS)
     if (viewsBuilt)
       servingViews.foreach(n =>
         spark.catalog.dropGlobalTempView(s"graft_serving_${viewTag}_$n"))
@@ -651,6 +656,9 @@ object ApiServer {
   private val TokenRe = """TOKEN\s+"([^"]+)"\s+READ""".r
 
   private val tagCounter = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** How long `stop()` lets in-flight requests finish, per wait. */
+  private val DrainSeconds = 30
 
   def tokensFromPipes(pipes: Seq[(String, String)]): Map[String, Set[String]] =
     pipes.flatMap { case (pipeName, text) =>

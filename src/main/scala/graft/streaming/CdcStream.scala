@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
-import graft.operators.Dedup
+import graft.operators.{Dedup, TextDedup, VectorOps}
 
 /** The reference's ingestion + materialization path (SURVEY.md §3.2),
   * Spark-native: a raw CDC stream lands in an append-only log, a
@@ -51,25 +51,62 @@ object CdcStream {
       coalesce(col("value"), lit(0.0)).as("value"),
       get_json_object(col("props"), "$.k").cast("int").as("prop_k"))
 
-  /** Start the MV stream appending into the versioned log. With
-    * `partitioned`, the sink lays out the log MergeTree-style
-    * (ENGINE_PARTITION_KEY "toYYYYMM(...)", users_raw.datasource:17):
-    * yyyymm directories that partition-prune incremental readers. */
-  def startMv(spark: SparkSession, srcDir: String, logDir: String,
-              checkpointDir: String, partitioned: Boolean = false): StreamingQuery = {
-    val mv = materializedView(readEvents(spark, srcDir))
-    val writer =
-      if (partitioned)
-        mv.withColumn("yyyymm", graft.functions.ChFunctions.toYYYYMM(col("ts")))
-          .writeStream.partitionBy("yyyymm")
-      else mv.writeStream
-    writer
+  /** Money as integer cents: partial sums over it are exact, so they
+    * merge in any order and replay across restarts bit-identically. */
+  private[streaming] val valueCents: Column =
+    floor(coalesce(col("value"), lit(0.0)) * 100 + 0.5).cast("long")
+
+  /** The file sink of every projection-only MV: Append output (the log
+    * only grows, like MergeTree parts) under an AvailableNow trigger
+    * (drain what has arrived, then stop — each start is one incremental
+    * run over the checkpointed offsets). */
+  private def appendParquet(df: DataFrame, path: String, checkpointDir: String,
+                            partitionBy: String*): StreamingQuery =
+    df.writeStream
       .format("parquet")
-      .option("path", logDir)
+      .partitionBy(partitionBy: _*)
+      .option("path", path)
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append)
       .trigger(Trigger.AvailableNow())
       .start()
+
+  /** The `foreachBatch` sink of every MV whose write is not one append:
+    * `f` gets each micro-batch and its id. Delivery is AT-LEAST-ONCE —
+    * a crash between `f`'s writes and the checkpoint commit replays the
+    * batch id with the same rows — so every `f` says how it absorbs a
+    * replay. */
+  private def eachBatch(df: DataFrame, checkpointDir: String)
+                       (f: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
+      .foreachBatch(f)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+
+  /** Start the MV stream appending into the versioned log. With
+    * `partitioned`, the sink lays out the log MergeTree-style
+    * (ENGINE_PARTITION_KEY "toYYYYMM(...)", users_raw.datasource:17):
+    * yyyymm directories that partition-prune incremental readers.
+    *
+    * Ingestion observability rides along, the analogue of the
+    * reference's per-run ingest stats: `observe` attaches named
+    * aggregates (`ingest_stats`: rows_seen, rows_invalid, value_cents)
+    * to the stream itself, so every micro-batch reports them through
+    * `StreamingQueryProgress.observedMetrics` — no second pass over the
+    * data, no side channel (asserted in StreamingSpec against the batch
+    * truth). */
+  def startMv(spark: SparkSession, srcDir: String, logDir: String,
+              checkpointDir: String, partitioned: Boolean = false): StreamingQuery = {
+    val mv = materializedView(readEvents(spark, srcDir)
+      .observe("ingest_stats",
+        count(lit(1)).as("rows_seen"),
+        sum(when(isValid, 0L).otherwise(1L)).as("rows_invalid"),
+        sum(valueCents).as("value_cents")))
+    if (partitioned)
+      appendParquet(mv.withColumn("yyyymm", graft.functions.ChFunctions.toYYYYMM(col("ts"))),
+        logDir, checkpointDir, "yyyymm")
+    else appendParquet(mv, logDir, checkpointDir)
   }
 
   /** Stream-side exactly-once-per-key dedup MV: at-least-once delivery
@@ -88,14 +125,8 @@ object CdcStream {
   def startDedupMv(spark: SparkSession, srcDir: String, outDir: String,
                    checkpointDir: String,
                    watermarkMinutes: Int = 60): StreamingQuery =
-    dedupedStream(readEvents(spark, srcDir), watermarkMinutes)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    appendParquet(dedupedStream(readEvents(spark, srcDir), watermarkMinutes),
+      outDir, checkpointDir)
 
   /** The `documents` table shape for streaming corpus ingest. */
   val docSchema: StructType = StructType(Seq(
@@ -110,6 +141,9 @@ object CdcStream {
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
+
+  private def readDocs(spark: SparkSession, srcDir: String): DataFrame =
+    spark.readStream.schema(docSchema).parquet(srcDir)
 
   /** Streaming IVF index maintenance — the vector analogue of the
     * minhash-band MV: every arriving embedding is assigned to its
@@ -134,18 +168,10 @@ object CdcStream {
                        checkpointDir: String,
                        anchors: Seq[(Long, Array[Float])]): StreamingQuery = {
     graft.functions.GraftFunctions.register(spark)
-    spark.readStream.schema(embSchema).parquet(srcDir)
-      .select(col("vec_id"), col("label"), col("embedding"),
-        graft.operators.VectorOps.perRowListAssign(col("embedding"), anchors)
-          .as("list_id"))
-      .writeStream
-      .format("parquet")
-      .partitionBy("list_id")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    appendParquet(spark.readStream.schema(embSchema).parquet(srcDir)
+        .select(col("vec_id"), col("label"), col("embedding"),
+          VectorOps.perRowListAssign(col("embedding"), anchors).as("list_id")),
+      outDir, checkpointDir, "list_id")
   }
 
   /** Streaming dedup screening — artifact upkeep AT INGEST: every
@@ -169,20 +195,9 @@ object CdcStream {
     * per-arriving-vector, never per-corpus. */
   def startVectorScreenMv(spark: SparkSession, srcDir: String, layout: String,
                           outDir: String, checkpointDir: String,
-                          minCosine: Double = 0.4): StreamingQuery = {
-    graft.functions.GraftFunctions.register(spark)
-    spark.readStream.schema(embSchema).parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.VectorOps
-          .screenAgainstLayout(spark, batch, layout, minCosine)
-          .withColumn("__batch", lit(batchId))
-          .write.mode("append").parquet(outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                          minCosine: Double = 0.4): StreamingQuery =
+    screenMv(spark, spark.readStream.schema(embSchema).parquet(srcDir),
+      outDir, checkpointDir)(VectorOps.screenAgainstLayout(spark, _, layout, minCosine))
 
   /** Streaming dedup screening for DOCUMENTS — the text half of the
     * ingest-screen pair (the round-9 ask was "docs/vectors";
@@ -204,19 +219,20 @@ object CdcStream {
   def startDocScreenMv(spark: SparkSession, srcDir: String, art: String,
                        outDir: String, checkpointDir: String,
                        minJaccard: Double = 0.5,
-                       maxDf: Int = graft.operators.TextDedup.DefaultMaxDf): StreamingQuery = {
+                       maxDf: Int = TextDedup.DefaultMaxDf): StreamingQuery =
+    screenMv(spark, readDocs(spark, srcDir), outDir, checkpointDir)(
+      TextDedup.screenDocsAgainstArtifacts(spark, _, art, minJaccard, maxDf))
+
+  /** The screen MVs' shared body: each micro-batch's verdicts append to
+    * the verdict log stamped with the batch id (`__batch`). */
+  private def screenMv(spark: SparkSession, arrivals: DataFrame, outDir: String,
+                       checkpointDir: String)
+                      (screen: DataFrame => DataFrame): StreamingQuery = {
     graft.functions.GraftFunctions.register(spark)
-    spark.readStream.schema(docSchema).parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.TextDedup
-          .screenDocsAgainstArtifacts(spark, batch, art, minJaccard, maxDf)
-          .withColumn("__batch", lit(batchId))
-          .write.mode("append").parquet(outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(arrivals, checkpointDir) { (batch, batchId) =>
+      screen(batch).withColumn("__batch", lit(batchId))
+        .write.mode("append").parquet(outDir)
+    }
   }
 
   /** Streaming PII scrub — the privacy MV: every arriving document is
@@ -229,18 +245,12 @@ object CdcStream {
     * StreamingSpec. */
   def startScrubMv(spark: SparkSession, srcDir: String, outDir: String,
                    checkpointDir: String): StreamingQuery =
-    spark.readStream.schema(docSchema).parquet(srcDir)
-      .select(col("doc_id"),
-        graft.operators.Privacy.scrub(col("text")).as("text"),
-        graft.operators.Privacy.digitCount(col("text")).as("n_pii_digits"),
-        col("lang"), col("source"))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    appendParquet(readDocs(spark, srcDir)
+        .select(col("doc_id"),
+          graft.operators.Privacy.scrub(col("text")).as("text"),
+          graft.operators.Privacy.digitCount(col("text")).as("n_pii_digits"),
+          col("lang"), col("source")),
+      outDir, checkpointDir)
 
   /** Streaming near-dup signature maintenance — the dedup MV: each
     * arriving document's MinHash band signature is computed IN ROW
@@ -252,18 +262,16 @@ object CdcStream {
     * and the stream holds no state. */
   def startMinhashMv(spark: SparkSession, srcDir: String, bandsDir: String,
                      checkpointDir: String): StreamingQuery =
-    spark.readStream.schema(docSchema).parquet(srcDir)
+    appendParquet(bandSignatures(spark, srcDir), bandsDir, checkpointDir)
+
+  /** The arriving documents' (doc_id, band, band_hash) rows — docs of
+    * ≥ 3 words, signatures computed in row: the projection both band
+    * MVs start from. */
+  private def bandSignatures(spark: SparkSession, srcDir: String): DataFrame =
+    readDocs(spark, srcDir)
       .filter(size(split(col("text"), " ")) >= 3)
-      .select(col("doc_id"),
-        explode(graft.operators.TextDedup.minhashBandsPerRow(col("text"))).as("bb"))
+      .select(col("doc_id"), explode(TextDedup.minhashBandsPerRow(col("text"))).as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.band_hash").as("band_hash"))
-      .writeStream
-      .format("parquet")
-      .option("path", bandsDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
 
   case class BandRow(doc_id: Long, band: Int, band_hash: Long)
   case class BandPair(band: Int, doc_a: Long, doc_b: Long)
@@ -318,19 +326,8 @@ object CdcStream {
     * current at ingest time. */
   def startCandidatePairsMv(spark: SparkSession, srcDir: String,
                             pairsDir: String, checkpointDir: String): StreamingQuery =
-    incrementalCandidatePairs(spark,
-      spark.readStream.schema(docSchema).parquet(srcDir)
-        .filter(size(split(col("text"), " ")) >= 3)
-        .select(col("doc_id"),
-          explode(graft.operators.TextDedup.minhashBandsPerRow(col("text"))).as("bb"))
-        .select(col("doc_id"), col("bb.band").as("band"), col("bb.band_hash").as("band_hash")))
-      .writeStream
-      .format("parquet")
-      .option("path", pairsDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    appendParquet(incrementalCandidatePairs(spark, bandSignatures(spark, srcDir)).toDF(),
+      pairsDir, checkpointDir)
 
   // value is Option: the batch as-of join passes a null purchase value
   // through untouched, and the incremental==batch contract must hold
@@ -492,21 +489,16 @@ object CdcStream {
     * a replay is diagnosable from the artifact. */
   def startMvWithQuarantine(spark: SparkSession, srcDir: String, logDir: String,
                             quarantineDir: String, checkpointDir: String): StreamingQuery =
-    readEvents(spark, srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tagged = batch.withColumn("__ok", isValid).cache()
-        try {
-          materializedView(tagged.filter(col("__ok")).drop("__ok"))
-            .write.mode("append").parquet(logDir)
-          tagged.filter(!col("__ok")).drop("__ok")
-            .withColumn("__quarantined_batch", lit(batchId))
-            .write.mode("append").parquet(quarantineDir)
-        } finally tagged.unpersist()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(readEvents(spark, srcDir), checkpointDir) { (batch, batchId) =>
+      val tagged = batch.withColumn("__ok", isValid).cache()
+      try {
+        materializedView(tagged.filter(col("__ok")).drop("__ok"))
+          .write.mode("append").parquet(logDir)
+        tagged.filter(!col("__ok")).drop("__ok")
+          .withColumn("__quarantined_batch", lit(batchId))
+          .write.mode("append").parquet(quarantineDir)
+      } finally tagged.unpersist()
+    }
 
   /** S8 recovery — re-ingest quarantined rows after a fix. The missing
     * half of the quarantine lifecycle (land → inspect → FIX →
@@ -531,7 +523,9 @@ object CdcStream {
     * enumeration feeds both the parquet read and the cleanup), so
     * even a batch whose commit straddles the rename and lands a late
     * file inside the work dir loses nothing — the late file is
-    * neither read nor deleted, and the next pass restores it. The at-least-once failure mode is rows present in
+    * neither read nor deleted, and the next pass restores it.
+    *
+    * The at-least-once failure mode is rows present in
     * BOTH log and quarantine, which the dedup-on-read FINAL view
     * collapses (same (ts, event_id) version wins once), so
     * reprocessing is idempotent at the serving layer: re-running with
@@ -623,38 +617,15 @@ object CdcStream {
     workDir.delete()
   }
 
-  /** Ingestion observability — the analogue of the reference's
-    * per-run ingest stats: `observe` attaches named aggregates to the
-    * MV stream itself, so every micro-batch reports rows seen, rows
-    * quarantined and the value checksum through the engine's progress
-    * events (no second pass over the data, no side channel). A
-    * monitoring consumer reads `StreamingQueryProgress.observedMetrics`
-    * — asserted in StreamingSpec against the batch truth. */
-  def startObservedMv(spark: SparkSession, srcDir: String, logDir: String,
-                      checkpointDir: String): StreamingQuery =
-    materializedView(
-        readEvents(spark, srcDir)
-          .observe("ingest_stats",
-            count(lit(1)).as("rows_seen"),
-            sum(when(isValid, 0L).otherwise(1L)).as("rows_invalid"),
-            sum(floor(coalesce(col("value"), lit(0.0)) * 100 + 0.5).cast("long"))
-              .as("value_cents")))
-      .writeStream
-      .format("parquet")
-      .option("path", logDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
+  private val payload = Seq("event_id", "ts", "event_type", "value", "prop_k")
+  private def version = struct(col("ts"), col("event_id"))
 
   /** D2 — FINAL read view over the materialized log (partitioned or
     * not — the yyyymm layout column is not part of the row payload). */
   def finalView(spark: SparkSession, logDir: String): DataFrame = {
     val log = spark.read.parquet(logDir)
     val base = if (log.columns.contains("yyyymm")) log.drop("yyyymm") else log
-    Dedup.latestByKey(base, Seq("user_id"),
-      version = struct(col("ts"), col("event_id")),
-      payload = Seq("event_id", "ts", "event_type", "value", "prop_k"))
+    Dedup.latestByKey(base, Seq("user_id"), version, payload)
   }
 
   /** S5/D3 — the scheduled copy job (users_batch_copy.pipe:8-70): read
@@ -663,314 +634,58 @@ object CdcStream {
     * Each generation is stamped so readers take max(generation). */
   def runCopyJob(spark: SparkSession, logDir: String, snapDir: String): Unit = {
     val log = spark.read.parquet(logDir)
-    val payload = Seq("event_id", "ts", "event_type", "value", "prop_k")
-    val snapExists = new java.io.File(snapDir).exists() &&
-      new java.io.File(snapDir).listFiles().exists(_.getName.endsWith(".parquet"))
-    val next: DataFrame = if (!snapExists) {
-      Dedup.latestByKey(log, Seq("user_id"),
-          struct(col("ts"), col("event_id")), payload)
-        .withColumn("generation", lit(1L))
-    } else {
-      val snap = spark.read.parquet(snapDir)
-      val genRow = snap.agg(max(col("generation"))).first()
-      if (genRow.isNullAt(0)) {
-        // empty snapshot table (e.g. a zero-row first generation):
-        // behave like the bootstrap path
-        Dedup.latestByKey(log, Seq("user_id"),
-            struct(col("ts"), col("event_id")), payload)
+    val next = latestGeneration(spark, snapDir) match {
+      case None =>
+        Dedup.latestByKey(log, Seq("user_id"), version, payload)
           .withColumn("generation", lit(1L))
-      } else {
-        val gen = genRow.getLong(0)
-        val prior = snap.filter(col("generation") === gen).drop("generation")
-        val wmRow = prior.agg(max(col("ts")).as("wm")).first()
-        val wm = wmRow.getAs[java.time.LocalDateTime]("wm")
+      case Some((prior, gen)) =>
+        val wm = prior.agg(max(col("ts")).as("wm")).first()
+          .getAs[java.time.LocalDateTime]("wm")
         // inclusive: a late event with ts == wm but a higher event_id
         // tie-break must still supersede the prior row
-        Dedup.incrementalSnapshot(prior, log, Seq("user_id"),
-            struct(col("ts"), col("event_id")), "ts", payload, lit(wm),
-            inclusive = true)
+        Dedup.incrementalSnapshot(prior, log, Seq("user_id"), version, "ts",
+            payload, lit(wm), inclusive = true)
           .withColumn("generation", lit(gen + 1))
-      }
     }
     next.write.mode("append").parquet(snapDir)
   }
 
   /** Read the current snapshot (latest generation); empty table → empty
     * frame rather than an NPE on the null max. */
-  def readSnapshot(spark: SparkSession, snapDir: String): DataFrame = {
-    val snap = spark.read.parquet(snapDir)
-    val genRow = snap.agg(max(col("generation"))).first()
-    if (genRow.isNullAt(0)) snap.limit(0).drop("generation")
-    else snap.filter(col("generation") === genRow.getLong(0)).drop("generation")
-  }
+  def readSnapshot(spark: SparkSession, snapDir: String): DataFrame =
+    latestGeneration(spark, snapDir).map(_._1)
+      .getOrElse(spark.read.parquet(snapDir).limit(0).drop("generation"))
 
-  /** SummingMergeTree pattern (the third MergeTree engine, after
-    * Replacing = [[finalView]] and Aggregating = the HLL sketch
-    * rollup): each micro-batch appends PARTIAL sums per (hour,
-    * event_type) — integer cents, so partials merge associatively —
-    * and the read view collapses partials by summing. Merge-on-read
-    * exactly like FINAL; a background compaction can collapse the log
-    * at any time without changing results. State-free streaming: the
-    * aggregate lives in storage as mergeable partials, not in a state
-    * store, so the stream scales with source partitions and restarts
-    * cold. */
-  /** Streaming KMV distinct-sketch MV — the `-State` half of the
-    * oracled KMV family (CdcPipes.activeUsersKmvPerHour): each micro
-    * batch appends its per-hour ≤ k smallest distinct md5-low64 user
-    * hashes to a partial log; [[kmvView]] is the `-Merge` read.
-    *
-    * Unlike the summing MV — whose partials double-count on replay and
-    * need the overwrite-per-batch-id discipline — KMV partials are
-    * DUPLICATE-IDEMPOTENT: the k smallest of a union are unchanged by
-    * repeated elements, so plain append is exactly-once-equivalent
-    * under ANY at-least-once redelivery (StreamingSpec replays the
-    * whole stream twice and asserts the view is unchanged). At 100 TB
-    * the log grows by ≤ k longs per (hour, batch) — metadata scale —
-    * and the view's merge is a shuffle of kept hashes, never events. */
-  def startKmvMv(spark: SparkSession, srcDir: String, partialsDir: String,
-                 checkpointDir: String, k: Int = 64): StreamingQuery =
-    readEvents(spark, srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        import org.apache.spark.sql.expressions.Window
-        batch
-          .select(date_trunc("hour", col("ts")).cast("timestamp_ntz").as("time_interval"),
-            graft.functions.OracleHash.low64(col("user_id").cast("string")).as("h"))
-          .distinct()
-          .withColumn("__rn", row_number().over(
-            Window.partitionBy("time_interval").orderBy("h")))
-          .filter(col("__rn") <= k).drop("__rn")
-          .write.mode("append").parquet(partialsDir)
-        ()
+  /** The snapshot's newest generation (rows without the `generation`
+    * column) and its number; None while the snapshot has no parquet
+    * file or no row — the copy job's bootstrap case. */
+  private def latestGeneration(spark: SparkSession,
+                               snapDir: String): Option[(DataFrame, Long)] =
+    Option(new java.io.File(snapDir).listFiles)
+      .filter(_.exists(_.getName.endsWith(".parquet")))
+      .flatMap { _ =>
+        val snap = spark.read.parquet(snapDir)
+        val genRow = snap.agg(max(col("generation"))).first()
+        if (genRow.isNullAt(0)) None
+        else Some((snap.filter(col("generation") === genRow.getLong(0))
+          .drop("generation"), genRow.getLong(0)))
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
 
-  /** The `-Merge` read view over the KMV partial log. */
-  def kmvView(spark: SparkSession, partialsDir: String, k: Int = 64): DataFrame =
-    graft.pipes.CdcPipes.kmvMergeEstimate(spark.read.parquet(partialsDir), k)
+  /** Run a [[Mergeable]] over the event stream into the partial log at
+    * `dir`: each micro-batch's partial appends when it is
+    * duplicate-idempotent, and otherwise overwrites `dir/batch=<id>`,
+    * so a replayed batch id rewrites its own directory. */
+  def startMergeableMv(spark: SparkSession, srcDir: String, dir: String,
+                       checkpointDir: String, m: Mergeable): StreamingQuery =
+    eachBatch(readEvents(spark, srcDir), checkpointDir) { (batch, batchId) =>
+      if (m.duplicateIdempotent) m.partial(batch).write.mode("append").parquet(dir)
+      else m.partial(batch).write.mode("overwrite").parquet(s"$dir/batch=$batchId")
+    }
 
-  /** Streaming count-min MV: each micro-batch writes its own CMS
-    * counter cells (≤ hours × depth × width rows — sketch scale, not
-    * event scale); [[cmsView]] is the `-Merge` read (cell-wise sum).
-    *
-    * CMS partials, like sums and UNLIKE KMV minima, are NOT
-    * duplicate-idempotent — a replayed batch's cells would
-    * double-count — so this MV uses the same overwrite-per-batch-id
-    * discipline as [[startSummingMv]]: re-execution of a batch id
-    * rewrites the same directory and is a no-op. At 100 TB the counter
-    * log grows by a bounded number of cells per (hour, batch) while
-    * answering per-key frequency probes over any time range by merging
-    * stored cells — never re-scanning events. */
-  def startCmsMv(spark: SparkSession, srcDir: String, cellsDir: String,
-                 checkpointDir: String,
-                 depth: Int = 4, width: Int = 1024): StreamingQuery =
-    readEvents(spark, srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Sketches.cmsCounters(
-            batch.select(
-              date_trunc("hour", col("ts")).cast("timestamp_ntz").as("hour"),
-              col("user_id")),
-            col("user_id").cast("string"), Seq("hour"), depth, width)
-          .write.mode("overwrite").parquet(s"$cellsDir/batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** The `-Merge` read over the CMS cell log: cell-wise addition (the
-    * batch=N layout column is bookkeeping, not payload). */
-  def cmsView(spark: SparkSession, cellsDir: String): DataFrame =
-    spark.read.parquet(cellsDir)
-      .groupBy("hour", "r", "bucket")
-      .agg(sum(col("c")).as("c"))
-
-  /** Streaming column-profile MV — data-quality monitoring as a
-    * mergeable summary: each micro-batch writes 5 profile rows
-    * (per-column counts + typed min/max lanes,
-    * [[graft.operators.Profile.eventsProfilePartial]]). Counts are
-    * sums — NOT duplicate-idempotent — so this MV uses the
-    * overwrite-per-batch-id discipline of [[startCmsMv]]: a replayed
-    * batch rewrites its own directory and the view cannot
-    * double-count. The log grows by 5 rows per batch while answering
-    * "how many nulls / what range has this column ever seen" without
-    * re-scanning events. */
-  def startProfileMv(spark: SparkSession, srcDir: String, partialsDir: String,
-                     checkpointDir: String): StreamingQuery =
-    readEvents(spark, srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Profile.eventsProfilePartial(batch)
-          .write.mode("overwrite").parquet(s"$partialsDir/batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** The `-Merge` read over the profile-partial log. */
-  def profileView(spark: SparkSession, partialsDir: String): DataFrame =
-    graft.operators.Profile.mergeProfilePartials(
-      spark.read.parquet(partialsDir)
-        .drop("batch"))
-
-  /** Streaming Bloom-filter MV over per-user event membership: each
-    * micro-batch appends its words' OR-partials. The third idempotence
-    * discipline of the sketch-MV family, completing the set: KMV
-    * minima are duplicate-idempotent (plain append, [[startKmvMv]]),
-    * CMS counters are not (overwrite-per-batch-id, [[startCmsMv]]),
-    * and Bloom bits are OR-idempotent — re-delivered batches re-OR the
-    * same bits, so plain append survives any at-least-once replay,
-    * like KMV. The log grows by ≤ mWords longs per batch; the read
-    * view ORs words — membership probes over the full history without
-    * re-scanning events. */
-  def startBloomMv(spark: SparkSession, srcDir: String, wordsDir: String,
-                   checkpointDir: String,
-                   mWords: Int = 1024, kHashes: Int = 4): StreamingQuery =
-    readEvents(spark, srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Sketches.bloomWords(
-            batch.select(col("user_id").cast("string").as("key")),
-            col("key"), mWords, kHashes)
-          .write.mode("append").parquet(wordsDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** The `-Merge` read over the Bloom word log (word-wise OR), probed
-    * with [[graft.operators.Sketches.bloomProbe]]. */
-  def bloomView(spark: SparkSession, wordsDir: String): DataFrame =
-    spark.read.parquet(wordsDir)
-      .groupBy("word_idx")
-      .agg(bit_or(col("bits")).as("bits"))
-
-  /** Streaming quantile-sketch MV: each micro-batch appends its
-    * bottom-`k` value sample per event type
-    * ([[graft.operators.Sketches.quantilePartial]] — md5-rank
-    * membership); [[quantileView]] is the `-Merge` read answering any
-    * quantile from the merged sample. Like KMV minima and Bloom
-    * words, the partials are duplicate-IDEMPOTENT (identical rows
-    * re-rank to identical positions and the merge's distinct absorbs
-    * them), so plain append survives any at-least-once redelivery.
-    * The log grows by ≤ k rows per (type, batch) — sketch scale — and
-    * p99 dashboards over the full history never re-scan events. */
-  def startQuantileMv(spark: SparkSession, srcDir: String, partialsDir: String,
-                      checkpointDir: String, k: Int = 64): StreamingQuery =
-    readEvents(spark, srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Sketches.quantilePartial(
-            batch.select(col("event_type"), col("event_id"), col("value")), k)
-          .write.mode("append").parquet(partialsDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** The `-Merge` read over the quantile-partial log. */
-  def quantileView(spark: SparkSession, partialsDir: String, k: Int = 64): DataFrame =
-    graft.operators.Sketches.quantileMerge(spark.read.parquet(partialsDir), k)
-
-  def startSummingMv(spark: SparkSession, srcDir: String, sumsDir: String,
-                     checkpointDir: String): StreamingQuery =
-    readEvents(spark, srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .groupBy(date_trunc("hour", col("ts")).cast("timestamp_ntz").as("hour"),
-            col("event_type"))
-          .agg(sum(floor(coalesce(col("value"), lit(0.0)) * 100 + 0.5).cast("long"))
-              .as("partial_cents"),
-            count(lit(1)).as("partial_n"))
-          // idempotent per micro-batch: foreachBatch is at-least-once,
-          // and an append here would double-count a replayed batch's
-          // partials (sums, unlike latest-state logs, do NOT absorb
-          // duplicates). One directory per batch id, overwritten on
-          // replay, makes re-execution a no-op.
-          .write.mode("overwrite").parquet(s"$sumsDir/batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** The SummingMergeTree read view: collapse partials (the batch=N
-    * layout column is bookkeeping, not payload). */
-  def summingView(spark: SparkSession, sumsDir: String): DataFrame =
-    spark.read.parquet(sumsDir)
-      .groupBy("hour", "event_type")
-      .agg((sum(col("partial_cents")) / 100.0).as("total_value"),
-        sum(col("partial_n")).as("n"))
-
-  /** Streaming feature store, write side: per micro-batch, fold the
-    * event stream to (user, day, event_type) partials — count, integer
-    * cents, and the running (ts, event_id, event_type) argmax struct.
-    * The day grain is the feature-store contract: serving windows cut
-    * at day boundaries, so partials are mergeable forever (counts and
-    * cents add; the argmax struct maxes) and a day's partial stops
-    * changing once its day has passed. Same idempotence discipline as
-    * [[startSummingMv]]: one overwritten directory per batch id, so
-    * at-least-once replay can't double-count. */
-  def startUserDayFeaturesMv(spark: SparkSession, srcDir: String,
-                             partialsDir: String,
-                             checkpointDir: String): StreamingQuery =
-    readEvents(spark, srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .groupBy(col("user_id"),
-            date_trunc("day", col("ts")).cast("timestamp_ntz").as("day"),
-            col("event_type"))
-          .agg(count(lit(1)).as("partial_n"),
-            sum(floor(coalesce(col("value"), lit(0.0)) * 100 + 0.5).cast("long"))
-              .as("partial_cents"),
-            max(struct(col("ts"), col("event_id"), col("event_type")))
-              .as("partial_last"))
-          .write.mode("overwrite").parquet(s"$partialsDir/batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** Streaming feature store, read side: serve per-user 1/7/28-day
-    * features from the day-partial log — the merge-on-read twin of the
-    * batch [[graft.pipes.CdcPipes.userWindowFeatures]], at DAY grain
-    * (windows are "the last k complete days through the newest day in
-    * the log", so the serving cut is reproducible from partials alone;
-    * the batch endpoint's exact-instant windows need the raw log).
-    * Reading ≤28×|types| tiny rows per user replaces a rescan of the
-    * full event history — the point of the MV at 100 TB: feature
-    * freshness is one micro-batch behind, serving cost is partial-sized.
-    * All lanes merge associatively (sums of longs, max of structs), so
-    * replay/merge order can't change a served value. */
-  def userDayFeaturesView(spark: SparkSession, partialsDir: String): DataFrame = {
-    val p = spark.read.parquet(partialsDir)
-    val anchor = p.agg(max(col("day")).as("__d"))
-    def inWin(days: Int) = col("day") > col("__d") - expr(s"INTERVAL $days DAYS")
-    p.crossJoin(broadcast(anchor))
-      .groupBy("user_id")
-      .agg(
-        sum(when(inWin(1), col("partial_n")).otherwise(0L)).as("n_1d"),
-        sum(when(inWin(7), col("partial_n")).otherwise(0L)).as("n_7d"),
-        sum(when(inWin(28), col("partial_n")).otherwise(0L)).as("n_28d"),
-        (sum(when(inWin(1), col("partial_cents")).otherwise(0L)) / 100.0).as("value_1d"),
-        (sum(when(inWin(7), col("partial_cents")).otherwise(0L)) / 100.0).as("value_7d"),
-        (sum(when(inWin(28), col("partial_cents")).otherwise(0L)) / 100.0).as("value_28d"),
-        countDistinct(when(inWin(28), col("event_type"))).as("n_types_28d"),
-        max(col("partial_last")).as("__last"))
-      .select(col("user_id"), col("n_1d"), col("n_7d"), col("n_28d"),
-        col("value_1d"), col("value_7d"), col("value_28d"), col("n_types_28d"),
-        col("__last.ts").as("last_ts"),
-        col("__last.event_type").as("last_type"))
-  }
+  /** The `-Merge` read over a [[Mergeable]]'s partial log (the
+    * `batch=<id>` layout column is bookkeeping, not payload). */
+  def mergedView(spark: SparkSession, dir: String, m: Mergeable): DataFrame =
+    m.merge(spark.read.parquet(dir).drop("batch"))
 
   /** At-least-once delivery dedup in the stream itself:
     * dropDuplicatesWithinWatermark keeps state only for the watermark

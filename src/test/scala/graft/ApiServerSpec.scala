@@ -109,6 +109,46 @@ class ApiServerSpec extends SparkSpec {
     assert(codes.forall(_ == 200), codes.toString)
   }
 
+  test("stop() drains an in-flight request before tearing the server down") {
+    val srv = new ApiServer(spark, sf, Map("boss" -> Set("*")))
+    val p = srv.start()
+    def u(path: String) = URI.create(s"http://127.0.0.1:$p$path")
+    // a pipe whose one task sleeps 3 s: the request is still executing
+    // when stop() is called below
+    val pipe =
+      """NODE endpoint
+        |SQL >
+        |    SELECT reflect('java.lang.Thread', 'sleep', 3000L) AS slept
+        |    FROM range(0, 1, 1, 1)
+        |""".stripMargin
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.countDown()
+    }
+    try {
+      val pushed = http.send(HttpRequest.newBuilder(u("/v0/datafiles?name=slow_pipe.pipe"))
+        .header("Authorization", "Bearer boss")
+        .POST(HttpRequest.BodyPublishers.ofString(pipe)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(pushed.statusCode() == 200, pushed.body())
+      spark.sparkContext.addSparkListener(listener)
+      val inFlight = http.sendAsync(HttpRequest.newBuilder(u("/v0/pipes/slow_pipe.json"))
+        .header("Authorization", "Bearer boss").GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(started.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the slow pipe never reached Spark")
+      srv.stop()
+      val r = inFlight.get(60, java.util.concurrent.TimeUnit.SECONDS)
+      assert(r.statusCode() == 200, r.body())
+      assert(r.body().contains("\"slept\"") && r.body().trim.endsWith("}"), r.body())
+      assert(srv.pool.isTerminated, "stop() returned with handlers still running")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      if (!srv.pool.isShutdown) srv.stop()
+    }
+  }
+
   test("the reference's parameterized pipe takes DateTime start/end over HTTP") {
     // flights_missed_pct_minute.pipe:22,31-32 — {% if defined(start) %}
     val default = get("/v0/pipes/ref_flights_missed_pct_minute.json",

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-import graft.streaming.CdcStream
+import graft.streaming.{CdcStream, Mergeable}
 import graft.Tables
 
 /** E2E CDC replay (SURVEY §5 test plan #4): events streamed in chunks
@@ -512,10 +512,10 @@ class StreamingSpec extends SparkSpec {
     // overlapping (hour, type) groups — the merge-on-read must add them
     Seq(0, 1, 2).foreach { i =>
       events.filter(col("event_id") % 3 === i).write.parquet(s"$src/chunk$i")
-      val q = CdcStream.startSummingMv(spark, s"$src/chunk*", sumsDir, ck)
+      val q = CdcStream.startMergeableMv(spark, s"$src/chunk*", sumsDir, ck, Mergeable.summing)
       q.awaitTermination()
     }
-    val merged = CdcStream.summingView(spark, sumsDir)
+    val merged = CdcStream.mergedView(spark, sumsDir, Mergeable.summing)
       .orderBy("hour", "event_type").collect().map(_.toString).toSeq
     val batch = events
       .groupBy(date_trunc("hour", col("ts")).cast("timestamp_ntz").as("hour"),
@@ -534,10 +534,10 @@ class StreamingSpec extends SparkSpec {
     val events = Tables.events(spark, sf)
     Seq(0, 1, 2).foreach { i =>
       events.filter(col("event_id") % 3 === i).write.parquet(s"$src/chunk$i")
-      CdcStream.startUserDayFeaturesMv(spark, s"$src/chunk*", pDir, ck)
+      CdcStream.startMergeableMv(spark, s"$src/chunk*", pDir, ck, Mergeable.userDayFeatures)
         .awaitTermination()
     }
-    val served = CdcStream.userDayFeaturesView(spark, pDir)
+    val served = CdcStream.mergedView(spark, pDir, Mergeable.userDayFeatures)
       .orderBy("user_id").collect().map(_.toString).toSeq
     // batch recompute of the SAME day-grain contract from the raw log
     val withDay = events.withColumn("day",
@@ -566,9 +566,9 @@ class StreamingSpec extends SparkSpec {
     // the log is partial-sized, the view one row per user
     assert(spark.read.parquet(pDir).count() >= served.size)
     // no new data → restart must not move the served features
-    CdcStream.startUserDayFeaturesMv(spark, s"$src/chunk*", pDir, ck)
+    CdcStream.startMergeableMv(spark, s"$src/chunk*", pDir, ck, Mergeable.userDayFeatures)
       .awaitTermination()
-    val again = CdcStream.userDayFeaturesView(spark, pDir)
+    val again = CdcStream.mergedView(spark, pDir, Mergeable.userDayFeatures)
       .orderBy("user_id").collect().map(_.toString).toSeq
     assert(again == served)
   }
@@ -580,11 +580,12 @@ class StreamingSpec extends SparkSpec {
     // (hour, lane, bucket) groups — merge-on-read must ADD them
     Seq(0, 1, 2).foreach { i =>
       events.filter(col("event_id") % 3 === i).write.parquet(s"$src/chunk$i")
-      CdcStream.startCmsMv(spark, s"$src/chunk*", cellsDir, ck).awaitTermination()
+      CdcStream.startMergeableMv(spark, s"$src/chunk*", cellsDir, ck, Mergeable.cms())
+        .awaitTermination()
     }
     def snap(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.orderBy("hour", "r", "bucket").collect().map(_.toString).toSeq
-    val streamed = snap(CdcStream.cmsView(spark, cellsDir))
+    val streamed = snap(CdcStream.mergedView(spark, cellsDir, Mergeable.cms()))
     val batch = snap(operators.Sketches.cmsCounters(
       events.select(
         date_trunc("hour", col("ts")).cast("timestamp_ntz").as("hour"),
@@ -596,8 +597,9 @@ class StreamingSpec extends SparkSpec {
     // and a re-executed batch id would overwrite its own directory —
     // either way the view must not move (CMS cells are NOT
     // duplicate-idempotent, so this is the discipline under test)
-    CdcStream.startCmsMv(spark, s"$src/chunk*", cellsDir, ck).awaitTermination()
-    assert(snap(CdcStream.cmsView(spark, cellsDir)) == streamed,
+    CdcStream.startMergeableMv(spark, s"$src/chunk*", cellsDir, ck, Mergeable.cms())
+      .awaitTermination()
+    assert(snap(CdcStream.mergedView(spark, cellsDir, Mergeable.cms())) == streamed,
       "restart moved the counters")
   }
 
@@ -606,25 +608,27 @@ class StreamingSpec extends SparkSpec {
     val events = Tables.events(spark, sf)
     Seq(0, 1, 2).foreach { i =>
       events.filter(col("event_id") % 3 === i).write.parquet(s"$src/chunk$i")
-      CdcStream.startBloomMv(spark, s"$src/chunk*", wordsDir, ck).awaitTermination()
+      CdcStream.startMergeableMv(spark, s"$src/chunk*", wordsDir, ck, Mergeable.bloom())
+        .awaitTermination()
     }
     def snap(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.orderBy("word_idx").collect().map(_.toString).toSeq
-    val streamed = snap(CdcStream.bloomView(spark, wordsDir))
+    val streamed = snap(CdcStream.mergedView(spark, wordsDir, Mergeable.bloom()))
     val batch = snap(operators.Sketches.bloomWords(
       events.select(col("user_id").cast("string").as("key")), col("key")))
     assert(streamed == batch, s"streamed ${streamed.size} vs batch ${batch.size}")
     // no false negatives: every user in the log probes maybe=1
     val misses = operators.Sketches.bloomProbe(
         events.select(col("user_id").cast("string").as("key")).distinct(),
-        col("key"), CdcStream.bloomView(spark, wordsDir))
+        col("key"), CdcStream.mergedView(spark, wordsDir, Mergeable.bloom()))
       .filter(col("maybe") === 0).count()
     assert(misses == 0, "bloom filter missed a member it was built from")
     // at-least-once: re-deliver the ENTIRE stream (fresh checkpoint) —
     // bits are OR-idempotent, so plain append leaves the view unchanged
-    CdcStream.startBloomMv(spark, s"$src/chunk*", wordsDir, tmp() + "/ck2")
+    CdcStream.startMergeableMv(spark, s"$src/chunk*", wordsDir, tmp() + "/ck2",
+        Mergeable.bloom())
       .awaitTermination()
-    assert(snap(CdcStream.bloomView(spark, wordsDir)) == streamed,
+    assert(snap(CdcStream.mergedView(spark, wordsDir, Mergeable.bloom())) == streamed,
       "full redelivery must not move the filter")
   }
 
@@ -834,7 +838,7 @@ class StreamingSpec extends SparkSpec {
     val src = tmp(); val log = tmp() + "/log"; val ck = tmp() + "/ck"
     val ev = Tables.events(spark, sf)
     ev.write.parquet(s"$src/chunk0")
-    val q = CdcStream.startObservedMv(spark, s"$src/chunk*", log, ck)
+    val q = CdcStream.startMv(spark, s"$src/chunk*", log, ck)
     q.awaitTermination()
     val metrics = q.recentProgress.toSeq
       .flatMap(p => Option(p.observedMetrics.get("ingest_stats")))
@@ -857,9 +861,10 @@ class StreamingSpec extends SparkSpec {
       events.filter(col("event_id") % 2 === 1))
     chunks.zipWithIndex.foreach { case (c, i) =>
       c.write.parquet(s"$src/chunk$i")
-      CdcStream.startKmvMv(spark, s"$src/chunk*", pd, ck).awaitTermination()
+      CdcStream.startMergeableMv(spark, s"$src/chunk*", pd, ck, Mergeable.kmv())
+        .awaitTermination()
     }
-    val streamed = CdcStream.kmvView(spark, pd)
+    val streamed = CdcStream.mergedView(spark, pd, Mergeable.kmv())
       .collect().map(_.toString).toSeq
     // batch truth: the same per-hour k-min rule over all events at once
     val kept = events.select(
@@ -871,8 +876,9 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batch, s"streamed ${streamed.size} vs batch ${batch.size}")
     // at-least-once: re-deliver the ENTIRE stream (fresh checkpoint) —
     // KMV partials are duplicate-idempotent, so the view is unchanged
-    CdcStream.startKmvMv(spark, s"$src/chunk*", pd, tmp() + "/ck2").awaitTermination()
-    val replayed = CdcStream.kmvView(spark, pd)
+    CdcStream.startMergeableMv(spark, s"$src/chunk*", pd, tmp() + "/ck2", Mergeable.kmv())
+      .awaitTermination()
+    val replayed = CdcStream.mergedView(spark, pd, Mergeable.kmv())
       .collect().map(_.toString).toSeq
     assert(replayed == streamed, "full redelivery must not move the estimates")
   }
@@ -885,9 +891,10 @@ class StreamingSpec extends SparkSpec {
       events.filter(col("event_id") % 2 === 1))
     chunks.zipWithIndex.foreach { case (c, i) =>
       c.write.parquet(s"$src/chunk$i")
-      CdcStream.startQuantileMv(spark, s"$src/chunk*", pd, ck).awaitTermination()
+      CdcStream.startMergeableMv(spark, s"$src/chunk*", pd, ck, Mergeable.quantile())
+        .awaitTermination()
     }
-    val streamed = CdcStream.quantileView(spark, pd)
+    val streamed = CdcStream.mergedView(spark, pd, Mergeable.quantile())
       .orderBy("event_type").collect().map(_.toString).toSeq
     // batch truth: the same bottom-k sample rule over all events at once
     val batch = operators.Sketches.quantileMerge(
@@ -897,8 +904,10 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batch, s"streamed ${streamed.size} vs batch ${batch.size}")
     // at-least-once: re-deliver the ENTIRE stream (fresh checkpoint) —
     // sample partials are duplicate-idempotent, so the view is unchanged
-    CdcStream.startQuantileMv(spark, s"$src/chunk*", pd, tmp() + "/ck2").awaitTermination()
-    val replayed = CdcStream.quantileView(spark, pd)
+    CdcStream.startMergeableMv(spark, s"$src/chunk*", pd, tmp() + "/ck2",
+        Mergeable.quantile())
+      .awaitTermination()
+    val replayed = CdcStream.mergedView(spark, pd, Mergeable.quantile())
       .orderBy("event_type").collect().map(_.toString).toSeq
     assert(replayed == streamed, "full redelivery must not move the estimates")
   }
@@ -931,23 +940,25 @@ class StreamingSpec extends SparkSpec {
     // so merge-on-read must ADD counts and re-extremize min/max
     Seq(0, 1, 2).foreach { i =>
       events.filter(col("event_id") % 3 === i).write.parquet(s"$src/chunk$i")
-      CdcStream.startProfileMv(spark, s"$src/chunk*", partials, ck).awaitTermination()
+      CdcStream.startMergeableMv(spark, s"$src/chunk*", partials, ck, Mergeable.profile)
+      .awaitTermination()
     }
     def snap(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.orderBy("column_name").collect().map(_.toString).toSeq
-    val streamed = snap(CdcStream.profileView(spark, partials))
+    val streamed = snap(CdcStream.mergedView(spark, partials, Mergeable.profile))
     val batch = snap(operators.Profile.mergeProfilePartials(
       operators.Profile.eventsProfilePartial(events)))
     assert(streamed == batch, s"streamed=$streamed\nbatch=$batch")
     // null accounting and row totals are sane against the raw table
-    val rows = CdcStream.profileView(spark, partials).collect()
+    val rows = CdcStream.mergedView(spark, partials, Mergeable.profile).collect()
     val n = events.count()
     assert(rows.forall(_.getAs[Long]("n_rows") == n))
     assert(rows.forall(r => r.getAs[Long]("n_nulls") >= 0 && r.getAs[Long]("n_nulls") <= n))
     // restart on the same checkpoint: counts are NOT duplicate-idempotent,
     // so the overwrite-per-batch-id discipline is what this pins
-    CdcStream.startProfileMv(spark, s"$src/chunk*", partials, ck).awaitTermination()
-    assert(snap(CdcStream.profileView(spark, partials)) == streamed,
+    CdcStream.startMergeableMv(spark, s"$src/chunk*", partials, ck, Mergeable.profile)
+      .awaitTermination()
+    assert(snap(CdcStream.mergedView(spark, partials, Mergeable.profile)) == streamed,
       "restart moved the profile")
   }
 
