@@ -73,21 +73,21 @@ import graft.functions.ChFunctions._
   *    file was NOT touched (two live versions of one id — incoherent
   *    under any rebuild), or within the upsert batch itself;
   *  - a different requested embedding geometry;
-  *  - missing maintenance state (pre-v4 dirs, absent `_GEOMETRY`),
-  *    or a crashed-increment journal.
+  *  - no complete [[ArtifactManifest]] of the same params, an absent
+  *    `_GEOMETRY`, or an increment still `pending` from a crash.
   *
-  * CRASH SAFETY — appends are not atomic, so the increment writes an
-  * `_INC_JOURNAL` first and removes it after the new `_FINGERPRINT`
-  * lands. A crash in between leaves the journal: `artifactsCurrent`
-  * then reports stale (consumers fall back to self-contained forms)
-  * and the next update() takes the proven full-rebuild path. Every
-  * frame the increment writes is eagerly materialized BEFORE the
-  * first append, so no plan can observe its own writes (the round-10
-  * append path had exactly that latent bug: `doc_stats` was computed
-  * lazily and executed after the df partials landed, double-counting
-  * the delta's dfs — masked at test SFs where dfs ≪ maxDf, caught by
-  * this rewrite's eager-before-write discipline and pinned by the
-  * crossing specs).
+  * CRASH SAFETY — appends are not atomic, so the increment commits a
+  * `pending` manifest before its first append and the new inputs and
+  * generation after its last. A crash in between leaves `pending`:
+  * `artifactsCurrent` then reports stale (consumers fall back to
+  * self-contained forms) and the next update() takes the proven
+  * full-rebuild path. Every frame the increment writes is eagerly
+  * materialized BEFORE the first append, so no plan can observe its
+  * own writes (the round-10 append path had exactly that latent bug:
+  * `doc_stats` was computed lazily and executed after the df partials
+  * landed, double-counting the delta's dfs — masked at test SFs where
+  * dfs ≪ maxDf, caught by this rewrite's eager-before-write discipline
+  * and pinned by the crossing specs).
   */
 object DedupMaintenance {
 
@@ -102,16 +102,17 @@ object DedupMaintenance {
     * an operator intervenes, which nothing in a deployment loop ever
     * does. So update() itself triggers [[compact]] after a successful
     * increment when either cheap read-amplification signal crosses its
-    * threshold: the generation count (`_GEN`, one tiny file read)
-    * reaches `autoCompactMaxGen`, or the tombstone table's raw bytes
-    * exceed `autoCompactDeadFrac` of the live id-map surfaces'
-    * (filesystem metadata only). The compaction is identity-preserving
-    * (it writes the live views), so callers observe only bounded read
-    * paths; `_LAST_INC` records `"compacted":true` for the control
-    * plane. Thresholds ≤ 0 disable the trigger (manual-only, the
-    * pre-round-12 behavior). */
+    * threshold: the manifest's generation reaches `autoCompactMaxGen`,
+    * or the tombstone table's raw bytes exceed `autoCompactDeadFrac`
+    * of the live id-map surfaces' (filesystem metadata only). The
+    * compaction is identity-preserving (it writes the live views), so
+    * callers observe only bounded read paths; the manifest's
+    * `last_update` records `"compacted":true` for the control plane.
+    * Thresholds ≤ 0 disable the trigger (manual-only, the pre-round-12
+    * behavior). */
   def update(spark: SparkSession, dir: String, out: String,
-             minJaccard: Double = 0.5, maxDf: Int = TextDedup.DefaultMaxDf,
+             minJaccard: Double = TextDedup.DefaultMinJaccard,
+             maxDf: Int = TextDedup.DefaultMaxDf,
              embNLists: Int = 0, autoCompactMaxGen: Int = 8,
              autoCompactDeadFrac: Double = 0.25): String =
     TextDedup.artifactLock(out).synchronized {
@@ -121,23 +122,24 @@ object DedupMaintenance {
         // hand the scan a stale (pre-rewrite) length and the footer
         // read detonates mid-job
         spark.catalog.refreshByPath(dir)
-        if (TextDedup.artifactsCurrent(dir, out, minJaccard, maxDf) &&
+        if (TextDedup.artifactsCurrent(dir, out, Some((minJaccard, maxDf))) &&
             TextDedup.stagedGeometryOk(out, embNLists)) "skip"
         else {
-          val fpNew = TextDedup.inputFingerprint(dir, minJaccard, maxDf)
-          val mode = classifyDelta(dir, out, minJaccard, maxDf) match {
-            case Some(d) if tryIncrement(spark, dir, out, d,
-                minJaccard, maxDf, embNLists, fpNew) => "incremental"
+          val inputs = TextDedup.inputFiles(dir)
+          val mode = classifyDelta(dir, out, inputs, minJaccard, maxDf) match {
+            case Some((base, d)) if tryIncrement(spark, dir, out, base, d,
+                inputs, minJaccard, maxDf, embNLists) => "incremental"
             case _ =>
               TextDedup.buildLocked(spark, dir, out, minJaccard, maxDf, embNLists)
-              writeLastInc(out, s"""{"mode":"full","gen":0}""")
+              ArtifactManifest.amend(out)(
+                _.copy(lastUpdate = Some("""{"mode":"full","gen":0}""")))
               "full"
           }
           if (mode == "incremental" &&
               shouldCompact(out, autoCompactMaxGen, autoCompactDeadFrac)) {
             compactLocked(spark, out)
-            for (j <- lastIncrement(out))
-              writeLastInc(out, j.stripSuffix("}") + ""","compacted":true}""")
+            ArtifactManifest.amend(out)(m => m.copy(lastUpdate =
+              m.lastUpdate.map(_.stripSuffix("}") + ""","compacted":true}""")))
           }
           mode
         }
@@ -149,28 +151,17 @@ object DedupMaintenance {
     * filesystem metadata — no Spark job. */
   private def shouldCompact(out: String, maxGen: Int,
                             deadFrac: Double): Boolean =
-    (maxGen > 0 && TextDedup.readGen(out) >= maxGen) ||
+    (maxGen > 0 && ArtifactManifest.read(out).exists(_.gen >= maxGen)) ||
       (deadFrac > 0 && {
         val live = Seq("doc_files", "vec_files", "doc_stats")
           .map(TextDedup.surfaceDataBytes(out, _)).sum
         live > 0 && TextDedup.tombstoneRawBytes(out) > deadFrac * live
       })
 
-  /** The last update()'s outcome, for the control-plane status
-    * surface ([[graft.sources.ApiServer]]): one JSON object. */
-  def lastIncrement(out: String): Option[String] = {
-    val f = new java.io.File(out, "_LAST_INC").toPath
-    if (!java.nio.file.Files.exists(f)) None
-    else Some(new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
-  }
-  private def writeLastInc(out: String, json: String): Unit =
-    java.nio.file.Files.write(new java.io.File(out, "_LAST_INC").toPath,
-      json.getBytes("UTF-8"))
-
   /** The file-level diff the increment works from: every stored file
     * classified unchanged / changed / removed, plus the new files.
     * None → the stored state is not diffable (missing/incomplete/
-    * journaled, or a param change) and the caller takes the full
+    * pending, or a param change) and the caller takes the full
     * path. */
   private final case class FileDelta(
       newDoc: Seq[java.io.File], chgDoc: Seq[java.io.File],
@@ -182,31 +173,23 @@ object DedupMaintenance {
       touchedEmbRel.isEmpty
   }
 
-  private def classifyDelta(dir: String, out: String, minJaccard: Double,
-                            maxDf: Int): Option[FileDelta] = {
-    val marker = new java.io.File(out, "_FINGERPRINT").toPath
-    if (java.nio.file.Files.exists(TextDedup.incJournal(out))) return None
-    if (!java.nio.file.Files.exists(marker)) return None
-    if (!TextDedup.artifactStages.forall(TextDedup.stageComplete(out, _)))
-      return None
-    val stored = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-      .linesIterator.toSeq
-    // params or format differ → not diffable
-    if (stored.headOption.getOrElse("") !=
-        TextDedup.fingerprintHeader(minJaccard, maxDf)) return None
-    def split(line: String): (String, String) = {
-      // relpath may not contain ':' (parquet part names don't); the
-      // LAST two fields are size:mtime
-      val i = line.lastIndexOf(':'); val j = line.lastIndexOf(':', i - 1)
-      (line.take(j), line.substring(j + 1))
-    }
-    val old = stored.drop(1).map(split).toMap
-    val cur = TextDedup.inputDataFiles(dir)
-      .map { case (rel, f) => rel -> (s"${f.length}:${f.lastModified}", f) }
-      .toMap
+  private def classifyDelta(dir: String, out: String,
+                            inputs: Seq[ArtifactManifest.InputFile],
+                            minJaccard: Double, maxDf: Int)
+      : Option[(ArtifactManifest.Manifest, FileDelta)] = {
+    val base = ArtifactManifest.read(out).filter(m =>
+      m.pending.isEmpty && m.complete &&
+        m.params == (minJaccard, maxDf) &&
+        m.spans == TextDedup.spanConstants &&
+        TextDedup.artifactStages.forall(TextDedup.stageComplete(out, _)))
+      .getOrElse(return None)
+    def sizeMtime(f: ArtifactManifest.InputFile) = (f.size, f.mtime)
+    val old = base.inputs.map(f => f.rel -> sizeMtime(f)).toMap
+    val cur = inputs.map(f => f.rel -> sizeMtime(f)).toMap
+    def file(rel: String) = new java.io.File(dir, rel)
     val fresh = (cur.keySet -- old.keySet).toSeq.sorted
     val changed = old.keysIterator
-      .filter(rel => cur.get(rel).exists(_._1 != old(rel))).toSeq.sorted
+      .filter(rel => cur.get(rel).exists(_ != old(rel))).toSeq.sorted
     val removed = (old.keySet -- cur.keySet).toSeq.sorted
     def docSide(rel: String) = rel.startsWith("documents.parquet")
     def embSide(rel: String) = rel.startsWith("embeddings.parquet")
@@ -216,13 +199,13 @@ object DedupMaintenance {
     if ((fresh ++ changed ++ removed).exists(r => !docSide(r) && !embSide(r)))
       return None
     val d = FileDelta(
-      fresh.filter(docSide).map(cur(_)._2),
-      changed.filter(docSide).map(cur(_)._2),
+      fresh.filter(docSide).map(file),
+      changed.filter(docSide).map(file),
       (changed ++ removed).filter(docSide),
-      fresh.filter(embSide).map(cur(_)._2),
-      changed.filter(embSide).map(cur(_)._2),
+      fresh.filter(embSide).map(file),
+      changed.filter(embSide).map(file),
       (changed ++ removed).filter(embSide))
-    if (d.isEmpty) None else Some(d) // header edge: fp differs, no file moved
+    if (d.isEmpty) None else Some((base, d)) // stale, yet no file moved
   }
 
   // ---- small frame helpers ----
@@ -271,11 +254,13 @@ object DedupMaintenance {
     * compact staged state (ids, hashes, dfs, file maps), never base
     * text or base embeddings. */
   private def tryIncrement(spark: SparkSession, dir: String, out: String,
-                           d: FileDelta, minJaccard: Double, maxDf: Int,
-                           embNLists: Int, fpNew: String): Boolean = {
+                           base: ArtifactManifest.Manifest, d: FileDelta,
+                           inputs: Seq[ArtifactManifest.InputFile],
+                           minJaccard: Double, maxDf: Int,
+                           embNLists: Int): Boolean = {
     graft.functions.GraftFunctions.register(spark)
     val layout = s"$out/emb_probe_layout"
-    val g = TextDedup.readGen(out) + 1
+    val g = base.gen + 1
 
     // ---- plan + guard phase (no writes) ----
     val textPlan: Option[Option[TextPlan]] = // outer None = guard fired
@@ -285,14 +270,24 @@ object DedupMaintenance {
       phase("plan_emb") { planEmb(spark, out, layout, d, embNLists) }
     if (embPlan.isEmpty) return false
 
-    // ---- write phase (journaled; every frame above is eager) ----
-    java.nio.file.Files.write(TextDedup.incJournal(out),
-      fpNew.getBytes("UTF-8"))
-    // the clean marker dies BEFORE the first tombstone append: a crash
-    // in between leaves readers on the (correct) emptiness probe
-    val wasClean = java.nio.file.Files.exists(
-      TextDedup.tombstonesCleanMarker(out))
-    TextDedup.clearTombstonesClean(out)
+    // a PURE-APPEND increment (no retractions, no crossings, no
+    // cluster relabels) appends only empty tombstone frames: a clean
+    // table stays clean, and append-heavy CDC chains keep the
+    // probe-free read path. The id frames are eager checkpoints, so
+    // the emptiness checks are driver-cheap.
+    val wroteTombstones =
+      textPlan.flatten.exists(t => !t.retractIds.isEmpty ||
+        !t.cIds.isEmpty || !t.clusterNodes.isEmpty ||
+        !t.cSpanIds.isEmpty) ||
+      embPlan.flatten.exists(e => !e.cIds.isEmpty ||
+        !e.clusterNodes.isEmpty)
+    val clean = base.tombstonesClean && !wroteTombstones
+
+    // ---- write phase (pending; every frame above is eager) ----
+    // `tombstones_clean` drops BEFORE the first tombstone append, so a
+    // crash leaves readers on the (correct) emptiness probe
+    ArtifactManifest.commit(out,
+      base.copy(pending = Some("increment"), tombstonesClean = clean))
 
     def tomb(surface: String, ids: DataFrame, idCol: String): DataFrame =
       ids.select(lit(surface).as("surface"), col(idCol).as("id"),
@@ -342,30 +337,9 @@ object DedupMaintenance {
       withGen(e.clusterNew).write.mode("append").parquet(s"$out/emb_clusters")
     }
 
-    // a PURE-APPEND increment (no retractions, no crossings, no
-    // cluster relabels) appended only empty tombstone frames: if the
-    // table was clean going in it is still clean, and append-heavy CDC
-    // chains keep the probe-free read path. The id frames are eager
-    // checkpoints, so the emptiness checks are driver-cheap.
-    val wroteTombstones =
-      textPlan.flatten.exists(t => !t.retractIds.isEmpty ||
-        !t.cIds.isEmpty || !t.clusterNodes.isEmpty ||
-        !t.cSpanIds.isEmpty) ||
-      embPlan.flatten.exists(e => !e.cIds.isEmpty ||
-        !e.clusterNodes.isEmpty)
-    if (wasClean && !wroteTombstones) TextDedup.markTombstonesClean(out)
-
-    // stage markers advance to the new fingerprint (so a subsequent
-    // full-build call sees every stage current), then the generation,
-    // the fingerprint, the stats, and LAST the journal dies
-    for (s <- TextDedup.artifactStages)
-      java.nio.file.Files.write(
-        new java.io.File(out, s"_STAGE_$s").toPath, fpNew.getBytes("UTF-8"))
-    TextDedup.writeGen(out, g)
-    java.nio.file.Files.write(
-      new java.io.File(out, "_FINGERPRINT").toPath, fpNew.getBytes("UTF-8"))
-    writeLastInc(out, lastIncJson(g, textPlan.flatten, embPlan.flatten))
-    java.nio.file.Files.deleteIfExists(TextDedup.incJournal(out))
+    val lastUpdate = lastIncJson(g, textPlan.flatten, embPlan.flatten)
+    ArtifactManifest.commit(out, base.copy(inputs = inputs, gen = g,
+      tombstonesClean = clean, pending = None, lastUpdate = Some(lastUpdate)))
     true
   }
 
@@ -955,10 +929,10 @@ object DedupMaintenance {
     * every surface rewritten live-rows-only, tombstones truncated, the
     * generation reset — the LSM compaction step that bounds read
     * amplification after long increment chains. Identity-preserving by
-    * construction (the live views are what it writes); journaled like
+    * construction (the live views are what it writes); `pending` like
     * an increment, so a crash mid-compaction degrades to a full
-    * rebuild, never serves half-swapped tables. The input fingerprint
-    * is untouched — compaction changes the physical layout, not what
+    * rebuild, never serves half-swapped tables. The manifest's inputs
+    * are untouched — compaction changes the physical layout, not what
     * the artifacts derive from. */
   def compact(spark: SparkSession, out: String): Unit =
     TextDedup.artifactLock(out).synchronized {
@@ -971,12 +945,11 @@ object DedupMaintenance {
     * locks (the OS file lock is not reentrant — [[update]]'s
     * auto-compaction would deadlock-or-throw re-acquiring it). */
   private def compactLocked(spark: SparkSession, out: String): Unit = {
-        val fp = new java.io.File(out, "_FINGERPRINT").toPath
-        require(java.nio.file.Files.exists(fp) &&
-          !java.nio.file.Files.exists(TextDedup.incJournal(out)),
-          s"no complete artifact set under $out to compact")
-        java.nio.file.Files.write(TextDedup.incJournal(out),
-          "compact".getBytes("UTF-8"))
+        val found = ArtifactManifest.read(out)
+          .filter(m => m.complete && m.pending.isEmpty)
+        require(found.nonEmpty, s"no complete artifact set under $out to compact")
+        val base = found.get
+        ArtifactManifest.commit(out, base.copy(pending = Some("compact")))
         def zeroGen(df: DataFrame): DataFrame =
           df.withColumn("gen", lit(0))
         swapIn(spark, s"$out/shingle_index",
@@ -1021,17 +994,16 @@ object DedupMaintenance {
             new java.io.File(layout, "_GEOMETRY").toPath,
             s"nLists=$l\nnprobe=$p".getBytes("UTF-8"))
         swapIn(spark, s"$out/tombstones", TextDedup.emptyTombstones(spark))
-        TextDedup.markTombstonesClean(out)
-        TextDedup.writeGen(out, 0)
-        java.nio.file.Files.deleteIfExists(TextDedup.incJournal(out))
+        ArtifactManifest.commit(out,
+          base.copy(gen = 0, tombstonesClean = true, pending = None))
         // every table was physically replaced under the same paths —
         // drop any cached listings before a reader sees them
         spark.catalog.refreshByPath(out)
   }
 
   /** Replace a staged table with a new frame: write beside, delete,
-    * rename. NOT atomic — the caller's journal covers the window (a
-    * crash mid-swap → journal present → full rebuild). A direct
+    * rename. NOT atomic — the caller's `pending` manifest covers the
+    * window (a crash mid-swap → pending → full rebuild). A direct
     * overwrite would be worse: Spark deletes the target before the
     * (lazy) plan reads it. */
   private def swapIn(spark: SparkSession, path: String, df: DataFrame): Unit = {

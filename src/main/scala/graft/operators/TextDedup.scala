@@ -111,6 +111,7 @@ object TextDedup {
     * a retune of the default silently diverging from the gate would
     * serve a staged graph built under the old cap). */
   val DefaultMaxDf = 100
+  val DefaultMinJaccard = 0.5
 
   def nearDupPairs(spark: SparkSession, dir: String, minJaccard: Double = 0.5,
                    maxDf: Int = DefaultMaxDf): DataFrame =
@@ -228,58 +229,14 @@ object TextDedup {
                          minJaccard: Double = 0.5, maxDf: Int = DefaultMaxDf): DataFrame =
     nearDupFrom(spark.read.parquet(stagedPath), minJaccard, maxDf)
 
-  /** Write the dedup PAIR-GRAPH artifacts once — the corpus-build
-    * analogue of [[VectorOps.writeIvfLayout]], and the same
-    * architectural move as the reference's materialized views
-    * (kits/users/pg/pipes/users_mv.pipe:19-20: precompute at ingest,
-    * serve from the precomputed table). Six registered consumers
-    * (clusters, pagerank, canonical pick, split-leakage audit, corpus
-    * build, embedding clusters) each need the near-dup candidate
-    * pipeline; self-contained they re-derive it per query — correct,
-    * but at 100 TB that is the single most expensive stage run six
-    * times. This stages it ONCE:
-    *
-    *   `out/pairs`            (doc_a, doc_b, jaccard)   — text near-dup graph
-    *   `out/clusters`         (doc_id, cluster_id, cluster_size)
-    *   `out/emb_probe_layout` (vec_id, embedding)/list_id= — multi-probe
-    *                          IVF layout, partitioned by list
-    *   `out/emb_pairs`        (vec_a, vec_b, cosine)    — embedding graph,
-    *                          derived FROM the staged layout
-    *   `out/emb_clusters`     (vec_id, cluster_id, cluster_size)
-    *
-    * Clusters are computed FROM the just-staged pair parquet (read
-    * back, not the in-memory plan), so the CC iteration's edge scan
-    * is the compact artifact — and a restart resumes from the staged
-    * pairs without re-shingling the corpus. Every `*Staged` consumer
-    * is asserted result-identical to its self-contained form in
-    * DedupArtifactsSpec.
-    *
-    * Skippable AND regen-proof: the build fingerprints its inputs
-    * (name/size/mtime of the docs+embeddings parquet, plus the
-    * staging params) into `out/_FINGERPRINT` written LAST — a
-    * matching fingerprint means the artifacts derive from exactly
-    * these bytes and the rebuild is skipped (returns false); any
-    * input change, param change, or half-finished previous build
-    * (crash before the marker) rebuilds. The marker is deleted
-    * FIRST on rebuild so a crash mid-overwrite can never leave a
-    * fresh fingerprint over stale artifacts. Within a rebuild,
-    * per-stage `_STAGE_*` markers make the build RESUMABLE: a crash
-    * after the pair graph landed restarts at clustering, not at
-    * re-shingling (asserted in DedupArtifactsSpec). A JVM-wide per-dir
-    * monitor serializes concurrent invocations (the HTTP pool can
-    * run two at once; without it one request's overwrite deletes
-    * parquet footers out from under the other's read).
-    *
-    * @return true when the artifacts were (re)built, false when the
-    *         fingerprint matched and the build was skipped. */
   /** The staged artifacts, in build order. `_SUCCESS` is the
     * completeness witness for each (Spark writes it last): a skip is
     * only honored when every artifact still has one, so a /tmp reaper
     * or manual cleanup that removes staged files can never strand the
-    * consumers behind a matching fingerprint. `tombstones` is FIRST:
-    * a full rebuild truncates it (and resets `_GEN`) before any other
-    * stage, so the live readers the later stages go through see
-    * exactly the raw fresh tables. */
+    * consumers behind a current manifest. `tombstones` is FIRST: a
+    * full rebuild truncates it before any other stage, so the live
+    * readers the later stages go through see exactly the raw fresh
+    * tables. */
   private[operators] val artifactStages =
     Seq("tombstones", "shingle_index", "shingle_df", "doc_stats", "doc_files",
       "pairs", "clusters", "span_index", "span_df", "spans",
@@ -293,7 +250,7 @@ object TextDedup {
     * through the shared `tombstones` table and resolved at read:
     *
     *  - every staged row (except `shingle_df` partials) carries a
-    *    `gen` column — the generation ([[readGen]]) of the
+    *    `gen` column — the generation (the manifest's `gen`) of the
     *    full build (0) or increment (1, 2, …) that wrote it;
     *  - `tombstones` holds (surface, id, gen) rows: a tombstone kills
     *    every row of `surface` whose id matches and whose row-gen is
@@ -350,24 +307,6 @@ object TextDedup {
       .select("doc_id", "lang", "digest", "n_tokens", "stopword_ratio",
         "distinct_ratio", "dup_trigram_frac", "top_unigram_frac")
 
-  /** `_TOMBSTONES_CLEAN` marker: present ⇒ the tombstones table is
-    * EMPTY, so every staged reader keeps the raw scan without even
-    * running the emptiness-probe job. Written when the table is
-    * truncated (full build, compaction); deleted BEFORE the first
-    * tombstone append of an increment — so a crash between delete and
-    * append degrades to the probe (slow but right), never to a
-    * present-marker-with-live-tombstones state (fast but wrong). The
-    * probe job is tiny, but it ran per surface per query even in the
-    * zero-tombstone serving state — a measurable read tax on the
-    * dedup endpoint family (round-11 verdict). */
-  private[graft] def tombstonesCleanMarker(out: String): java.nio.file.Path =
-    new java.io.File(out, "_TOMBSTONES_CLEAN").toPath
-  private[graft] def markTombstonesClean(out: String): Unit =
-    java.nio.file.Files.write(tombstonesCleanMarker(out),
-      Array.emptyByteArray)
-  private[graft] def clearTombstonesClean(out: String): Unit =
-    java.nio.file.Files.deleteIfExists(tombstonesCleanMarker(out))
-
   /** Raw on-disk bytes of the tombstones table — the broadcast guard's
     * input. An overestimate of the grouped max-gen frame (raw rows ≥
     * grouped rows), so staying under the threshold is always safe. */
@@ -395,12 +334,14 @@ object TextDedup {
     * surface has no tombstones at all (the common serving state —
     * fresh build, or just compacted): callers then keep the RAW scan,
     * so the zero-tombstone plan is byte-identical to pre-v4 (dynamic
-    * partition pruning on the probe layout included). With the
-    * `_TOMBSTONES_CLEAN` marker present even the emptiness-probe job
-    * is skipped — a pure filesystem check. */
+    * partition pruning on the probe layout included). When the
+    * manifest says `tombstones_clean` even the emptiness-probe job is
+    * skipped: that job is tiny, but it ran per surface per query in
+    * the zero-tombstone serving state, a measurable read tax on the
+    * dedup endpoint family. */
   private[graft] def tombstoneMax(spark: SparkSession, out: String,
                                   surface: String): Option[DataFrame] = {
-    if (java.nio.file.Files.exists(tombstonesCleanMarker(out))) return None
+    if (ArtifactManifest.read(out).exists(_.tombstonesClean)) return None
     val t = spark.read.parquet(s"$out/tombstones")
       .filter(col("surface") === surface)
     if (t.isEmpty) None
@@ -448,114 +389,51 @@ object TextDedup {
     }
   }
 
-  /** The artifact set's current generation: 0 after a full build,
-    * bumped by each increment. */
-  private[graft] def readGen(out: String): Int = {
-    val f = new java.io.File(out, "_GEN").toPath
-    if (!java.nio.file.Files.exists(f)) 0
-    else new String(java.nio.file.Files.readAllBytes(f), "UTF-8").trim.toInt
-  }
-  private[graft] def writeGen(out: String, g: Int): Unit =
-    java.nio.file.Files.write(new java.io.File(out, "_GEN").toPath,
-      g.toString.getBytes("UTF-8"))
-
   /** The empty tombstones frame (schema anchor for the table). */
   private[operators] def emptyTombstones(spark: SparkSession): DataFrame =
     spark.range(0).select(lit("").as("surface"), col("id"),
       lit(0).cast("int").as("gen"))
 
   /** dir-relative source file of the scanned row — the column
-    * [[DedupMaintenance]] joins against the fingerprint's file diff.
+    * [[DedupMaintenance]] joins against the manifest's file diff.
     * The rel path starts at the table directory name, matching
-    * [[inputDataFiles]]' entries exactly. */
+    * [[inputFiles]]' entries exactly. */
   private[operators] def relFileCol: Column =
     regexp_extract(input_file_name(),
       "/((?:documents|embeddings)\\.parquet(?:/.*)?)$", 1)
 
   /** True when the staged artifact set under `out` is CURRENT for the
-    * inputs in `dir`: the fingerprint matches and every stage still
-    * has its `_SUCCESS`. This is the build's own skip test, exposed as
-    * the READ-side routing predicate: a registered query may serve
-    * from the artifact exactly when this holds (else it must fall back
-    * to the self-contained form — same result, just without the staged
-    * speedup). */
-  def artifactsCurrent(dir: String, out: String, minJaccard: Double = 0.5,
-                       maxDf: Int = DefaultMaxDf): Boolean = {
-    val marker = new java.io.File(out, "_FINGERPRINT").toPath
-    // a present increment journal means a crashed mid-increment: the
-    // artifacts may hold partial appends, so they are NOT current even
-    // if the fingerprint text happens to match (e.g. the operator
-    // reverted the delta file after the crash)
-    !java.nio.file.Files.exists(incJournal(out)) &&
-      java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") ==
-        inputFingerprint(dir, minJaccard, maxDf) &&
-      artifactStages.forall(stageComplete(out, _))
-  }
-
-  private[operators] def incJournal(out: String): java.nio.file.Path =
-    new java.io.File(out, "_INC_JOURNAL").toPath
-
-  /** Currency of the PARAM-FREE artifact segment (round-13 advisory):
-    * the span tables (fixed `span=` constants), the screening index
-    * (digests + bands), and the verdict surface are all independent of
-    * the `minJaccard`/`maxDf` staging params — an artifact built under
-    * ANY params serves them validly. This gate checks what those
-    * consumers actually need: no crashed increment, a complete build
-    * (`_FINGERPRINT` is written last), the same format version and
-    * span constants, the same input bytes — but the params line is
-    * matched by SHAPE, not value. `stages` names the surfaces the
-    * route reads (each must still have its `_SUCCESS`), so a route
-    * never demands stages it doesn't touch. NOTE (round-14 advisory):
-    * during a stage-set EXTENSION the builder deletes `_FINGERPRINT`
-    * first and rewrites it last, so for the extension window every
-    * param-free route conservatively falls back to the self-contained
-    * form — same results, staged speedup resumes when the fingerprint
-    * lands. Serving THROUGH an extension would need the fingerprint
-    * kept in place while only new stages build; not done — the
-    * crash-degrades-to-full guarantee rests on fingerprint-last. */
-  private[graft] def paramFreeCurrent(dir: String, out: String,
-                                      stages: Seq[String]): Boolean = {
-    val marker = new java.io.File(out, "_FINGERPRINT").toPath
-    if (java.nio.file.Files.exists(incJournal(out)) ||
-        !java.nio.file.Files.exists(marker)) return false
-    val stored = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-      .linesIterator.toSeq
-    val headerRe =
-      ("""v5 minJaccard=\S+ maxDf=\d+ """ +
-        s"span=$SpanK/$SpanW/$SpanMinRun/$SpanMaxDf").r
-    stored.headOption.exists(headerRe.pattern.matcher(_).matches()) &&
-      stored.drop(1) == inputDataFiles(dir).map { case (rel, f) =>
-        s"$rel:${f.length}:${f.lastModified}" } &&
+    * inputs in `dir` — the build's own skip test, exposed as the
+    * READ-side routing predicate: a registered query may serve from the
+    * artifact exactly when this holds (else it falls back to the
+    * self-contained form — same result, just without the staged
+    * speedup). The manifest must have nothing `pending` (a crashed
+    * increment may have left partial appends), be complete, match the
+    * format version, span constants and `params`, and list exactly the
+    * current input files; each of `stages` must still have its
+    * `_SUCCESS` (a reaper may have deleted staged files).
+    *
+    * `params = None` judges the PARAM-FREE segment: the span tables,
+    * the screening index (digests + bands) and the verdict surface do
+    * not depend on minJaccard/maxDf, so a set built under ANY params
+    * serves them. `stages` names the surfaces the route reads, so a
+    * route never demands stages it doesn't touch. */
+  def artifactsCurrent(dir: String, out: String,
+                       params: Option[(Double, Int)] =
+                         Some((DefaultMinJaccard, DefaultMaxDf)),
+                       stages: Seq[String] = artifactStages): Boolean =
+    ArtifactManifest.read(out).exists(m =>
+      m.pending.isEmpty && m.complete && m.spans == spanConstants &&
+        params.forall(_ == m.params) &&
+        m.inputs == inputFiles(dir)) &&
       stages.forall(stageComplete(out, _))
-  }
-
-  /** The staging params the artifact set under `out` was built with,
-    * parsed from the stored fingerprint header — None when no complete
-    * fingerprint exists. The control plane uses these so status and
-    * maintenance act on the artifact's OWN params: an artifact
-    * maintained under non-default minJaccard/maxDf would otherwise
-    * always report stale against the defaults (round-11 advisory). */
-  private[graft] def storedParams(out: String): Option[(Double, Int)] = {
-    val marker = new java.io.File(out, "_FINGERPRINT").toPath
-    if (!java.nio.file.Files.exists(marker)) None
-    else {
-      val header = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-        .linesIterator.toSeq.headOption.getOrElse("")
-      val re = """v5 minJaccard=(\S+) maxDf=(\d+) span=\S+""".r
-      header match {
-        case re(mj, df) => Some((mj.toDouble, df.toInt))
-        case _ => None
-      }
-    }
-  }
 
   /** True when a REQUESTED embedding geometry is compatible with the
     * staged layout: `embNLists <= 0` means "whatever the build derived"
-    * (always compatible — with a matching input fingerprint the sqrt
-    * schedule re-derives the same value); an explicit count must equal
-    * the persisted `_GEOMETRY`. Checked on every skip path — embNLists
-    * is deliberately NOT part of the fingerprint header (0 and the
+    * (always compatible — with matching input files the sqrt schedule
+    * re-derives the same value); an explicit count must equal the
+    * persisted `_GEOMETRY`. Checked on every skip path — embNLists is
+    * deliberately NOT part of the manifest (0 and the
     * explicitly-matching value must both skip), so without this check a
     * rebuild request under a DIFFERENT explicit geometry would return
     * "skip" and silently serve a layout built under another anchor set
@@ -565,8 +443,51 @@ object TextDedup {
       VectorOps.readLayoutGeometry(s"$out/emb_probe_layout")
         .exists(_._1 == embNLists.toLong)
 
+  /** Write the dedup PAIR-GRAPH artifacts once — the corpus-build
+    * analogue of [[VectorOps.writeIvfLayout]], and the same
+    * architectural move as the reference's materialized views
+    * (kits/users/pg/pipes/users_mv.pipe:19-20: precompute at ingest,
+    * serve from the precomputed table). Six registered consumers
+    * (clusters, pagerank, canonical pick, split-leakage audit, corpus
+    * build, embedding clusters) each need the near-dup candidate
+    * pipeline; self-contained they re-derive it per query — correct,
+    * but at 100 TB that is the single most expensive stage run six
+    * times. This stages it ONCE:
+    *
+    *   `out/pairs`            (doc_a, doc_b, jaccard)   — text near-dup graph
+    *   `out/clusters`         (doc_id, cluster_id, cluster_size)
+    *   `out/emb_probe_layout` (vec_id, embedding)/list_id= — multi-probe
+    *                          IVF layout, partitioned by list
+    *   `out/emb_pairs`        (vec_a, vec_b, cosine)    — embedding graph,
+    *                          derived FROM the staged layout
+    *   `out/emb_clusters`     (vec_id, cluster_id, cluster_size)
+    *
+    * Clusters are computed FROM the just-staged pair parquet (read
+    * back, not the in-memory plan), so the CC iteration's edge scan
+    * is the compact artifact — and a restart resumes from the staged
+    * pairs without re-shingling the corpus. Every `*Staged` consumer
+    * is asserted result-identical to its self-contained form in
+    * DedupArtifactsSpec.
+    *
+    * Skippable, regen-proof and resumable through the set's
+    * [[ArtifactManifest]]: a complete manifest whose params and input
+    * files (relpath/size/mtime of the docs+embeddings parquet) match
+    * means the artifacts derive from exactly these bytes, and the
+    * build is skipped (returns false). Otherwise the build first
+    * commits an INCOMPLETE manifest, then one commit per finished
+    * stage, then the complete one — so a crash at any point leaves a
+    * manifest that never claims more than landed. A crash after the
+    * pair graph landed restarts at clustering, not at re-shingling
+    * (asserted in DedupArtifactsSpec). A JVM-wide per-dir monitor
+    * serializes concurrent invocations (the HTTP pool can run two at
+    * once; without it one request's overwrite deletes parquet footers
+    * out from under the other's read).
+    *
+    * @return true when the artifacts were (re)built, false when they
+    *         were current and the build was skipped. */
   def writeDedupArtifacts(spark: SparkSession, dir: String, out: String,
-                          minJaccard: Double = 0.5, maxDf: Int = DefaultMaxDf,
+                          minJaccard: Double = DefaultMinJaccard,
+                          maxDf: Int = DefaultMaxDf,
                           embNLists: Int = 0): Boolean =
     artifactLock(out).synchronized { withArtifactFileLock(out) {
       // the inputs may have been rewritten in place (copy-on-write
@@ -583,31 +504,30 @@ object TextDedup {
   private[operators] def buildLocked(spark: SparkSession, dir: String, out: String,
                                      minJaccard: Double, maxDf: Int,
                                      embNLists: Int): Boolean = {
-      val fp = inputFingerprint(dir, minJaccard, maxDf)
-      val marker = new java.io.File(out, "_FINGERPRINT").toPath
-      if (artifactsCurrent(dir, out, minJaccard, maxDf) &&
-          stagedGeometryOk(out, embNLists)) {
-        // one-time marker upgrade for artifacts staged before the
-        // clean-marker existed: pay the emptiness probe ONCE here (a
-        // write-path call) so every read stops paying it
-        if (!java.nio.file.Files.exists(tombstonesCleanMarker(out)) &&
-            spark.read.parquet(s"$out/tombstones").isEmpty)
-          markTombstonesClean(out)
-        false
-      } else {
-        java.nio.file.Files.deleteIfExists(marker)
-        // a geometry-only rebuild (same inputs, different explicit
-        // embNLists): the per-stage resume below keys on the input
-        // fingerprint alone, so every stage's marker must be
-        // invalidated by hand or the stages would skip and keep the
-        // old anchor set. ALL markers, not just the emb ones: the
-        // tombstones stage must re-truncate (live text tables may
-        // carry tombstoned rows a partial emb-only rebuild would
-        // resurrect or double-filter)
-        if (!stagedGeometryOk(out, embNLists))
-          for (s <- artifactStages)
-            java.nio.file.Files.deleteIfExists(
-              new java.io.File(out, s"_STAGE_$s").toPath)
+      if (artifactsCurrent(dir, out, Some((minJaccard, maxDf))) &&
+          stagedGeometryOk(out, embNLists)) false
+      else {
+        val inputs = inputFiles(dir)
+        val prev = ArtifactManifest.read(out)
+        // Per-stage resume: a build killed mid-way — disk-full, spot
+        // preemption — restarts at the first stage the manifest does
+        // not list, so the corpus is never re-shingled for a crash in a
+        // later stage, and the per-ATTEMPT disk peak is one stage's
+        // spill, not the whole build's. Only a generation-0 manifest of
+        // the same params and inputs, with nothing pending, lists stages
+        // a rebuild may keep: an increment's partial appends or live
+        // tombstones would otherwise survive into the "fresh" set, and
+        // a different explicit geometry must restage every surface.
+        val kept = prev.filter(m => m.gen == 0 && m.pending.isEmpty &&
+            m.params == (minJaccard, maxDf) &&
+            m.spans == spanConstants && m.inputs == inputs &&
+            stagedGeometryOk(out, embNLists))
+          .fold(Set.empty[String])(_.stages)
+        var m = ArtifactManifest.Manifest(minJaccard, maxDf, spanConstants,
+          inputs, kept, complete = false, gen = 0,
+          tombstonesClean = kept("tombstones"), pending = None,
+          lastUpdate = prev.flatMap(_.lastUpdate))
+        ArtifactManifest.commit(out, m)
         // Shuffle files of a finished stage live until the driver GCs
         // the ShuffleDependency (ContextCleaner); inside one long
         // multi-artifact build nothing triggers that GC, so transient
@@ -617,37 +537,22 @@ object TextDedup {
         // is reusable across these boundaries anyway; on a cluster
         // this is executor shuffle-dir pressure, same failure mode).
         def reclaimShuffles(): Unit = { System.gc(); Thread.sleep(100) }
-        // Per-stage resume: each artifact gets its own `_STAGE_<name>`
-        // marker (holding the input fingerprint), written only after
-        // its parquet lands. A build killed mid-way — disk-full, spot
-        // preemption — restarts from the first stage whose marker is
-        // missing or stale, so the corpus is never re-shingled for a
-        // crash in a later stage, and the per-ATTEMPT disk peak is one
-        // stage's spill, not the whole build's. Stage name == output
-        // subdir; a marker without its directory (manual delete) also
-        // rebuilds. Stale markers never outlive their stage: the
-        // marker is deleted before the stage body runs.
-        def stage(name: String)(body: => Unit): Unit = {
-          val m = new java.io.File(out, s"_STAGE_$name").toPath
-          val done = java.nio.file.Files.exists(m) &&
-            new String(java.nio.file.Files.readAllBytes(m), "UTF-8") == fp &&
-            stageComplete(out, name)
-          if (!done) {
-            java.nio.file.Files.deleteIfExists(m)
+        // Stage name == output subdir; a listed stage whose `_SUCCESS`
+        // is gone (manual delete) also reruns.
+        def stage(name: String)(body: => Unit): Unit =
+          if (!(m.stages(name) && stageComplete(out, name))) {
             body
-            java.nio.file.Files.write(m, fp.getBytes("UTF-8"))
+            m = m.copy(stages = m.stages + name)
+            ArtifactManifest.commit(out, m)
             reclaimShuffles()
           }
-        }
         // tombstones FIRST: a rebuild starts from an empty tombstone
-        // set and generation 0, so every later stage's live read is
-        // exactly its raw fresh table
+        // set, so every later stage's live read is exactly its raw
+        // fresh table
         stage("tombstones") {
-          clearTombstonesClean(out)
           emptyTombstones(spark)
             .write.mode("overwrite").parquet(s"$out/tombstones")
-          writeGen(out, 0)
-          markTombstonesClean(out)
+          m = m.copy(tombstonesClean = true)
         }
         // maintenance state next — the pair stage then consumes the
         // staged index instead of re-tokenizing the corpus, and every
@@ -735,10 +640,10 @@ object TextDedup {
         // training-corpus builds read from text, staged once so the
         // registered corpus endpoints run corpus-scan-free. Pure
         // per-doc functions → plain retract-and-reapply maintenance.
-        // NOTE stage-set EXTENSION: adding a stage does not change
-        // the input fingerprint, so an artifact set staged before this
-        // surface existed extends IN PLACE — every existing stage's
-        // marker still matches and skips; only this stage runs. At
+        // NOTE stage-set EXTENSION: adding a stage does not change the
+        // manifest's params or inputs, so a generation-0 set staged
+        // before this surface existed extends IN PLACE — every listed
+        // stage skips; only this stage runs. At
         // 100 TB that is the difference between one verdict pass and
         // re-shingling the corpus because the format grew a column.
         stage("doc_verdicts") {
@@ -773,10 +678,7 @@ object TextDedup {
             .withColumn("gen", lit(0))
             .write.mode("overwrite").parquet(s"$out/emb_clusters")
         }
-        java.nio.file.Files.write(marker, fp.getBytes("UTF-8"))
-        // a completed FULL build supersedes any crashed increment: the
-        // journal (which forces the full-rebuild fallback) dies last
-        java.nio.file.Files.deleteIfExists(incJournal(out))
+        ArtifactManifest.commit(out, m.copy(complete = true))
         true
       }
   }
@@ -792,11 +694,11 @@ object TextDedup {
   /** Cross-PROCESS build serialization: the JVM monitor above only
     * serializes threads within one JVM, but the artifact dir is a
     * machine-shared path — an ApiServer JVM and a Bench/Verify JVM can
-    * otherwise both see "no marker" and overwrite each other's parquet
+    * otherwise both see "not current" and overwrite each other's parquet
     * mid-build. A blocking OS file lock on a sibling `<out>.lock`
     * (sibling, so a rebuild can never delete its own lock file) makes
     * the second process wait, then observe the first build's
-    * fingerprint and skip. Always taken AFTER the JVM monitor —
+    * manifest and skip. Always taken AFTER the JVM monitor —
     * overlapping `FileChannel.lock` calls from one JVM would throw
     * OverlappingFileLockException, and the monitor guarantees only one
     * thread per JVM reaches it. */
@@ -813,44 +715,34 @@ object TextDedup {
 
   /** Input identity for the artifact build: every DATA file backing
     * the documents and embeddings tables (a `.parquet` may be a single
-    * file or a Spark-written directory) as relpath/size/mtime triples,
-    * plus the staging params — mtimes because the harness can rewrite
-    * a table in place at the same size.
-    *
-    * v4 (the merge-on-read CDC format): entries are dir-RELATIVE
-    * paths, one per line, so [[DedupMaintenance.update]] can diff a
-    * stored fingerprint against the current one and classify every
-    * file as unchanged / NEW (an append) / MODIFIED or REMOVED (a
-    * copy-on-write update or delete of the docs it carried — resolved
-    * to ids through the staged `doc_files`/`vec_files` maps).
-    * Commit-machinery files (`_SUCCESS`, dotfiles) are excluded: a
-    * Spark append rewrites `_SUCCESS`, and counting it would
-    * misclassify a pure append as a modification. The version bump
-    * itself forces a one-time rebuild of v3-staged dirs (which lack
-    * the gen/tombstone state). */
-  private[graft] def inputDataFiles(dir: String): Seq[(String, java.io.File)] = {
-    def entries(prefix: String, p: java.io.File): Seq[(String, java.io.File)] =
+    * file or a Spark-written directory) as dir-RELATIVE
+    * relpath/size/mtime triples — mtimes because the harness can
+    * rewrite a table in place at the same size. Relative, so
+    * [[DedupMaintenance.update]] can diff the manifest's stored list
+    * against the current one and classify every file as unchanged /
+    * NEW (an append) / MODIFIED or REMOVED (a copy-on-write update or
+    * delete of the docs it carried — resolved to ids through the
+    * staged `doc_files`/`vec_files` maps). Commit-machinery files
+    * (`_SUCCESS`, dotfiles) are excluded: a Spark append rewrites
+    * `_SUCCESS`, and counting it would misclassify a pure append as a
+    * modification. */
+  private[graft] def inputFiles(dir: String): Seq[ArtifactManifest.InputFile] = {
+    def entries(prefix: String, p: java.io.File): Seq[ArtifactManifest.InputFile] =
       if (p.isDirectory)
         Option(p.listFiles).getOrElse(Array.empty[java.io.File])
           .sortBy(_.getName).toSeq
           .flatMap(c => entries(s"$prefix${p.getName}/", c))
       else if (p.getName.startsWith("_") || p.getName.startsWith(".")) Seq.empty
-      else Seq((prefix + p.getName, p))
+      else Seq(ArtifactManifest.InputFile(prefix + p.getName, p.length,
+        p.lastModified))
     Seq("documents.parquet", "embeddings.parquet")
       .map(t => new java.io.File(dir, t))
       .flatMap(t => entries("", t))
   }
 
-  private[graft] def fingerprintHeader(minJaccard: Double, maxDf: Int): String =
-    s"v5 minJaccard=$minJaccard maxDf=$maxDf " +
-      s"span=$SpanK/$SpanW/$SpanMinRun/$SpanMaxDf"
-
-  private[graft] def inputFingerprint(dir: String, minJaccard: Double,
-                                      maxDf: Int): String =
-    (fingerprintHeader(minJaccard, maxDf) +:
-      inputDataFiles(dir).map { case (rel, f) =>
-        s"$rel:${f.length}:${f.lastModified}" })
-      .mkString("\n")
+  /** The span constants the staged span surfaces are built under. */
+  private[operators] def spanConstants: String =
+    s"$SpanK/$SpanW/$SpanMinRun/$SpanMaxDf"
 
   def stagedPairs(spark: SparkSession, art: String): DataFrame =
     livePairRows(spark, art, "pairs", "doc_a", "doc_b")
@@ -909,7 +801,7 @@ object TextDedup {
     * whose shuffle spill ended the round-11 sf100 sweep).
     *
     * Param gates: `minJaccard`/`maxDf` route through
-    * [[artifactsCurrent]]'s fingerprint — an artifact built under
+    * [[artifactsCurrent]]'s params — an artifact built under
     * different staging params never serves. `maxRounds` must be the
     * build-time default: the staged clusters were converged under it,
     * and a caller asking for FEWER rounds wants the (possibly
@@ -917,7 +809,7 @@ object TextDedup {
   def dupClustersAuto(spark: SparkSession, dir: String, art: String,
                       minJaccard: Double = 0.5, maxDf: Int = DefaultMaxDf,
                       maxRounds: Int = 64): DataFrame =
-    if (maxRounds == 64 && artifactsCurrent(dir, art, minJaccard, maxDf))
+    if (maxRounds == 64 && artifactsCurrent(dir, art, Some((minJaccard, maxDf))))
       dupClustersStaged(spark, art)
     else dupClusters(spark, dir, maxRounds)
 
@@ -928,7 +820,7 @@ object TextDedup {
   def dupGraphPagerankAuto(spark: SparkSession, dir: String, art: String,
                            iters: Int = 3, minJaccard: Double = 0.5,
                            maxDf: Int = DefaultMaxDf): DataFrame =
-    if (artifactsCurrent(dir, art, minJaccard, maxDf))
+    if (artifactsCurrent(dir, art, Some((minJaccard, maxDf))))
       dupGraphPagerankStaged(spark, art, iters)
     else dupGraphPagerank(spark, dir, iters)
 
@@ -945,7 +837,7 @@ object TextDedup {
     * else the self-contained pipeline. */
   def splitLeakageAuto(spark: SparkSession, dir: String, art: String,
                        minJaccard: Double = 0.5, maxDf: Int = DefaultMaxDf): DataFrame =
-    if (artifactsCurrent(dir, art, minJaccard, maxDf))
+    if (artifactsCurrent(dir, art, Some((minJaccard, maxDf))))
       splitLeakageStaged(spark, dir, art)
     else splitLeakageAudit(spark, dir, minJaccard, maxDf)
 
@@ -955,10 +847,10 @@ object TextDedup {
     * presentation sort over a parquet read — the text twin of
     * [[VectorOps.nearDupPairsAuto]], which has routed the embedding
     * endpoint since round 11. minJaccard/maxDf gate through the
-    * fingerprint like every text route. */
+    * manifest like every text route. */
   def nearDupPairsAuto(spark: SparkSession, dir: String, art: String,
                        minJaccard: Double = 0.5, maxDf: Int = DefaultMaxDf): DataFrame =
-    if (artifactsCurrent(dir, art, minJaccard, maxDf))
+    if (artifactsCurrent(dir, art, Some((minJaccard, maxDf))))
       stagedPairs(spark, art).orderBy("doc_a", "doc_b")
     else nearDupPairs(spark, dir, minJaccard, maxDf)
 
@@ -970,7 +862,7 @@ object TextDedup {
     * under the DEFAULT maxDf, so the route gates on it too. */
   def nearDupEditDistanceAuto(spark: SparkSession, dir: String, art: String,
                               minJaccard: Double = 0.5): DataFrame =
-    if (artifactsCurrent(dir, art, minJaccard, DefaultMaxDf))
+    if (artifactsCurrent(dir, art, Some((minJaccard, DefaultMaxDf))))
       nearDupEditDistanceFrom(spark, dir, stagedPairs(spark, art))
     else nearDupEditDistance(spark, dir, minJaccard)
 
@@ -981,16 +873,16 @@ object TextDedup {
     * read. The route gates on the build-time span params — a caller
     * asking for a different k/w/minRun/maxDf wants a pipeline the
     * staged table was not built under, and falls back. The artifact
-    * gate is [[paramFreeCurrent]]: the span tables don't depend on the
-    * minJaccard/maxDf STAGING params, so a set built under non-default
-    * ones serves spans all the same (round-13 advisory). */
+    * gate is the param-free [[artifactsCurrent]]: the span tables
+    * don't depend on the minJaccard/maxDf STAGING params, so a set
+    * built under non-default ones serves spans all the same. */
   def substringSpansAuto(spark: SparkSession, dir: String, art: String,
                          k: Int = SpanK, w: Int = SpanW,
                          minRun: Int = SpanMinRun,
                          maxDf: Int = SpanMaxDf): DataFrame =
     if (k == SpanK && w == SpanW && minRun == SpanMinRun &&
         maxDf == SpanMaxDf &&
-        paramFreeCurrent(dir, art, Seq("tombstones", "spans")))
+        artifactsCurrent(dir, art, None, Seq("tombstones", "spans")))
       stagedSpans(spark, art).orderBy("doc_a", "doc_b", "offset_delta")
     else substringSpans(spark, dir, k, w, minRun, maxDf)
 
@@ -1000,7 +892,7 @@ object TextDedup {
     * span pipeline, so the threshold does not gate the route). */
   def spanDocStatsAuto(spark: SparkSession, dir: String, art: String,
                        longSpanChars: Int = 40): DataFrame =
-    if (paramFreeCurrent(dir, art, Seq("tombstones", "spans")))
+    if (artifactsCurrent(dir, art, None, Seq("tombstones", "spans")))
       spanDocStatsFrom(stagedSpans(spark, art), longSpanChars)
         .orderBy("doc_id")
     else spanDocStats(spark, dir, longSpanChars)
@@ -1009,7 +901,7 @@ object TextDedup {
     * when current, always-run surgery tail. */
   def dedupRewriteAuto(spark: SparkSession, dir: String, art: String,
                        longSpanChars: Int = 40): DataFrame =
-    if (paramFreeCurrent(dir, art, Seq("tombstones", "spans")))
+    if (artifactsCurrent(dir, art, None, Seq("tombstones", "spans")))
       dedupRewriteFrom(spark, dir, stagedSpans(spark, art), longSpanChars)
     else dedupRewrite(spark, dir, longSpanChars)
 
@@ -1249,7 +1141,7 @@ object TextDedup {
   def minhashLshPairsAuto(spark: SparkSession, dir: String, art: String,
                           minJaccard: Double = 0.5,
                           maxBucket: Int = Int.MaxValue): DataFrame =
-    if (paramFreeCurrent(dir, art,
+    if (artifactsCurrent(dir, art, None,
         Seq("tombstones", "band_index", "shingle_index")))
       minhashLshPairsStaged(spark, art, minJaccard, maxBucket)
     else minhashLshPairs(spark, dir, minJaccard, maxBucket)
@@ -1357,7 +1249,7 @@ object TextDedup {
   def screenIncrementAuto(spark: SparkSession, dir: String, art: String,
                           minJaccard: Double = 0.5,
                           maxBucket: Int = Int.MaxValue): DataFrame =
-    if (paramFreeCurrent(dir, art,
+    if (artifactsCurrent(dir, art, None,
         Seq("tombstones", "doc_digests", "band_index", "shingle_index")))
       screenIncrementStaged(spark, art, minJaccard, maxBucket)
     else screenIncrement(spark, dir, minJaccard, maxBucket)

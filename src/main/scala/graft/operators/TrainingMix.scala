@@ -245,12 +245,12 @@ object TrainingMix {
     * projection) this surface staged away. Every input is param-free
     * (span constants pinned by the gate, repetition thresholds applied
     * at read over stored metrics), so the route gates on the
-    * PARAM-FREE fingerprint segment — an artifact built under
+    * PARAM-FREE manifest segment — an artifact built under
     * non-default minJaccard/maxDf serves it all the same.
     * budget/nShards parameterize the always-run tail and do not gate. */
   def buildCorpusV2Auto(spark: SparkSession, dir: String, art: String,
                         budget: Int = 256, nShards: Int = 4): DataFrame =
-    if (TextDedup.paramFreeCurrent(dir, art,
+    if (TextDedup.artifactsCurrent(dir, art, None,
         Seq("tombstones", "spans", "doc_verdicts")))
       corpusV2Tail(
         slimRepFromVerdicts(TextDedup.readDocVerdicts(spark, art)),

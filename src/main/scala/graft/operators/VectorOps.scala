@@ -335,18 +335,18 @@ object VectorOps {
   /** The layout read-back: the partition column comes back
     * directory-inferred as int — cast to long so downstream joins and
     * results are type-identical to the in-memory probe frame. A layout
-    * living INSIDE a staged artifact dir (sibling `_FINGERPRINT`) is
-    * read through the tombstone-resolved view — retracted vectors'
-    * probe rows are dead; standalone layouts read raw. When the
-    * artifact has no tombstones (fresh build, post-compaction) the
-    * live view IS the raw scan, so the plan — dynamic partition
-    * pruning included — is unchanged. */
+    * living INSIDE a staged artifact dir (the parent has an
+    * [[ArtifactManifest]]) is read through the tombstone-resolved
+    * view — retracted vectors' probe rows are dead; standalone layouts
+    * read raw. When the artifact has no tombstones (fresh build,
+    * post-compaction) the live view IS the raw scan, so the plan —
+    * dynamic partition pruning included — is unchanged. */
   private[operators] def readNearDupLayout(spark: SparkSession,
                                            layout: String): DataFrame = {
     val f = new java.io.File(layout)
     val artifactCtx = f.getName == "emb_probe_layout" &&
       f.getParentFile != null &&
-      new java.io.File(f.getParentFile, "_FINGERPRINT").exists()
+      ArtifactManifest.read(f.getParentFile.toString).isDefined
     val raw =
       if (artifactCtx)
         TextDedup.liveRows(spark, f.getParentFile.toString,
@@ -399,7 +399,7 @@ object VectorOps {
 
   /** Auto-routed near-dup pairs — what the REGISTERED endpoint serves:
     * when the staged dedup artifact set is CURRENT for this dir
-    * ([[TextDedup.artifactsCurrent]] — fingerprint match + complete
+    * ([[TextDedup.artifactsCurrent]] — manifest match + complete
     * stages), the pair graph is computed over the persisted probe
     * layout (assignment is a parquet read, per-list join co-located:
     * 2.4× faster cold at sf100, and strictly better wherever the

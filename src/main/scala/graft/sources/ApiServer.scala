@@ -3,6 +3,7 @@ package graft.sources
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.net.InetSocketAddress
+import graft.operators.{ArtifactManifest, TextDedup}
 
 /** The reference's read-API surface (`GET /v0/pipes` list +
   * `GET /v0/pipes/{name}.json` with `Authorization: Bearer <token>`,
@@ -476,32 +477,28 @@ final class ApiServer(spark: SparkSession, sfDir: String,
     * they are CURRENT for this workspace's data dir (the read-side
     * routing predicate — exactly what decides if `emb_near_dup_pairs`
     * serves from the layout), the merge-on-read generation, whether a
-    * crashed increment's journal is pending, and the last
+    * crashed increment or compaction is pending, and the last
     * [[graft.operators.DedupMaintenance.update]] outcome verbatim.
     * Read-only and cheap (file metadata, no Spark job), so any
     * authorized token may ask; 401 without one. */
   private def handleDedupArtifacts(ex: HttpExchange): Unit = guarded(ex) {
     val art = graft.SparkEntry.dedupArtifactsDir(sfDir)
     // currency is judged under the artifact's OWN staging params (the
-    // stored fingerprint header) — an artifact maintained under
-    // non-default minJaccard/maxDf must not read as perpetually stale
-    // against the defaults. No stored params (fresh workspace) →
-    // defaults, which is also what a first update() will build with.
-    def params: (Double, Int) =
-      graft.operators.TextDedup.storedParams(art).getOrElse((0.5, 100))
+    // manifest's) — an artifact maintained under non-default
+    // minJaccard/maxDf must not read as perpetually stale against the
+    // defaults. No manifest (fresh workspace) → the defaults, which is
+    // also what a first update() will build with.
+    def params(m: Option[ArtifactManifest.Manifest]): (Double, Int) =
+      m.fold((TextDedup.DefaultMinJaccard, TextDedup.DefaultMaxDf))(_.params)
     def statusJson: String = {
-      val (mj, df) = params
-      val current = graft.operators.TextDedup.artifactsCurrent(
-        sfDir, art, mj, df)
-      val journal = java.nio.file.Files.exists(
-        new java.io.File(art, "_INC_JOURNAL").toPath)
-      val gen = graft.operators.TextDedup.readGen(art)
-      val last = graft.operators.DedupMaintenance.lastIncrement(art)
-        .getOrElse("null")
+      val m = ArtifactManifest.read(art)
+      val (mj, df) = params(m)
+      val current = TextDedup.artifactsCurrent(sfDir, art, Some((mj, df)))
       s"""{"path":${Endpoints.q(art)},"current":$current,""" +
         s""""min_jaccard":$mj,"max_df":$df,""" +
-        s""""generation":$gen,"journal_pending":$journal,""" +
-        s""""last_update":$last}"""
+        s""""generation":${m.fold(0)(_.gen)},""" +
+        s""""journal_pending":${m.exists(_.pending.nonEmpty)},""" +
+        s""""last_update":${m.flatMap(_.lastUpdate).getOrElse("null")}}"""
     }
     val tail = ex.getRequestURI.getPath.stripPrefix("/v0/dedup_artifacts")
       .stripPrefix("/")
@@ -520,7 +517,7 @@ final class ApiServer(spark: SparkSession, sfDir: String,
           respond(ex, 403,
             """{"error":"dedup maintenance requires a workspace admin token"}""")
         else if (tail == "update") {
-          val (mj, df) = params
+          val (mj, df) = params(ArtifactManifest.read(art))
           val mode = graft.operators.DedupMaintenance.update(
             spark, sfDir, art, mj, df)
           respond(ex, 200,

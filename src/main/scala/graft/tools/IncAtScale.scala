@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.operators.{DedupMaintenance, TextDedup}
+import graft.operators.{ArtifactManifest, DedupMaintenance, TextDedup}
 
 /** Delta-sized maintenance proof AT SCALE (round-13 verdict #3; round-15
   * verdict #3 extended it to STEADY STATE): the 100 TB story is not one
@@ -116,7 +116,8 @@ object IncAtScale {
       }
       require(mInc == "incremental",
         s"round $k update must take the incremental path, took: $mInc")
-      val lastInc = DedupMaintenance.lastIncrement(art).getOrElse("{}")
+      val lastInc = ArtifactManifest.read(art).flatMap(_.lastUpdate)
+        .getOrElse("{}")
       val compacted = lastInc.contains("\"compacted\":true")
       System.err.println(f"[inc_at_scale] round $k: ${tInc}%.1f s " +
         s"exact=$nExact near=$nNear compacted=$compacted last_inc=$lastInc")

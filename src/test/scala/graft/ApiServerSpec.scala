@@ -763,7 +763,7 @@ class ApiServerSpec extends SparkSpec {
       assert(upd.statusCode() == 200 &&
         upd.body().contains("\"mode\":\"incremental\"") &&
         upd.body().contains("\"current\":true"), upd.body())
-      assert(graft.operators.TextDedup.storedParams(art) == Some((0.4, 50)))
+      assert(manifest(art).params == (0.4, 50))
       // compact folds the increment chain back to generation 0
       assert(call("GET", "", Some("reader")).body().contains("\"generation\":1"))
       val cmp = call("POST", "/compact", Some("reader"))
@@ -815,7 +815,7 @@ class ApiServerSpec extends SparkSpec {
           r.body().contains("\"current\":true"), r.body())
         val g = gen(r.body())
         maxGen = math.max(maxGen, g)
-        if (graft.operators.DedupMaintenance.lastIncrement(art)
+        if (graft.operators.ArtifactManifest.read(art).flatMap(_.lastUpdate)
             .exists(_.contains("\"compacted\":true"))) compactions += 1
       }
       // the policy (autoCompactMaxGen = 8) bounds the chain: the

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import graft.operators.{TextDedup, TrainingMix, VectorOps}
+import graft.operators.{DedupMaintenance, TextDedup, TrainingMix, VectorOps}
 
 /** The staged pair-graph topology (TextDedup.writeDedupArtifacts): every
   * staged consumer must be RESULT-IDENTICAL to its self-contained form —
@@ -125,7 +125,7 @@ class DedupArtifactsSpec extends SparkSpec {
     val prRouted = TextDedup.dupGraphPagerankAuto(spark, sf, dArt)
     assert(prRouted.filter(col("doc_id") === 888888L).count() == 1,
       "current artifact must serve the staged pair graph")
-    assert(new java.io.File(dArt, "_FINGERPRINT").delete())
+    tamperManifest(dArt)(_.copy(complete = false))
     val prFallback = TextDedup.dupGraphPagerankAuto(spark, sf, dArt)
     assert(prFallback.filter(col("doc_id") === 888888L).count() == 0,
       "stale artifact must fall back to the self-contained graph")
@@ -350,8 +350,8 @@ class DedupArtifactsSpec extends SparkSpec {
   test("fingerprint skip: a half-finished build (no marker) always rebuilds") {
     val out = java.nio.file.Files.createTempDirectory("dedup_fp_crash").toString
     assert(TextDedup.writeDedupArtifacts(spark, sf, out))
-    // simulate a crash between overwrite and marker write
-    assert(new java.io.File(out, "_FINGERPRINT").delete())
+    // simulate a crash between overwrite and the completing commit
+    tamperManifest(out)(_.copy(complete = false))
     assert(TextDedup.writeDedupArtifacts(spark, sf, out),
       "missing marker must force a rebuild, never trust stale artifacts")
     assert(!TextDedup.writeDedupArtifacts(spark, sf, out))
@@ -362,12 +362,11 @@ class DedupArtifactsSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("dedup_resume").toString
     assert(TextDedup.writeDedupArtifacts(spark, sf, out))
     // simulate a crash after pairs+clusters landed but before the emb
-    // stages: global marker and the later stage markers gone, early
-    // artifacts + their markers intact (exactly what a disk-full kill
+    // stages: the manifest incomplete and the later stages unlisted,
+    // early artifacts listed and intact (exactly what a disk-full kill
     // in the emb_probe_layout stage leaves behind)
-    assert(new java.io.File(out, "_FINGERPRINT").delete())
-    for (s <- Seq("emb_probe_layout", "emb_pairs", "emb_clusters"))
-      assert(new java.io.File(out, s"_STAGE_$s").delete())
+    tamperManifest(out)(m => m.copy(complete = false, stages = m.stages --
+      Seq("emb_probe_layout", "emb_pairs", "emb_clusters")))
     val pairsSuccess = new java.io.File(out, "pairs/_SUCCESS")
     val clustersSuccess = new java.io.File(out, "clusters/_SUCCESS")
     val (tPairs, tClusters) =
@@ -383,6 +382,26 @@ class DedupArtifactsSpec extends SparkSpec {
       == embBefore, "resumed emb stages produce the canonical graph")
     // the resumed build is a normal skippable artifact afterwards
     assert(!TextDedup.writeDedupArtifacts(spark, sf, out))
+  }
+
+  test("torn commit: a garbage _MANIFEST.tmp beside the manifest (a crash " +
+      "before the rename) leaves the committed set current and serving") {
+    import java.nio.file.{Files, Paths}
+    val out = Files.createTempDirectory("dedup_torn").toString
+    val src = Paths.get(art)
+    val walk = Files.walk(src)
+    try walk.forEach { p =>
+      val t = Paths.get(out).resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+    } finally walk.close()
+    Files.write(Paths.get(out, "_MANIFEST.tmp"),
+      "version=6\nmin_jaccard=0.\u0000".getBytes("UTF-8"))
+    assert(TextDedup.artifactsCurrent(sf, out),
+      "an uncommitted temp file must not disturb the committed manifest")
+    val routed = TextDedup.dupClustersAuto(spark, sf, out)
+    assert(routed.inputFiles.exists(_.contains(s"$out/clusters/")),
+      s"current artifact must serve staged clusters: ${routed.inputFiles.take(3).mkString(",")}")
+    assert(DedupMaintenance.update(spark, sf, out) == "skip")
   }
 
   test("artifact summary: one row per cluster; canonical and hub are members") {

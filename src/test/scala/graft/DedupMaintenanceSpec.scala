@@ -383,7 +383,7 @@ class DedupMaintenanceSpec extends SparkSpec {
     // path, so the increment must leave its tombstones behind
     assert(DedupMaintenance.update(spark, data, art,
       autoCompactMaxGen = 0, autoCompactDeadFrac = 0) == "incremental")
-    assert(TextDedup.readGen(art) == 1)
+    assert(manifest(art).gen == 1)
     assert(spark.read.parquet(s"$art/tombstones").count() > 0)
     val before = Seq(
       rows(TextDedup.stagedPairs(spark, art)),
@@ -393,7 +393,7 @@ class DedupMaintenanceSpec extends SparkSpec {
       rows(TextDedup.stagedEmbPairs(spark, art)))
     DedupMaintenance.compact(spark, art)
     assert(spark.read.parquet(s"$art/tombstones").isEmpty, "tombstones survive")
-    assert(TextDedup.readGen(art) == 0)
+    assert(manifest(art).gen == 0)
     assert(TextDedup.artifactsCurrent(data, art), "compaction broke currency")
     val after = Seq(
       rows(TextDedup.stagedPairs(spark, art)),
@@ -421,14 +421,14 @@ class DedupMaintenanceSpec extends SparkSpec {
         case (6L, _) => 6L -> words(s"solo6_r$round"); case o => o
       }.toDF("doc_id", "text"))
       assert(upd() == "incremental")
-      assert(TextDedup.readGen(art) <= 2,
-        s"round $round: generation count unbounded (${TextDedup.readGen(art)})")
+      assert(manifest(art).gen <= 2,
+        s"round $round: generation count unbounded (${manifest(art).gen})")
     }
     // 4 increments at maxGen=2 → at least one compaction happened and
     // the latest one is on record
-    assert(TextDedup.readGen(art) < 4)
-    assert(DedupMaintenance.lastIncrement(art).exists(_.contains(
-      """"compacted":true""")), DedupMaintenance.lastIncrement(art).toString)
+    assert(manifest(art).gen < 4)
+    assert(manifest(art).lastUpdate.exists(_.contains(
+      """"compacted":true""")), manifest(art).lastUpdate.toString)
     // compacted state is current, serves the right rows, and skips
     assert(TextDedup.artifactsCurrent(data, art))
     assertEqualsFreshRebuild(data, art)
@@ -441,8 +441,8 @@ class DedupMaintenanceSpec extends SparkSpec {
     val (docA, _) = writeSlice(data, baseDocs.take(20), baseEmbFixed.take(20))
     writeSlice(data, baseDocs.drop(20), baseEmbFixed.drop(20))
     assert(DedupMaintenance.update(spark, data, art) == "full")
-    val marker = TextDedup.tombstonesCleanMarker(art)
-    assert(java.nio.file.Files.exists(marker), "fresh build must mark clean")
+    def marked = manifest(art).tombstonesClean
+    assert(marked, "fresh build must mark clean")
     // the marker short-circuits BEFORE any tombstone read: with the
     // table directory gone, a probing reader would throw PATH_NOT_FOUND
     val saved = tmp("dm_cl_saved")
@@ -462,7 +462,7 @@ class DedupMaintenanceSpec extends SparkSpec {
       (200L to 205L).map(i => (i, vec(i + 700), 0)))
     assert(DedupMaintenance.update(spark, data, art,
       autoCompactMaxGen = 0, autoCompactDeadFrac = 0) == "incremental")
-    assert(java.nio.file.Files.exists(marker),
+    assert(marked,
       "a tombstone-free append must keep the probe-free read path")
     assertEqualsFreshRebuild(data, art)
     // an increment kills the marker (it writes tombstones)...
@@ -471,11 +471,11 @@ class DedupMaintenanceSpec extends SparkSpec {
     }.toDF("doc_id", "text"))
     assert(DedupMaintenance.update(spark, data, art,
       autoCompactMaxGen = 0, autoCompactDeadFrac = 0) == "incremental")
-    assert(!java.nio.file.Files.exists(marker),
+    assert(!marked,
       "live tombstones behind a clean marker would serve dead rows")
     // ...and compaction restores it
     DedupMaintenance.compact(spark, art)
-    assert(java.nio.file.Files.exists(marker))
+    assert(marked)
     assertEqualsFreshRebuild(data, art)
   }
 
@@ -485,14 +485,12 @@ class DedupMaintenanceSpec extends SparkSpec {
     writeBase(data)
     assert(DedupMaintenance.update(spark, data, art) == "full")
     appendDelta(data)
-    java.nio.file.Files.write(
-      new java.io.File(art, "_INC_JOURNAL").toPath, "crashed".getBytes)
+    tamperManifest(art)(_.copy(pending = Some("crashed")))
     assert(!TextDedup.artifactsCurrent(data, art),
       "a journal must mark the artifacts stale")
     assert(DedupMaintenance.update(spark, data, art) == "full")
     assert(TextDedup.artifactsCurrent(data, art))
-    assert(!java.nio.file.Files.exists(
-      new java.io.File(art, "_INC_JOURNAL").toPath))
+    assert(manifest(art).pending.isEmpty)
   }
 
   test("an id collision in a NEW file while the old carrier is untouched " +
@@ -527,8 +525,8 @@ class DedupMaintenanceSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(epairs.contains((3L, 20L)) && epairs.contains((3L, 39L)),
       s"anchor-churn pairs missing: $epairs")
-    assert(DedupMaintenance.lastIncrement(art).exists(_.contains(
-      """"vecs_reanchored":""")), DedupMaintenance.lastIncrement(art).toString)
+    assert(manifest(art).lastUpdate.exists(_.contains(
+      """"vecs_reanchored":""")), manifest(art).lastUpdate.toString)
     assertEqualsFreshRebuild(data, art)
     assert(DedupMaintenance.update(spark, data, art) == "skip")
   }

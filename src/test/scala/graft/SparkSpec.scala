@@ -27,4 +27,13 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.session
 
   val sf = "/root/testdata/sf0.001"
+
+  /** A staged artifact set's manifest, and the one way specs inject
+    * the state a crash or a stale build leaves behind: rewrite it. */
+  def manifest(out: String): graft.operators.ArtifactManifest.Manifest =
+    graft.operators.ArtifactManifest.read(out).get
+  def tamperManifest(out: String)(
+      f: graft.operators.ArtifactManifest.Manifest =>
+        graft.operators.ArtifactManifest.Manifest): Unit =
+    graft.operators.ArtifactManifest.commit(out, f(manifest(out)))
 }

@@ -3,12 +3,12 @@
 # set for the IncAtScale probe (round-13 verdict #3), then run it.
 #
 # Hardlinks make the 15 GB data + 8 GB artifact copies ~free, but the
-# SMALL CONTROL FILES must be REAL copies: `update` rewrites _STAGE_*,
-# _GEN, _FINGERPRINT, _LAST_INC and per-dir _SUCCESS in place via
-# truncating writes — through a hardlink those would corrupt the
-# ORIGINAL artifact set's markers. Parquet data files are never mutated
-# in place (appends create new files; swaps replace links), so they
-# stay hardlinked.
+# SMALL CONTROL FILES must be REAL copies: Spark appends rewrite the
+# per-dir _SUCCESS in place via truncating writes — through a hardlink
+# that would corrupt the ORIGINAL artifact set. The top-level manifest
+# is replaced by rename, and is copied anyway. Parquet data files are
+# never mutated in place (appends create new files; swaps replace
+# links), so they stay hardlinked.
 #
 # Usage: tools/inc_at_scale.sh <srcData> <srcArt> <workDir> [permille] [rounds] [maxGen]
 #   e.g. tools/inc_at_scale.sh /tmp/sf100 \
@@ -23,7 +23,7 @@ rm -rf "$WORK"; mkdir -p "$DATA" "$ART"
 for t in documents.parquet embeddings.parquet; do
   cp -al "$SRC_DATA/$t" "$DATA/$t"
 done
-# artifact: hardlink the table dirs, real-copy the top-level markers
+# artifact: hardlink the table dirs, real-copy the top-level files
 for d in "$SRC_ART"/*/; do cp -al "$d" "$ART/$(basename "$d")"; done
 find "$SRC_ART" -maxdepth 1 -type f | while read -r f; do
   cp "$f" "$ART/$(basename "$f")"
@@ -34,7 +34,7 @@ find "$ART" \( -name "_SUCCESS" -o -name "._SUCCESS.crc" \) \
     -type f -links +1 | while read -r f; do
   tmp="$f.__copy"; cp "$f" "$tmp"; mv -f "$tmp" "$f"
 done
-echo "prepared $WORK (data+art hardlinked, markers copied)"
+echo "prepared $WORK (data+art hardlinked, control files copied)"
 rm -f /root/repo/target/graft-run.lock
 SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-100g}" \
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
