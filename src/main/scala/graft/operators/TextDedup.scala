@@ -113,6 +113,10 @@ object TextDedup {
   val DefaultMaxDf = 100
   val DefaultMinJaccard = 0.5
 
+  /** Input size (documents + embeddings files) from which a full build
+    * forces a GC after each stage to free its shuffle files. */
+  private val ReclaimMinInputBytes = 64L << 20
+
   def nearDupPairs(spark: SparkSession, dir: String, minJaccard: Double = 0.5,
                    maxDf: Int = DefaultMaxDf): DataFrame =
     // no .cache(): identical scan subtrees reuse the shuffle exchange,
@@ -536,7 +540,12 @@ object TextDedup {
         // way (each artifact is parquet-materialized, so no exchange
         // is reusable across these boundaries anyway; on a cluster
         // this is executor shuffle-dir pressure, same failure mode).
-        def reclaimShuffles(): Unit = { System.gc(); Thread.sleep(100) }
+        // Each forced GC is a full stop-the-world collection; below
+        // ReclaimMinInputBytes of input every stage's spill together
+        // is small, and 17 full GCs would outweigh a small build.
+        val reclaim = inputs.map(_.size).sum >= ReclaimMinInputBytes
+        def reclaimShuffles(): Unit =
+          if (reclaim) { System.gc(); Thread.sleep(100) }
         // Stage name == output subdir; a listed stage whose `_SUCCESS`
         // is gone (manual delete) also reruns.
         def stage(name: String)(body: => Unit): Unit =

@@ -9,17 +9,27 @@ import org.scalatest.funsuite.AnyFunSuite
   * and a config change (timezone, extensions, width) propagates
   * everywhere instead of silently drifting between copies. */
 object TestSession {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // the library's deployment posture: native functions + CH-dialect
-    // parser active for every suite, so a dialect-detection false
-    // positive on plain Spark SQL would surface anywhere, not just in
-    // the translator tests
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .getOrCreate()
+  lazy val session: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // the artifact build and increment plans recur in every dedup
+      // test; at the default 100 entries their compiled classes are
+      // evicted between builds, then recompiled and re-JITted
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
+      // the library's deployment posture: native functions + CH-dialect
+      // parser active for every suite, so a dialect-detection false
+      // positive on plain Spark SQL would surface anywhere, not just in
+      // the translator tests
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .getOrCreate()
+    // Spark's INFO stream (every job, task, commit and codegen event)
+    // is about 90 MB per tier-1 run, formatted here and re-read by sbt
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }
 
 /** Shared local session for all suites. */
