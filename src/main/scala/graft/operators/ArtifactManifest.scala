@@ -27,8 +27,8 @@ object ArtifactManifest {
   final case class InputFile(rel: String, size: Long, mtime: Long)
 
   /** @param spans      the span constants the span surfaces were built under
-    * @param stages     stages whose parquet has landed for these inputs
-    * @param complete   every stage landed: the set may serve
+    * @param stages     stages whose parquet has landed for these inputs;
+    *                   the set is [[complete]] once every stage has
     * @param gen        merge-on-read generation: 0 after a full build or
     *                   compaction, bumped by each increment
     * @param tombstonesClean the tombstones table is known EMPTY, so
@@ -37,10 +37,12 @@ object ArtifactManifest {
     *                   tables may hold a partial write */
   final case class Manifest(
       minJaccard: Double, maxDf: Int, spans: String,
-      inputs: Seq[InputFile], stages: Set[String], complete: Boolean,
-      gen: Int, tombstonesClean: Boolean, pending: Option[String],
+      inputs: Seq[InputFile], stages: Set[String],
+      gen: Int, tombstonesClean: Boolean, pending: Boolean,
       lastUpdate: Option[String]) {
     def params: (Double, Int) = (minJaccard, maxDf)
+    /** Every stage of [[TextDedup.artifactStages]] landed: the set may serve. */
+    def complete: Boolean = TextDedup.artifactStages.forall(stages)
   }
 
   private def path(out: String): Path = Paths.get(out, "_MANIFEST")
@@ -60,9 +62,8 @@ object ArtifactManifest {
         InputFile(rel, size.toLong, mtime.toLong)
       },
       opt("stages").fold(Set.empty[String])(_.split(",").toSet),
-      one("complete").toBoolean, one("generation").toInt,
-      one("tombstones_clean").toBoolean, opt("pending"),
-      opt("last_update"))).toOption
+      one("generation").toInt, one("tombstones_clean").toBoolean,
+      one("pending").toBoolean, opt("last_update"))).toOption
   }
 
   def commit(out: String, m: Manifest): Unit = {
@@ -70,9 +71,8 @@ object ArtifactManifest {
       (Seq(s"version=$Version", s"min_jaccard=${m.minJaccard}",
         s"max_df=${m.maxDf}", s"spans=${m.spans}",
         s"stages=${m.stages.toSeq.sorted.mkString(",")}",
-        s"complete=${m.complete}", s"generation=${m.gen}",
-        s"tombstones_clean=${m.tombstonesClean}",
-        s"pending=${m.pending.getOrElse("")}",
+        s"generation=${m.gen}", s"tombstones_clean=${m.tombstonesClean}",
+        s"pending=${m.pending}",
         s"last_update=${m.lastUpdate.getOrElse("")}") ++
         m.inputs.map(f => s"input=${f.size}\t${f.mtime}\t${f.rel}"))
         .mkString("", "\n", "\n")

@@ -178,7 +178,7 @@ object DedupMaintenance {
                             minJaccard: Double, maxDf: Int)
       : Option[(ArtifactManifest.Manifest, FileDelta)] = {
     val base = ArtifactManifest.read(out).filter(m =>
-      m.pending.isEmpty && m.complete &&
+      !m.pending && m.complete &&
         m.params == (minJaccard, maxDf) &&
         m.spans == TextDedup.spanConstants &&
         TextDedup.artifactStages.forall(TextDedup.stageComplete(out, _)))
@@ -287,7 +287,7 @@ object DedupMaintenance {
     // `tombstones_clean` drops BEFORE the first tombstone append, so a
     // crash leaves readers on the (correct) emptiness probe
     ArtifactManifest.commit(out,
-      base.copy(pending = Some("increment"), tombstonesClean = clean))
+      base.copy(pending = true, tombstonesClean = clean))
 
     def tomb(surface: String, ids: DataFrame, idCol: String): DataFrame =
       ids.select(lit(surface).as("surface"), col(idCol).as("id"),
@@ -339,7 +339,7 @@ object DedupMaintenance {
 
     val lastUpdate = lastIncJson(g, textPlan.flatten, embPlan.flatten)
     ArtifactManifest.commit(out, base.copy(inputs = inputs, gen = g,
-      tombstonesClean = clean, pending = None, lastUpdate = Some(lastUpdate)))
+      tombstonesClean = clean, pending = false, lastUpdate = Some(lastUpdate)))
     true
   }
 
@@ -946,10 +946,10 @@ object DedupMaintenance {
     * auto-compaction would deadlock-or-throw re-acquiring it). */
   private def compactLocked(spark: SparkSession, out: String): Unit = {
         val found = ArtifactManifest.read(out)
-          .filter(m => m.complete && m.pending.isEmpty)
+          .filter(m => m.complete && !m.pending)
         require(found.nonEmpty, s"no complete artifact set under $out to compact")
         val base = found.get
-        ArtifactManifest.commit(out, base.copy(pending = Some("compact")))
+        ArtifactManifest.commit(out, base.copy(pending = true))
         def zeroGen(df: DataFrame): DataFrame =
           df.withColumn("gen", lit(0))
         swapIn(spark, s"$out/shingle_index",
@@ -995,7 +995,7 @@ object DedupMaintenance {
             s"nLists=$l\nnprobe=$p".getBytes("UTF-8"))
         swapIn(spark, s"$out/tombstones", TextDedup.emptyTombstones(spark))
         ArtifactManifest.commit(out,
-          base.copy(gen = 0, tombstonesClean = true, pending = None))
+          base.copy(gen = 0, tombstonesClean = true, pending = false))
         // every table was physically replaced under the same paths —
         // drop any cached listings before a reader sees them
         spark.catalog.refreshByPath(out)

@@ -113,10 +113,6 @@ object TextDedup {
   val DefaultMaxDf = 100
   val DefaultMinJaccard = 0.5
 
-  /** Input size (documents + embeddings files) from which a full build
-    * forces a GC after each stage to free its shuffle files. */
-  private val ReclaimMinInputBytes = 64L << 20
-
   def nearDupPairs(spark: SparkSession, dir: String, minJaccard: Double = 0.5,
                    maxDf: Int = DefaultMaxDf): DataFrame =
     // no .cache(): identical scan subtrees reuse the shuffle exchange,
@@ -426,10 +422,15 @@ object TextDedup {
                        params: Option[(Double, Int)] =
                          Some((DefaultMinJaccard, DefaultMaxDf)),
                        stages: Seq[String] = artifactStages): Boolean =
-    ArtifactManifest.read(out).exists(m =>
-      m.pending.isEmpty && m.complete && m.spans == spanConstants &&
-        params.forall(_ == m.params) &&
-        m.inputs == inputFiles(dir)) &&
+    ArtifactManifest.read(out).exists(manifestCurrent(_, dir, out, params, stages))
+
+  /** [[artifactsCurrent]] judged on a manifest the caller already read,
+    * so one snapshot answers every question it asks of the set. */
+  private[graft] def manifestCurrent(m: ArtifactManifest.Manifest, dir: String,
+                                     out: String, params: Option[(Double, Int)],
+                                     stages: Seq[String] = artifactStages): Boolean =
+    !m.pending && m.complete && m.spans == spanConstants &&
+      params.forall(_ == m.params) && m.inputs == inputFiles(dir) &&
       stages.forall(stageComplete(out, _))
 
   /** True when a REQUESTED embedding geometry is compatible with the
@@ -478,14 +479,14 @@ object TextDedup {
     * files (relpath/size/mtime of the docs+embeddings parquet) match
     * means the artifacts derive from exactly these bytes, and the
     * build is skipped (returns false). Otherwise the build first
-    * commits an INCOMPLETE manifest, then one commit per finished
-    * stage, then the complete one — so a crash at any point leaves a
-    * manifest that never claims more than landed. A crash after the
-    * pair graph landed restarts at clustering, not at re-shingling
-    * (asserted in DedupArtifactsSpec). A JVM-wide per-dir monitor
-    * serializes concurrent invocations (the HTTP pool can run two at
-    * once; without it one request's overwrite deletes parquet footers
-    * out from under the other's read).
+    * commits a manifest listing only the stages it keeps, then one
+    * commit per finished stage (the last makes it complete) — so a
+    * crash at any point leaves a manifest that never claims more than
+    * landed. A crash after the pair graph landed restarts at
+    * clustering, not at re-shingling (asserted in DedupArtifactsSpec).
+    * A JVM-wide per-dir monitor serializes concurrent invocations (the
+    * HTTP pool can run two at once; without it one request's overwrite
+    * deletes parquet footers out from under the other's read).
     *
     * @return true when the artifacts were (re)built, false when they
     *         were current and the build was skipped. */
@@ -521,15 +522,16 @@ object TextDedup {
         // the same params and inputs, with nothing pending, lists stages
         // a rebuild may keep: an increment's partial appends or live
         // tombstones would otherwise survive into the "fresh" set, and
-        // a different explicit geometry must restage every surface.
-        val kept = prev.filter(m => m.gen == 0 && m.pending.isEmpty &&
+        // a different explicit geometry must restage every surface. A
+        // listed stage whose `_SUCCESS` is gone (manual delete) reruns.
+        val kept = prev.filter(m => m.gen == 0 && !m.pending &&
             m.params == (minJaccard, maxDf) &&
             m.spans == spanConstants && m.inputs == inputs &&
             stagedGeometryOk(out, embNLists))
-          .fold(Set.empty[String])(_.stages)
+          .fold(Set.empty[String])(_.stages.filter(stageComplete(out, _)))
         var m = ArtifactManifest.Manifest(minJaccard, maxDf, spanConstants,
-          inputs, kept, complete = false, gen = 0,
-          tombstonesClean = kept("tombstones"), pending = None,
+          inputs, kept, gen = 0,
+          tombstonesClean = kept("tombstones"), pending = false,
           lastUpdate = prev.flatMap(_.lastUpdate))
         ArtifactManifest.commit(out, m)
         // Shuffle files of a finished stage live until the driver GCs
@@ -540,16 +542,10 @@ object TextDedup {
         // way (each artifact is parquet-materialized, so no exchange
         // is reusable across these boundaries anyway; on a cluster
         // this is executor shuffle-dir pressure, same failure mode).
-        // Each forced GC is a full stop-the-world collection; below
-        // ReclaimMinInputBytes of input every stage's spill together
-        // is small, and 17 full GCs would outweigh a small build.
-        val reclaim = inputs.map(_.size).sum >= ReclaimMinInputBytes
-        def reclaimShuffles(): Unit =
-          if (reclaim) { System.gc(); Thread.sleep(100) }
-        // Stage name == output subdir; a listed stage whose `_SUCCESS`
-        // is gone (manual delete) also reruns.
+        def reclaimShuffles(): Unit = { System.gc(); Thread.sleep(100) }
+        // Stage name == output subdir.
         def stage(name: String)(body: => Unit): Unit =
-          if (!(m.stages(name) && stageComplete(out, name))) {
+          if (!m.stages(name)) {
             body
             m = m.copy(stages = m.stages + name)
             ArtifactManifest.commit(out, m)
@@ -687,7 +683,6 @@ object TextDedup {
             .withColumn("gen", lit(0))
             .write.mode("overwrite").parquet(s"$out/emb_clusters")
         }
-        ArtifactManifest.commit(out, m.copy(complete = true))
         true
       }
   }

@@ -491,13 +491,16 @@ final class ApiServer(spark: SparkSession, sfDir: String,
     def params(m: Option[ArtifactManifest.Manifest]): (Double, Int) =
       m.fold((TextDedup.DefaultMinJaccard, TextDedup.DefaultMaxDf))(_.params)
     def statusJson: String = {
+      // ONE read: every key below describes the same manifest, even
+      // while an update commits beside this handler (it takes no lock)
       val m = ArtifactManifest.read(art)
       val (mj, df) = params(m)
-      val current = TextDedup.artifactsCurrent(sfDir, art, Some((mj, df)))
+      val current =
+        m.exists(TextDedup.manifestCurrent(_, sfDir, art, Some((mj, df))))
       s"""{"path":${Endpoints.q(art)},"current":$current,""" +
         s""""min_jaccard":$mj,"max_df":$df,""" +
         s""""generation":${m.fold(0)(_.gen)},""" +
-        s""""journal_pending":${m.exists(_.pending.nonEmpty)},""" +
+        s""""journal_pending":${m.exists(_.pending)},""" +
         s""""last_update":${m.flatMap(_.lastUpdate).getOrElse("null")}}"""
     }
     val tail = ex.getRequestURI.getPath.stripPrefix("/v0/dedup_artifacts")

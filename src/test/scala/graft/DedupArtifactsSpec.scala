@@ -15,6 +15,20 @@ class DedupArtifactsSpec extends SparkSpec {
     d
   }
 
+  /** A private copy of [[art]] for a test that tampers with or rebuilds
+    * its set (an sf build costs far more than the copy). */
+  private def copyOfArt(prefix: String): String = {
+    import java.nio.file.{Files, Paths}
+    val out = Files.createTempDirectory(prefix).toString
+    val src = Paths.get(art)
+    val walk = Files.walk(src)
+    try walk.forEach { p =>
+      val t = Paths.get(out).resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+    } finally walk.close()
+    out
+  }
+
   // sorted: several self-contained frames end in .distinct()/CC output
   // with no orderBy, so collect() order is incidental — identity with
   // the orderBy'd staged route must not hinge on it
@@ -116,8 +130,8 @@ class DedupArtifactsSpec extends SparkSpec {
     // route is proven behaviorally: doctor a staged pairs table so
     // staged ≠ self-contained — a CURRENT artifact must serve the
     // doctored graph, a stale one must fall back to the corpus truth
-    val dArt = java.nio.file.Files.createTempDirectory("pr_route_art").toString
-    assert(TextDedup.writeDedupArtifacts(spark, sf, dArt))
+    val dArt = copyOfArt("pr_route_art")
+    assert(TextDedup.artifactsCurrent(sf, dArt))
     import spark.implicits._
     Seq((888888L, 888889L, 0.9, 0))
       .toDF("doc_a", "doc_b", "jaccard", "gen")
@@ -125,7 +139,7 @@ class DedupArtifactsSpec extends SparkSpec {
     val prRouted = TextDedup.dupGraphPagerankAuto(spark, sf, dArt)
     assert(prRouted.filter(col("doc_id") === 888888L).count() == 1,
       "current artifact must serve the staged pair graph")
-    tamperManifest(dArt)(_.copy(complete = false))
+    tamperManifest(dArt)(m => m.copy(stages = m.stages - "emb_clusters"))
     val prFallback = TextDedup.dupGraphPagerankAuto(spark, sf, dArt)
     assert(prFallback.filter(col("doc_id") === 888888L).count() == 0,
       "stale artifact must fall back to the self-contained graph")
@@ -348,10 +362,10 @@ class DedupArtifactsSpec extends SparkSpec {
   }
 
   test("fingerprint skip: a half-finished build (no marker) always rebuilds") {
-    val out = java.nio.file.Files.createTempDirectory("dedup_fp_crash").toString
-    assert(TextDedup.writeDedupArtifacts(spark, sf, out))
-    // simulate a crash between overwrite and the completing commit
-    tamperManifest(out)(_.copy(complete = false))
+    val out = copyOfArt("dedup_fp_crash")
+    assert(!TextDedup.writeDedupArtifacts(spark, sf, out))
+    // simulate a crash before the last stage's commit
+    tamperManifest(out)(m => m.copy(stages = m.stages - "emb_clusters"))
     assert(TextDedup.writeDedupArtifacts(spark, sf, out),
       "missing marker must force a rebuild, never trust stale artifacts")
     assert(!TextDedup.writeDedupArtifacts(spark, sf, out))
@@ -359,13 +373,13 @@ class DedupArtifactsSpec extends SparkSpec {
 
   test("per-stage resume: a crash after early stages restarts at the first " +
       "incomplete stage, never re-shingling the corpus") {
-    val out = java.nio.file.Files.createTempDirectory("dedup_resume").toString
-    assert(TextDedup.writeDedupArtifacts(spark, sf, out))
+    val out = copyOfArt("dedup_resume")
+    assert(!TextDedup.writeDedupArtifacts(spark, sf, out))
     // simulate a crash after pairs+clusters landed but before the emb
-    // stages: the manifest incomplete and the later stages unlisted,
-    // early artifacts listed and intact (exactly what a disk-full kill
-    // in the emb_probe_layout stage leaves behind)
-    tamperManifest(out)(m => m.copy(complete = false, stages = m.stages --
+    // stages: the later stages unlisted, early artifacts listed and
+    // intact (exactly what a disk-full kill in the emb_probe_layout
+    // stage leaves behind)
+    tamperManifest(out)(m => m.copy(stages = m.stages --
       Seq("emb_probe_layout", "emb_pairs", "emb_clusters")))
     val pairsSuccess = new java.io.File(out, "pairs/_SUCCESS")
     val clustersSuccess = new java.io.File(out, "clusters/_SUCCESS")
@@ -387,13 +401,7 @@ class DedupArtifactsSpec extends SparkSpec {
   test("torn commit: a garbage _MANIFEST.tmp beside the manifest (a crash " +
       "before the rename) leaves the committed set current and serving") {
     import java.nio.file.{Files, Paths}
-    val out = Files.createTempDirectory("dedup_torn").toString
-    val src = Paths.get(art)
-    val walk = Files.walk(src)
-    try walk.forEach { p =>
-      val t = Paths.get(out).resolve(src.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
-    } finally walk.close()
+    val out = copyOfArt("dedup_torn")
     Files.write(Paths.get(out, "_MANIFEST.tmp"),
       "version=6\nmin_jaccard=0.\u0000".getBytes("UTF-8"))
     assert(TextDedup.artifactsCurrent(sf, out),
@@ -620,8 +628,7 @@ class DedupArtifactsSpec extends SparkSpec {
 
   test("explicit embNLists differing from the staged _GEOMETRY rebuilds " +
       "instead of skipping") {
-    val d = java.nio.file.Files.createTempDirectory("geom_art").toString
-    assert(TextDedup.writeDedupArtifacts(spark, sf, d))
+    val d = copyOfArt("geom_art")
     val staged = VectorOps.readLayoutGeometry(s"$d/emb_probe_layout").get._1
     // same geometry (explicit or derived) → skip; different → rebuild
     assert(!TextDedup.writeDedupArtifacts(spark, sf, d, embNLists = staged.toInt))

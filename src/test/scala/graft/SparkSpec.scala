@@ -15,10 +15,6 @@ object TestSession {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // the artifact build and increment plans recur in every dedup
-      // test; at the default 100 entries their compiled classes are
-      // evicted between builds, then recompiled and re-JITted
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
       // the library's deployment posture: native functions + CH-dialect
       // parser active for every suite, so a dialect-detection false
       // positive on plain Spark SQL would surface anywhere, not just in
