@@ -110,8 +110,11 @@ object KitParser {
     * Keys are kit-relative paths (e.g. `users/pg/users_raw`) — the pg
     * and mysql kits declare DIFFERENT schemas under the same basename
     * (unix-µs Int64 + __deleted vs DateTime + __value), so basename
-    * keys would collapse them in filesystem-listing order. */
+    * keys would collapse them in filesystem-listing order. A root that
+    * is not a directory is refused: a missing kit is an error, not an
+    * empty catalog. */
   def parseKit(dir: java.io.File): Map[String, DatasourceDef] = {
+    require(dir.isDirectory, s"kit root is not a directory: ${dir.getPath}")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
       else if (f.getName.endsWith(".datasource")) Seq(f) else Nil

@@ -1,9 +1,11 @@
 package graft.sql
 
 /** Source-to-source translator from the reference's ClickHouse SQL
-  * dialect (the `.pipe` node SQL under /root/reference/kits) to Spark
-  * SQL. Covers exactly the constructs the 13 reference pipes use —
-  * a dialect front-end, not a general CH parser:
+  * dialect (the node SQL of the reference kits' `.pipe` files; the test
+  * suites run the reconstructions vendored under
+  * `src/test/resources/kits`) to Spark SQL. Covers exactly the
+  * constructs the reference pipes use — a dialect front-end, not a
+  * general CH parser:
   *
   *  - Tinybird templates: `{% if defined(p) %} … {% else %} … {% end %}`
   *    and `{{DateTime(p)}}` (flights_missed_pct_minute.pipe:22,31-32)

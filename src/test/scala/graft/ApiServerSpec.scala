@@ -259,8 +259,7 @@ class ApiServerSpec extends SparkSpec {
   }
 
   test("control plane: a REFERENCE kit pipe posts verbatim and serves") {
-    val text = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      "/root/reference/kits/airport/mysql/pipes/latest_flight_info.pipe")), "UTF-8")
+    val text = Kits.text("airport/mysql/pipes/latest_flight_info.pipe")
     val r = post("/v0/datafiles?name=latest_flight_info_posted.pipe",
       Some("admin_token"), text)
     assert(r.statusCode() == 200, r.body())
@@ -484,8 +483,7 @@ class ApiServerSpec extends SparkSpec {
   }
 
   test("control plane: datasource datafiles parse to their schema") {
-    val text = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      "/root/reference/kits/users/pg/datasources/users_raw.datasource")), "UTF-8")
+    val text = Kits.text("users/pg/datasources/users_raw.datasource")
     val r = post("/v0/datafiles?name=users_raw_posted.datasource",
       Some("admin_token"), text)
     assert(r.statusCode() == 200, r.body())
@@ -668,7 +666,7 @@ class ApiServerSpec extends SparkSpec {
   }
 
   test("TOKEN declarations parse from the reference kit pipes") {
-    val kit = new java.io.File("/root/reference/kits/airport/mysql/pipes")
+    val kit = Kits.file("airport/mysql/pipes")
     val pipes = kit.listFiles().filter(_.getName.endsWith(".pipe")).toSeq
       .map(f => f.getName.stripSuffix(".pipe") ->
         new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))

@@ -1,14 +1,17 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.types._
 import graft.sources.KitParser
 import graft.sources.KitParser.{AppendOnly, ReplaceByVersion}
 
-/** Parse the real reference kit files (read-only checkout) and check the
-  * catalog entries against the SURVEY §1 analysis. */
+/** Parse the reference kit files and check the catalog entries against
+  * the SURVEY §1 analysis. The files are reconstructions vendored under
+  * `src/test/resources/kits` ([[Kits]]); the last test compares them
+  * with the upstream checkout where one exists. */
 class KitParserSpec extends SparkSpec {
 
-  private val kits = new java.io.File("/root/reference/kits")
+  private val kits = Kits.root
 
   test("all 10 reference datasource files parse under kit-relative keys") {
     val cat = KitParser.parseKit(kits)
@@ -61,5 +64,40 @@ class KitParserSpec extends SparkSpec {
     assert(byName("id").dataType == IntegerType)
     assert(byName("weight").dataType == DoubleType)
     assert(d.engine == AppendOnly)
+  }
+
+  test("parseKit refuses a root that is not a directory") {
+    val missing = new java.io.File(kits, "no_such_kit")
+    val e = intercept[IllegalArgumentException](KitParser.parseKit(missing))
+    assert(e.getMessage.contains(missing.getPath), e.getMessage)
+  }
+
+  test("vendored kit files match the upstream checkout, ignoring whitespace " +
+      "and the DESCRIPTION header") {
+    // the upstream checkout's location in SURVEY.md; where it is absent
+    // only this comparison is skipped, never the tests above
+    val upstream = new java.io.File("/root/reference/kits")
+    assume(upstream.isDirectory)
+    def normalized(f: java.io.File): String = {
+      val lines = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        .linesIterator.dropWhile(_.trim.isEmpty).toSeq
+      val body =
+        if (lines.headOption.exists(_.trim.startsWith("DESCRIPTION")))
+          lines.dropWhile(_.trim.nonEmpty)
+        else lines
+      body.mkString.replaceAll("\\s+", "")
+    }
+    val root = kits.toPath
+    val walk = java.nio.file.Files.walk(root)
+    val vendored = try walk.iterator().asScala.toSeq
+        .map(p => root.relativize(p).toString)
+        .filter(n => n.endsWith(".pipe") || n.endsWith(".datasource")).sorted
+      finally walk.close()
+    val differ = vendored.filter { rel =>
+      val up = new java.io.File(upstream, rel)
+      !up.isFile || normalized(up) != normalized(new java.io.File(kits, rel))
+    }
+    assert(differ.isEmpty,
+      s"vendored kit files that differ from upstream: ${differ.mkString(", ")}")
   }
 }

@@ -222,8 +222,7 @@ class StreamingSpec extends SparkSpec {
   test("JSONPath projection from a real parsed datasource ingests CDC messages") {
     import spark.implicits._
     val ds = graft.sources.KitParser.parseDatasource("users_raw",
-      new String(java.nio.file.Files.readAllBytes(new java.io.File(
-        "/root/reference/kits/users/pg/datasources/users_raw.datasource").toPath), "UTF-8"))
+      Kits.text("users/pg/datasources/users_raw.datasource"))
     // flattened Debezium after-image, PG dialect: unix-µs ints, __deleted
     val msg =
       """{"id": 7, "name": "n7", "email": "e7@x.com", "address": "a", "phone_number": "p",
@@ -920,8 +919,7 @@ class StreamingSpec extends SparkSpec {
     // skips cleanly here. COVERAGE.md documents the gate.
     val brokers = sys.env.get("KAFKA_BROKERS")
     assume(brokers.isDefined, "KAFKA_BROKERS not set - no broker in this environment")
-    val dsText = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      "/root/reference/kits/users/pg/datasources/users_raw.datasource")), "UTF-8")
+    val dsText = Kits.text("users/pg/datasources/users_raw.datasource")
     val ds = sources.KitParser.parseDatasource("users_raw", dsText)
     val stream = streaming.CdcStream.readKafkaDatasource(spark, brokers.get, ds)
     val q = stream.writeStream.format("memory").queryName("kafka_smoke")

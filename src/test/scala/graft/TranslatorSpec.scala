@@ -8,13 +8,15 @@ import graft.fixtures.CdcFixtures
 import graft.pipes.{AirportPipes, UsersPipes}
 import graft.sql.{ChSqlTranslator, PipeRunner}
 
-/** The strongest fidelity check available: execute the reference's OWN
-  * `.pipe` files (read-only checkout) through the CH-SQL→Spark-SQL
-  * translator against fixture CDC logs, and require identical results
-  * to the hand-built DataFrame pipes for every endpoint. */
+/** The strongest fidelity check available: execute the reference's
+  * `.pipe` files through the CH-SQL→Spark-SQL translator against fixture
+  * CDC logs, and require identical results to the hand-built DataFrame
+  * pipes for every endpoint. The files are reconstructions vendored
+  * under `src/test/resources/kits` ([[Kits]]); KitParserSpec compares
+  * them with the upstream checkout where one exists. */
 class TranslatorSpec extends SparkSpec {
 
-  private val kits = "/root/reference/kits"
+  private val kits = Kits.root.getPath
   private lazy val gen = CdcFixtures.generate()
   private lazy val dir: String = {
     val d = Files.createTempDirectory("graftsql").toString
