@@ -678,6 +678,18 @@ class ApiServerSpec extends SparkSpec {
       name.contains("endpoint_read") && grants.size == 1 })
   }
 
+  test("tokensFromPipes: a shared token grants every pipe that declares it") {
+    def pipe(tokens: String*) =
+      tokens.map(t => s"""TOKEN "$t" READ\n""").mkString +
+        "\nNODE n0\nSQL >\n    SELECT 1 AS x\n"
+    val toks = ApiServer.tokensFromPipes(Seq(
+      "a" -> pipe("shared_read"),
+      "b" -> pipe("shared_read", "b_endpoint_read"),
+      "c" -> pipe()))
+    assert(toks == Map(
+      "shared_read" -> Set("a", "b"), "b_endpoint_read" -> Set("b")))
+  }
+
   test("dedup-artifact status endpoint: current flips to stale across an " +
       "input append and back after update(), with the increment stats") {
     import spark.implicits._

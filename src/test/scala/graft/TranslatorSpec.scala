@@ -8,12 +8,15 @@ import graft.fixtures.CdcFixtures
 import graft.pipes.{AirportPipes, UsersPipes}
 import graft.sql.{ChSqlTranslator, PipeRunner}
 
-/** The strongest fidelity check available: execute the reference's
-  * `.pipe` files through the CH-SQL→Spark-SQL translator against fixture
-  * CDC logs, and require identical results to the hand-built DataFrame
-  * pipes for every endpoint. The files are reconstructions vendored
-  * under `src/test/resources/kits` ([[Kits]]); KitParserSpec compares
-  * them with the upstream checkout where one exists. */
+/** Execute the reference's `.pipe` files through the CH-SQL→Spark-SQL
+  * translator against fixture CDC logs, and require identical results
+  * to the hand-built DataFrame pipes for every endpoint. The files are
+  * reconstructions vendored under `src/test/resources/kits` ([[Kits]]),
+  * rebuilt in part from those hand-built pipes. So these tests check
+  * that the translator handles each ClickHouse construct the files use;
+  * they do not check that the hand-built pipes are faithful to the
+  * reference. That needs the upstream files: beside an upstream
+  * checkout, KitParserSpec names each reconstruction that differs. */
 class TranslatorSpec extends SparkSpec {
 
   private val kits = Kits.root.getPath
