@@ -4,183 +4,19 @@ object Bench {
   /** GC quiesce run BEFORE each timed query (outside the measured
     * window) so a heavy neighbor's allocation debt cannot land in the
     * next query's figure. One definition for Bench AND BenchSome so
-    * the two benchmarks always measure under the same discipline.
-    * Opt out with SPARK_GRAFT_BENCH_GC=0. */
-  def quiesce(): Unit =
-    if (sys.env.getOrElse("SPARK_GRAFT_BENCH_GC", "1") != "0") {
-      System.gc(); Thread.sleep(50)
-    }
-
-  /** Fixed box-speed calibration probe — the denominator that makes
-    * CROSS-ROUND bench totals readable: the round-9 adjudication found
-    * ~1.4× pure box-state drift between two recording environments,
-    * enough to manufacture or hide a real regression. This probe is
-    * data-independent (spark.range), query-code-independent (no
-    * SparkEntry involvement), and its DEFINITION MUST NEVER CHANGE —
-    * comparability across rounds is its entire value. Two legs cover
-    * the two resources the suite spends: codegen'd integer arithmetic
-    * + hash aggregation (CPU), and string build + xxhash64 + a 4096-
-    * bucket shuffle (memory/shuffle path). Reported as the min of two
-    * runs (steady-state, same min(cold,warm) convention as the
-    * queries). Read any two rounds' totals through the ratio of their
-    * calibrations before calling a delta a regression. */
-  def calibrationProbe(spark: SparkSession): Double = {
-    def leg(): Double = {
-      quiesce()
-      val t0 = System.nanoTime()
-      spark.range(0L, 200000000L, 1L, 64)
-        .selectExpr("id * 2654435761L % 1000003 AS k")
-        .groupBy("k").count()
-        .orderBy(org.apache.spark.sql.functions.desc("count"))
-        .limit(5).collect()
-      spark.range(0L, 20000000L, 1L, 64)
-        .selectExpr("xxhash64(concat('cal-', id)) AS h")
-        .selectExpr("pmod(h, 4096) AS b", "h")
-        .groupBy("b").agg(org.apache.spark.sql.functions.expr("sum(h)"))
-        .count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    math.min(leg(), leg())
-  }
-
-  /** Codec-throughput calibration probe (round-14, verdict #4): the
-    * shuffle/hash probe above does not track raw-CPU codec throughput
-    * under host steal — `docs_audio_features` moved 399→537 s across
-    * boxes with identical code and the probe family admitted it could
-    * not adjudicate codec-bound rows. This leg decodes a fixed
-    * in-memory WAV (the suite's REAL audio codec kernel,
-    * [[graft.operators.Multimodal.decodeAudioRow]]) N times on the
-    * driver — byte-linear single-thread CPU, zero Spark involvement —
-    * so codec-bound rows (audio/video/image features) are read through
-    * THIS denominator. Like [[calibrationProbe]], the definition must
-    * never change: comparability across rounds is its entire value.
-    * Reported as min of two runs of 64 decodes over a ~1.6 MB buffer. */
-  def calCodecProbe(): Double = {
-    import graft.operators.Multimodal
-    val wav = Multimodal.synthWav(16000, 2, 400000, 1000)
-    def leg(): Double = {
-      val t0 = System.nanoTime()
-      var i = 0
-      var sink = 0L
-      while (i < 64) {
-        sink += Multimodal.decodeAudioRow(
-          Multimodal.MediaRow(i.toLong, wav)).energy_sum
-        i += 1
-      }
-      require(sink != 0L, "codec probe decoded nothing")
-      (System.nanoTime() - t0) / 1e9
-    }
-    math.min(leg(), leg())
-  }
-
-  /** The registered queries whose cost is the raw-CPU codec kernel
-    * (JVM decode in mapPartitions), not the shuffle/hash path: their
-    * cross-round deltas are adjudicated through [[calCodecProbe]]
-    * (round-15, verdict #4 — `cal_codec` was recorded but nothing
-    * normalized the rows through it, leaving "399→537 s" swings to
-    * manual prose). Bench emits `queries_per_cal_codec` = best /
-    * cal_codec for exactly these rows; two boxes whose raw seconds
-    * differ by host steal should land near-equal normalized figures. */
-  val codecBoundQueries: Set[String] = Set(
-    "docs_audio_features", "docs_video_frames",
-    "docs_decode_features", "docs_frame_sample")
-
-  /** `SPARK_GRAFT_SHUFFLE=auto` — partitions sized from the INPUT, the
-    * way a cluster operator sizes them: total bytes under the sf dir /
-    * a 128 MB per-partition target, clamped to [cores, 2048]. At the
-    * sf0.1 contract scale this resolves to the core count (unchanged
-    * figure); at sf100 (15 GB) it lands at ~117 — within noise of the
-    * hand-adjudicated 128 from the round-9 scale probes. Pinning the
-    * partition count while data grows 1000x measures spill, not the
-    * plan (DESIGN.md round-9). */
-  def shufflePartitionsFor(sfDir: String, cpus: Int): Int = {
-    def size(f: java.io.File): Long =
-      if (f.isFile) f.length
-      else Option(f.listFiles).getOrElse(Array.empty[java.io.File])
-        .map(size).sum
-    val perPartition = 128L * 1024 * 1024
-    math.min(2048L,
-      math.max(cpus.toLong, size(new java.io.File(sfDir)) / perPartition))
-      .toInt
-  }
-
-  /** Resolve the shuffle sizing as SESSION CONFIGS: explicit number >
-    * `auto` > core count (the contract default).
-    *
-    * `auto` (round-10 redesign, MEASURED at sf30 — full matrix in
-    * DESIGN.md round-10): the round-9 global knob proved that ONE
-    * pinned count cannot serve every stage (pair family wants width,
-    * the vocab-bounded lm family wants few coarse partitions). The
-    * stage-local mechanism is AQE coalescing seeded with a GENEROUS
-    * `initialPartitionNum` (4× the input-bytes heuristic — AQE can
-    * only coalesce down, never split, and stages like the exploded
-    * shingle join shuffle far more bytes than the input) and
-    * SIZE-FIRST coalescing (`parallelismFirst=false`, 32 MB
-    * advisory): each stage then lands near its own optimum. Measured
-    * same-box at sf30: this config beats the global-128 auto of
-    * round 9 on BOTH families (pairs 138.9 s vs 144.3, lm_buckets
-    * 22.0 s vs 24.1) and is the best single config for the pair
-    * family outright. The `parallelismFirst=true` default was
-    * measured and REJECTED: it refuses to coalesce below ~1 MB
-    * partitions, pinning every stage at the initial width — the pair
-    * family regressed to 198 s. Per-family pinning remains the
-    * measured ceiling for the lm family alone (14.4 s at sh=32:
-    * size-first coalescing can drop a small stage below core-count
-    * width and idles cores — a single-box cost a multi-executor
-    * cluster does not pay, since partition count stops being the
-    * spill knob there). `spark.sql.shuffle.partitions` stays at the
-    * core count as the non-AQE floor. */
-  def shuffleConfigs(sfDir: String, cpus: String): Seq[(String, String)] =
-    sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus) match {
-      case "auto" =>
-        val base = shufflePartitionsFor(sfDir, cpus.toInt)
-        val initial = math.min(2048, math.max(cpus.toInt, 4 * base))
-        Seq(
-          "spark.sql.shuffle.partitions" -> cpus,
-          "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
-            initial.toString,
-          "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
-          "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32m")
-      case n => Seq("spark.sql.shuffle.partitions" -> n)
-    }
+    * the two benchmarks always measure under the same discipline. */
+  def quiesce(): Unit = { System.gc(); Thread.sleep(50) }
 
   def main(args: Array[String]): Unit = {
     RunLock.acquireOrDie("Bench")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
-    val spark = Bench.shuffleConfigs(sfDir, cpus)
-      .foldLeft(builder0) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(sfDir)
     // warmup: pay one-time session/codegen/scan-setup and CDC-fixture
     // generation costs outside the measured window so the first measured
     // query isn't skewed
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     try SparkEntry.queries("ref_latest_flight_info")(spark, sfDir).count()
     catch { case _: Throwable => () }
-    // box-speed calibration, AFTER warmup and BEFORE any timed query:
-    // the number future rounds divide totals by before reading deltas.
-    // Printed to stderr IMMEDIATELY (round-11 lesson: a killed sweep
-    // loses the end-of-sweep JSON, and without the probe its salvaged
-    // per-query progress lines cannot be normalized across boxes)
-    // Round-13 (verdict #5): single probes ranged 4.26-27.75 across one
-    // night of sf100 segments (host CPU steal), making them the dominant
-    // uncertainty in every cross-round claim. The headline `calibration`
-    // is now the MEDIAN of three probes; the raw probes land in the JSON
-    // as `cal_probes`, and a CLOSING probe (`cal_end`) bounds how much
-    // the box drifted DURING the sweep — a per-query ratio whose segment
-    // shows cal_end far from cal_start is noise until re-measured.
-    val calProbes = Seq.fill(3)(Bench.calibrationProbe(spark))
-    val calibration = calProbes.sorted.apply(1)
-    // codec-throughput leg alongside (round-14): codec-bound rows
-    // (audio/video/image features) are adjudicated through THIS number
-    val calCodec = Bench.calCodecProbe()
-    System.err.println(f"[bench] calibration=$calibration%.2f " +
-      s"probes=${calProbes.map(p => f"$p%.2f").mkString(",")} " +
-      f"cal_codec=$calCodec%.3f sf=$sfDir")
     // Noise discipline (round 6): single cold runs made three rounds of
     // bench deltas ambiguous (neighbor noise / JIT warmup read as
     // regressions). Any query whose cold run costs >= 1 s is re-run once
@@ -189,7 +25,7 @@ object Bench {
     // them doubles the sweep for numbers that are overhead-dominated
     // anyway). Cold times are preserved alongside in the full output
     // file. NOTE: totals are therefore not comparable to rounds <= 5,
-    // which summed single cold runs (documented in DESIGN.md).
+    // which summed single cold runs.
     // A query that THROWS must never masquerade as a fast result (round 6:
     // 34 broken queries landed as 0.07 s "timings" inside a healthy-looking
     // total). time() reports the error; errored queries are excluded from
@@ -200,8 +36,7 @@ object Bench {
     // isolated-rerun adjudication. Collecting BEFORE t0 charges each
     // query only its own allocations; the System.gc() itself runs
     // outside the measured window, so per-query figures are comparable
-    // across sweeps without inflating any of them. Opt out with
-    // SPARK_GRAFT_BENCH_GC=0 (e.g. to measure the un-quiesced deltas).
+    // across sweeps without inflating any of them.
     def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Option[String]) = {
       Bench.quiesce()
@@ -220,7 +55,7 @@ object Bench {
     // 84% disk on spill that no one query needed) — k segments, each
     // with session recycle + scratch cleanup between, keep peak disk at
     // the worst SEGMENT's footprint. Each segment emits the normal JSON
-    // (own calibration, own errors); totals merge by addition.
+    // (own errors); totals merge by addition.
     val allQueries = SparkEntry.queries.toSeq.sortBy(_._1)
     val segment = sys.env.get("SPARK_GRAFT_BENCH_SEGMENT")
     val picked = segment match {
@@ -270,82 +105,6 @@ object Bench {
     // carries name → message so a crash is diagnosable from the artifact
     val errNames = errors.map { case (n, _) => jstr(n) }.mkString("[", ",", "]")
     val errFull = errors.map { case (n, m) => s"${jstr(n)}:${jstr(m)}" }.mkString("{", ",", "}")
-    // calibration-normalized figures, so cross-round comparison is one
-    // division a reader no longer has to do (round-9's adjudication
-    // found ~1.4× pure box drift between recording environments):
-    // value_per_calibration = total / this run's probe; when a prior
-    // round's bench JSON is supplied (SPARK_GRAFT_BENCH_PREV), the
-    // normalized ratio vs THAT run — ~1.0 means "same speed through
-    // the calibration lens", independent of box state
-    // closing probe AFTER the last timed query (see cal_probes note)
-    val calEnd = Bench.calibrationProbe(spark)
-    System.err.println(f"[bench] cal_end=$calEnd%.2f sf=$sfDir")
-    val perCal = if (calibration > 0) total / calibration else 0.0
-    // SPARK_GRAFT_BENCH_PREV names the prior round's bench JSON; when
-    // unset (the round driver's final run never sets it — BENCH_r12
-    // shipped without normalized_vs_prev), auto-discover the
-    // highest-numbered BENCH_r*.json in the working directory so the
-    // field is always present when a prior artifact exists.
-    // Round-14 (advisory): files modified after THIS JVM started are
-    // excluded — once BENCH_r{N}.json exists in the tree, a re-run
-    // would otherwise normalize against the current round's own file
-    // (or a half-written `bench > BENCH_rN.json` redirect target); the
-    // resolved path is recorded in the JSON as `prev` so every
-    // normalized_vs_prev is attributable.
-    // Round-15 (advisory): a same-round artifact written by an EARLIER
-    // JVM (e.g. a sweep run that morning) still passed the mtime guard
-    // and self-normalized to ~1.0 — when SPARK_GRAFT_BENCH_OUT names a
-    // BENCH_r{N}.json, that round number is THIS run's own and is
-    // excluded from the candidates too.
-    val jvmStart =
-      java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
-    val re = """BENCH_r(\d+)\.json""".r
-    val selfRound = new java.io.File(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json"))
-      .getName match { case re(n) => Some(n.toInt); case _ => None }
-    val prevPath = sys.env.get("SPARK_GRAFT_BENCH_PREV").orElse {
-      Option(new java.io.File(".").listFiles)
-        .getOrElse(Array.empty[java.io.File])
-        .filter(_.lastModified < jvmStart)
-        .flatMap(f => f.getName match {
-          case re(n) => Some((n.toInt, f.getPath)); case _ => None
-        })
-        .filterNot(c => selfRound.contains(c._1))
-        .sortBy(-_._1).headOption.map(_._2)
-    }
-    prevPath.foreach(p => System.err.println(s"[bench] prev=$p"))
-    val prevRatio = prevPath.flatMap { p =>
-      try {
-        val txt = new String(
-          java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
-        // tolerate the driver's wrapper files, where the bench JSON
-        // sits escaped inside a "tail" string (\"value\":139.88)
-        def field(k: String): Option[Double] =
-          ("\\\\?\"" + k + "\\\\?\":([0-9.]+)").r.findFirstMatchIn(txt)
-            .map(_.group(1).toDouble)
-        for (pv <- field("value"); pc <- field("calibration"); if pc > 0 && pv > 0)
-          yield perCal / (pv / pc)
-      } catch { case _: Throwable => None }
-    }
-    val prevField = prevRatio.map(r => s""","normalized_vs_prev":${f2(r)}""").getOrElse("") +
-      prevPath.map(p => s""","prev":${jstr(p)}""").getOrElse("")
-    val calProbesJson = calProbes.map(f2).mkString("[", ",", "]")
-    def f3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    // codec-bound rows, normalized through the codec probe — the field
-    // cross-round readers compare instead of the raw seconds (see
-    // codecBoundQueries); ~4 entries, so it fits the stdout budget too
-    val perCodec = results.toSeq
-      .filter { case (n, _) => Bench.codecBoundQueries.contains(n) }
-      .map { case (n, v) => n -> (if (calCodec > 0) v / calCodec else 0.0) }
-      .sortBy(_._1)
-    val perCodecField =
-      if (perCodec.isEmpty) ""
-      else s""","queries_per_cal_codec":${toJson(perCodec)}"""
-    val calFields = s""""calibration":${f2(calibration)},""" +
-      s""""cal_probes":$calProbesJson,"cal_end":${f2(calEnd)},""" +
-      s""""cal_codec":${f3(calCodec)},""" +
-      s""""value_per_calibration":${f2(perCal)}$perCodecField$prevField"""
     // the git SHA the sweep runner stamped (tools/segmented_bench.sh):
     // a merged sf100 artifact can then prove each segment ran the
     // committed code — stale-sweep rows shipped in r12 AND r13
@@ -353,8 +112,8 @@ object Bench {
       .map(s => s""""sha":${jstr(s)},""").getOrElse("")
     val segField = segment.map(s => s""""segment":${jstr(s)},""").getOrElse("") +
       shaField
-    val line = s"""{"metric":"total","value":${f2(total)},"unit":"sec",$calFields,$segField"n_queries":${results.size},"n_errors":${errors.size},"errors":$errNames,"queries":${toJson(slowest)},"sf":"$sfDir"}"""
-    val full = s"""{"metric":"total","value":${f2(total)},"unit":"sec",$calFields,$segField"n_queries":${results.size},"n_errors":${errors.size},"errors":$errNames,"error_messages":$errFull,"queries":${toJson(results.toSeq.sortBy(_._1))},"cold":${toJson(colds.toSeq.sortBy(_._1))},"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${f2(total)},"unit":"sec",$segField"n_queries":${results.size},"n_errors":${errors.size},"errors":$errNames,"queries":${toJson(slowest)},"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":${f2(total)},"unit":"sec",$segField"n_queries":${results.size},"n_errors":${errors.size},"errors":$errNames,"error_messages":$errFull,"queries":${toJson(results.toSeq.sortBy(_._1))},"cold":${toJson(colds.toSeq.sortBy(_._1))},"sf":"$sfDir"}"""
     println(line)
     System.out.flush()
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
@@ -373,14 +132,7 @@ object BenchSome {
     RunLock.acquireOrDie("BenchSome")
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
-    val spark = Bench.shuffleConfigs(sfDir, cpus)
-      .foldLeft(builder0) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(sfDir)
     // an unknown name must abort, not time a NoSuchElementException as
     // a 0.00 s no-op (the round-6 silent-failure lesson)
     val unknown = names.filterNot(SparkEntry.queries.contains)

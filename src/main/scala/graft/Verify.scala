@@ -5,24 +5,6 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
-  /** The ONE session recipe for correctness dumps — shared with
-    * VerifySome so the two mains cannot drift on the flags the oracle
-    * comparison depends on (ns→µs reads, µs parquet writes, UTC). */
-  private[graft] def dumpSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // write µs-precision timestamps (not INT96) so the driver's reader
-      // sees the same logical type DuckDB produces
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Dump one query's result the way the driver's gate reads it. */
   private[graft] def dumpQuery(spark: SparkSession, sfDir: String,
                                outDir: String, name: String): Unit =
@@ -32,7 +14,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     RunLock.acquireOrDie("Verify")
     val Array(sfDir, outDir) = args
-    val spark = dumpSession()
+    val spark = Session(sfDir)
     new java.io.File(outDir).mkdirs()
     // A failed dump must be LOUD: round 6's schema break surfaced only as
     // 34 silent absences in the driver's correctness file. Record every

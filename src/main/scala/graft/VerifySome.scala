@@ -2,15 +2,15 @@ package graft
 
 /** Dev tool: dump a SUBSET of SparkEntry.queries (plus their oracle
   * SQL) the same way Verify does — for iterating on one oracle pair
-  * without paying the full dump. Session and dump path are Verify's
-  * own ([[Verify.dumpSession]]), so a flag added there applies here.
+  * without paying the full dump, on the same [[Session]] and dump path
+  * ([[Verify.dumpQuery]]).
   * Usage: runMain graft.VerifySome <sfDir> <outDir> <query...> */
 object VerifySome {
   def main(args: Array[String]): Unit = {
     RunLock.acquireOrDie("VerifySome")
     val sfDir = args(0)
     val outDir = args(1)
-    val spark = Verify.dumpSession()
+    val spark = Session(sfDir)
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     args.drop(2).foreach { name =>

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 
 /** Native Catalyst expression: dot product of two float-array columns
   * with double accumulation, left-to-right — bit-identical to
@@ -162,35 +161,16 @@ case class SubspaceDist(left: Expression, right: Expression,
     copy(left = newLeft, right = newRight)
 }
 
-/** Session registration for the engine's native functions, so they are
-  * usable from SQL text as well as the Column API. Idempotent. */
-object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vector_dot", exprs => VectorDot(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fingerprints", exprs => WinnowFingerprints(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "subspace_dist", exprs => SubspaceDist(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue(),
-        exprs(3).eval().asInstanceOf[Number].intValue()), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_spans", exprs => WinnowSpans(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()), "built-in")
-  }
-}
-
 /** Library packaging: register the engine's functions AND the
   * ClickHouse-dialect parser front door through the
   * SparkSessionExtensions mechanism, so a deployment enables the whole
   * surface with
   *   spark.sql.extensions=graft.functions.GraftExtensions
-  * instead of per-session calls. With the extension active,
+  * ([[graft.Session]] sets it). This is the only place the function
+  * NAMES are registered, for SQL text; the engine's own Column helpers
+  * build the expressions directly through
+  * [[org.apache.spark.sql.GraftColumnBridge]] and need no session
+  * state. With the extension active,
   * `spark.sql` accepts the reference's pipe SQL verbatim
   * (`FROM t FINAL`, `LIMIT 1 BY k`, toStartOfMinute, argMax, …) —
   * see [[graft.sql.ChDialectParser]]. */

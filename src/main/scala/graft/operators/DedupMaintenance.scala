@@ -258,7 +258,6 @@ object DedupMaintenance {
                            inputs: Seq[ArtifactManifest.InputFile],
                            minJaccard: Double, maxDf: Int,
                            embNLists: Int): Boolean = {
-    graft.functions.GraftFunctions.register(spark)
     val layout = s"$out/emb_probe_layout"
     val g = base.gen + 1
 

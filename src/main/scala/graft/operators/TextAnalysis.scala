@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import graft.functions.ChFunctions._
+import graft.functions.WinnowFingerprints
 
 /** Text-analysis operators for a training-data pipeline over the
   * `documents` table: token statistics, quality scoring, language-ID
@@ -117,14 +119,13 @@ object TextAnalysis {
     * the only row growth. */
   def rollingFingerprints(spark: SparkSession, dir: String,
                           k: Int = 8, w: Int = 16): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // native compiled loop (graft.functions.WinnowFingerprints);
     // bit-identical to the HOF chain
     //   array_distinct(transform(seq, i -> array_min(slice(rolling, i, w))))
     // but ~50× faster — HOF lambdas evaluate interpreted per element
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-        explode(call_function("winnow_fingerprints", col("text"), lit(k), lit(w)))
+        explode(column(WinnowFingerprints(expression(col("text")), k, w)))
           .as("fingerprint"))
       .orderBy("doc_id", "fingerprint")
   }

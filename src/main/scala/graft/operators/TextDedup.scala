@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import graft.functions.ChFunctions._
+import graft.functions.{SimHash64, WinnowSpans}
 
 /** Document deduplication suite over `documents`: exact (digest),
   * exact-similarity (n-gram Jaccard via inverted-index join), and the
@@ -608,7 +610,6 @@ object TextDedup {
         // then serve as a parquet read instead of re-winnowing the
         // corpus per call (~183 s of the round-12 sf100 tail)
         stage("span_index") {
-          graft.functions.GraftFunctions.register(spark)
           spanIndexFrame(graft.Tables.documents(spark, dir))
             .withColumn("gen", lit(0))
             .write.mode("overwrite").parquet(s"$out/span_index")
@@ -1437,7 +1438,6 @@ object TextDedup {
   private[operators] def substringSpansFrame(
       spark: SparkSession, dir: String, k: Int = SpanK, w: Int = SpanW,
       minRun: Int = SpanMinRun, maxDf: Int = SpanMaxDf): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val sp = spanIndexFrame(Tables.documents(spark, dir), k, w)
     val dfPerFp = sp.groupBy("fp").agg(count(lit(1)).as("df"))
     spansFromIndex(sp, dfPerFp, k, minRun, maxDf)
@@ -1447,12 +1447,12 @@ object TextDedup {
     * selected (doc, position, fingerprint). This is the per-document
     * HALF of the span pipeline (embarrassingly parallel, no shuffle),
     * factored out so the artifact build stages it once and increments
-    * re-run it over delta rows only. Caller registers GraftFunctions. */
-  private[operators] def spanIndexFrame(docs: DataFrame, k: Int = SpanK,
-                                        w: Int = SpanW): DataFrame =
+    * re-run it over delta rows only. */
+  private[graft] def spanIndexFrame(docs: DataFrame, k: Int = SpanK,
+                                   w: Int = SpanW): DataFrame =
     docs
       .select(col("doc_id"),
-        explode(call_function("winnow_spans", col("text"), lit(k), lit(w))).as("s"))
+        explode(column(WinnowSpans(expression(col("text")), k, w))).as("s"))
       .select(col("doc_id"), col("s.pos").as("pos"), col("s.fp").as("fp"))
 
   /** The pair half of the span pipeline, over ANY (doc_id, pos, fp)
@@ -1537,10 +1537,9 @@ object TextDedup {
     * lambda invocations per token (bit-identical to the HOF chain,
     * asserted in ChFunctionsSpec). */
   def simhash(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-        call_function("simhash64", expr("array_distinct(split(text, ' '))"))
+        column(SimHash64(expression(expr("array_distinct(split(text, ' '))"))))
           .as("simhash"))
       .orderBy("doc_id")
   }

@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import graft.functions.ChFunctions._
+import graft.functions.{SubspaceDist, VectorDot}
 
 /** Similarity search over the `embeddings` table (Array[Float], 64-dim,
   * unit-normalized — so cosine similarity = dot product).
@@ -38,12 +40,12 @@ object VectorOps {
   val EmbPairBuildMinCosine = 0.4
 
   /** dot(a, b) with double accumulation, left-to-right — the native
-    * codegen'd expression (graft.functions.VectorDot, registered as
-    * `vector_dot` per session); semantically identical to the HOF chain
+    * codegen'd expression [[graft.functions.VectorDot]] (`vector_dot` in
+    * SQL text); semantically identical to the HOF chain
     * aggregate(zip_with(a,b,(x,y)->double(x)*double(y)), 0d, +) but one
     * fused loop per row instead of per-element interpreted calls. */
   private def dot(a: Column, b: Column): Column =
-    call_function("vector_dot", a, b)
+    column(VectorDot(expression(a), expression(b)))
 
   /** The probe-assignment score EXACTLY as [[probeAssignmentsFrom]]
     * ranks it (6dp-rounded dot) — exposed so the anchor-churn
@@ -54,7 +56,6 @@ object VectorOps {
 
   /** L2 norms — plumbing validation for the vector column. */
   def norms(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"),
         floorRound(sqrt(dot(col("embedding"), col("embedding"))), 4).as("l2_norm"))
@@ -66,7 +67,6 @@ object VectorOps {
     * neighbor id identically in any engine. */
   def knnBruteForce(spark: SparkSession, dir: String,
                     nQueries: Int = 20, k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val q = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
@@ -91,7 +91,6 @@ object VectorOps {
     * composes unchanged. */
   def hardNegatives(spark: SparkSession, dir: String,
                     nQueries: Int = 20, k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val q = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
@@ -166,7 +165,6 @@ object VectorOps {
     * cross join. */
   def knnLsh(spark: SparkSession, dir: String,
              nQueries: Int = 20, k: Int = 5, dim: Int = 64): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"),
         explode(tableBuckets(col("embedding"), dim)).as("tb"))
@@ -233,7 +231,6 @@ object VectorOps {
   private[operators] def probeAssignments(spark: SparkSession, dir: String,
                                           nLists: Int = 0,
                                           nprobe: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     probeAssignmentsFrom(emb, anchorsOf(emb, resolveLists(emb, nLists)), nprobe)
   }
@@ -300,7 +297,6 @@ object VectorOps {
   def writeNearDupLayout(spark: SparkSession, dir: String, out: String,
                          nLists: Int = 0, nprobe: Int = 3,
                          withGen: Boolean = false): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val lists = resolveLists(emb, nLists)
     val probes = probeAssignmentsFrom(emb, anchorsOf(emb, lists), nprobe)
@@ -363,7 +359,6 @@ object VectorOps {
     * partition. This is the form that holds past ~10 M vectors. */
   def nearDupPairsOverLayout(spark: SparkSession, layout: String,
                              minCosine: Double = EmbPairBuildMinCosine): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     pairsFromProbes(readNearDupLayout(spark, layout), minCosine)
   }
 
@@ -493,7 +488,6 @@ object VectorOps {
   def screenIncrementStaged(spark: SparkSession, layout: String,
                             minCosine: Double = EmbPairBuildMinCosine,
                             broadcastProbeBytes: Long = 2L << 30): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // rows carry the assignments; the geometry pin is the witness this
     // IS a staged layout (a bare parquet dir must fail loudly)
     require(readLayoutGeometry(layout).isDefined,
@@ -569,7 +563,6 @@ object VectorOps {
                                 nLists: Int = 0, nprobe: Int = 3,
                                 broadcastProbeBytes: Long = 2L << 30): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(spark)
     val incomingProbes = probeAssignments(spark, dir, nLists, nprobe)
       .filter(col("vec_id") % 10 === 0)
       .select(col("vec_id").as("vec_a"), col("embedding").as("ea"),
@@ -649,7 +642,6 @@ object VectorOps {
   def screenAgainstLayout(spark: SparkSession, incoming: DataFrame,
                           layout: String, minCosine: Double = EmbPairBuildMinCosine,
                           broadcastProbeBytes: Long = 2L << 30): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val (nLists, nprobe) = readLayoutGeometry(layout).getOrElse(
       throw new IllegalArgumentException(
         s"no _GEOMETRY under $layout — stage it with writeNearDupLayout"))
@@ -715,7 +707,6 @@ object VectorOps {
     * verify the IVF/LSH candidate paths at small SF. */
   def nearDupPairsExact(spark: SparkSession, dir: String,
                         minCosine: Double = EmbPairBuildMinCosine): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val a = emb.select(col("vec_id").as("vec_a"), col("embedding").as("ea"))
     val b = emb.select(col("vec_id").as("vec_b"), col("embedding").as("eb"))
@@ -733,7 +724,6 @@ object VectorOps {
     * with nprobe (nprobe = nLists degenerates to brute force). */
   def knnIvf(spark: SparkSession, dir: String, nQueries: Int = 20, k: Int = 5,
              nLists: Int = 8, nprobe: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val anchors = emb.filter(col("vec_id") < nLists)
       .select(col("vec_id").as("list_id"), col("embedding").as("anchor"))
@@ -767,7 +757,6 @@ object VectorOps {
     * pruning instead of a full scan. */
   def writeIvfLayout(spark: SparkSession, dir: String, out: String,
                      nLists: Int = 8): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val anchors = emb.filter(col("vec_id") < nLists)
       .select(col("vec_id").as("list_id"), col("embedding").as("anchor"))
@@ -792,7 +781,6 @@ object VectorOps {
   def knnIvfOverLayout(spark: SparkSession, layout: String, dir: String,
                        nQueries: Int = 20, k: Int = 5,
                        nLists: Int = 8, nprobe: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val table = spark.read.parquet(layout)
     val emb = Tables.embeddings(spark, dir)
     val anchors = emb.filter(col("vec_id") < nLists)
@@ -848,7 +836,6 @@ object VectorOps {
     * size. This IS the k-means train loop body for IVF index building;
     * iterate by feeding the output back as the next anchor set. */
   def centroidUpdate(spark: SparkSession, dir: String, nLists: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     integerUnitCentroids(
         assignToLists(Tables.embeddings(spark, dir), nLists)
           .select("embedding", "list_id"))
@@ -886,7 +873,6 @@ object VectorOps {
     * out (inner join) — they have no semantic signal to score. */
   def sourceOutliers(spark: SparkSession, dir: String, m: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(spark)
     val joined = Tables.documents(spark, dir).select(col("doc_id"), col("source"))
       .join(Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
         col("vec_id") === col("doc_id"))
@@ -939,7 +925,6 @@ object VectorOps {
 
   def kmeans(spark: SparkSession, dir: String,
              nLists: Int = KmeansLists, iters: Int = KmeansIters): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     var anchors = emb.filter(col("vec_id") < nLists)
       .select(col("vec_id").as("list_id"), col("embedding").as("anchor"))
@@ -1005,7 +990,6 @@ object VectorOps {
   }
 
   def ivfAssign(spark: SparkSession, dir: String, nLists: Int = 8): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     assignToLists(Tables.embeddings(spark, dir), nLists)
       .withColumnRenamed("__sim", "sim")
       .groupBy("list_id")
@@ -1037,7 +1021,6 @@ object VectorOps {
     * generated CASE chain would fuse it into the scan). */
   def pqCodes(spark: SparkSession, dir: String,
               m: Int = 8, k: Int = 16): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     pqBest(Tables.embeddings(spark, dir), m, k)
       .select(col("vec_id"),
         (0 until m).map(s => col(s"c$s") * lit(1L << (4 * s)))
@@ -1053,7 +1036,7 @@ object VectorOps {
     * interpreted aggregate(zip_with(slice,slice)) form it replaces ran
     * 128 lambda evaluations per corpus row in pqBest. */
   private def subDist(e: Column, a: Column, s: Int, sub: Int): Column =
-    floorRound(call_function("subspace_dist", e, a, lit(s * sub), lit(sub)), 6)
+    floorRound(column(SubspaceDist(expression(e), expression(a), s * sub, sub)), 6)
 
   /** Per-vector best codeword per subspace: (vec_id, c0..c{m-1}). */
   private def pqBest(emb: DataFrame, m: Int, k: Int): DataFrame = {
@@ -1086,7 +1069,6 @@ object VectorOps {
     * (recall property-tested against brute force). */
   def knnPq(spark: SparkSession, dir: String, nQueries: Int = 20,
             k: Int = 5, m: Int = 8, kCodes: Int = 16): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val sub = 64 / m
     val codes = pqBest(emb, m, kCodes)
@@ -1128,7 +1110,6 @@ object VectorOps {
   def knnIvfPq(spark: SparkSession, dir: String, nQueries: Int = 20,
                k: Int = 5, nLists: Int = 8, nprobe: Int = 3,
                m: Int = 8, kCodes: Int = 16): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val sub = 64 / m
     val listAnchors = emb.filter(col("vec_id") < nLists)

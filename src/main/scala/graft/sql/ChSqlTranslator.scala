@@ -208,16 +208,35 @@ object ChSqlTranslator {
   }
 
   /** CH scalar CTE: `WITH (SELECT …) as name <rest>` — inline the
-    * subquery at every use of `name` in <rest>. */
+    * subquery at every use of `name` in <rest>.
+    *
+    * Over no rows, ClickHouse's `max`/`min`/`sum` of a non-Nullable
+    * column return the type's default, where Spark's return NULL: the
+    * copy pipes' watermark `(SELECT max(batch_max_updated) FROM
+    * users_batch)` over an empty target must be 0, or `updated_at >
+    * NULL` selects nothing and the first copy never fills the table.
+    * So a subquery that is one such aggregate is inlined as
+    * `coalesce((sub), 0)` — the default of the numeric columns the
+    * reference aggregates this way. A non-numeric column would need
+    * its type's default, which this text-level rewrite cannot know. */
   private def rewriteScalarWith(s: String): String = {
     val re = """(?is)^\s*WITH\s*\((SELECT.*?)\)\s+as\s+(\w+)\s+(.*)$""".r
     s match {
       case re(sub, name, rest) =>
+        val inlined =
+          if (EmptyDefaultAgg.pattern.matcher(sub).matches) s"coalesce(($sub), 0)"
+          else s"($sub)"
         rewriteScalarWith( // there may be several in sequence
-          replaceOutsideStrings(rest, "\\b" + name + "\\b")(_ => s"($sub)"))
+          replaceOutsideStrings(rest, "\\b" + name + "\\b")(_ => inlined))
       case _ => s
     }
   }
+
+  /** `SELECT max|min|sum(<expr>) FROM …` with no GROUP BY: exactly one
+    * row, which over no input is NULL in Spark and the type's default in
+    * ClickHouse. */
+  private val EmptyDefaultAgg =
+    """(?is)^SELECT\s+(?:max|min|sum)\s*\([^()]*\)\s+FROM\s+(?!.*\bGROUP\s+BY\b).*""".r
 
   /** Per-char mask: true where the char sits inside a single-quoted
     * string literal. Handles both escape spellings valid in ClickHouse

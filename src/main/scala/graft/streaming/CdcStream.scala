@@ -167,7 +167,6 @@ object CdcStream {
   def startIvfAssignMv(spark: SparkSession, srcDir: String, outDir: String,
                        checkpointDir: String,
                        anchors: Seq[(Long, Array[Float])]): StreamingQuery = {
-    graft.functions.GraftFunctions.register(spark)
     appendParquet(spark.readStream.schema(embSchema).parquet(srcDir)
         .select(col("vec_id"), col("label"), col("embedding"),
           VectorOps.perRowListAssign(col("embedding"), anchors).as("list_id")),
@@ -228,7 +227,6 @@ object CdcStream {
   private def screenMv(spark: SparkSession, arrivals: DataFrame, outDir: String,
                        checkpointDir: String)
                       (screen: DataFrame => DataFrame): StreamingQuery = {
-    graft.functions.GraftFunctions.register(spark)
     eachBatch(arrivals, checkpointDir) { (batch, batchId) =>
       screen(batch).withColumn("__batch", lit(batchId))
         .write.mode("append").parquet(outDir)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for the empirical headroom check: builds a
@@ -37,16 +37,9 @@ object GenScale {
     val src = args(0)
     val out = args(1)
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // write µs timestamps so replicated events round-trip with the same
-      // logical type Tables.events scans from the harness data
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Session writes µs timestamps, so replicated events round-trip with
+    // the same logical type Tables.events scans from the harness data
+    val spark = graft.Session(src)
 
     def replicas(base: DataFrame, mk: (DataFrame, Int) => DataFrame): DataFrame =
       (0 until factor).map(k => mk(base, k)).reduce(_ unionAll _)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{ArtifactManifest, DedupMaintenance, TextDedup}
 
@@ -48,14 +47,7 @@ object IncAtScale {
     val permille = args.lift(2).map(_.toInt).getOrElse(1)
     val rounds = args.lift(3).map(_.toInt).getOrElse(1)
     val maxGen = args.lift(4).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
-    val spark = graft.Bench.shuffleConfigs(data, cpus)
-      .foldLeft(builder0) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session(data)
 
     def timed(body: => String): (Double, String) = {
       System.gc(); Thread.sleep(100)

@@ -5,11 +5,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 /** Bridge into Spark's `private[sql]` Column↔Expression converters
   * (`org.apache.spark.sql.classic.ExpressionUtils`), so the engine's
   * native Catalyst expressions ([[graft.functions.Md5Low64]],
-  * [[graft.functions.Md5Words32]]) can be used as Columns WITHOUT
-  * per-session function registration — the registration route
-  * (GraftFunctions.register + call_function) needs a SparkSession in
-  * scope at every call site, which pure Column helpers like
-  * `OracleHash.low64` don't have.
+  * [[graft.functions.Md5Words32]], and the five named functions of
+  * [[graft.functions.GraftExtensions]]) can be used as Columns WITHOUT
+  * per-session function registration: a Column helper then needs no
+  * SparkSession in scope and works on any session, extension or not.
   *
   * Lives in `org.apache.spark.sql` solely to satisfy the access
   * qualifier; no Spark internals are modified or shadowed.
@@ -19,8 +18,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * not a stable surface). The build compiles against the image's
   * pinned /opt/spark/jars (4.1.2); on a Spark upgrade this file is the
   * FIRST thing to re-verify — if the converters move again, the public
-  * fallback is session registration (`GraftFunctions.register` +
-  * `call_function`), which every expression here also supports.
+  * fallback is the extension + `call_function`, which the five named
+  * functions also support.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)

@@ -120,4 +120,49 @@ class CodegenKernelsSpec extends SparkSpec {
     assert(wsCodegen(df.select(col("sp"))),
       "WinnowSpans projection fell out of whole-stage codegen")
   }
+
+  test("the native Column helpers build their expressions without a name lookup") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import graft.operators.{TextAnalysis, TextDedup, VectorOps}
+    def exprs(p: LogicalPlan): Seq[Expression] =
+      p.collectWithSubqueries { case n => n.expressions }.flatten
+        .flatMap(_.collect { case e => e })
+    val native = Seq("vector_dot", "subspace_dist", "winnow_fingerprints",
+      "winnow_spans", "simhash64").map(FunctionIdentifier(_))
+    // the helpers must neither look the names up nor register them: run
+    // them on a registry without the names, and put the extension's
+    // entries back afterwards
+    val registry = spark.sessionState.functionRegistry
+    val saved = native.map(id =>
+      (id, registry.lookupFunction(id).get, registry.lookupFunctionBuilder(id).get))
+    native.foreach(registry.dropFunction)
+    try {
+      val helpers: Seq[(String, () => DataFrame, Class[_])] = Seq(
+        ("VectorOps.norms", () => VectorOps.norms(spark, sf), classOf[VectorDot]),
+        ("VectorOps.pqCodes", () => VectorOps.pqCodes(spark, sf), classOf[SubspaceDist]),
+        ("TextAnalysis.rollingFingerprints",
+          () => TextAnalysis.rollingFingerprints(spark, sf), classOf[WinnowFingerprints]),
+        ("TextDedup.spanIndexFrame",
+          () => TextDedup.spanIndexFrame(Tables.documents(spark, sf)), classOf[WinnowSpans]),
+        ("TextDedup.simhash", () => TextDedup.simhash(spark, sf), classOf[SimHash64]))
+      for ((name, helper, cls) <- helpers) {
+        val df = helper()
+        val lookups = exprs(df.queryExecution.logical).collect {
+          case f: UnresolvedFunction
+              if native.exists(_.funcName == f.nameParts.last.toLowerCase) => f
+        }
+        assert(lookups.isEmpty, s"$name resolves a native function by name: $lookups")
+        assert(exprs(df.queryExecution.analyzed).exists(cls.isInstance),
+          s"$name: no ${cls.getSimpleName} in the analyzed plan")
+        val registered = native.filter(registry.functionExists)
+        assert(registered.isEmpty, s"$name registered $registered in the session")
+      }
+    } finally saved.foreach { case (id, info, builder) =>
+      registry.registerFunction(id, info, builder)
+    }
+  }
 }

@@ -593,7 +593,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("native simhash64 is bit-identical to the interpreted HOF chain") {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, sf)
     val both = docs.select(
         col("doc_id"),

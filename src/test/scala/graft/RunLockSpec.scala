@@ -28,13 +28,13 @@ class RunLockSpec extends AnyFunSuite {
   test("SPARK_GRAFT_SHUFFLE=auto sizes partitions from input bytes, " +
       "clamped to [cores, 2048]") {
     // the contract scale resolves to the core count (figure unchanged)
-    assert(Bench.shufflePartitionsFor("/root/testdata/sf0.1", 32) == 32)
+    assert(Session.shufflePartitionsFor("/root/testdata/sf0.1", 32) == 32)
     val d = java.nio.file.Files.createTempDirectory("shuf_auto").toFile
-    assert(Bench.shufflePartitionsFor(d.toString, 4) == 4) // empty → cores
+    assert(Session.shufflePartitionsFor(d.toString, 4) == 4) // empty → cores
     // a sparse 2 GiB input at 128 MB/partition → 16 (scales with bytes)
     val raf = new java.io.RandomAccessFile(new java.io.File(d, "big.bin"), "rw")
     try raf.setLength(2L * 1024 * 1024 * 1024) finally raf.close()
-    assert(Bench.shufflePartitionsFor(d.toString, 4) == 16)
-    assert(Bench.shufflePartitionsFor(d.toString, 32) == 32) // cores floor
+    assert(Session.shufflePartitionsFor(d.toString, 4) == 16)
+    assert(Session.shufflePartitionsFor(d.toString, 32) == 32) // cores floor
   }
 }

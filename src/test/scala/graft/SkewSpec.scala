@@ -66,7 +66,6 @@ class SkewSpec extends SparkSpec {
   }
 
   test("vector_dot is callable from SQL after registration") {
-    graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT vector_dot(array(cast(1.0 as float), cast(2.0 as float)), " +
         "array(cast(3.0 as float), cast(4.0 as float))) AS d")

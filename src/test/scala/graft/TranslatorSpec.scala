@@ -168,6 +168,22 @@ class TranslatorSpec extends SparkSpec {
     spark.read.parquet(s"$dir/users_batch").createOrReplaceTempView("users_batch")
   }
 
+  test("users_batch_copy over an empty users_batch fills it like the hand-built job") {
+    dir
+    // ClickHouse's max over no rows is the column default 0, so the
+    // first copy takes every event; a NULL watermark would take none
+    val full = spark.read.parquet(s"$dir/users_batch")
+    full.where("false").createOrReplaceTempView("users_batch")
+    try {
+      val translated = runPipe("users/pg", "users_batch_copy")
+      val fresh = Files.createTempDirectory("graftb0").toString + "/users_batch"
+      UsersPipes.usersBatchCopy(spark, dir, fresh)
+      val handBuilt = spark.read.parquet(fresh)
+      assert(handBuilt.count() > 0)
+      assertSame(translated, handBuilt)
+    } finally full.createOrReplaceTempView("users_batch")
+  }
+
   // keep last: rebinds the users_raw / users_latest__final views to the
   // MySQL-dialect log (DateTime timestamps, __value, no __deleted)
   test("mysql dialect: users_mv and users_api translate and match") {

@@ -35,7 +35,6 @@ object VectorExprProps extends Properties("VectorExpr") {
       val n = math.min(a0.length, b0.length)
       val (a, b) = (a0.take(n), b0.take(n))
       import spark.implicits._
-      graft.functions.GraftFunctions.register(spark)
       val r = Seq((a, b)).toDF("a", "b")
         .select(call_function("vector_dot", col("a"), col("b")).as("native"),
           hofDot(col("a"), col("b")).as("hof"))
@@ -49,7 +48,6 @@ object VectorExprProps extends Properties("VectorExpr") {
       val (a, b) = (a0.take(n), b0.take(n))
       val sub = math.max(n / 8, 1)
       import spark.implicits._
-      graft.functions.GraftFunctions.register(spark)
       val r = Seq((a, b)).toDF("a", "b")
         .select(
           call_function("subspace_dist", col("a"), col("b"),

@@ -3,9 +3,8 @@
 # shuffle spill exceeds the box's disk (the round-11 sf100 sweep died
 # at 84% disk on spill no single query needed). Runs Bench in K
 # segments (SPARK_GRAFT_BENCH_SEGMENT=i/K), one JVM per segment, with
-# scratch cleanup between; each segment emits its own JSON (own
-# calibration). Merge totals by addition; normalize each segment by
-# ITS calibration.
+# scratch cleanup between; each segment emits its own JSON. Merge totals
+# by addition.
 #
 # Round-14 (verdict #1): the sweep shipped rows describing DELETED
 # plans in BOTH r12 and r13 (code changed mid-sweep; a segment's sbt
@@ -38,11 +37,9 @@ fi
 for i in $(seq 1 "$K"); do
   # dead spill dirs from the previous segment's JVM
   rm -rf /tmp/blockmgr-* /tmp/spark-* 2>/dev/null
-  rm -f  /root/repo/target/graft-run.lock
   echo "=== segment $i/$K ($(date -u +%H:%M:%S), sha: $SHA, disk: $(df -h / | awk 'NR==2{print $5}')) ==="
   SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-100g}" \
   SPARK_GRAFT_SF_DIR="$SF_DIR" \
-  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
   SPARK_GRAFT_SHUFFLE="${SPARK_GRAFT_SHUFFLE:-auto}" \
   SPARK_GRAFT_JAVA_OPTS="${SPARK_GRAFT_JAVA_OPTS:--Dspark.io.compression.codec=zstd}" \
   SPARK_GRAFT_BENCH_SEGMENT="$i/$K" \
@@ -84,41 +81,15 @@ if sha != head:
         sys.exit(f"FATAL: source changed between segment sha {sha} and "
                  f"HEAD {head} — re-run the stale segments:\n{drift.stdout}")
 queries = {}
-per_codec = {}
 for s in segs:
     queries.update(s["queries"])
-    per_codec.update(s.get("queries_per_cal_codec", {}))
 total = sum(s["value"] for s in segs)
-norm = sum(s["value"] / s["calibration"] for s in segs)
 merged = {
     "metric": "total", "value": round(total, 2), "unit": "sec",
     "sha": sha,
     "segments": [{"segment": s.get("segment"), "value": s["value"],
                   "sha": s.get("sha"),
-                  "calibration": s["calibration"],
-                  "cal_probes": s.get("cal_probes"),
-                  "cal_end": s.get("cal_end"),
-                  "cal_codec": s.get("cal_codec"),
                   "n_errors": s["n_errors"]} for s in segs],
-    # the drift BAND every cross-round per-query ratio must be read
-    # through: min/max over all probes (opening triple + closing) of
-    # every segment — ratios inside the band are noise, not signal
-    "cal_band": [round(min(min(s.get("cal_probes", [s["calibration"]]) +
-                               [s.get("cal_end", s["calibration"])])
-                          for s in segs), 2),
-                 round(max(max(s.get("cal_probes", [s["calibration"]]) +
-                               [s.get("cal_end", s["calibration"])])
-                          for s in segs), 2)],
-    # codec-throughput band: codec-bound rows (audio/video/image
-    # features) are adjudicated through THIS, not the shuffle probe
-    "cal_codec_band": [round(min(s.get("cal_codec", 0) for s in segs), 3),
-                       round(max(s.get("cal_codec", 0) for s in segs), 3)],
-    "sum_value_per_calibration": round(norm, 2),
-    # codec-bound rows normalized by the segment's OWN cal_codec
-    # (computed in Bench, merged here): the machine-readable figure a
-    # cross-round audio/video delta is judged by — raw-second swings
-    # that normalize flat are host steal, not a plan change
-    "queries_per_cal_codec": dict(sorted(per_codec.items())),
     "n_queries": sum(s["n_queries"] for s in segs),
     "n_errors": sum(s["n_errors"] for s in segs),
     "errors": sum((s["errors"] for s in segs), []),
