@@ -123,12 +123,4 @@ object ChFunctions {
     val factor = math.pow(10, decimals)
     floor(c * factor + 0.5) / factor
   }
-
-  /** `numbers(n)`-style series generator joined to a start timestamp:
-    * flights_missed_pct_minute.pipe:52-56. Produces one row per step in
-    * [start, end] inclusive at `stepMinutes` granularity, as column `series_ts`.
-    * sequence() runs on the driver-declared literal range when start/end are
-    * literals, or per-row otherwise; explode is codegen'd. */
-  def timeSeries(start: Column, end: Column, stepMinutes: Int): Column =
-    explode(sequence(start, end, expr(s"INTERVAL $stepMinutes MINUTES")))
 }

@@ -4,6 +4,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.net.InetSocketAddress
 import graft.operators.{ArtifactManifest, TextDedup}
+import graft.sql.{ChSqlTranslator, PipeRunner}
 
 /** The reference's read-API surface (`GET /v0/pipes` list +
   * `GET /v0/pipes/{name}.json` with `Authorization: Bearer <token>`,
@@ -11,7 +12,7 @@ import graft.operators.{ArtifactManifest, TextDedup}
   * call) as a thin serving adapter over the engine.
   *
   * Scope discipline: SURVEY §1.1 keeps serving OUT of the engine — the
-  * engine's contract is [[Endpoints.toJsonPayload]] (the payload
+  * engine's contract is [[Endpoints.renderJson]] (the payload
   * document) and the query registry. This adapter adds ONLY transport
   * and auth on top of that contract, uses nothing beyond the JDK's
   * built-in HTTP server, and owns no query logic: any deployment that
@@ -31,47 +32,38 @@ final class ApiServer(spark: SparkSession, sfDir: String,
                       rowLimit: Int = 10000,
                       datasourceDirs: Map[String, String] = Map.empty) {
 
-  /** Parameterized pipes route through [[ParamEndpoints]]; everything
-    * registered routes through the plain query registry (rejecting
-    * params — a typo'd threshold must not silently return defaults). */
-  private val parameterized: Map[String, (SparkSession, String, Map[String, String]) => DataFrame] = Map(
-    "docs_near_dup_pairs" -> (ParamEndpoints.docsNearDupPairs _),
-    "docs_minhash_lsh_pairs" -> (ParamEndpoints.docsMinhashLshPairs _),
-    "emb_near_dup_pairs" -> (ParamEndpoints.embNearDupPairs _),
-    "emb_knn_ivf" -> (ParamEndpoints.embKnnIvf _),
-    "events_in_window" -> (ParamEndpoints.eventsInWindow _),
-    "docs_bm25_search" -> (ParamEndpoints.docsBm25Search _),
-    "ref_flights_missed_pct_minute" -> (ParamEndpoints.refFlightsMissedPctMinute _),
-    "user_window_features" -> (ParamEndpoints.userWindowFeatures _),
-    "docs_bm25_rerank" -> (ParamEndpoints.docsBm25Rerank _))
+  /** The built-in pipes: every registered query, with no params, and
+    * the [[ParamEndpoints]] pipes in place of their registry entries. */
+  private val builtIn: Map[String, ApiServer.Pipe] =
+    graft.SparkEntry.queries.map { case (name, q) =>
+      name -> ApiServer.Pipe(Set.empty, clientShaped = false, _ => q(spark, sfDir))
+    } ++ ParamEndpoints.pipes(spark, sfDir)
 
-  /** Control-plane state (`POST /v0/datafiles` — tb_functions.py's
-    * create_datasource/create_pipe at modules/tb_functions.py:225-252):
-    * pipes provisioned at runtime as parsed NODE sequences, their TOKEN
-    * grants, and parsed datasource definitions. */
-  @volatile private var dynamicPipes = Map.empty[String, Seq[graft.sql.PipeRunner.Node]]
-  @volatile private var dynamicTokens = Map.empty[String, Set[String]]
+  /** Every servable pipe by name: the built-ins plus the pipes pushed to
+    * `POST /v0/datafiles` (tb_functions.py's create_pipe at
+    * modules/tb_functions.py:225-252). The one answer to "which pipes
+    * exist" — listing, fetch, token scopes and the push-time shadow
+    * check all read it. */
+  @volatile private var pipes: Map[String, ApiServer.Pipe] = builtIn
   @volatile private var datasources = Map.empty[String, KitParser.DatasourceDef]
-  // token lifecycle (tb_functions.py:321-354): constructor tokens are
-  // revocable too — deletion lands here rather than mutating the
-  // caller's map, and authorized() checks it before any grant applies
+  // token lifecycle (tb_functions.py:321-354). The constructor grants
+  // are a copy the revocation removes names from: a revoked
+  // constructor name never regains its original grants, so a later
+  // re-creation is exactly its POSTed scope. Pushed pipes' TOKEN grants
+  // and created tokens live apart, since a pipe's rotation and deletion
+  // strip only the grants pushes minted.
+  @volatile private var constructorTokens = tokens
+  @volatile private var dynamicTokens = Map.empty[String, Set[String]]
+  // revoked names a datafile push must not bring back
   @volatile private var revokedTokens = Set.empty[String]
-  // once a constructor name is revoked its ORIGINAL grants are dead
-  // forever: re-creation must yield exactly the POSTed scope, never a
-  // union with the constructor entry (that union would silently hand a
-  // narrowly re-scoped credential its old workspace-admin grant back —
-  // a revocation bypass). Entries here permanently mask the
-  // constructor map in liveTokens; dynamicTokens alone defines the
-  // re-created credential.
-  @volatile private var supersededTokens = Set.empty[String]
   // reads stay lock-free on the volatiles; every read-modify-write goes
   // through this lock — two concurrent POSTs on the request pool would
   // otherwise each publish snapshot+own-entry and silently drop the
   // other's pipe/token/datasource (lost update, not last-write-wins)
   private val stateLock = new Object
 
-  private def pipeNames: Seq[String] =
-    (graft.SparkEntry.queries.keys ++ dynamicPipes.keys).toSeq.sorted
+  /** The pipe served under `name`, if any. */
+  private[graft] def pipe(name: String): Option[ApiServer.Pipe] = pipes.get(name)
 
   // without an executor the JDK server handles requests on its
   // dispatch thread — one slow query would serialize every client.
@@ -120,12 +112,12 @@ final class ApiServer(spark: SparkSession, sfDir: String,
       // message, and an NPE inside a handler would abandon the
       // exchange with no response at all (client hangs to EOF)
       case e: IllegalArgumentException =>
-        respond(ex, 400, s"""{"error":${Endpoints.q(String.valueOf(e.getMessage))}}""")
+        fail(ex, 400, String.valueOf(e.getMessage))
       case e: Throwable =>
         // generic body: raw internal messages leak paths/plan fragments
         // to any authenticated client; the detail goes to the server log
         System.err.println(s"[api] 500 on ${ex.getRequestURI}: $e")
-        respond(ex, 500, """{"error":"internal error"}""")
+        fail(ex, 500, "internal error")
     }
 
   /** Scope the AnalysisException→400 mapping to where it belongs:
@@ -147,55 +139,34 @@ final class ApiServer(spark: SparkSession, sfDir: String,
       // the read API is GET-only (tb_functions.py uses requests.get
       // for every pipe read; DELETE/POST address the control plane,
       // which is out of engine scope)
-      respond(ex, 405, """{"error":"read API is GET-only"}""")
-    } else {
+      fail(ex, 405, "read API is GET-only")
+    } else withGrants(ex) { grants =>
       val path = ex.getRequestURI.getPath
-      authorized(ex) match {
-        case None => respond(ex, 401, """{"error":"invalid or missing token"}""")
-        case Some(grants) if path == "/v0/pipes" || path == "/v0/pipes/" =>
-          val visible = pipeNames.filter(p => grants("*") || grants(p))
-          val items = visible.map(n =>
-            s"""{"name":"$n","type":"endpoint"}""").mkString("[", ",", "]")
-          respond(ex, 200, s"""{"pipes":$items}""")
-        case Some(grants) =>
-          // format suffix selects the rendering, like the reference API
-          // (.json envelope, .csv, .ndjson; bare name defaults to json)
-          val tail = path.stripPrefix("/v0/pipes/")
-          val (name, format) = tail.lastIndexOf('.') match {
-            case i if i > 0 && Set("json", "csv", "ndjson")(tail.substring(i + 1)) =>
-              (tail.take(i), tail.substring(i + 1))
-            case _ => (tail, "json")
-          }
-          // snapshot ONCE: a concurrent DELETE /v0/datafiles between a
-          // contains() check and a later lookup would turn the race
-          // into a 500 instead of this request just seeing one side
-          val dynNodes = dynamicPipes.get(name)
-          if (!graft.SparkEntry.queries.contains(name) && dynNodes.isEmpty)
-            respond(ex, 404, s"""{"error":"pipe not found: $name"}""")
-          else if (!(grants("*") || grants(name)))
-            respond(ex, 403, s"""{"error":"token lacks READ on $name"}""")
-          else {
+      if (path == "/v0/pipes" || path == "/v0/pipes/") {
+        val visible = pipes.keys.toSeq.sorted.filter(p => grants("*") || grants(p))
+        val items = visible.map(n =>
+          s"""{"name":"$n","type":"endpoint"}""").mkString("[", ",", "]")
+        respond(ex, 200, s"""{"pipes":$items}""")
+      } else {
+        // format suffix selects the rendering, like the reference API
+        // (.json envelope, .csv, .ndjson; bare name defaults to json)
+        val tail = path.stripPrefix("/v0/pipes/")
+        val (name, format) = tail.lastIndexOf('.') match {
+          case i if i > 0 && Set("json", "csv", "ndjson")(tail.substring(i + 1)) =>
+            (tail.take(i), tail.substring(i + 1))
+          case _ => (tail, "json")
+        }
+        // looked up ONCE: a concurrent DELETE /v0/datafiles between a
+        // contains() check and a later lookup would turn the race into
+        // a 500 instead of this request just seeing one side
+        pipe(name) match {
+          case None => fail(ex, 404, s"pipe not found: $name")
+          case Some(_) if !(grants("*") || grants(name)) =>
+            fail(ex, 403, s"token lacks READ on $name")
+          case Some(p) =>
             val params = queryParams(ex)
-            // client-shaped = the SQL or its params came from the
-            // request (pushed pipe, template params): analysis errors
-            // there are 400s. A bare registry query with no params has
-            // NO client-controlled analysis surface — its failures are
-            // server defects and stay logged 500s (render runs inside
-            // the wrap because Spark raises most analysis errors at
-            // action time, not at DataFrame construction).
-            val clientShaped =
-              parameterized.contains(name) || dynNodes.isDefined
             def render(): (Endpoints.Rendered, String) = {
-              val df = parameterized.get(name) match {
-                case Some(f) => f(spark, sfDir, params)
-                case None => dynNodes match {
-                  case Some(nodes) => runDynamic(name, nodes, params)
-                  case None =>
-                    require(params.isEmpty,
-                      s"pipe $name takes no parameters: ${params.keys.mkString(", ")}")
-                    graft.SparkEntry.queries(name)(spark, sfDir)
-                }
-              }
+              val df = p.run(params)
               format match {
                 case "csv" => (Endpoints.renderCsv(df, rowLimit), "text/csv")
                 case "ndjson" =>
@@ -203,14 +174,17 @@ final class ApiServer(spark: SparkSession, sfDir: String,
                 case _ => (Endpoints.renderJson(df, rowLimit), "application/json")
               }
             }
-            val rendered = if (clientShaped) clientSql(render()) else render()
+            // render runs inside the wrap because Spark raises most
+            // analysis errors at action time, not at DataFrame
+            // construction
+            val rendered = if (p.clientShaped) clientSql(render()) else render()
             // envelope-less formats signal a clipped result via header
             // (the .json envelope carries rows_before_limit_at_least)
             if (rendered._1.overflow)
               ex.getResponseHeaders.set("X-Rows-Before-Limit-At-Least",
                 String.valueOf(rowLimit + 1))
             respond(ex, 200, rendered._1.body, rendered._2)
-          }
+        }
       }
     }
   }
@@ -225,117 +199,117 @@ final class ApiServer(spark: SparkSession, sfDir: String,
     * first fetch), its TOKEN declarations become live bearer grants, and
     * it serves immediately at `/v0/pipes/{name}` in every format. */
   private def handleDatafiles(ex: HttpExchange): Unit = guarded(ex) {
-      authorized(ex) match {
-        case None => respond(ex, 401, """{"error":"invalid or missing token"}""")
-        case Some(grants) if !grants("*") =>
-          respond(ex, 403, """{"error":"datafiles require a workspace admin token"}""")
-        case Some(_) =>
-          val path = ex.getRequestURI.getPath
-          ex.getRequestMethod match {
-            case "GET" =>
-              val items =
-                (dynamicPipes.keys.map(n => s"""{"name":${Endpoints.q(n + ".pipe")}}""") ++
-                  datasources.keys.map(n => s"""{"name":${Endpoints.q(n + ".datasource")}}"""))
-                  .toSeq.sorted.mkString("[", ",", "]")
-              respond(ex, 200, s"""{"datafiles":$items}""")
-            case "POST" =>
-              val fileName = queryParams(ex).getOrElse("name",
-                throw new IllegalArgumentException("missing ?name=<file>.pipe|.datasource"))
-              val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
-              if (fileName.endsWith(".pipe")) {
-                val pipeName = fileName.stripSuffix(".pipe")
-                // a name like `*` would make its TOKEN declarations
-                // workspace-admin grants (the `grants("*")` check), and
-                // dots collide with the format-suffix parser
-                require(pipeName.matches("[A-Za-z0-9_]+"),
-                  s"invalid pipe name (want [A-Za-z0-9_]+): $pipeName")
-                val nodes = graft.sql.PipeRunner.parse(body)
-                require(nodes.nonEmpty, s"no SQL nodes in $fileName")
-                require(!graft.SparkEntry.queries.contains(pipeName),
-                  s"$pipeName shadows a built-in pipe")
-                // analyze now: a pipe that doesn't resolve must 400 at
-                // push time, not surprise the first dashboard fetch.
-                // Required template params get type-shaped placeholders
-                // (a pipe with a bare {{DateTime(start)}} is legal — the
-                // param arrives with the fetch); the no-params pass then
-                // covers the {% else %} branches, tolerating only the
-                // unbound-param error that a required-param pipe raises
-                // by construction.
-                val tmpl = graft.sql.ChSqlTranslator.templateParams(
-                  nodes.map(_.sql).mkString("\n"))
-                val placeholders = tmpl.map { case (p, t) =>
-                  p -> ApiServer.placeholderFor(t) }
-                clientSql(
-                  graft.sql.PipeRunner.runNodes(servingSession(), nodes, placeholders))
-                if (placeholders.nonEmpty)
-                  try clientSql(graft.sql.PipeRunner.runNodes(servingSession(), nodes))
-                  catch {
-                    case e: IllegalArgumentException
-                      if String.valueOf(e.getMessage)
-                        .startsWith("unbound template param") => ()
-                  }
-                val declared = ApiServer.tokensFromPipes(Seq(pipeName -> body))
-                // a REVOKED name stays dead on a datafile push: locally
-                // the token NAME is the secret, so re-enabling the
-                // exact revoked string as a push side effect would
-                // resurrect a leaked credential (the reference is safe
-                // here only because re-provisioning mints a new
-                // server-side secret). Re-issuing a revoked name takes
-                // an explicit POST /v0/tokens; the push response names
-                // what it skipped so the operator sees the gap.
-                val (toks, skippedRevoked) = stateLock.synchronized {
-                  val (dead, live) =
-                    declared.partition { case (n, _) => revokedTokens(n) }
-                  dynamicPipes += pipeName -> nodes
-                  // overwriting an existing name is a ROTATION: grants
-                  // minted by the PREVIOUS version die with it (the
-                  // same invariant DELETE enforces) — a TOKEN line
-                  // removed in v2 must not keep reading v2 via v1's
-                  // grant (supersededTokens keeps any old constructor
-                  // grants masked).
-                  val rotated = dynamicTokens.flatMap { case (t, g) =>
-                    val g2 = g - pipeName
-                    if (g2.isEmpty) None else Some(t -> g2)
-                  }
-                  dynamicTokens = merge(rotated, live)
-                  (live, dead.keys.toSeq.sorted)
-                }
-                respond(ex, 200, s"""{"name":${Endpoints.q(pipeName)},"type":"pipe","nodes":${nodes.length},"tokens":${toks.keys.toSeq.sorted.map(Endpoints.q).mkString("[", ",", "]")},"skipped_revoked_tokens":${skippedRevoked.map(Endpoints.q).mkString("[", ",", "]")}}""")
-              } else if (fileName.endsWith(".datasource")) {
-                val dsName = fileName.stripSuffix(".datasource")
-                require(dsName.matches("[A-Za-z0-9_]+"),
-                  s"invalid datasource name (want [A-Za-z0-9_]+): $dsName")
-                val ds = KitParser.parseDatasource(dsName, body)
-                stateLock.synchronized { datasources += dsName -> ds }
-                val cols = ds.columns.map(c =>
-                  s"""{"name":${Endpoints.q(c.name)},"type":${Endpoints.q(c.dataType.simpleString)}}""")
-                  .mkString("[", ",", "]")
-                respond(ex, 200, s"""{"name":${Endpoints.q(dsName)},"type":"datasource","columns":$cols}""")
-              } else throw new IllegalArgumentException(
-                s"unsupported datafile (want .pipe or .datasource): $fileName")
-            case "DELETE" =>
-              val fileName = path.stripPrefix("/v0/datafiles/")
-              val (pipeName, dsName) =
-                (fileName.stripSuffix(".pipe"), fileName.stripSuffix(".datasource"))
-              if (dynamicPipes.contains(pipeName)) {
-                stateLock.synchronized {
-                  dynamicPipes -= pipeName
-                  // grants die with the pipe: a token it minted must not
-                  // survive deletion and silently read a LATER pipe
-                  // provisioned under the same name
-                  dynamicTokens = dynamicTokens.flatMap { case (t, g) =>
-                    val g2 = g - pipeName
-                    if (g2.isEmpty) None else Some(t -> g2)
-                  }
-                }
-                respond(ex, 200, s"""{"deleted":${Endpoints.q(pipeName)}}""")
-              } else if (datasources.contains(dsName)) {
-                stateLock.synchronized { datasources -= dsName }
-                respond(ex, 200, s"""{"deleted":${Endpoints.q(dsName)}}""")
-              } else respond(ex, 404, s"""{"error":"datafile not found: $fileName"}""")
-            case _ => respond(ex, 405, """{"error":"datafiles support GET/POST/DELETE"}""")
-          }
+    adminOnly(ex, "datafiles require a workspace admin token") {
+      val path = ex.getRequestURI.getPath
+      ex.getRequestMethod match {
+        case "GET" =>
+          val items =
+            ((pipes.keySet -- builtIn.keySet)
+              .map(n => s"""{"name":${Endpoints.q(n + ".pipe")}}""") ++
+              datasources.keys.map(n => s"""{"name":${Endpoints.q(n + ".datasource")}}"""))
+              .toSeq.sorted.mkString("[", ",", "]")
+          respond(ex, 200, s"""{"datafiles":$items}""")
+        case "POST" =>
+          val fileName = queryParams(ex).getOrElse("name",
+            throw new IllegalArgumentException("missing ?name=<file>.pipe|.datasource"))
+          val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
+          if (fileName.endsWith(".pipe")) {
+            val pipeName = fileName.stripSuffix(".pipe")
+            // a name like `*` would make its TOKEN declarations
+            // workspace-admin grants (the `grants("*")` check), and
+            // dots collide with the format-suffix parser
+            require(pipeName.matches("[A-Za-z0-9_]+"),
+              s"invalid pipe name (want [A-Za-z0-9_]+): $pipeName")
+            val nodes = PipeRunner.parse(body)
+            require(nodes.nonEmpty, s"no SQL nodes in $fileName")
+            require(!builtIn.contains(pipeName),
+              s"$pipeName shadows a built-in pipe")
+            // analyze now: a pipe that doesn't resolve must 400 at
+            // push time, not surprise the first dashboard fetch.
+            // Required template params get type-shaped placeholders
+            // (a pipe with a bare {{DateTime(start)}} is legal — the
+            // param arrives with the fetch); the no-params pass then
+            // covers the {% else %} branches, tolerating only the
+            // unbound-param error that a required-param pipe raises
+            // by construction.
+            val sql = nodes.map(_.sql).mkString("\n")
+            val placeholders = ChSqlTranslator.templateParams(sql).map {
+              case (p, t) => p -> ApiServer.placeholderFor(t) }
+            clientSql(PipeRunner.runNodes(servingSession(), nodes, placeholders))
+            if (placeholders.nonEmpty)
+              try clientSql(PipeRunner.runNodes(servingSession(), nodes))
+              catch {
+                case e: IllegalArgumentException
+                  if String.valueOf(e.getMessage)
+                    .startsWith("unbound template param") => ()
+              }
+            // the translator ignores keys a pipe does not declare, so
+            // without the params check in Pipe.run a typo'd param
+            // would silently take the `{% else %}` branch with a 200
+            val pushed = ApiServer.Pipe(ChSqlTranslator.declaredParams(sql),
+              clientShaped = true,
+              params => PipeRunner.runNodes(servingSession(), nodes, params))
+            val declared = ApiServer.tokensFromPipes(Seq(pipeName -> body))
+            // a REVOKED name stays dead on a datafile push: locally
+            // the token NAME is the secret, so re-enabling the
+            // exact revoked string as a push side effect would
+            // resurrect a leaked credential (the reference is safe
+            // here only because re-provisioning mints a new
+            // server-side secret). Re-issuing a revoked name takes
+            // an explicit POST /v0/tokens; the push response names
+            // what it skipped so the operator sees the gap.
+            val (toks, skippedRevoked) = stateLock.synchronized {
+              val (dead, live) =
+                declared.partition { case (n, _) => revokedTokens(n) }
+              pipes += pipeName -> pushed
+              // overwriting an existing name is a ROTATION: grants
+              // minted by the PREVIOUS version die with it (the
+              // same invariant DELETE enforces) — a TOKEN line
+              // removed in v2 must not keep reading v2 via v1's
+              // grant.
+              val rotated = dynamicTokens.flatMap { case (t, g) =>
+                val g2 = g - pipeName
+                if (g2.isEmpty) None else Some(t -> g2)
+              }
+              dynamicTokens = merge(rotated, live)
+              (live, dead.keys.toSeq.sorted)
+            }
+            respond(ex, 200, s"""{"name":${Endpoints.q(pipeName)},"type":"pipe","nodes":${nodes.length},"tokens":${toks.keys.toSeq.sorted.map(Endpoints.q).mkString("[", ",", "]")},"skipped_revoked_tokens":${skippedRevoked.map(Endpoints.q).mkString("[", ",", "]")}}""")
+          } else if (fileName.endsWith(".datasource")) {
+            val dsName = fileName.stripSuffix(".datasource")
+            require(dsName.matches("[A-Za-z0-9_]+"),
+              s"invalid datasource name (want [A-Za-z0-9_]+): $dsName")
+            val ds = KitParser.parseDatasource(dsName, body)
+            stateLock.synchronized { datasources += dsName -> ds }
+            val cols = ds.columns.map(c =>
+              s"""{"name":${Endpoints.q(c.name)},"type":${Endpoints.q(c.dataType.simpleString)}}""")
+              .mkString("[", ",", "]")
+            respond(ex, 200, s"""{"name":${Endpoints.q(dsName)},"type":"datasource","columns":$cols}""")
+          } else throw new IllegalArgumentException(
+            s"unsupported datafile (want .pipe or .datasource): $fileName")
+        case "DELETE" =>
+          val fileName = path.stripPrefix("/v0/datafiles/")
+          val (pipeName, dsName) =
+            (fileName.stripSuffix(".pipe"), fileName.stripSuffix(".datasource"))
+          if (pipes.contains(pipeName) && !builtIn.contains(pipeName)) {
+            stateLock.synchronized {
+              pipes -= pipeName
+              // grants die with the pipe: a token it minted must not
+              // survive deletion and silently read a LATER pipe
+              // provisioned under the same name
+              dynamicTokens = dynamicTokens.flatMap { case (t, g) =>
+                val g2 = g - pipeName
+                if (g2.isEmpty) None else Some(t -> g2)
+              }
+            }
+            respond(ex, 200, s"""{"deleted":${Endpoints.q(pipeName)}}""")
+          } else if (datasources.contains(dsName)) {
+            stateLock.synchronized { datasources -= dsName }
+            respond(ex, 200, s"""{"deleted":${Endpoints.q(dsName)}}""")
+          } else fail(ex, 404, s"datafile not found: $fileName")
+        case _ => fail(ex, 405, "datafiles support GET/POST/DELETE")
       }
+    }
   }
 
   /** Token lifecycle (tb_functions.py:321-354 — tokens_list GET /tokens,
@@ -345,62 +319,57 @@ final class ApiServer(spark: SparkSession, sfDir: String,
     * bearer credential (the reference provisions secret values
     * server-side); grants are pipe names, `*` = workspace admin. */
   private def handleTokens(ex: HttpExchange): Unit = guarded(ex) {
-      authorized(ex) match {
-        case None => respond(ex, 401, """{"error":"invalid or missing token"}""")
-        case Some(grants) if !grants("*") =>
-          respond(ex, 403, """{"error":"token management requires a workspace admin token"}""")
-        case Some(_) =>
-          ex.getRequestMethod match {
-            case "GET" =>
-              val items = liveTokens.toSeq.sortBy(_._1).map { case (t, g) =>
-                s"""{"name":${Endpoints.q(t)},"grants":${g.toSeq.sorted.map(Endpoints.q).mkString("[", ",", "]")}}"""
-              }.mkString("[", ",", "]")
-              respond(ex, 200, s"""{"tokens":$items}""")
-            case "POST" =>
-              val params = queryParams(ex)
-              val name = params.getOrElse("name",
-                throw new IllegalArgumentException("missing ?name=<token>"))
-              require(name.matches("[A-Za-z0-9_]+"),
-                s"invalid token name (want [A-Za-z0-9_]+): $name")
-              val scope = params.getOrElse("pipes",
-                throw new IllegalArgumentException(
-                  "missing ?pipes=<pipe,pipe,...> (or pipes=* for admin)"))
-              val granted = scope.split(",").filter(_.nonEmpty).toSet
-              require(granted.nonEmpty, "empty pipes scope")
-              granted.filterNot(_ == "*").foreach(p =>
-                require(graft.SparkEntry.queries.contains(p) || dynamicPipes.contains(p),
-                  s"unknown pipe in scope: $p"))
-              stateLock.synchronized {
-                require(!liveTokens.contains(name), s"token already exists: $name")
-                // re-creation after revocation is a NEW credential
-                revokedTokens -= name
-                dynamicTokens = merge(dynamicTokens, Map(name -> granted))
-              }
-              respond(ex, 200,
-                s"""{"name":${Endpoints.q(name)},"grants":${granted.toSeq.sorted.map(Endpoints.q).mkString("[", ",", "]")}}""")
-            case "DELETE" =>
-              val name = ex.getRequestURI.getPath.stripPrefix("/v0/tokens/")
-              val known = stateLock.synchronized {
-                if (liveTokens.contains(name)) {
-                  // deleting the FINAL `*` token would permanently lock
-                  // the control plane (creation itself is admin-gated,
-                  // so there is no recovery short of restart); the
-                  // reference similarly protects the workspace admin
-                  require(
-                    !(liveTokens(name)("*") &&
-                      liveTokens.count(_._2("*")) == 1),
-                    s"cannot delete the last workspace admin token: $name")
-                  revokedTokens += name
-                  dynamicTokens -= name
-                  supersededTokens += name
-                  true
-                } else false
-              }
-              if (known) respond(ex, 200, s"""{"deleted":${Endpoints.q(name)}}""")
-              else respond(ex, 404, s"""{"error":"token not found: $name"}""")
-            case _ => respond(ex, 405, """{"error":"tokens support GET/POST/DELETE"}""")
+    adminOnly(ex, "token management requires a workspace admin token") {
+      ex.getRequestMethod match {
+        case "GET" =>
+          val items = liveTokens.toSeq.sortBy(_._1).map { case (t, g) =>
+            s"""{"name":${Endpoints.q(t)},"grants":${g.toSeq.sorted.map(Endpoints.q).mkString("[", ",", "]")}}"""
+          }.mkString("[", ",", "]")
+          respond(ex, 200, s"""{"tokens":$items}""")
+        case "POST" =>
+          val params = queryParams(ex)
+          val name = params.getOrElse("name",
+            throw new IllegalArgumentException("missing ?name=<token>"))
+          require(name.matches("[A-Za-z0-9_]+"),
+            s"invalid token name (want [A-Za-z0-9_]+): $name")
+          val scope = params.getOrElse("pipes",
+            throw new IllegalArgumentException(
+              "missing ?pipes=<pipe,pipe,...> (or pipes=* for admin)"))
+          val granted = scope.split(",").filter(_.nonEmpty).toSet
+          require(granted.nonEmpty, "empty pipes scope")
+          granted.filterNot(_ == "*").foreach(p =>
+            require(pipes.contains(p), s"unknown pipe in scope: $p"))
+          stateLock.synchronized {
+            require(!liveTokens.contains(name), s"token already exists: $name")
+            // re-creation after revocation is a NEW credential
+            revokedTokens -= name
+            dynamicTokens = merge(dynamicTokens, Map(name -> granted))
           }
+          respond(ex, 200,
+            s"""{"name":${Endpoints.q(name)},"grants":${granted.toSeq.sorted.map(Endpoints.q).mkString("[", ",", "]")}}""")
+        case "DELETE" =>
+          val name = ex.getRequestURI.getPath.stripPrefix("/v0/tokens/")
+          val known = stateLock.synchronized {
+            if (liveTokens.contains(name)) {
+              // deleting the FINAL `*` token would permanently lock
+              // the control plane (creation itself is admin-gated,
+              // so there is no recovery short of restart); the
+              // reference similarly protects the workspace admin
+              require(
+                !(liveTokens(name)("*") &&
+                  liveTokens.count(_._2("*")) == 1),
+                s"cannot delete the last workspace admin token: $name")
+              revokedTokens += name
+              constructorTokens -= name
+              dynamicTokens -= name
+              true
+            } else false
+          }
+          if (known) respond(ex, 200, s"""{"deleted":${Endpoints.q(name)}}""")
+          else fail(ex, 404, s"token not found: $name")
+        case _ => fail(ex, 405, "tokens support GET/POST/DELETE")
       }
+    }
   }
 
   /** Quarantine/datasource ops surface (tb_functions.py:137-155:
@@ -411,64 +380,57 @@ final class ApiServer(spark: SparkSession, sfDir: String,
     * backing parquet rows, POST /{name}/truncate empties it. Admin-
     * gated like the reference's usage (always the workspace key). */
   private def handleDatasources(ex: HttpExchange): Unit = guarded(ex) {
-      authorized(ex) match {
-        case None => respond(ex, 401, """{"error":"invalid or missing token"}""")
-        case Some(grants) if !grants("*") =>
-          respond(ex, 403, """{"error":"datasource ops require a workspace admin token"}""")
-        case Some(_) =>
-          val tail = ex.getRequestURI.getPath.stripPrefix("/v0/datasources")
-            .stripPrefix("/")
-          (ex.getRequestMethod, tail) match {
-            case ("GET", "") =>
-              // dir-backed datasources serve rows and truncate; POSTed
-              // definitions are schema-only until backed by data — the
-              // listing says which is which so a client never 404s on a
-              // name the server itself just listed without warning
-              val names =
-                (datasourceDirs.keys ++ datasources.keys).toSeq.distinct.sorted
-              val items = names.map { n =>
-                val backed = datasourceDirs.contains(n)
-                s"""{"name":${Endpoints.q(n)},"readable":$backed,"kind":${
-                  Endpoints.q(if (backed) "data" else "definition")}}"""
-              }.mkString("[", ",", "]")
-              respond(ex, 200, s"""{"datasources":$items}""")
-            case ("GET", name) if !name.contains("/") =>
-              datasourceDirs.get(name) match {
-                case None if datasources.contains(name) =>
-                  respond(ex, 404,
-                    s"""{"error":"datasource $name is a definition with no data backing"}""")
-                case None => respond(ex, 404, s"""{"error":"datasource not found: $name"}""")
-                case Some(dir) =>
-                  val d = new java.io.File(dir)
-                  // listFiles is null if a concurrent truncate removes
-                  // the dir between isDirectory and the listing
-                  val hasData = d.isDirectory &&
-                    Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
-                      .exists(_.getName.endsWith(".parquet"))
-                  if (!hasData)
-                    // an empty/truncated quarantine is 0 rows, not an error
-                    respond(ex, 200, """{"meta":[],"data":[],"rows":0}""")
-                  else
-                    respond(ex, 200,
-                      Endpoints.renderJson(spark.read.parquet(dir), rowLimit).body)
-              }
-            case ("POST", t) if t.endsWith("/truncate") =>
-              val name = t.stripSuffix("/truncate")
-              datasourceDirs.get(name) match {
-                case None if datasources.contains(name) =>
-                  respond(ex, 404,
-                    s"""{"error":"datasource $name is a definition with no data backing"}""")
-                case None => respond(ex, 404, s"""{"error":"datasource not found: $name"}""")
-                case Some(dir) =>
-                  val d = new java.io.File(dir)
-                  if (d.exists()) Layout.deleteRec(d)
-                  d.mkdirs()
-                  respond(ex, 200, s"""{"truncated":${Endpoints.q(name)}}""")
-              }
-            case _ => respond(ex, 405,
-              """{"error":"datasources support GET and POST {name}/truncate"}""")
+    adminOnly(ex, "datasource ops require a workspace admin token") {
+      val tail = ex.getRequestURI.getPath.stripPrefix("/v0/datasources")
+        .stripPrefix("/")
+      (ex.getRequestMethod, tail) match {
+        case ("GET", "") =>
+          // dir-backed datasources serve rows and truncate; POSTed
+          // definitions are schema-only until backed by data — the
+          // listing says which is which so a client never 404s on a
+          // name the server itself just listed without warning
+          val names =
+            (datasourceDirs.keys ++ datasources.keys).toSeq.distinct.sorted
+          val items = names.map { n =>
+            val backed = datasourceDirs.contains(n)
+            s"""{"name":${Endpoints.q(n)},"readable":$backed,"kind":${
+              Endpoints.q(if (backed) "data" else "definition")}}"""
+          }.mkString("[", ",", "]")
+          respond(ex, 200, s"""{"datasources":$items}""")
+        case ("GET", name) if !name.contains("/") =>
+          datasourceDirs.get(name) match {
+            case None if datasources.contains(name) =>
+              fail(ex, 404, s"datasource $name is a definition with no data backing")
+            case None => fail(ex, 404, s"datasource not found: $name")
+            case Some(dir) =>
+              val d = new java.io.File(dir)
+              // listFiles is null if a concurrent truncate removes
+              // the dir between isDirectory and the listing
+              val hasData = d.isDirectory &&
+                Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
+                  .exists(_.getName.endsWith(".parquet"))
+              if (!hasData)
+                // an empty/truncated quarantine is 0 rows, not an error
+                respond(ex, 200, """{"meta":[],"data":[],"rows":0}""")
+              else
+                respond(ex, 200,
+                  Endpoints.renderJson(spark.read.parquet(dir), rowLimit).body)
           }
+        case ("POST", t) if t.endsWith("/truncate") =>
+          val name = t.stripSuffix("/truncate")
+          datasourceDirs.get(name) match {
+            case None if datasources.contains(name) =>
+              fail(ex, 404, s"datasource $name is a definition with no data backing")
+            case None => fail(ex, 404, s"datasource not found: $name")
+            case Some(dir) =>
+              val d = new java.io.File(dir)
+              if (d.exists()) Layout.deleteRec(d)
+              d.mkdirs()
+              respond(ex, 200, s"""{"truncated":${Endpoints.q(name)}}""")
+          }
+        case _ => fail(ex, 405, "datasources support GET and POST {name}/truncate")
       }
+    }
   }
 
   /** Maintenance observability — the resource-status surface next to
@@ -505,63 +467,37 @@ final class ApiServer(spark: SparkSession, sfDir: String,
     }
     val tail = ex.getRequestURI.getPath.stripPrefix("/v0/dedup_artifacts")
       .stripPrefix("/")
-    authorized(ex) match {
-      case None => respond(ex, 401, """{"error":"invalid or missing token"}""")
-      case Some(_) if ex.getRequestMethod == "GET" && tail.isEmpty =>
-        respond(ex, 200, statusJson)
+    (ex.getRequestMethod, tail) match {
+      case ("GET", "") => withGrants(ex)(_ => respond(ex, 200, statusJson))
       // maintenance ACTUATORS — provisioning-over-HTTP like the
       // reference's push/truncate surfaces (tb_functions.py:225-252),
       // so an operator brings artifacts current or bounds read
       // amplification without touching the JVM. Mutating → workspace
       // admin only (same gate as datasource truncate).
-      case Some(grants) if ex.getRequestMethod == "POST" &&
-          (tail == "update" || tail == "compact") =>
-        if (!grants("*"))
-          respond(ex, 403,
-            """{"error":"dedup maintenance requires a workspace admin token"}""")
-        else if (tail == "update") {
-          val (mj, df) = params(ArtifactManifest.read(art))
-          val mode = graft.operators.DedupMaintenance.update(
-            spark, sfDir, art, mj, df)
-          respond(ex, 200,
-            s"""{"action":"update","mode":${Endpoints.q(mode)},""" +
-              statusJson.stripPrefix("{"))
-        } else {
-          graft.operators.DedupMaintenance.compact(spark, art)
-          respond(ex, 200,
-            s"""{"action":"compact",""" + statusJson.stripPrefix("{"))
+      case ("POST", action @ ("update" | "compact")) =>
+        adminOnly(ex, "dedup maintenance requires a workspace admin token") {
+          if (action == "update") {
+            val (mj, df) = params(ArtifactManifest.read(art))
+            val mode = graft.operators.DedupMaintenance.update(
+              spark, sfDir, art, mj, df)
+            respond(ex, 200,
+              s"""{"action":"update","mode":${Endpoints.q(mode)},""" +
+                statusJson.stripPrefix("{"))
+          } else {
+            graft.operators.DedupMaintenance.compact(spark, art)
+            respond(ex, 200,
+              s"""{"action":"compact",""" + statusJson.stripPrefix("{"))
+          }
         }
-      case Some(_) => respond(ex, 405,
-        """{"error":"dedup_artifacts supports GET and POST update|compact"}""")
+      case _ => withGrants(ex)(_ =>
+        fail(ex, 405, "dedup_artifacts supports GET and POST update|compact"))
     }
   }
 
-  /** Every live (non-revoked) token → grants. Constructor entries whose
-    * name was ever revoked are masked (supersededTokens): a later
-    * re-creation is a NEW credential with only its POSTed scope. */
+  /** Every live token → grants: the constructor tokens not revoked,
+    * merged with the pushed pipes' TOKEN grants and created tokens. */
   private def liveTokens: Map[String, Set[String]] =
-    (merge(tokens -- supersededTokens, dynamicTokens) -- revokedTokens)
-
-  /** Execute a provisioned pipe: a FRESH child session per request (own
-    * temp-view namespace — concurrent pipes with colliding node names
-    * cannot cross-talk; shares the SparkContext, so no startup cost)
-    * with the serving views registered. Request params are validated
-    * against the pipe's declared template params FIRST — the
-    * translator ignores extra keys, so without this a typo'd param
-    * would silently take the `{% else %}` default branch with a 200
-    * (exactly the failure the registry path's no-params require
-    * guards against). */
-  private def runDynamic(name: String, nodes: Seq[graft.sql.PipeRunner.Node],
-                         params: Map[String, String]): DataFrame = {
-    val declared = graft.sql.ChSqlTranslator.declaredParams(
-      nodes.map(_.sql).mkString("\n"))
-    val unknown = params.keySet -- declared
-    require(unknown.isEmpty,
-      s"pipe $name does not take: ${unknown.toSeq.sorted.mkString(", ")}" +
-        (if (declared.isEmpty) ""
-         else s" (declared params: ${declared.toSeq.sorted.mkString(", ")})"))
-    graft.sql.PipeRunner.runNodes(servingSession(), nodes, params)
-  }
+    merge(constructorTokens, dynamicTokens)
 
   /** The serving views, analyzed ONCE and published as global temp
     * views (visible to every child session): the harness star schema
@@ -626,6 +562,19 @@ final class ApiServer(spark: SparkSession, sfDir: String,
       .map(_.stripPrefix("Bearer "))
       .flatMap(liveTokens.get)
 
+  /** Runs `body` with the bearer token's grants; 401 without a live
+    * token. */
+  private def withGrants(ex: HttpExchange)(body: Set[String] => Unit): Unit =
+    authorized(ex) match {
+      case None => fail(ex, 401, "invalid or missing token")
+      case Some(grants) => body(grants)
+    }
+
+  /** The control-plane gate: 401 without a live token, 403 with
+    * `denial` when the token lacks the workspace-admin `*` grant. */
+  private def adminOnly(ex: HttpExchange, denial: String)(body: => Unit): Unit =
+    withGrants(ex)(grants => if (grants("*")) body else fail(ex, 403, denial))
+
   private def queryParams(ex: HttpExchange): Map[String, String] =
     Option(ex.getRequestURI.getRawQuery).map {
       _.split("&").filter(_.nonEmpty).map { kv =>
@@ -635,6 +584,10 @@ final class ApiServer(spark: SparkSession, sfDir: String,
           java.net.URLDecoder.decode(kv.drop(i + 1), "UTF-8")
       }.toMap
     }.getOrElse(Map.empty)
+
+  /** An error response; `msg` may echo client text, so it is escaped. */
+  private def fail(ex: HttpExchange, code: Int, msg: String): Unit =
+    respond(ex, code, s"""{"error":${Endpoints.q(msg)}}""")
 
   private def respond(ex: HttpExchange, code: Int, body: String,
                       contentType: String = "application/json"): Unit = {
@@ -656,6 +609,24 @@ object ApiServer {
   private val TokenRe = """TOKEN\s+"([^"]+)"\s+READ""".r
 
   private val tagCounter = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** A servable pipe: the request params it declares, whether its SQL or
+    * params come from the client (analysis errors are then the client's
+    * 400, not a logged 500), and how to build its DataFrame. */
+  final case class Pipe(params: Set[String], clientShaped: Boolean,
+                        build: Map[String, String] => DataFrame) {
+    /** Checks `request` against the declared params, then builds. A key
+      * the pipe does not declare is an error, never ignored: a typo'd
+      * threshold must not silently return the default answer. */
+    def run(request: Map[String, String]): DataFrame = {
+      val unknown = request.keySet -- params
+      require(unknown.isEmpty,
+        s"unknown params: ${unknown.toSeq.sorted.mkString(", ")}" +
+          (if (params.isEmpty) " (the pipe takes none)"
+           else s" (declared params: ${params.toSeq.sorted.mkString(", ")})"))
+      build(request)
+    }
+  }
 
   /** How long `stop()` lets in-flight requests finish, per wait. */
   private val DrainSeconds = 30

@@ -55,9 +55,6 @@ object Endpoints {
       rows.length, overflow)
   }
 
-  def toJsonPayload(df: DataFrame, limit: Int = 10000): String =
-    renderJson(df, limit).body
-
   /** NDJSON rendering (`GET /v0/pipes/{name}.ndjson`): one JSON object
     * per line, no envelope — the streaming-consumer format. Zero rows
     * render as an EMPTY body, not a blank line (strict line-per-object
@@ -68,9 +65,6 @@ object Endpoints {
     Rendered(if (rows.isEmpty) "" else rows.mkString("", "\n", "\n"),
       rows.length, probed.length > limit)
   }
-
-  def toNdjson(df: DataFrame, limit: Int = 10000): String =
-    renderNdjson(df, limit).body
 
   /** CSV rendering (`GET /v0/pipes/{name}.csv`): header row + RFC-4180
     * quoting (quote when the value holds comma/quote/newline).
@@ -101,9 +95,6 @@ object Endpoints {
     Rendered((header +: rows).mkString("", "\n", "\n"),
       rows.length, probed.length > limit)
   }
-
-  def toCsv(df: DataFrame, limit: Int = 10000): String =
-    renderCsv(df, limit).body
 
   private[sources] def q(s: String): String =
     "\"" + s.flatMap {

@@ -1206,8 +1206,8 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("endpoint JSON payload has the reference shape") {
-    val payload = sources.Endpoints.toJsonPayload(
-      pipes.TpchPipes.q1PricingSummary(spark, sf), limit = 3)
+    val payload = sources.Endpoints.renderJson(
+      pipes.TpchPipes.q1PricingSummary(spark, sf), limit = 3).body
     assert(payload.startsWith("""{"meta":[{"name":"l_returnflag","type":"string"}"""))
     assert(payload.contains(""""data":[{"""))
     assert(payload.contains(""""rows":3"""))

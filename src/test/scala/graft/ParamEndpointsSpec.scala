@@ -1,26 +1,25 @@
 package graft
 
 import graft.sources.ParamEndpoints
-import graft.operators.TextDedup
 
 /** §2.10 parameterized endpoints over the dedup/ANN surface: string
   * params in (the HTTP query-param shape), typed thresholds out,
   * defaults when absent, fail-fast on typos. */
 class ParamEndpointsSpec extends SparkSpec {
 
+  private def fetch(name: String, params: Map[String, String]) =
+    ParamEndpoints.pipes(spark, sf)(name).run(params)
+
   test("empty params reproduce the registered endpoint exactly") {
-    val viaParams = ParamEndpoints
-      .docsNearDupPairs(spark, sf, Map.empty).collect()
-    val registered = TextDedup.nearDupPairs(spark, sf).collect()
+    val viaParams = fetch("docs_near_dup_pairs", Map.empty).collect()
+    val registered = SparkEntry.queries("docs_near_dup_pairs")(spark, sf).collect()
     assert(viaParams.toSeq == registered.toSeq)
   }
 
   test("min_jaccard tightens the pair set monotonically") {
-    val loose = ParamEndpoints
-      .docsNearDupPairs(spark, sf, Map("min_jaccard" -> "0.5"))
+    val loose = fetch("docs_near_dup_pairs", Map("min_jaccard" -> "0.5"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val tight = ParamEndpoints
-      .docsNearDupPairs(spark, sf, Map("min_jaccard" -> "0.8"))
+    val tight = fetch("docs_near_dup_pairs", Map("min_jaccard" -> "0.8"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(tight.subsetOf(loose), "raising the threshold must only drop pairs")
     assert(tight == loose.filter(_._3 >= 0.8),
@@ -28,41 +27,38 @@ class ParamEndpointsSpec extends SparkSpec {
   }
 
   test("knn k param bounds the per-query neighbor count") {
-    val rows = ParamEndpoints
-      .embKnnIvf(spark, sf, Map("k" -> "2", "n_queries" -> "5"))
+    val rows = fetch("emb_knn_ivf", Map("k" -> "2", "n_queries" -> "5"))
       .groupBy("query_id").count().collect()
     assert(rows.length == 5)
     assert(rows.forall(_.getLong(1) <= 2))
   }
 
   test("DateTime params bound the events window like the reference template") {
-    import graft.sources.ParamEndpoints
-    val all = ParamEndpoints.eventsInWindow(spark, sf, Map.empty).collect()
+    val all = fetch("events_in_window", Map.empty).collect()
     assert(all.nonEmpty)
     // pin [start, end] to exactly the default window's first day: the
     // result must be that single day's row
     val firstDay = all.head.getAs[java.time.LocalDateTime]("day")
     val start = firstDay.toLocalDate.toString + " 00:00:00"
     val end = firstDay.toLocalDate.toString + " 23:59:59"
-    val one = ParamEndpoints.eventsInWindow(spark, sf,
-      Map("start" -> start, "end" -> end)).collect()
+    val one = fetch("events_in_window", Map("start" -> start, "end" -> end)).collect()
     assert(one.length == 1 && one.head.getAs[java.time.LocalDateTime]("day") == firstDay)
     intercept[IllegalArgumentException] {
-      ParamEndpoints.eventsInWindow(spark, sf, Map("start" -> "not-a-time"))
+      fetch("events_in_window", Map("start" -> "not-a-time"))
     }
   }
 
   test("unknown and malformed params fail fast, not silently") {
     intercept[IllegalArgumentException] {
-      ParamEndpoints.docsNearDupPairs(spark, sf, Map("min_jacard" -> "0.6"))
+      fetch("docs_near_dup_pairs", Map("min_jacard" -> "0.6"))
     }
     intercept[IllegalArgumentException] {
-      ParamEndpoints.docsNearDupPairs(spark, sf, Map("min_jaccard" -> "high"))
+      fetch("docs_near_dup_pairs", Map("min_jaccard" -> "high"))
     }
   }
 
   test("asof param: default matches the registered features; a pinned snapshot is point-in-time") {
-    val default = ParamEndpoints.userWindowFeatures(spark, sf, Map.empty)
+    val default = fetch("user_window_features", Map.empty)
       .collect().map(_.toString).toSeq
     val registered = pipes.CdcPipes.userWindowFeatures(spark, sf)
       .collect().map(_.toString).toSeq
@@ -76,7 +72,7 @@ class ParamEndpointsSpec extends SparkSpec {
     val (lo, hi) = (ts.getAs[java.time.LocalDateTime](0),
       ts.getAs[java.time.LocalDateTime](1))
     val mid = lo.plusSeconds(java.time.Duration.between(lo, hi).getSeconds / 2)
-    val pinned = ParamEndpoints.userWindowFeatures(spark, sf,
+    val pinned = fetch("user_window_features",
       Map("asof" -> (mid.toLocalDate.toString + " 00:00:00"))).collect()
     assert(pinned.nonEmpty)
     val cut = java.time.LocalDateTime.parse(mid.toLocalDate.toString + "T00:00:00")
@@ -85,22 +81,20 @@ class ParamEndpointsSpec extends SparkSpec {
       pinned.map(_.toString).toSeq != registered,
       "a midpoint snapshot must not serve the full-corpus features")
     intercept[IllegalArgumentException] {
-      ParamEndpoints.userWindowFeatures(spark, sf, Map("asof" -> "not-a-time"))
+      fetch("user_window_features", Map("asof" -> "not-a-time"))
     }
   }
 
   test("BM25 q/k params: k caps rows, q retunes the match set, blank q rejected") {
-    val top3 = ParamEndpoints.docsBm25Search(spark, sf,
-      Map("q" -> "vector", "k" -> "3")).collect()
+    val top3 = fetch("docs_bm25_search", Map("q" -> "vector", "k" -> "3")).collect()
     assert(top3.length <= 3 && top3.nonEmpty)
-    val other = ParamEndpoints.docsBm25Search(spark, sf,
-      Map("q" -> "customer table", "k" -> "3")).collect()
+    val other = fetch("docs_bm25_search", Map("q" -> "customer table", "k" -> "3")).collect()
     assert(other.nonEmpty)
     intercept[IllegalArgumentException] {
-      ParamEndpoints.docsBm25Search(spark, sf, Map("q" -> "  "))
+      fetch("docs_bm25_search", Map("q" -> "  "))
     }
     intercept[IllegalArgumentException] {
-      ParamEndpoints.docsBm25Search(spark, sf, Map("kk" -> "3"))
+      fetch("docs_bm25_search", Map("kk" -> "3"))
     }
   }
 }
