@@ -4,6 +4,7 @@ import java.time.LocalDateTime
 import scala.collection.mutable
 import scala.util.Random
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types._
 
 /** Deterministic CDC fixture generator — the behavioral port of the
   * reference's workload generators (demo_users.py:64-150 weighted
@@ -174,7 +175,52 @@ object CdcFixtures {
       baggage.toMap, clock)
   }
 
-  /** Write the four CDC logs as parquet under `dir` (users_raw with the
+  private def fields(cols: (String, DataType)*): StructType =
+    StructType(cols.map { case (n, t) => StructField(n, t) })
+
+  private val ts = TimestampNTZType
+
+  /** The declared schema of every fixture table, by directory name:
+    * the five logs [[writeAll]] writes and the `users_batch` snapshot
+    * [[graft.pipes.UsersPipes.usersBatchCopy]] appends. Readers go
+    * through [[read]], so no read runs a footer-inference job;
+    * `DeclaredSchemaSpec` pins each declaration to the footers its
+    * writer produces. */
+  val schemas: Map[String, StructType] = Map(
+    "users_raw" -> fields("id" -> IntegerType, "name" -> StringType,
+      "email" -> StringType, "address" -> StringType, "phone_number" -> StringType,
+      "email_verified" -> IntegerType, "onboarded" -> IntegerType,
+      "deleted" -> IntegerType, "lang" -> StringType, "created_at" -> LongType,
+      "updated_at" -> LongType, "__timestamp" -> ts, "__deleted" -> StringType),
+    "users_raw_mysql" -> fields("__value" -> StringType, "id" -> IntegerType,
+      "name" -> StringType, "email" -> StringType, "address" -> StringType,
+      "phone_number" -> StringType, "email_verified" -> IntegerType,
+      "onboarded" -> IntegerType, "deleted" -> IntegerType, "lang" -> StringType,
+      "created_at" -> ts, "updated_at" -> ts, "__timestamp" -> ts),
+    "flights_raw" -> fields("id" -> IntegerType, "flight_number" -> StringType,
+      "passenger_count" -> IntegerType, "status" -> StringType, "closed_at" -> ts,
+      "boarding_at" -> ts, "boarded_at" -> ts, "departed_at" -> ts,
+      "created_at" -> ts, "updated_at" -> ts, "__timestamp" -> ts),
+    "passengers_raw" -> fields("id" -> IntegerType, "name" -> StringType,
+      "flight_id" -> IntegerType, "status" -> StringType, "checkedin_at" -> ts,
+      "onboarded_at" -> ts, "notboarded_at" -> ts, "created_at" -> ts,
+      "updated_at" -> ts, "__timestamp" -> ts),
+    "baggage_raw" -> fields("id" -> IntegerType, "passenger_id" -> IntegerType,
+      "flight_id" -> IntegerType, "weight" -> DoubleType, "status" -> StringType,
+      "created_at" -> ts, "updated_at" -> ts, "__timestamp" -> ts),
+    "users_batch" -> fields("id" -> IntegerType, "name" -> StringType,
+      "email" -> StringType, "address" -> StringType, "phone_number" -> StringType,
+      "email_verified" -> IntegerType, "onboarded" -> IntegerType,
+      "deleted" -> IntegerType, "event_timestamp" -> ts, "lang" -> StringType,
+      "created_at" -> ts, "updated_at_unix" -> LongType,
+      "batch_max_updated" -> LongType))
+
+  /** Read fixture table `table` from its directory `path` with its
+    * declared schema. */
+  def read(spark: SparkSession, table: String, path: String): DataFrame =
+    spark.read.schema(schemas(table)).parquet(path)
+
+  /** Write the five CDC logs as parquet under `dir` (users_raw with the
     * PG unix-µs dialect; airport tables with DATETIME columns). */
   def writeAll(spark: SparkSession, g: Generated, dir: String): Unit = {
     import spark.implicits._

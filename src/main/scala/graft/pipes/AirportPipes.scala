@@ -4,6 +4,7 @@ import java.time.LocalDateTime
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.ChFunctions._
+import graft.fixtures.CdcFixtures
 import graft.operators.Dedup
 
 /** The reference's airport kit (MySQL dialect), pipe-for-pipe, over CDC
@@ -13,10 +14,14 @@ import graft.operators.Dedup
   * defaults (flights_missed_pct_minute.pipe:31-32).
   *
   * No driver-side data: the `now()` anchor is a 1-row broadcast frame
-  * cross-joined into the plan (same pattern as CdcPipes), so a
-  * registered endpoint builds ONE job with no `.first()`/`.collect()`
-  * round-trips — at 100 TB an eager scalar collect would serialize an
-  * extra full-scan job per endpoint call.
+  * cross-joined into the plan (same pattern as CdcPipes), and the logs
+  * are read with their declared schemas ([[CdcFixtures.read]]), so
+  * building an endpoint starts no Spark job — no `.first()`/`.collect()`
+  * round-trip and no footer inference; at 100 TB an eager scalar
+  * collect would serialize an extra full-scan job per call. Rendering
+  * runs one job per query stage: 2-12 per endpoint, 12 for
+  * [[activeVsMissedFlights]] (7 shuffle stages, 4 broadcasts, 1
+  * result).
   *
   * Rounding: the reference pipes use ClickHouse `round()`; the engine
   * canonicalizes every fractional metric to deterministic half-up
@@ -27,7 +32,7 @@ import graft.operators.Dedup
 object AirportPipes {
 
   private def raw(spark: SparkSession, dir: String, t: String): DataFrame =
-    spark.read.parquet(s"$dir/$t")
+    CdcFixtures.read(spark, t, s"$dir/$t")
 
   /** The `now()` anchor as a 1-row broadcast frame (column `__now`):
     * either the injected asOf literal or max(__timestamp) of the flight

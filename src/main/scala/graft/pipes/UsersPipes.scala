@@ -3,6 +3,7 @@ package graft.pipes
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.ChFunctions._
+import graft.fixtures.CdcFixtures
 import graft.operators.Dedup
 
 /** The reference's `users` kit (PG dialect), pipe-for-pipe, on a CDC log
@@ -16,7 +17,7 @@ object UsersPipes {
 
   /** users_raw MergeTree scan (kits/users/pg/datasources/users_raw.datasource). */
   def usersRaw(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/users_raw")
+    CdcFixtures.read(spark, "users_raw", s"$dir/users_raw")
 
   /** users_mv.pipe:4-17 — the materialized projection into users_latest:
     * coalesce defaults, µs decode, CHAR(2) lang, event_timestamp meta. */
@@ -62,7 +63,8 @@ object UsersPipes {
 
   /** users_api.pipe (mysql): SELECT * FROM users_latest FINAL ORDER BY id. */
   def usersApiMysql(spark: SparkSession, dir: String): DataFrame = {
-    val mv = usersMvMysql(spark.read.parquet(s"$dir/users_raw_mysql"))
+    val mv = usersMvMysql(
+      CdcFixtures.read(spark, "users_raw_mysql", s"$dir/users_raw_mysql"))
     Dedup.latestByKey(mv, Seq("id"), col("updated_at"),
         payload = mv.columns.filter(_ != "id").toSeq)
       .select("id", "name", "email", "address", "phone_number",
@@ -117,7 +119,7 @@ object UsersPipes {
       new java.io.File(batchDir).listFiles().exists(_.getName.endsWith(".parquet"))
     val lastBatchTs: Long =
       if (!exists) 0L
-      else spark.read.parquet(batchDir)
+      else CdcFixtures.read(spark, "users_batch", batchDir)
         // coalesce: an empty batch table yields a null max, not an NPE
         .agg(coalesce(max(col("batch_max_updated")), lit(0L))).first().getLong(0)
 
@@ -146,7 +148,7 @@ object UsersPipes {
       newEvents
     } else {
       // backfill_last_batch (:36-42) — prior batch rows not superseded
-      val prior = spark.read.parquet(batchDir)
+      val prior = CdcFixtures.read(spark, "users_batch", batchDir)
         .filter(col("batch_max_updated") === lastBatchTs)
         .join(newEvents.select("id"), Seq("id"), "left_anti")
       // produce_new_batch (:50-54)
@@ -168,7 +170,7 @@ object UsersPipes {
     * write, not a query). */
   def usersApiBatch(spark: SparkSession, dir: String, batchDir: String): DataFrame = {
     val raw = usersRaw(spark, dir)
-    val batchTbl = spark.read.parquet(batchDir)
+    val batchTbl = CdcFixtures.read(spark, "users_batch", batchDir)
     val wmF = broadcast(batchTbl
       .agg(coalesce(max(col("batch_max_updated")), lit(0L)).as("__wm")))
 

@@ -520,10 +520,9 @@ final class ApiServer(spark: SparkSession, sfDir: String,
       yield reg(t, spark.read.parquet(s"$sfDir/$t.parquet"))
     val ev = reg("events", graft.Tables.events(spark, sfDir))
     val fx = graft.SparkEntry.fixtureDir(spark)
-    val raw = for (t <- Seq("flights_raw", "passengers_raw",
-        "baggage_raw", "users_raw"))
-      yield reg(t, spark.read.parquet(s"$fx/$t"))
-    val batch = reg("users_batch", spark.read.parquet(s"$fx/users_batch"))
+    val fixture = for (t <- Seq("flights_raw", "passengers_raw",
+        "baggage_raw", "users_raw", "users_batch"))
+      yield reg(t, graft.fixtures.CdcFixtures.read(spark, t, s"$fx/$t"))
     val mv = graft.pipes.UsersPipes.usersMv(
       graft.pipes.UsersPipes.usersRaw(spark, fx))
     val fin = reg("users_latest__final",
@@ -534,7 +533,7 @@ final class ApiServer(spark: SparkSession, sfDir: String,
           "email_verified", "onboarded", "deleted", "event_timestamp",
           "lang", "created_at", "updated_at"))
     viewsBuilt = true
-    base ++ Seq(ev) ++ raw ++ Seq(batch, fin)
+    base ++ Seq(ev) ++ fixture :+ fin
   }
 
   /** A child session per request (own temp-view namespace — concurrent

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -41,6 +41,18 @@ object CdcStream {
     * swap `.format("kafka")` + from_json for a broker deployment. */
   def readEvents(spark: SparkSession, srcDir: String): DataFrame =
     spark.readStream.schema(eventSchema).parquet(srcDir)
+
+  /** The declared schema of the versioned log [[materializedView]]
+    * writes (the partitioned layout adds its `yyyymm` directory column).
+    * Readers of the log and of the copy snapshot read through it, so a
+    * read runs no footer-inference job. */
+  val logSchema: StructType = StructType(Seq(
+    StructField("event_id", LongType),
+    StructField("user_id", LongType),
+    StructField("ts", TimestampNTZType),
+    StructField("event_type", StringType),
+    StructField("value", DoubleType),
+    StructField("prop_k", IntegerType)))
 
   /** S4 — the materialized-view transform (users_mv.pipe:4-17 semantics):
     * per-column extraction + defaults, applied to every ingested block. */
@@ -618,10 +630,28 @@ object CdcStream {
   private val payload = Seq("event_id", "ts", "event_type", "value", "prop_k")
   private def version = struct(col("ts"), col("event_id"))
 
+  /** The declared schema of the copy snapshot [[runCopyJob]] writes:
+    * the FINAL row (key, then payload) stamped with its generation. */
+  val snapshotSchema: StructType =
+    StructType(("user_id" +: payload).map(logSchema(_)))
+      .add("generation", LongType)
+
+  /** Read a table this object writes through its declared schema. A
+    * table with no committed file yet — or no directory — reads as an
+    * empty frame with the declared columns, as FINAL over an empty
+    * datasource returns no rows. */
+  private def readDeclared(spark: SparkSession, schema: StructType,
+                           dir: String): DataFrame = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    if (path.getFileSystem(spark.sessionState.newHadoopConf()).exists(path))
+      spark.read.schema(schema).parquet(dir)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+  }
+
   /** D2 — FINAL read view over the materialized log (partitioned or
     * not — the yyyymm layout column is not part of the row payload). */
   def finalView(spark: SparkSession, logDir: String): DataFrame = {
-    val log = spark.read.parquet(logDir)
+    val log = readDeclared(spark, logSchema, logDir)
     val base = if (log.columns.contains("yyyymm")) log.drop("yyyymm") else log
     Dedup.latestByKey(base, Seq("user_id"), version, payload)
   }
@@ -631,7 +661,7 @@ object CdcStream {
     * keep unsuperseded prior rows, append the new snapshot generation.
     * Each generation is stamped so readers take max(generation). */
   def runCopyJob(spark: SparkSession, logDir: String, snapDir: String): Unit = {
-    val log = spark.read.parquet(logDir)
+    val log = readDeclared(spark, logSchema, logDir)
     val next = latestGeneration(spark, snapDir) match {
       case None =>
         Dedup.latestByKey(log, Seq("user_id"), version, payload)
@@ -648,26 +678,24 @@ object CdcStream {
     next.write.mode("append").parquet(snapDir)
   }
 
-  /** Read the current snapshot (latest generation); empty table → empty
-    * frame rather than an NPE on the null max. */
+  /** Read the current snapshot (latest generation); before the first
+    * copy job — no snapshot dir, or one with no row — an empty frame
+    * with the snapshot's columns. */
   def readSnapshot(spark: SparkSession, snapDir: String): DataFrame =
     latestGeneration(spark, snapDir).map(_._1)
-      .getOrElse(spark.read.parquet(snapDir).limit(0).drop("generation"))
+      .getOrElse(readDeclared(spark, snapshotSchema, snapDir).limit(0).drop("generation"))
 
   /** The snapshot's newest generation (rows without the `generation`
-    * column) and its number; None while the snapshot has no parquet
-    * file or no row — the copy job's bootstrap case. */
+    * column) and its number; None while the snapshot has no row — the
+    * copy job's bootstrap case. */
   private def latestGeneration(spark: SparkSession,
-                               snapDir: String): Option[(DataFrame, Long)] =
-    Option(new java.io.File(snapDir).listFiles)
-      .filter(_.exists(_.getName.endsWith(".parquet")))
-      .flatMap { _ =>
-        val snap = spark.read.parquet(snapDir)
-        val genRow = snap.agg(max(col("generation"))).first()
-        if (genRow.isNullAt(0)) None
-        else Some((snap.filter(col("generation") === genRow.getLong(0))
-          .drop("generation"), genRow.getLong(0)))
-      }
+                               snapDir: String): Option[(DataFrame, Long)] = {
+    val snap = readDeclared(spark, snapshotSchema, snapDir)
+    val genRow = snap.agg(max(col("generation"))).first()
+    if (genRow.isNullAt(0)) None
+    else Some((snap.filter(col("generation") === genRow.getLong(0))
+      .drop("generation"), genRow.getLong(0)))
+  }
 
   /** Run a [[Mergeable]] over the event stream into the partial log at
     * `dir`: each micro-batch's partial appends when it is
@@ -681,9 +709,10 @@ object CdcStream {
     }
 
   /** The `-Merge` read over a [[Mergeable]]'s partial log (the
-    * `batch=<id>` layout column is bookkeeping, not payload). */
+    * `batch=<id>` layout column is bookkeeping, not payload), read
+    * through the partial's schema. */
   def mergedView(spark: SparkSession, dir: String, m: Mergeable): DataFrame =
-    m.merge(spark.read.parquet(dir).drop("batch"))
+    m.merge(spark.read.schema(m.partialSchema(spark)).parquet(dir).drop("batch"))
 
   /** At-least-once delivery dedup in the stream itself:
     * dropDuplicatesWithinWatermark keeps state only for the watermark

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.operators.{Profile, Sketches}
 
 /** A mergeable partial-log spec: the streaming form of the reference's
@@ -38,7 +39,14 @@ import graft.operators.{Profile, Sketches}
   *                merging it once */
 final case class Mergeable(partial: DataFrame => DataFrame,
                            merge: DataFrame => DataFrame,
-                           duplicateIdempotent: Boolean)
+                           duplicateIdempotent: Boolean) {
+
+  /** The schema of the partial log: `partial` analysed over an empty
+    * event frame, so reading the log needs no footer-inference job. */
+  def partialSchema(spark: SparkSession): StructType =
+    partial(spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      CdcStream.eventSchema)).schema
+}
 
 object Mergeable {
 

@@ -79,6 +79,34 @@ class StreamingSpec extends SparkSpec {
     assert(snap == fin)
   }
 
+  test("before the first copy job, readSnapshot is empty with the snapshot's columns") {
+    val cols = Seq("user_id", "event_id", "ts", "event_type", "value", "prop_k")
+    def assertEmptyFinal(df: org.apache.spark.sql.DataFrame): Unit = {
+      assert(df.schema.map(f => f.name -> f.dataType) ==
+        CdcStream.snapshotSchema.filter(_.name != "generation")
+          .map(f => f.name -> f.dataType))
+      assert(df.columns.toSeq == cols)
+      assert(df.count() == 0)
+    }
+    // an empty snapshot dir, then one that does not exist
+    val emptySnap = tmp()
+    assertEmptyFinal(CdcStream.readSnapshot(spark, emptySnap))
+    assertEmptyFinal(CdcStream.readSnapshot(spark, tmp() + "/never_written"))
+  }
+
+  test("FINAL over a log with no committed file is empty, not an error") {
+    val emptySrc = tmp(); val logDir = tmp() + "/log"
+    // the MV stream over a source with no file yet commits nothing
+    CdcStream.startMv(spark, emptySrc, logDir, tmp() + "/ck").awaitTermination()
+    // and a log dir that exists but holds no file
+    for (dir <- Seq(logDir, tmp())) {
+      val fin = CdcStream.finalView(spark, dir)
+      assert(fin.columns.toSeq ==
+        Seq("user_id", "event_id", "ts", "event_type", "value", "prop_k"))
+      assert(fin.count() == 0)
+    }
+  }
+
   test("copy job: late event tying the watermark ts still supersedes (regression)") {
     import spark.implicits._
     val logDir = tmp() + "/log"; val snapDir = tmp() + "/snap"
