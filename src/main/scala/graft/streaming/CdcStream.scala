@@ -42,17 +42,23 @@ object CdcStream {
   def readEvents(spark: SparkSession, srcDir: String): DataFrame =
     spark.readStream.schema(eventSchema).parquet(srcDir)
 
-  /** The declared schema of the versioned log [[materializedView]]
-    * writes (the partitioned layout adds its `yyyymm` directory column).
-    * Readers of the log and of the copy snapshot read through it, so a
-    * read runs no footer-inference job. */
-  val logSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("user_id", LongType),
-    StructField("ts", TimestampNTZType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("prop_k", IntegerType)))
+  /** No CDC events, with the event schema: a transform analysed over
+    * it gives the schema of what the transform writes, and analysis
+    * starts no job. */
+  private[streaming] def noEvents(spark: SparkSession): DataFrame =
+    noRows(spark, eventSchema)
+
+  private def noRows(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
+  /** The schema of the versioned log [[materializedView]] writes (the
+    * partitioned layout adds its `yyyymm` directory column): the
+    * projection analysed over no events, so the projection stays the
+    * one place the log format is defined. Readers of the log and of the
+    * copy snapshot read through it, so a read runs no footer-inference
+    * job. */
+  def logSchema(spark: SparkSession): StructType =
+    materializedView(noEvents(spark)).schema
 
   /** S4 — the materialized-view transform (users_mv.pipe:4-17 semantics):
     * per-column extraction + defaults, applied to every ingested block. */
@@ -630,11 +636,12 @@ object CdcStream {
   private val payload = Seq("event_id", "ts", "event_type", "value", "prop_k")
   private def version = struct(col("ts"), col("event_id"))
 
-  /** The declared schema of the copy snapshot [[runCopyJob]] writes:
-    * the FINAL row (key, then payload) stamped with its generation. */
-  val snapshotSchema: StructType =
-    StructType(("user_id" +: payload).map(logSchema(_)))
-      .add("generation", LongType)
+  /** The schema of the copy snapshot [[runCopyJob]] writes: the FINAL
+    * row (key, then payload) of the log stamped with its generation. */
+  def snapshotSchema(spark: SparkSession): StructType = {
+    val log = logSchema(spark)
+    StructType(("user_id" +: payload).map(log(_))).add("generation", LongType)
+  }
 
   /** Read a table this object writes through its declared schema. A
     * table with no committed file yet — or no directory — reads as an
@@ -645,13 +652,13 @@ object CdcStream {
     val path = new org.apache.hadoop.fs.Path(dir)
     if (path.getFileSystem(spark.sessionState.newHadoopConf()).exists(path))
       spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else noRows(spark, schema)
   }
 
   /** D2 — FINAL read view over the materialized log (partitioned or
     * not — the yyyymm layout column is not part of the row payload). */
   def finalView(spark: SparkSession, logDir: String): DataFrame = {
-    val log = readDeclared(spark, logSchema, logDir)
+    val log = readDeclared(spark, logSchema(spark), logDir)
     val base = if (log.columns.contains("yyyymm")) log.drop("yyyymm") else log
     Dedup.latestByKey(base, Seq("user_id"), version, payload)
   }
@@ -661,7 +668,7 @@ object CdcStream {
     * keep unsuperseded prior rows, append the new snapshot generation.
     * Each generation is stamped so readers take max(generation). */
   def runCopyJob(spark: SparkSession, logDir: String, snapDir: String): Unit = {
-    val log = readDeclared(spark, logSchema, logDir)
+    val log = readDeclared(spark, logSchema(spark), logDir)
     val next = latestGeneration(spark, snapDir) match {
       case None =>
         Dedup.latestByKey(log, Seq("user_id"), version, payload)
@@ -683,14 +690,14 @@ object CdcStream {
     * with the snapshot's columns. */
   def readSnapshot(spark: SparkSession, snapDir: String): DataFrame =
     latestGeneration(spark, snapDir).map(_._1)
-      .getOrElse(readDeclared(spark, snapshotSchema, snapDir).limit(0).drop("generation"))
+      .getOrElse(readDeclared(spark, snapshotSchema(spark), snapDir).limit(0).drop("generation"))
 
   /** The snapshot's newest generation (rows without the `generation`
     * column) and its number; None while the snapshot has no row — the
     * copy job's bootstrap case. */
   private def latestGeneration(spark: SparkSession,
                                snapDir: String): Option[(DataFrame, Long)] = {
-    val snap = readDeclared(spark, snapshotSchema, snapDir)
+    val snap = readDeclared(spark, snapshotSchema(spark), snapDir)
     val genRow = snap.agg(max(col("generation"))).first()
     if (genRow.isNullAt(0)) None
     else Some((snap.filter(col("generation") === genRow.getLong(0))
@@ -712,7 +719,7 @@ object CdcStream {
     * `batch=<id>` layout column is bookkeeping, not payload), read
     * through the partial's schema. */
   def mergedView(spark: SparkSession, dir: String, m: Mergeable): DataFrame =
-    m.merge(spark.read.schema(m.partialSchema(spark)).parquet(dir).drop("batch"))
+    m.merge(readDeclared(spark, m.partialSchema(spark), dir).drop("batch"))
 
   /** At-least-once delivery dedup in the stream itself:
     * dropDuplicatesWithinWatermark keeps state only for the watermark

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -44,8 +44,7 @@ final case class Mergeable(partial: DataFrame => DataFrame,
   /** The schema of the partial log: `partial` analysed over an empty
     * event frame, so reading the log needs no footer-inference job. */
   def partialSchema(spark: SparkSession): StructType =
-    partial(spark.createDataFrame(java.util.Collections.emptyList[Row](),
-      CdcStream.eventSchema)).schema
+    partial(CdcStream.noEvents(spark)).schema
 }
 
 object Mergeable {

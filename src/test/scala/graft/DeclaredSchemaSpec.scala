@@ -79,12 +79,12 @@ class DeclaredSchemaSpec extends SparkSpec {
   }
 
   test("the MV log, plain and partitioned, and the copy snapshot match their declarations") {
-    assertDeclared("log", CdcStream.logSchema, plainLog)
-    assertDeclared("partitioned log", CdcStream.logSchema, partedLog, "yyyymm")
+    assertDeclared("log", CdcStream.logSchema(spark), plainLog)
+    assertDeclared("partitioned log", CdcStream.logSchema(spark), partedLog, "yyyymm")
     val snap = tmp() + "/snap"
     CdcStream.runCopyJob(spark, plainLog, snap)
     CdcStream.runCopyJob(spark, plainLog, snap)
-    assertDeclared("copy snapshot", CdcStream.snapshotSchema, snap)
+    assertDeclared("copy snapshot", CdcStream.snapshotSchema(spark), snap)
   }
 
   test("each Mergeable partial log matches the partial's analysed schema") {

@@ -83,7 +83,7 @@ class StreamingSpec extends SparkSpec {
     val cols = Seq("user_id", "event_id", "ts", "event_type", "value", "prop_k")
     def assertEmptyFinal(df: org.apache.spark.sql.DataFrame): Unit = {
       assert(df.schema.map(f => f.name -> f.dataType) ==
-        CdcStream.snapshotSchema.filter(_.name != "generation")
+        CdcStream.snapshotSchema(spark).filter(_.name != "generation")
           .map(f => f.name -> f.dataType))
       assert(df.columns.toSeq == cols)
       assert(df.count() == 0)
@@ -105,6 +105,10 @@ class StreamingSpec extends SparkSpec {
         Seq("user_id", "event_id", "ts", "event_type", "value", "prop_k"))
       assert(fin.count() == 0)
     }
+    // a partial log nothing has written to yet merges to no rows too
+    val merged = CdcStream.mergedView(spark, tmp() + "/never_written", Mergeable.summing)
+    assert(merged.columns.toSeq == Seq("hour", "event_type", "total_value", "n"))
+    assert(merged.count() == 0)
   }
 
   test("copy job: late event tying the watermark ts still supersedes (regression)") {

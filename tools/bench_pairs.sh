@@ -1,28 +1,30 @@
 #!/usr/bin/env bash
 # Paired benchmark runs of a change against its parent commit.
 #
-#   tools/bench_pairs.sh <parent-ref> <workload> <n> [first-seed]
+#   tools/bench_pairs.sh <parent-ref> <workload> <n>
 #
 # Clones HEAD and <parent-ref> of this repository into fresh temporary
 # directories, builds each side with its own CARGO_TARGET_DIR, and runs
 # `perfbench/run.py --workload <workload> --trace 0` <n> times on each
-# side. Pair i uses seed first-seed+i-1 (default first seed 1) on both
-# sides, and which side runs first alternates from pair to pair, so
-# drift over time does not favour one side. It prints each
-# run's summary line, then per metric the median and quartiles of each
-# side and every pair's delta in percent of the parent's value.
+# side for the `run_seconds` BENCHMARK.json sets. Pair i uses seed i on
+# both sides, and which side runs first alternates from pair to pair,
+# so drift over time does not favour one side. It prints each run's
+# summary line, then per metric the median and quartiles of each side
+# and every pair's delta in percent of the parent's value.
 #
-# Environment: SECONDS_PER_RUN (default 20) is passed as --seconds;
-# TRACE=1 runs traced instead; KEEP=<dir> keeps the per-run summary
-# lines there. Commit the change first: uncommitted edits are not cloned.
+# Environment: TRACE=1 runs traced instead; KEEP=<dir> keeps the
+# per-run summary lines there. Commit the change first: uncommitted
+# edits are not cloned.
 set -euo pipefail
 
 if [ $# -lt 3 ]; then
   sed -n '2,17p' "$0" | sed 's/^# \{0,1\}//'
   exit 2
 fi
-parent_ref=$1 workload=$2 n=$3 seed0=${4:-1}
+parent_ref=$1 workload=$2 n=$3
 repo=$(git rev-parse --show-toplevel)
+seconds=$(python3 -c 'import json, sys; print(json.load(open(sys.argv[1]))["run_seconds"])' \
+  "$repo/BENCHMARK.json")
 head_sha=$(git -C "$repo" rev-parse HEAD)
 parent_sha=$(git -C "$repo" rev-parse "$parent_ref^{commit}")
 work=$(mktemp -d "${TMPDIR:-/tmp}/bench_pairs.XXXXXX")
@@ -38,17 +40,16 @@ for side in parent change; do
 done
 echo "parent $parent_sha, change $head_sha, workload $workload, $n pairs" >&2
 
-run() { # side seed pair
+run() { # side pair (the pair's number is its seed)
   (cd "$work/$1" && CARGO_TARGET_DIR="$work/$1-build" python3 perfbench/run.py \
-    --workload "$workload" --seed "$2" --seconds "${SECONDS_PER_RUN:-20}" \
-    --trace "${TRACE:-0}") | tail -n 1 > "$out/$1-$3.json"
-  echo "pair $3 $1 seed $2: $(cat "$out/$1-$3.json")"
+    --workload "$workload" --seed "$2" --seconds "$seconds" \
+    --trace "${TRACE:-0}") | tail -n 1 > "$out/$1-$2.json"
+  echo "pair $2 $1: $(cat "$out/$1-$2.json")"
 }
 
 for i in $(seq 1 "$n"); do
-  seed=$((seed0 + i - 1))
   if [ $((i % 2)) -eq 1 ]; then order="parent change"; else order="change parent"; fi
-  for side in $order; do run "$side" "$seed" "$i"; done
+  for side in $order; do run "$side" "$i"; done
 done
 
 python3 - "$out" "$n" <<'EOF'
