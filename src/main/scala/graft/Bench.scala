@@ -1,15 +1,25 @@
 package graft
 import org.apache.spark.sql.SparkSession
+/** Timing sweep of the query registry:
+  * `runMain graft.Bench [<sfDir> [<query>...]]`. With no arguments it
+  * times every registered query over `SPARK_GRAFT_SF_DIR` (default
+  * `/root/testdata/sf0.1`); trailing query names restrict the sweep to
+  * those queries, for iterating on one query's cost. */
 object Bench {
   /** GC quiesce run BEFORE each timed query (outside the measured
     * window) so a heavy neighbor's allocation debt cannot land in the
-    * next query's figure. One definition for Bench AND BenchSome so
-    * the two benchmarks always measure under the same discipline. */
+    * next query's figure. */
   def quiesce(): Unit = { System.gc(); Thread.sleep(50) }
 
   def main(args: Array[String]): Unit = {
     RunLock.acquireOrDie("Bench")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = args.headOption.getOrElse(
+      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    val names = args.drop(1).toSet
+    // an unknown name must abort, not time a NoSuchElementException as
+    // a 0.00 s no-op (the round-6 silent-failure lesson)
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val spark = Session(sfDir)
     // warmup: pay one-time session/codegen/scan-setup and CDC-fixture
     // generation costs outside the measured window so the first measured
@@ -57,6 +67,7 @@ object Bench {
     // the worst SEGMENT's footprint. Each segment emits the normal JSON
     // (own errors); totals merge by addition.
     val allQueries = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => names.isEmpty || names(n) }
     val segment = sys.env.get("SPARK_GRAFT_BENCH_SEGMENT")
     val picked = segment match {
       case Some(s) =>
@@ -119,37 +130,6 @@ object Bench {
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), full + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] write $out failed: $e") }
-    spark.stop()
-  }
-}
-
-/** Subset benchmark for iterating on one query's cost without paying the
-  * full 122-query sweep: `runMain graft.BenchSome <sfDir> <q1> [q2...]`.
-  * Same session shape and warmup discipline as [[Bench]] so numbers are
-  * comparable to BENCH_r*.json tails. */
-object BenchSome {
-  def main(args: Array[String]): Unit = {
-    RunLock.acquireOrDie("BenchSome")
-    val sfDir = args(0)
-    val names = args.drop(1).toSeq
-    val spark = Session(sfDir)
-    // an unknown name must abort, not time a NoSuchElementException as
-    // a 0.00 s no-op (the round-6 silent-failure lesson)
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    // per-table scan warmup: the first query touching a table pays its
-    // footer-read/codegen init (~4.5 s measured) — same as Bench's order
-    names.foreach { n =>
-      val sec = (1 to 2).map { _ =>
-        Bench.quiesce() // same discipline as Bench so figures stay comparable
-        val t0 = System.nanoTime()
-        try SparkEntry.queries(n)(spark, sfDir).count()
-        catch { case e: Throwable => System.err.println(s"[benchsome] $n: $e") }
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"BENCHSOME $n cold=${sec.head}%.2f warm=${sec.last}%.2f")
-    }
     spark.stop()
   }
 }

@@ -1,8 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`tools/parity.py`):
+  * `runMain graft.Verify <sfDir> <outDir> [<query>...]`. Trailing query
+  * names dump only those queries (and only their oracle SQL), and also
+  * write each one's oracle SQL to `<outDir>/<name>.sql` — for iterating
+  * on one oracle pair without paying the full dump. */
 object Verify {
 
   /** Dump one query's result the way the driver's gate reads it. */
@@ -13,7 +17,15 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     RunLock.acquireOrDie("Verify")
-    val Array(sfDir, outDir) = args
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [<query>...]")
+    val Seq(sfDir, outDir) = args.toSeq.take(2)
+    val named = args.drop(2).toSeq
+    val unknown = named.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val names = if (named.isEmpty) SparkEntry.queries.keys.toSeq else named
+    val oracle =
+      if (named.isEmpty) SparkEntry.oracleSql
+      else SparkEntry.oracleSql.filter { case (k, _) => named.contains(k) }
     val spark = Session(sfDir)
     new java.io.File(outDir).mkdirs()
     // A failed dump must be LOUD: round 6's schema break surfaced only as
@@ -21,7 +33,7 @@ object Verify {
     // failure as a per-query marker file plus a summary, so "missing
     // parquet" is always distinguishable from "never attempted".
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries.keys.foreach { name =>
+    names.foreach { name =>
       try dumpQuery(spark, sfDir, outDir, name)
       catch { case e: Throwable =>
         val msg = s"${e.getClass.getName}: ${e.getMessage}"
@@ -43,14 +55,16 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = oracle
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    for (name <- named; sql <- SparkEntry.oracleSql.get(name))
+      Files.writeString(Paths.get(s"$outDir/$name.sql"), sql)
     val errJson = failed
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/verify_errors.json"), errJson)
     if (failed.nonEmpty)
-      System.err.println(s"[verify] ${failed.size} of ${SparkEntry.queries.size} queries FAILED to dump")
+      System.err.println(s"[verify] ${failed.size} of ${names.size} queries FAILED to dump")
     spark.stop()
   }
 }

@@ -41,8 +41,8 @@ object ArtifactManifest {
       gen: Int, tombstonesClean: Boolean, pending: Boolean,
       lastUpdate: Option[String]) {
     def params: (Double, Int) = (minJaccard, maxDf)
-    /** Every stage of [[TextDedup.artifactStages]] landed: the set may serve. */
-    def complete: Boolean = TextDedup.artifactStages.forall(stages)
+    /** Every surface of [[TextDedup.artifactSurfaces]] landed: the set may serve. */
+    def complete: Boolean = TextDedup.artifactSurfaces.forall(s => stages(s.name))
   }
 
   private def path(out: String): Path = Paths.get(out, "_MANIFEST")

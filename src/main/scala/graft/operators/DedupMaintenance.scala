@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.ChFunctions._
+import TextDedup.{Surface, BandIndex, Clusters, DocDigests, DocFiles,
+  DocStats, DocVerdicts, EmbClusters, EmbPairs, EmbProbeLayout, Pairs,
+  ShingleDf, ShingleIndex, SpanDf, SpanIndex, Spans, Tombstones, VecFiles}
 
 /** Incremental maintenance of the staged dedup artifacts
   * ([[TextDedup.writeDedupArtifacts]]) under the FULL CDC shape —
@@ -153,7 +156,7 @@ object DedupMaintenance {
                             deadFrac: Double): Boolean =
     (maxGen > 0 && ArtifactManifest.read(out).exists(_.gen >= maxGen)) ||
       (deadFrac > 0 && {
-        val live = Seq("doc_files", "vec_files", "doc_stats")
+        val live = Seq(DocFiles, VecFiles, DocStats)
           .map(TextDedup.surfaceDataBytes(out, _)).sum
         live > 0 && TextDedup.tombstoneRawBytes(out) > deadFrac * live
       })
@@ -177,11 +180,8 @@ object DedupMaintenance {
                             inputs: Seq[ArtifactManifest.InputFile],
                             minJaccard: Double, maxDf: Int)
       : Option[(ArtifactManifest.Manifest, FileDelta)] = {
-    val base = ArtifactManifest.read(out).filter(m =>
-      !m.pending && m.complete &&
-        m.params == (minJaccard, maxDf) &&
-        m.spans == TextDedup.spanConstants &&
-        TextDedup.artifactStages.forall(TextDedup.stageComplete(out, _)))
+    val base = ArtifactManifest.read(out).filter(TextDedup.manifestUsable(_,
+        out, Some((minJaccard, maxDf)), TextDedup.artifactSurfaces))
       .getOrElse(return None)
     def sizeMtime(f: ArtifactManifest.InputFile) = (f.size, f.mtime)
     val old = base.inputs.map(f => f.rel -> sizeMtime(f)).toMap
@@ -213,17 +213,18 @@ object DedupMaintenance {
     spark.range(0).select(col("id").as(name))
   private def ckpt(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
-  /** Phase timing to stderr when SPARK_GRAFT_INC_DEBUG=1 — the
-    * operational breakdown an increment's wall time decomposes into
-    * (what the round-11 floor hunt ran on). */
-  private def phase[A](name: String)(body: => A): A = {
-    if (sys.env.get("SPARK_GRAFT_INC_DEBUG").contains("1")) {
+  /** Wall-clock milliseconds per named phase of one increment — the
+    * operational breakdown its wall time decomposes into, recorded in
+    * the manifest's `last_update` as `phases_ms`. */
+  private final class Phases {
+    private val ms = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    def apply[A](name: String)(body: => A): A = {
       val t0 = System.nanoTime()
-      val r = body
-      System.err.println(
-        f"[inc] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    } else body
+      try body
+      finally ms(name) = ms.getOrElse(name, 0L) + (System.nanoTime() - t0) / 1000000
+    }
+    def json: String =
+      ms.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
   }
 
   /** One side's planned increment: everything is EAGER (computed
@@ -258,15 +259,16 @@ object DedupMaintenance {
                            inputs: Seq[ArtifactManifest.InputFile],
                            minJaccard: Double, maxDf: Int,
                            embNLists: Int): Boolean = {
-    val layout = s"$out/emb_probe_layout"
+    val layout = EmbProbeLayout.path(out)
     val g = base.gen + 1
+    val phase = new Phases
 
     // ---- plan + guard phase (no writes) ----
     val textPlan: Option[Option[TextPlan]] = // outer None = guard fired
-      phase("plan_text") { planText(spark, out, d, minJaccard, maxDf) }
+      phase("plan_text") { planText(spark, out, d, minJaccard, maxDf, phase) }
     if (textPlan.isEmpty) return false
     val embPlan: Option[Option[EmbPlan]] =
-      phase("plan_emb") { planEmb(spark, out, layout, d, embNLists) }
+      phase("plan_emb") { planEmb(spark, out, layout, d, embNLists, phase) }
     if (embPlan.isEmpty) return false
 
     // a PURE-APPEND increment (no retractions, no crossings, no
@@ -288,62 +290,51 @@ object DedupMaintenance {
     ArtifactManifest.commit(out,
       base.copy(pending = true, tombstonesClean = clean))
 
-    def tomb(surface: String, ids: DataFrame, idCol: String): DataFrame =
-      ids.select(lit(surface).as("surface"), col(idCol).as("id"),
-        lit(g).as("gen"))
-    def withGen(df: DataFrame): DataFrame = df.withColumn("gen", lit(g))
+    // one side's writes: its tombstones as ONE append, then each
+    // surface's delta rows, stamped generation g
+    def write(tombs: Seq[(Surface, DataFrame)],
+              rows: Seq[(Surface, DataFrame)]): Unit = {
+      val t = tombs.map { case (s, ids) => ids.select(lit(s.name).as("surface"),
+        col(s.id).as("id"), lit(g).as("gen")) }.reduce(_ unionByName _)
+      for ((s, df) <- (Tombstones, t) +: rows)
+        TextDedup.writeSurface(df, s, s.path(out), g, "append")
+    }
 
     for (t <- textPlan.flatten) phase("write_text") {
-      tomb("shingle_index", t.retractIds, "doc_id")
-        .unionByName(tomb("doc_files", t.retractIds, "doc_id"))
-        .unionByName(tomb("doc_stats", t.cIds, "doc_id"))
-        .unionByName(tomb("pairs", t.cIds, "doc_id"))
-        .unionByName(tomb("clusters", t.clusterNodes, "doc_id"))
-        .unionByName(tomb("span_index", t.retractIds, "doc_id"))
-        .unionByName(tomb("spans", t.cSpanIds, "doc_id"))
-        .unionByName(tomb("doc_digests", t.retractIds, "doc_id"))
-        .unionByName(tomb("band_index", t.retractIds, "doc_id"))
-        .unionByName(tomb("doc_verdicts", t.retractIds, "doc_id"))
-        .write.mode("append").parquet(s"$out/tombstones")
-      withGen(t.deltaSh).write.mode("append").parquet(s"$out/shingle_index")
-      t.dfNet.select(col("shingle"), col("net").as("df"))
-        .write.mode("append").parquet(s"$out/shingle_df")
-      withGen(t.aStats).write.mode("append").parquet(s"$out/doc_stats")
-      withGen(t.upserts.select("doc_id", "src_file"))
-        .write.mode("append").parquet(s"$out/doc_files")
-      withGen(t.newPairs).write.mode("append").parquet(s"$out/pairs")
-      withGen(t.clusterNew).write.mode("append").parquet(s"$out/clusters")
-      withGen(t.deltaSpan).write.mode("append").parquet(s"$out/span_index")
-      t.spanDfNet.select(col("fp"), col("net").as("df"))
-        .write.mode("append").parquet(s"$out/span_df")
-      withGen(t.newSpans).write.mode("append").parquet(s"$out/spans")
-      withGen(t.deltaDig).write.mode("append").parquet(s"$out/doc_digests")
-      withGen(t.deltaBands).write.mode("append").parquet(s"$out/band_index")
-      withGen(t.deltaVerd).write.mode("append").parquet(s"$out/doc_verdicts")
+      write(
+        Seq(ShingleIndex -> t.retractIds, DocFiles -> t.retractIds,
+          DocStats -> t.cIds, Pairs -> t.cIds, Clusters -> t.clusterNodes,
+          SpanIndex -> t.retractIds, Spans -> t.cSpanIds,
+          DocDigests -> t.retractIds, BandIndex -> t.retractIds,
+          DocVerdicts -> t.retractIds),
+        Seq(ShingleIndex -> t.deltaSh,
+          ShingleDf -> t.dfNet.select(col("shingle"), col("net").as("df")),
+          DocStats -> t.aStats,
+          DocFiles -> t.upserts.select("doc_id", "src_file"),
+          Pairs -> t.newPairs, Clusters -> t.clusterNew,
+          SpanIndex -> t.deltaSpan,
+          SpanDf -> t.spanDfNet.select(col("fp"), col("net").as("df")),
+          Spans -> t.newSpans, DocDigests -> t.deltaDig,
+          BandIndex -> t.deltaBands, DocVerdicts -> t.deltaVerd))
     }
 
     for (e <- embPlan.flatten) phase("write_emb") {
-      tomb("emb_probe_layout", e.cIds, "vec_id")
-        .unionByName(tomb("vec_files", e.retractIds, "vec_id"))
-        .unionByName(tomb("emb_pairs", e.cIds, "vec_id"))
-        .unionByName(tomb("emb_clusters", e.clusterNodes, "vec_id"))
-        .write.mode("append").parquet(s"$out/tombstones")
-      withGen(e.aProbes).write.partitionBy("list_id").mode("append")
-        .parquet(layout)
-      withGen(e.upserts.select("vec_id", "src_file"))
-        .write.mode("append").parquet(s"$out/vec_files")
-      withGen(e.newPairs).write.mode("append").parquet(s"$out/emb_pairs")
-      withGen(e.clusterNew).write.mode("append").parquet(s"$out/emb_clusters")
+      write(
+        Seq(EmbProbeLayout -> e.cIds, VecFiles -> e.retractIds,
+          EmbPairs -> e.cIds, EmbClusters -> e.clusterNodes),
+        Seq(EmbProbeLayout -> e.aProbes,
+          VecFiles -> e.upserts.select("vec_id", "src_file"),
+          EmbPairs -> e.newPairs, EmbClusters -> e.clusterNew))
     }
 
-    val lastUpdate = lastIncJson(g, textPlan.flatten, embPlan.flatten)
+    val lastUpdate = lastIncJson(g, textPlan.flatten, embPlan.flatten, phase)
     ArtifactManifest.commit(out, base.copy(inputs = inputs, gen = g,
       tombstonesClean = clean, pending = false, lastUpdate = Some(lastUpdate)))
     true
   }
 
   private def lastIncJson(g: Int, t: Option[TextPlan],
-                          e: Option[EmbPlan]): String = {
+                          e: Option[EmbPlan], phase: Phases): String = {
     val tj = t.map(p => s""","docs_retracted":${p.retractIds.count()},""" +
       s""""docs_upserted":${p.upserts.count()},""" +
       s""""docs_reclassified":${p.rIds.count()},""" +
@@ -353,13 +344,14 @@ object DedupMaintenance {
       s""""vecs_upserted":${p.upserts.count()},""" +
       s""""vecs_reanchored":${p.cIds.count() - p.retractIds.count()},""" +
       s""""new_emb_pairs":${p.newPairs.count()}""").getOrElse("")
-    s"""{"mode":"incremental","gen":$g$tj$ej}"""
+    s"""{"mode":"incremental","gen":$g$tj$ej,"phases_ms":${phase.json}}"""
   }
 
   /** Plan the text-side increment. Outer None = a guard fired (caller
     * falls back to the full build); inner None = no doc-side change. */
   private def planText(spark: SparkSession, out: String, d: FileDelta,
-                       minJaccard: Double, maxDf: Int): Option[Option[TextPlan]] = {
+                       minJaccard: Double, maxDf: Int,
+                       phase: Phases): Option[Option[TextPlan]] = {
     if (d.newDoc.isEmpty && d.chgDoc.isEmpty && d.touchedDocRel.isEmpty)
       return Some(None)
     val retractIds = ckpt(
@@ -421,7 +413,7 @@ object DedupMaintenance {
     // full-width groupBy of readShingleDf exchanges the whole df table
     // and this runs on every increment
     val dfBaseTouched = ckpt(
-      spark.read.parquet(s"$out/shingle_df")
+      spark.read.parquet(ShingleDf.path(out))
         .join(dfNet.select("shingle"), Seq("shingle"), "left_semi")
         .groupBy("shingle").agg(sum(col("df")).as("dfb"))
         .filter(col("dfb") > 0))
@@ -457,7 +449,7 @@ object DedupMaintenance {
     // deltaSh's unless reclassification widened them)
     val dfAStored =
       if (!haveR) dfBaseTouched
-      else spark.read.parquet(s"$out/shingle_df")
+      else spark.read.parquet(ShingleDf.path(out))
         .join(aSh.select("shingle").distinct(), Seq("shingle"), "left_semi")
         .groupBy("shingle").agg(sum(col("df")).as("dfb"))
         .filter(col("dfb") > 0)
@@ -506,7 +498,7 @@ object DedupMaintenance {
               .as("net"))
           .filter(col("net") =!= 0L))
     val spanDfBaseTouched = ckpt(
-      spark.read.parquet(s"$out/span_df")
+      spark.read.parquet(SpanDf.path(out))
         .join(spanDfNet.select("fp"), Seq("fp"), "left_semi")
         .groupBy("fp").agg(sum(col("df")).as("dfb"))
         .filter(col("dfb") > 0))
@@ -534,7 +526,7 @@ object DedupMaintenance {
           .select("doc_id", "pos", "fp")))
     val spanDfAStored =
       if (!haveRSpan) spanDfBaseTouched
-      else spark.read.parquet(s"$out/span_df")
+      else spark.read.parquet(SpanDf.path(out))
         .join(aSpan.select("fp").distinct(), Seq("fp"), "left_semi")
         .groupBy("fp").agg(sum(col("df")).as("dfb"))
         .filter(col("dfb") > 0)
@@ -608,7 +600,8 @@ object DedupMaintenance {
 
   /** Plan the embedding-side increment (same Option contract). */
   private def planEmb(spark: SparkSession, out: String, layout: String,
-                      d: FileDelta, embNLists: Int): Option[Option[EmbPlan]] = {
+                      d: FileDelta, embNLists: Int,
+                      phase: Phases): Option[Option[EmbPlan]] = {
     if (d.newEmb.isEmpty && d.chgEmb.isEmpty && d.touchedEmbRel.isEmpty)
       return Some(None)
     val (nLists, nprobe) = VectorOps.readLayoutGeometry(layout)
@@ -637,9 +630,7 @@ object DedupMaintenance {
       return None
     // anchors read from the live layout (no corpus scan): every anchor
     // id sits in its own list with its embedding aboard
-    val live = TextDedup.liveRows(spark, out, "emb_probe_layout", "vec_id")
-      .select(col("vec_id"), col("embedding"),
-        col("list_id").cast("long").as("list_id"))
+    val live = TextDedup.readSurface(spark, out, EmbProbeLayout)
     val liveAnch = live.filter(col("vec_id") < nLists)
       .groupBy("vec_id").agg(first(col("embedding")).as("anchor"))
 
@@ -944,60 +935,28 @@ object DedupMaintenance {
     * locks (the OS file lock is not reentrant — [[update]]'s
     * auto-compaction would deadlock-or-throw re-acquiring it). */
   private def compactLocked(spark: SparkSession, out: String): Unit = {
-        val found = ArtifactManifest.read(out)
-          .filter(m => m.complete && !m.pending)
-        require(found.nonEmpty, s"no complete artifact set under $out to compact")
-        val base = found.get
-        ArtifactManifest.commit(out, base.copy(pending = true))
-        def zeroGen(df: DataFrame): DataFrame =
-          df.withColumn("gen", lit(0))
-        swapIn(spark, s"$out/shingle_index",
-          zeroGen(TextDedup.readShingleIndex(spark, out)))
-        swapIn(spark, s"$out/shingle_df",
-          TextDedup.readShingleDf(spark, out))
-        swapIn(spark, s"$out/doc_stats",
-          zeroGen(TextDedup.readDocStats(spark, out)))
-        swapIn(spark, s"$out/doc_files",
-          zeroGen(TextDedup.readDocFiles(spark, out)))
-        swapIn(spark, s"$out/pairs",
-          zeroGen(TextDedup.stagedPairs(spark, out)))
-        swapIn(spark, s"$out/clusters",
-          zeroGen(TextDedup.stagedClusters(spark, out)))
-        swapIn(spark, s"$out/span_index",
-          zeroGen(TextDedup.readSpanIndex(spark, out)))
-        swapIn(spark, s"$out/span_df",
-          TextDedup.readSpanDf(spark, out))
-        swapIn(spark, s"$out/spans",
-          zeroGen(TextDedup.stagedSpans(spark, out)))
-        swapIn(spark, s"$out/doc_digests",
-          zeroGen(TextDedup.readDocDigests(spark, out)))
-        swapIn(spark, s"$out/band_index",
-          zeroGen(TextDedup.readBandIndex(spark, out)))
-        swapIn(spark, s"$out/doc_verdicts",
-          zeroGen(TextDedup.readDocVerdicts(spark, out)))
-        swapIn(spark, s"$out/vec_files",
-          zeroGen(TextDedup.readVecFiles(spark, out)))
-        swapIn(spark, s"$out/emb_pairs",
-          zeroGen(TextDedup.stagedEmbPairs(spark, out)))
-        swapIn(spark, s"$out/emb_clusters",
-          zeroGen(TextDedup.stagedEmbClusters(spark, out)))
-        // the layout keeps its partitioning and its _GEOMETRY pin
-        val layout = s"$out/emb_probe_layout"
-        val geom = VectorOps.readLayoutGeometry(layout)
-        swapInPartitioned(spark, layout,
-          zeroGen(TextDedup.liveRows(spark, out, "emb_probe_layout", "vec_id")
-            .select(col("vec_id"), col("embedding"), col("gen"),
-              col("list_id").cast("long").as("list_id"))), "list_id")
-        for ((l, p) <- geom)
-          java.nio.file.Files.write(
-            new java.io.File(layout, "_GEOMETRY").toPath,
-            s"nLists=$l\nnprobe=$p".getBytes("UTF-8"))
-        swapIn(spark, s"$out/tombstones", TextDedup.emptyTombstones(spark))
-        ArtifactManifest.commit(out,
-          base.copy(gen = 0, tombstonesClean = true, pending = false))
-        // every table was physically replaced under the same paths —
-        // drop any cached listings before a reader sees them
-        spark.catalog.refreshByPath(out)
+    val found = ArtifactManifest.read(out)
+      .filter(TextDedup.manifestUsable(_, out, None, TextDedup.artifactSurfaces))
+    require(found.nonEmpty, s"no complete artifact set under $out to compact")
+    val base = found.get
+    ArtifactManifest.commit(out, base.copy(pending = true))
+    // every surface becomes its live view at generation 0; tombstones
+    // (the first stage) go LAST — each live view above resolves
+    // against them — and the layout keeps its _GEOMETRY pin
+    for (s <- TextDedup.artifactSurfaces.filter(_ != Tombstones) :+ Tombstones) {
+      val geometry =
+        if (s.kind == TextDedup.ProbeLayout) VectorOps.readLayoutGeometry(s.path(out))
+        else None
+      swapIn(s, s.path(out),
+        if (s == Tombstones) TextDedup.emptyTombstones(spark)
+        else TextDedup.readSurface(spark, out, s))
+      for ((l, p) <- geometry) VectorOps.writeLayoutGeometry(s.path(out), l, p)
+    }
+    ArtifactManifest.commit(out,
+      base.copy(gen = 0, tombstonesClean = true, pending = false))
+    // every table was physically replaced under the same paths —
+    // drop any cached listings before a reader sees them
+    spark.catalog.refreshByPath(out)
   }
 
   /** Replace a staged table with a new frame: write beside, delete,
@@ -1005,17 +964,9 @@ object DedupMaintenance {
     * window (a crash mid-swap → pending → full rebuild). A direct
     * overwrite would be worse: Spark deletes the target before the
     * (lazy) plan reads it. */
-  private def swapIn(spark: SparkSession, path: String, df: DataFrame): Unit = {
+  private def swapIn(s: Surface, path: String, df: DataFrame): Unit = {
     val tmp = path + "__new"
-    df.write.mode("overwrite").parquet(tmp)
-    graft.sources.Layout.deleteRec(new java.io.File(path))
-    java.nio.file.Files.move(new java.io.File(tmp).toPath,
-      new java.io.File(path).toPath)
-  }
-  private def swapInPartitioned(spark: SparkSession, path: String,
-                                df: DataFrame, part: String): Unit = {
-    val tmp = path + "__new"
-    df.write.partitionBy(part).mode("overwrite").parquet(tmp)
+    TextDedup.writeSurface(df, s, tmp, 0, "overwrite")
     graft.sources.Layout.deleteRec(new java.io.File(path))
     java.nio.file.Files.move(new java.io.File(tmp).toPath,
       new java.io.File(path).toPath)

@@ -231,27 +231,90 @@ object TextDedup {
                          minJaccard: Double = 0.5, maxDf: Int = DefaultMaxDf): DataFrame =
     nearDupFrom(spark.read.parquet(stagedPath), minJaccard, maxDf)
 
-  /** The staged artifacts, in build order. `_SUCCESS` is the
-    * completeness witness for each (Spark writes it last): a skip is
-    * only honored when every artifact still has one, so a /tmp reaper
-    * or manual cleanup that removes staged files can never strand the
-    * consumers behind a current manifest. `tombstones` is FIRST: a
-    * full rebuild truncates it before any other stage, so the live
-    * readers the later stages go through see exactly the raw fresh
-    * tables. */
-  private[operators] val artifactStages =
-    Seq("tombstones", "shingle_index", "shingle_df", "doc_stats", "doc_files",
-      "pairs", "clusters", "span_index", "span_df", "spans",
-      "doc_digests", "band_index", "doc_verdicts",
-      "emb_probe_layout", "vec_files", "emb_pairs", "emb_clusters")
-  private[operators] def stageComplete(out: String, name: String): Boolean =
-    new java.io.File(new java.io.File(out, name), "_SUCCESS").exists()
+  /** How a staged surface is keyed — which fixes how it is read live,
+    * appended to by an increment and rewritten by compaction. */
+  sealed trait SurfaceKind
+  /** Rows keyed by one id ([[Surface.id]]): a tombstone on the id kills
+    * the rows OLDER than it. */
+  case object Keyed extends SurfaceKind
+  /** Rows keyed by two ids (the first two served columns): a tombstone
+    * on EITHER endpoint kills the rows older than it. */
+  case object Pair extends SurfaceKind
+  /** (key, df) partials, possibly negative, summed per key at read;
+    * no `gen` column, never tombstoned. */
+  case object Partials extends SurfaceKind
+  /** The `list_id`-partitioned probe layout, keyed like [[Keyed]] and
+    * pinned by its `_GEOMETRY` file. */
+  case object ProbeLayout extends SurfaceKind
+  /** The shared tombstone table itself: (surface, id, gen) rows, read
+    * raw. */
+  case object TombstoneLog extends SurfaceKind
+
+  /** One staged surface: its directory under the artifact dir, its
+    * kind, the id column its tombstones name (for the kinds never
+    * tombstoned, the key), and the columns its live reader serves. */
+  final case class Surface(name: String, kind: SurfaceKind, id: String,
+                           cols: Seq[String]) {
+    def path(out: String): String = s"$out/$name"
+  }
+
+  val Tombstones = Surface("tombstones", TombstoneLog, "id",
+    Seq("surface", "id", "gen"))
+  val ShingleIndex = Surface("shingle_index", Keyed, "doc_id",
+    Seq("doc_id", "shingle"))
+  val ShingleDf = Surface("shingle_df", Partials, "shingle",
+    Seq("shingle", "df"))
+  val DocStats = Surface("doc_stats", Keyed, "doc_id",
+    Seq("doc_id", "n", "n_rare"))
+  val DocFiles = Surface("doc_files", Keyed, "doc_id",
+    Seq("doc_id", "src_file"))
+  val Pairs = Surface("pairs", Pair, "doc_id",
+    Seq("doc_a", "doc_b", "jaccard"))
+  val Clusters = Surface("clusters", Keyed, "doc_id",
+    Seq("doc_id", "cluster_id", "cluster_size"))
+  val SpanIndex = Surface("span_index", Keyed, "doc_id",
+    Seq("doc_id", "pos", "fp"))
+  val SpanDf = Surface("span_df", Partials, "fp", Seq("fp", "df"))
+  val Spans = Surface("spans", Pair, "doc_id",
+    Seq("doc_a", "doc_b", "offset_delta", "shared_fps",
+      "span_start_a", "span_start_b", "span_chars"))
+  val DocDigests = Surface("doc_digests", Keyed, "doc_id",
+    Seq("doc_id", "digest"))
+  val BandIndex = Surface("band_index", Keyed, "doc_id",
+    Seq("doc_id", "band", "band_hash"))
+  val DocVerdicts = Surface("doc_verdicts", Keyed, "doc_id",
+    Seq("doc_id", "lang", "digest", "n_tokens", "stopword_ratio",
+      "distinct_ratio", "dup_trigram_frac", "top_unigram_frac"))
+  val EmbProbeLayout = Surface("emb_probe_layout", ProbeLayout, "vec_id",
+    Seq("vec_id", "embedding", "list_id"))
+  val VecFiles = Surface("vec_files", Keyed, "vec_id",
+    Seq("vec_id", "src_file"))
+  val EmbPairs = Surface("emb_pairs", Pair, "vec_id",
+    Seq("vec_a", "vec_b", "cosine"))
+  val EmbClusters = Surface("emb_clusters", Keyed, "vec_id",
+    Seq("vec_id", "cluster_id", "cluster_size"))
+
+  /** THE table of staged surfaces, in build order — every reader, the
+    * build, the increment's writes, compaction and the manifest's
+    * completeness read it. `_SUCCESS` is the completeness witness of
+    * each (Spark writes it last): a skip is only honored when every
+    * surface a caller reads still has one, so a /tmp reaper or manual
+    * cleanup that removes staged files can never strand the consumers
+    * behind a current manifest. `tombstones` is FIRST: a full rebuild
+    * truncates it before any other stage, so the live readers the
+    * later stages go through see exactly the raw fresh tables. */
+  val artifactSurfaces: Seq[Surface] = Seq(Tombstones, ShingleIndex,
+    ShingleDf, DocStats, DocFiles, Pairs, Clusters, SpanIndex, SpanDf,
+    Spans, DocDigests, BandIndex, DocVerdicts, EmbProbeLayout, VecFiles,
+    EmbPairs, EmbClusters)
+  private[operators] def stageComplete(out: String, s: Surface): Boolean =
+    new java.io.File(s.path(out), "_SUCCESS").exists()
 
   /** Staged maintenance state — the v4 MERGE-ON-READ format. Every
     * mutable surface is append-only on disk; row removal is expressed
     * through the shared `tombstones` table and resolved at read:
     *
-    *  - every staged row (except `shingle_df` partials) carries a
+    *  - every staged row (except the df partials) carries a
     *    `gen` column — the generation (the manifest's `gen`) of the
     *    full build (0) or increment (1, 2, …) that wrote it;
     *  - `tombstones` holds (surface, id, gen) rows: a tombstone kills
@@ -263,67 +326,97 @@ object TextDedup {
     *    two delta-sized appends instead of a corpus-sized rewrite —
     *    the same LSM discipline as the reference's ReplacingMergeTree
     *    (latest version wins at read; compaction reclaims later);
-    *  - `shingle_df` is (shingle, df) PARTIALS, possibly NEGATIVE:
-    *    the full build writes base counts, an increment appends the
-    *    delta's counts and the retracted docs' counts negated, and
-    *    readers sum per shingle (net-zero shingles drop out, so the
-    *    summed view equals a fresh rebuild's);
-    *  - `doc_files` / `vec_files` map each live id to the input file
-    *    that carried it — how [[DedupMaintenance]] resolves a
-    *    modified/removed input file to the exact ids to retract
-    *    (copy-on-write file semantics, the lakehouse update shape).
+    *  - the df partials (shingle and span fingerprint) are possibly
+    *    NEGATIVE: the full build writes base counts, an increment
+    *    appends the delta's counts and the retracted docs' counts
+    *    negated, and readers sum per key (net-zero keys drop out, so
+    *    the summed view equals a fresh rebuild's);
+    *  - the doc/vec file maps record each live id's input file — how
+    *    [[DedupMaintenance]] resolves a modified/removed input file to
+    *    the exact ids to retract (copy-on-write file semantics, the
+    *    lakehouse update shape).
     *
     * [[DedupMaintenance.compact]] folds tombstones into a fresh gen-0
     * rewrite when the dead fraction warrants it. */
+  private[graft] def readSurface(spark: SparkSession, out: String,
+                                 s: Surface): DataFrame = {
+    val raw = spark.read.parquet(s.path(out))
+    s.kind match {
+      case TombstoneLog => raw
+      case Partials =>
+        val Seq(key, df) = s.cols
+        raw.groupBy(key).agg(sum(col(df)).as(df)).filter(col(df) > 0)
+      case Keyed | Pair | ProbeLayout =>
+        // a tombstone on any endpoint kills the rows older than it (for a
+        // pair: retracting a doc retracts its whole pair neighborhood;
+        // surviving neighborhoods are re-derived by the increment that
+        // wrote the tombstone)
+        val ends = if (s.kind == Pair) s.cols.take(2) else Seq(s.id)
+        val tgs = ends.indices.map(i => s"__tg$i")
+        val live = tombstoneMax(spark, out, s).fold(raw) { tg =>
+          ends.zip(tgs).foldLeft(raw) { case (df, (end, tgCol)) =>
+            df.join(tombstoneSide(out, tg.toDF(end, tgCol)), Seq(end), "left")
+          }.filter(tgs.map(t => col(t).isNull || col("gen") >= col(t))
+              .reduce(_ && _))
+            .drop(tgs: _*)
+        }
+        // the layout's partition column comes back directory-inferred
+        // as int
+        live.select(s.cols.map(c =>
+          if (c == "list_id") col(c).cast("long").as(c) else col(c)): _*)
+    }
+  }
+
+  /** Write `df` as surface `s` at `path` (its own directory, or a
+    * compaction's swap-in copy): every kind that carries a row
+    * generation is stamped `gen`, and the probe layout is partitioned
+    * by list. */
+  private[operators] def writeSurface(df: DataFrame, s: Surface, path: String,
+                                      gen: Int, mode: String): Unit = {
+    val stamped = s.kind match {
+      case Partials | TombstoneLog => df
+      case _ => df.withColumn("gen", lit(gen))
+    }
+    val w = stamped.write.mode(mode)
+    (if (s.kind == ProbeLayout) w.partitionBy("list_id") else w).parquet(path)
+  }
+
   def readShingleIndex(spark: SparkSession, out: String): DataFrame =
-    liveRows(spark, out, "shingle_index", "doc_id")
-      .select("doc_id", "shingle")
+    readSurface(spark, out, ShingleIndex)
   def readShingleDf(spark: SparkSession, out: String): DataFrame =
-    spark.read.parquet(s"$out/shingle_df")
-      .groupBy("shingle").agg(sum(col("df")).as("df"))
-      .filter(col("df") > 0)
+    readSurface(spark, out, ShingleDf)
   def readDocStats(spark: SparkSession, out: String): DataFrame =
-    liveRows(spark, out, "doc_stats", "doc_id")
-      .select("doc_id", "n", "n_rare")
+    readSurface(spark, out, DocStats)
   private[graft] def readDocFiles(spark: SparkSession, out: String): DataFrame =
-    liveRows(spark, out, "doc_files", "doc_id")
-      .select("doc_id", "src_file")
+    readSurface(spark, out, DocFiles)
   private[graft] def readVecFiles(spark: SparkSession, out: String): DataFrame =
-    liveRows(spark, out, "vec_files", "vec_id")
-      .select("vec_id", "src_file")
+    readSurface(spark, out, VecFiles)
   private[graft] def readSpanIndex(spark: SparkSession, out: String): DataFrame =
-    liveRows(spark, out, "span_index", "doc_id")
-      .select("doc_id", "pos", "fp")
+    readSurface(spark, out, SpanIndex)
   private[graft] def readSpanDf(spark: SparkSession, out: String): DataFrame =
-    spark.read.parquet(s"$out/span_df")
-      .groupBy("fp").agg(sum(col("df")).as("df"))
-      .filter(col("df") > 0)
+    readSurface(spark, out, SpanDf)
   private[graft] def readDocDigests(spark: SparkSession, out: String): DataFrame =
-    liveRows(spark, out, "doc_digests", "doc_id")
-      .select("doc_id", "digest")
+    readSurface(spark, out, DocDigests)
   private[graft] def readBandIndex(spark: SparkSession, out: String): DataFrame =
-    liveRows(spark, out, "band_index", "doc_id")
-      .select("doc_id", "band", "band_hash")
+    readSurface(spark, out, BandIndex)
   private[graft] def readDocVerdicts(spark: SparkSession, out: String): DataFrame =
-    liveRows(spark, out, "doc_verdicts", "doc_id")
-      .select("doc_id", "lang", "digest", "n_tokens", "stopword_ratio",
-        "distinct_ratio", "dup_trigram_frac", "top_unigram_frac")
+    readSurface(spark, out, DocVerdicts)
 
   /** Raw on-disk bytes of the tombstones table — the broadcast guard's
     * input. An overestimate of the grouped max-gen frame (raw rows ≥
     * grouped rows), so staying under the threshold is always safe. */
   private[graft] def tombstoneRawBytes(out: String): Long =
-    surfaceDataBytes(out, "tombstones")
+    surfaceDataBytes(out, Tombstones)
 
   /** Raw data bytes of one staged surface (recursive — the probe
     * layout nests list_id=… dirs), commit files excluded. */
-  private[graft] def surfaceDataBytes(out: String, surface: String): Long = {
+  private[graft] def surfaceDataBytes(out: String, s: Surface): Long = {
     def walk(f: java.io.File): Long =
       if (f.isDirectory)
         Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
       else if (f.getName.startsWith("_") || f.getName.startsWith(".")) 0L
       else f.length
-    walk(new java.io.File(out, surface))
+    walk(new java.io.File(s.path(out)))
   }
 
   /** Past this many raw tombstone bytes the resolve join stops forcing
@@ -341,11 +434,11 @@ object TextDedup {
     * skipped: that job is tiny, but it ran per surface per query in
     * the zero-tombstone serving state, a measurable read tax on the
     * dedup endpoint family. */
-  private[graft] def tombstoneMax(spark: SparkSession, out: String,
-                                  surface: String): Option[DataFrame] = {
+  private def tombstoneMax(spark: SparkSession, out: String,
+                           s: Surface): Option[DataFrame] = {
     if (ArtifactManifest.read(out).exists(_.tombstonesClean)) return None
-    val t = spark.read.parquet(s"$out/tombstones")
-      .filter(col("surface") === surface)
+    val t = spark.read.parquet(Tombstones.path(out))
+      .filter(col("surface") === s.name)
     if (t.isEmpty) None
     else Some(t.groupBy("id").agg(max(col("gen")).as("__tg")))
   }
@@ -355,41 +448,6 @@ object TextDedup {
   private def tombstoneSide(out: String, tg: DataFrame): DataFrame =
     if (tombstoneRawBytes(out) <= tombstoneBroadcastBytes) broadcast(tg)
     else tg
-
-  /** Tombstone-resolved view of a single-id staged surface. Keeps the
-    * `gen` column (callers project it away). */
-  private[graft] def liveRows(spark: SparkSession, out: String,
-                              surface: String, idCol: String): DataFrame = {
-    val raw = spark.read.parquet(s"$out/$surface")
-    tombstoneMax(spark, out, surface) match {
-      case None => raw
-      case Some(tg) =>
-        raw.join(tombstoneSide(out, tg.withColumnRenamed("id", idCol)),
-            Seq(idCol), "left")
-          .filter(col("__tg").isNull || col("gen") >= col("__tg"))
-          .drop("__tg")
-    }
-  }
-
-  /** Tombstone-resolved view of a pair surface: a tombstone on EITHER
-    * endpoint kills the pair rows older than it (retracting a doc
-    * retracts its whole pair neighborhood; surviving neighborhoods are
-    * re-derived by the increment that wrote the tombstone). */
-  private[graft] def livePairRows(spark: SparkSession, out: String,
-                                  surface: String, aCol: String,
-                                  bCol: String): DataFrame = {
-    val raw = spark.read.parquet(s"$out/$surface")
-    tombstoneMax(spark, out, surface) match {
-      case None => raw
-      case Some(tg) =>
-        raw
-          .join(tombstoneSide(out, tg.toDF(aCol, "__tga")), Seq(aCol), "left")
-          .join(tombstoneSide(out, tg.toDF(bCol, "__tgb")), Seq(bCol), "left")
-          .filter((col("__tga").isNull || col("gen") >= col("__tga")) &&
-            (col("__tgb").isNull || col("gen") >= col("__tgb")))
-          .drop("__tga", "__tgb")
-    }
-  }
 
   /** The empty tombstones frame (schema anchor for the table). */
   private[operators] def emptyTombstones(spark: SparkSession): DataFrame =
@@ -409,11 +467,8 @@ object TextDedup {
     * READ-side routing predicate: a registered query may serve from the
     * artifact exactly when this holds (else it falls back to the
     * self-contained form — same result, just without the staged
-    * speedup). The manifest must have nothing `pending` (a crashed
-    * increment may have left partial appends), be complete, match the
-    * format version, span constants and `params`, and list exactly the
-    * current input files; each of `stages` must still have its
-    * `_SUCCESS` (a reaper may have deleted staged files).
+    * speedup). The manifest must be [[manifestUsable]] for `params` and
+    * `stages`, be complete, and list exactly the current input files.
     *
     * `params = None` judges the PARAM-FREE segment: the span tables,
     * the screening index (digests + bands) and the verdict surface do
@@ -423,17 +478,29 @@ object TextDedup {
   def artifactsCurrent(dir: String, out: String,
                        params: Option[(Double, Int)] =
                          Some((DefaultMinJaccard, DefaultMaxDf)),
-                       stages: Seq[String] = artifactStages): Boolean =
+                       stages: Seq[Surface] = artifactSurfaces): Boolean =
     ArtifactManifest.read(out).exists(manifestCurrent(_, dir, out, params, stages))
 
   /** [[artifactsCurrent]] judged on a manifest the caller already read,
     * so one snapshot answers every question it asks of the set. */
   private[graft] def manifestCurrent(m: ArtifactManifest.Manifest, dir: String,
                                      out: String, params: Option[(Double, Int)],
-                                     stages: Seq[String] = artifactStages): Boolean =
-    !m.pending && m.complete && m.spans == spanConstants &&
-      params.forall(_ == m.params) && m.inputs == inputFiles(dir) &&
-      stages.forall(stageComplete(out, _))
+                                     stages: Seq[Surface] = artifactSurfaces): Boolean =
+    manifestUsable(m, out, params, stages) && m.complete &&
+      m.inputs == inputFiles(dir)
+
+  /** The one test of whether a manifest describes a set its caller may
+    * use — the reads' currency, the increment's base, the build's
+    * resume point and compaction all start from it: nothing `pending`
+    * (a crashed increment or compaction may have left partial writes),
+    * built under the current span constants and, when given, the
+    * staging `params`, and each of `stages` listed AND still holding
+    * its `_SUCCESS` (a reaper may have deleted staged files). */
+  private[operators] def manifestUsable(m: ArtifactManifest.Manifest, out: String,
+                                        params: Option[(Double, Int)],
+                                        stages: Seq[Surface]): Boolean =
+    !m.pending && m.spans == spanConstants && params.forall(_ == m.params) &&
+      stages.forall(s => m.stages(s.name) && stageComplete(out, s))
 
   /** True when a REQUESTED embedding geometry is compatible with the
     * staged layout: `embNLists <= 0` means "whatever the build derived"
@@ -447,7 +514,7 @@ object TextDedup {
     * (round-11 advisory). */
   private[operators] def stagedGeometryOk(out: String, embNLists: Int): Boolean =
     embNLists <= 0 ||
-      VectorOps.readLayoutGeometry(s"$out/emb_probe_layout")
+      VectorOps.readLayoutGeometry(EmbProbeLayout.path(out))
         .exists(_._1 == embNLists.toLong)
 
   /** Write the dedup PAIR-GRAPH artifacts once — the corpus-build
@@ -459,15 +526,11 @@ object TextDedup {
     * build, embedding clusters) each need the near-dup candidate
     * pipeline; self-contained they re-derive it per query — correct,
     * but at 100 TB that is the single most expensive stage run six
-    * times. This stages it ONCE:
-    *
-    *   `out/pairs`            (doc_a, doc_b, jaccard)   — text near-dup graph
-    *   `out/clusters`         (doc_id, cluster_id, cluster_size)
-    *   `out/emb_probe_layout` (vec_id, embedding)/list_id= — multi-probe
-    *                          IVF layout, partitioned by list
-    *   `out/emb_pairs`        (vec_a, vec_b, cosine)    — embedding graph,
-    *                          derived FROM the staged layout
-    *   `out/emb_clusters`     (vec_id, cluster_id, cluster_size)
+    * times. This stages it ONCE, one directory per entry of
+    * [[artifactSurfaces]]: the text near-dup graph and its clusters,
+    * the multi-probe IVF layout (partitioned by list), the embedding
+    * graph derived FROM the staged layout and its clusters, plus the
+    * maintenance, span, screening and verdict surfaces.
     *
     * Clusters are computed FROM the just-staged pair parquet (read
     * back, not the in-memory plan), so the CC iteration's edge scan
@@ -526,14 +589,15 @@ object TextDedup {
         // tombstones would otherwise survive into the "fresh" set, and
         // a different explicit geometry must restage every surface. A
         // listed stage whose `_SUCCESS` is gone (manual delete) reruns.
-        val kept = prev.filter(m => m.gen == 0 && !m.pending &&
-            m.params == (minJaccard, maxDf) &&
-            m.spans == spanConstants && m.inputs == inputs &&
-            stagedGeometryOk(out, embNLists))
-          .fold(Set.empty[String])(_.stages.filter(stageComplete(out, _)))
+        val kept = prev.filter(m => m.gen == 0 &&
+            manifestUsable(m, out, Some((minJaccard, maxDf)), Seq.empty) &&
+            m.inputs == inputs && stagedGeometryOk(out, embNLists))
+          .fold(Set.empty[String])(m => artifactSurfaces
+            .filter(s => m.stages(s.name) && stageComplete(out, s))
+            .map(_.name).toSet)
         var m = ArtifactManifest.Manifest(minJaccard, maxDf, spanConstants,
           inputs, kept, gen = 0,
-          tombstonesClean = kept("tombstones"), pending = false,
+          tombstonesClean = kept(Tombstones.name), pending = false,
           lastUpdate = prev.flatMap(_.lastUpdate))
         ArtifactManifest.commit(out, m)
         // Shuffle files of a finished stage live until the driver GCs
@@ -545,62 +609,54 @@ object TextDedup {
         // is reusable across these boundaries anyway; on a cluster
         // this is executor shuffle-dir pressure, same failure mode).
         def reclaimShuffles(): Unit = { System.gc(); Thread.sleep(100) }
-        // Stage name == output subdir.
-        def stage(name: String)(body: => Unit): Unit =
-          if (!m.stages(name)) {
+        def stage(s: Surface)(body: => Unit): Unit =
+          if (!m.stages(s.name)) {
             body
-            m = m.copy(stages = m.stages + name)
+            m = m.copy(stages = m.stages + s.name)
             ArtifactManifest.commit(out, m)
             reclaimShuffles()
           }
+        // the common stage: `frame` lands as the surface at generation 0
+        def stageFrame(s: Surface)(frame: => DataFrame): Unit =
+          stage(s)(writeSurface(frame, s, s.path(out), 0, "overwrite"))
         // tombstones FIRST: a rebuild starts from an empty tombstone
         // set, so every later stage's live read is exactly its raw
         // fresh table
-        stage("tombstones") {
-          emptyTombstones(spark)
-            .write.mode("overwrite").parquet(s"$out/tombstones")
+        stage(Tombstones) {
+          writeSurface(emptyTombstones(spark), Tombstones, Tombstones.path(out),
+            0, "overwrite")
           m = m.copy(tombstonesClean = true)
         }
         // maintenance state next — the pair stage then consumes the
         // staged index instead of re-tokenizing the corpus, and every
         // increment appends to these instead of rebuilding
-        stage("shingle_index") {
+        stageFrame(ShingleIndex) {
           shingles(graft.Tables.documents(spark, dir))
-            .select(col("doc_id"), xxhash64(col("shingle")).as("shingle"),
-              lit(0).as("gen"))
-            .write.mode("overwrite").parquet(s"$out/shingle_index")
+            .select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
         }
-        stage("shingle_df") {
+        stageFrame(ShingleDf) {
           readShingleIndex(spark, out)
             .groupBy("shingle").agg(count(lit(1)).as("df"))
-            .write.mode("overwrite").parquet(s"$out/shingle_df")
         }
-        stage("doc_stats") {
+        stageFrame(DocStats) {
           val idx = readShingleIndex(spark, out)
           idx.join(readShingleDf(spark, out), "shingle")
             .groupBy("doc_id")
             .agg(count(lit(1)).as("n"),
               sum(when(col("df") <= maxDf, 1L).otherwise(0L)).as("n_rare"))
-            .withColumn("gen", lit(0))
-            .write.mode("overwrite").parquet(s"$out/doc_stats")
         }
-        stage("doc_files") {
+        stageFrame(DocFiles) {
           graft.Tables.documents(spark, dir)
-            .select(col("doc_id"), relFileCol.as("src_file"), lit(0).as("gen"))
-            .write.mode("overwrite").parquet(s"$out/doc_files")
+            .select(col("doc_id"), relFileCol.as("src_file"))
         }
-        stage("pairs") {
+        stageFrame(Pairs) {
           nearDupFromHashed(readShingleIndex(spark, out),
               Some(readShingleDf(spark, out)), minJaccard, maxDf)
-            .withColumn("gen", lit(0))
-            .write.mode("overwrite").parquet(s"$out/pairs")
         }
-        stage("clusters") {
+        stageFrame(Clusters) {
           ConnectedComponents.clusters(spark,
               stagedPairs(spark, out).select("doc_a", "doc_b"))
             .toDF("doc_id", "cluster_id", "cluster_size")
-            .withColumn("gen", lit(0))
-            .write.mode("overwrite").parquet(s"$out/clusters")
         }
         // the winnowed-fingerprint SPAN surface (round-13): the same
         // stage discipline as the shingle side — a per-doc fingerprint
@@ -609,37 +665,28 @@ object TextDedup {
         // (substring spans, span doc stats, dedup rewrite, corpus v2)
         // then serve as a parquet read instead of re-winnowing the
         // corpus per call (~183 s of the round-12 sf100 tail)
-        stage("span_index") {
+        stageFrame(SpanIndex) {
           spanIndexFrame(graft.Tables.documents(spark, dir))
-            .withColumn("gen", lit(0))
-            .write.mode("overwrite").parquet(s"$out/span_index")
         }
-        stage("span_df") {
+        stageFrame(SpanDf) {
           readSpanIndex(spark, out)
             .groupBy("fp").agg(count(lit(1)).as("df"))
-            .write.mode("overwrite").parquet(s"$out/span_df")
         }
-        stage("spans") {
+        stageFrame(Spans) {
           spansFromIndex(readSpanIndex(spark, out), readSpanDf(spark, out),
               SpanK, SpanMinRun, SpanMaxDf)
-            .withColumn("gen", lit(0))
-            .write.mode("overwrite").parquet(s"$out/spans")
         }
         // the SCREENING index (round-13): content digests + MinHash
         // band buckets — the persisted index the incremental-screening
         // endpoint and the streaming screen MV probe. Both are pure
         // per-doc functions (no cross-doc coupling like dfs), so
         // maintenance is plain retract-and-reapply.
-        stage("doc_digests") {
+        stageFrame(DocDigests) {
           graft.Tables.documents(spark, dir)
-            .select(col("doc_id"), md5(col("text")).as("digest"),
-              lit(0).as("gen"))
-            .write.mode("overwrite").parquet(s"$out/doc_digests")
+            .select(col("doc_id"), md5(col("text")).as("digest"))
         }
-        stage("band_index") {
+        stageFrame(BandIndex) {
           bandsOf(minhashSignatures(graft.Tables.documents(spark, dir)))
-            .withColumn("gen", lit(0))
-            .write.mode("overwrite").parquet(s"$out/band_index")
         }
         // the per-doc VERDICT surface (round-14): digest, token count,
         // stopword quality, repetition metrics — everything the two
@@ -652,37 +699,30 @@ object TextDedup {
         // stage skips; only this stage runs. At
         // 100 TB that is the difference between one verdict pass and
         // re-shingling the corpus because the format grew a column.
-        stage("doc_verdicts") {
+        stageFrame(DocVerdicts) {
           graft.operators.TextAnalysis
             .docVerdictsFrame(graft.Tables.documents(spark, dir))
-            .withColumn("gen", lit(0))
-            .write.mode("overwrite").parquet(s"$out/doc_verdicts")
         }
         // the embedding pair graph derives FROM the just-staged probe
         // layout (read back, not the in-memory plan) — the corpus-sized
         // anchor assignment runs exactly once per staging, and every
         // later consumer (pairs endpoint, increment screen, clusters)
         // reads the partitioned layout instead of recomputing it
-        stage("emb_probe_layout") {
-          VectorOps.writeNearDupLayout(spark, dir, s"$out/emb_probe_layout",
+        stage(EmbProbeLayout) {
+          VectorOps.writeNearDupLayout(spark, dir, EmbProbeLayout.path(out),
             nLists = embNLists, withGen = true)
         }
-        stage("vec_files") {
+        stageFrame(VecFiles) {
           graft.Tables.embeddings(spark, dir)
-            .select(col("vec_id"), relFileCol.as("src_file"), lit(0).as("gen"))
-            .write.mode("overwrite").parquet(s"$out/vec_files")
+            .select(col("vec_id"), relFileCol.as("src_file"))
         }
-        stage("emb_pairs") {
-          VectorOps.nearDupPairsOverLayout(spark, s"$out/emb_probe_layout")
-            .withColumn("gen", lit(0))
-            .write.mode("overwrite").parquet(s"$out/emb_pairs")
+        stageFrame(EmbPairs) {
+          VectorOps.nearDupPairsOverLayout(spark, EmbProbeLayout.path(out))
         }
-        stage("emb_clusters") {
+        stageFrame(EmbClusters) {
           ConnectedComponents.clusters(spark,
               stagedEmbPairs(spark, out).select("vec_a", "vec_b"))
             .toDF("vec_id", "cluster_id", "cluster_size")
-            .withColumn("gen", lit(0))
-            .write.mode("overwrite").parquet(s"$out/emb_clusters")
         }
         true
       }
@@ -750,28 +790,18 @@ object TextDedup {
     s"$SpanK/$SpanW/$SpanMinRun/$SpanMaxDf"
 
   def stagedPairs(spark: SparkSession, art: String): DataFrame =
-    livePairRows(spark, art, "pairs", "doc_a", "doc_b")
-      .select("doc_a", "doc_b", "jaccard")
-
+    readSurface(spark, art, Pairs)
   def stagedClusters(spark: SparkSession, art: String): DataFrame =
-    liveRows(spark, art, "clusters", "doc_id")
-      .select("doc_id", "cluster_id", "cluster_size")
-
+    readSurface(spark, art, Clusters)
   /** Tombstone-resolved view of the staged span table — column-for-
     * column the output schema of [[substringSpans]] (modulo the
     * presentation sort). */
   def stagedSpans(spark: SparkSession, art: String): DataFrame =
-    livePairRows(spark, art, "spans", "doc_a", "doc_b")
-      .select("doc_a", "doc_b", "offset_delta", "shared_fps",
-        "span_start_a", "span_start_b", "span_chars")
-
+    readSurface(spark, art, Spans)
   private[graft] def stagedEmbPairs(spark: SparkSession, art: String): DataFrame =
-    livePairRows(spark, art, "emb_pairs", "vec_a", "vec_b")
-      .select("vec_a", "vec_b", "cosine")
-
+    readSurface(spark, art, EmbPairs)
   private[graft] def stagedEmbClusters(spark: SparkSession, art: String): DataFrame =
-    liveRows(spark, art, "emb_clusters", "vec_id")
-      .select("vec_id", "cluster_id", "cluster_size")
+    readSurface(spark, art, EmbClusters)
 
   /** [[dupClusters]] served from the staged artifact — a presentation
     * sort over a parquet read; the iteration already ran at stage time. */
@@ -887,7 +917,7 @@ object TextDedup {
                          maxDf: Int = SpanMaxDf): DataFrame =
     if (k == SpanK && w == SpanW && minRun == SpanMinRun &&
         maxDf == SpanMaxDf &&
-        artifactsCurrent(dir, art, None, Seq("tombstones", "spans")))
+        artifactsCurrent(dir, art, None, Seq(Tombstones, Spans)))
       stagedSpans(spark, art).orderBy("doc_a", "doc_b", "offset_delta")
     else substringSpans(spark, dir, k, w, minRun, maxDf)
 
@@ -897,7 +927,7 @@ object TextDedup {
     * span pipeline, so the threshold does not gate the route). */
   def spanDocStatsAuto(spark: SparkSession, dir: String, art: String,
                        longSpanChars: Int = 40): DataFrame =
-    if (artifactsCurrent(dir, art, None, Seq("tombstones", "spans")))
+    if (artifactsCurrent(dir, art, None, Seq(Tombstones, Spans)))
       spanDocStatsFrom(stagedSpans(spark, art), longSpanChars)
         .orderBy("doc_id")
     else spanDocStats(spark, dir, longSpanChars)
@@ -906,7 +936,7 @@ object TextDedup {
     * when current, always-run surgery tail. */
   def dedupRewriteAuto(spark: SparkSession, dir: String, art: String,
                        longSpanChars: Int = 40): DataFrame =
-    if (artifactsCurrent(dir, art, None, Seq("tombstones", "spans")))
+    if (artifactsCurrent(dir, art, None, Seq(Tombstones, Spans)))
       dedupRewriteFrom(spark, dir, stagedSpans(spark, art), longSpanChars)
     else dedupRewrite(spark, dir, longSpanChars)
 
@@ -1147,7 +1177,7 @@ object TextDedup {
                           minJaccard: Double = 0.5,
                           maxBucket: Int = Int.MaxValue): DataFrame =
     if (artifactsCurrent(dir, art, None,
-        Seq("tombstones", "band_index", "shingle_index")))
+        Seq(Tombstones, BandIndex, ShingleIndex)))
       minhashLshPairsStaged(spark, art, minJaccard, maxBucket)
     else minhashLshPairs(spark, dir, minJaccard, maxBucket)
 
@@ -1255,7 +1285,7 @@ object TextDedup {
                           minJaccard: Double = 0.5,
                           maxBucket: Int = Int.MaxValue): DataFrame =
     if (artifactsCurrent(dir, art, None,
-        Seq("tombstones", "doc_digests", "band_index", "shingle_index")))
+        Seq(Tombstones, DocDigests, BandIndex, ShingleIndex)))
       screenIncrementStaged(spark, art, minJaccard, maxBucket)
     else screenIncrement(spark, dir, minJaccard, maxBucket)
 

@@ -251,7 +251,7 @@ object TrainingMix {
   def buildCorpusV2Auto(spark: SparkSession, dir: String, art: String,
                         budget: Int = 256, nShards: Int = 4): DataFrame =
     if (TextDedup.artifactsCurrent(dir, art, None,
-        Seq("tombstones", "spans", "doc_verdicts")))
+        Seq(TextDedup.Tombstones, TextDedup.Spans, TextDedup.DocVerdicts)))
       corpusV2Tail(
         slimRepFromVerdicts(TextDedup.readDocVerdicts(spark, art)),
         TextDedup.spanDocStatsFrom(TextDedup.stagedSpans(spark, art), 40),

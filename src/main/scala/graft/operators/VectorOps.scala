@@ -301,18 +301,23 @@ object VectorOps {
     val lists = resolveLists(emb, nLists)
     val probes = probeAssignmentsFrom(emb, anchorsOf(emb, lists), nprobe)
     // `withGen` = the artifact-build form: rows carry the merge-on-read
-    // generation column ([[TextDedup.liveRows]]); standalone layouts
+    // generation column ([[TextDedup.readSurface]]); standalone layouts
     // (IVF search, streaming screens) stay gen-free
     (if (withGen) probes.withColumn("gen", lit(0)) else probes)
       .write.partitionBy("list_id").mode("overwrite").parquet(out)
-    // the layout's GEOMETRY is part of its definition, persisted like
-    // a real ANN index's (an insert never re-derives k from n — the
-    // sqrt schedule would move the anchor set under every consumer on
-    // each append). Incremental maintenance reads this to assign delta
-    // vectors against the SAME anchors; a full rebuild re-derives.
-    java.nio.file.Files.write(new java.io.File(out, "_GEOMETRY").toPath,
-      s"nLists=$lists\nnprobe=$nprobe".getBytes("UTF-8"))
+    writeLayoutGeometry(out, lists, nprobe)
   }
+
+  /** Pin a layout's geometry. The GEOMETRY is part of the layout's
+    * definition, persisted like a real ANN index's (an insert never
+    * re-derives k from n — the sqrt schedule would move the anchor set
+    * under every consumer on each append). Incremental maintenance
+    * reads it to assign delta vectors against the SAME anchors; a full
+    * rebuild re-derives. */
+  private[operators] def writeLayoutGeometry(layout: String, nLists: Long,
+                                             nprobe: Int): Unit =
+    java.nio.file.Files.write(new java.io.File(layout, "_GEOMETRY").toPath,
+      s"nLists=$nLists\nnprobe=$nprobe".getBytes("UTF-8"))
 
   /** The persisted layout geometry: (nLists, nprobe), or None for a
     * pre-geometry layout (forces full rebuild on increment). */
@@ -340,15 +345,13 @@ object VectorOps {
   private[operators] def readNearDupLayout(spark: SparkSession,
                                            layout: String): DataFrame = {
     val f = new java.io.File(layout)
-    val artifactCtx = f.getName == "emb_probe_layout" &&
+    val artifactCtx = f.getName == TextDedup.EmbProbeLayout.name &&
       f.getParentFile != null &&
       ArtifactManifest.read(f.getParentFile.toString).isDefined
-    val raw =
-      if (artifactCtx)
-        TextDedup.liveRows(spark, f.getParentFile.toString,
-          "emb_probe_layout", "vec_id")
-      else spark.read.parquet(layout)
-    raw.select(col("vec_id"), col("embedding"),
+    if (artifactCtx)
+      TextDedup.readSurface(spark, f.getParentFile.toString,
+        TextDedup.EmbProbeLayout)
+    else spark.read.parquet(layout).select(col("vec_id"), col("embedding"),
       col("list_id").cast("long").as("list_id"))
   }
 
@@ -430,8 +433,8 @@ object VectorOps {
   private[graft] def embPairsRoutable(spark: SparkSession, dir: String,
                                       art: String): Boolean =
     TextDedup.artifactsCurrent(dir, art) &&
-      readLayoutGeometry(s"$art/emb_probe_layout").exists { case (l, p) =>
-        p == 3 && l == resolveLists(Tables.embeddings(spark, dir), 0) }
+      readLayoutGeometry(TextDedup.EmbProbeLayout.path(art)).exists {
+        case (l, p) => p == 3 && l == resolveLists(Tables.embeddings(spark, dir), 0) }
 
   def nearDupPairsAuto(spark: SparkSession, dir: String, art: String,
                        minCosine: Double = EmbPairBuildMinCosine, nLists: Int = 0,
@@ -449,7 +452,8 @@ object VectorOps {
           .filter(col("cosine") >= minCosine)
           .orderBy("vec_a", "vec_b")
       else
-        nearDupPairsOverLayout(spark, s"$art/emb_probe_layout", minCosine)
+        nearDupPairsOverLayout(spark, TextDedup.EmbProbeLayout.path(art),
+          minCosine)
     else
       nearDupPairs(spark, dir, minCosine, nLists, nprobe)
 
@@ -471,7 +475,7 @@ object VectorOps {
       TextDedup.stagedEmbPairs(spark, art).orderBy("vec_a", "vec_b")
     else {
       TextDedup.writeDedupArtifacts(spark, dir, art)
-      nearDupPairsOverLayout(spark, s"$art/emb_probe_layout")
+      nearDupPairsOverLayout(spark, TextDedup.EmbProbeLayout.path(art))
     }
 
   /** [[screenIncrementOverLayout]] served ENTIRELY from the staged
@@ -521,10 +525,11 @@ object VectorOps {
                                 art: String,
                                 minCosine: Double = EmbPairBuildMinCosine): DataFrame =
     if (embPairsRoutable(spark, dir, art))
-      screenIncrementStaged(spark, s"$art/emb_probe_layout", minCosine)
+      screenIncrementStaged(spark, TextDedup.EmbProbeLayout.path(art), minCosine)
     else {
       TextDedup.writeDedupArtifacts(spark, dir, art)
-      screenIncrementOverLayout(spark, dir, s"$art/emb_probe_layout", minCosine)
+      screenIncrementOverLayout(spark, dir, TextDedup.EmbProbeLayout.path(art),
+        minCosine)
     }
 
   /** Incremental screening over the persisted layout — the embedding
@@ -696,9 +701,7 @@ object VectorOps {
     * [[TextDedup.dupClustersAuto]]. */
   def dupClustersAuto(spark: SparkSession, dir: String, art: String,
                       maxRounds: Int = 64): DataFrame =
-    if (maxRounds == 64 && TextDedup.artifactsCurrent(dir, art) &&
-        readLayoutGeometry(s"$art/emb_probe_layout").exists { case (l, p) =>
-          p == 3 && l == resolveLists(Tables.embeddings(spark, dir), 0) })
+    if (maxRounds == 64 && embPairsRoutable(spark, dir, art))
       dupClustersStaged(spark, art)
     else dupClusters(spark, dir, maxRounds)
 

@@ -38,17 +38,21 @@ object UsersPipes {
       coalesce(fromUnixTimestamp64Micro(col("updated_at")).cast("timestamp_ntz"),
         col("__timestamp")).as("updated_at"))
 
-  /** users_latest FINAL (users_latest.datasource ENGINE_VER updated_at +
-    * users_api_rmt.pipe:6-7): collapse to max updated_at per id, order by id. */
-  def usersApiRmt(spark: SparkSession, dir: String): DataFrame = {
+  /** users_latest FINAL (users_latest.datasource ENGINE_VER updated_at):
+    * collapse to max updated_at per id. The HTTP API serves it as the
+    * `users_latest__final` view the kit pipes query. */
+  def usersLatestFinal(spark: SparkSession, dir: String): DataFrame = {
     val latestLog = usersMv(usersRaw(spark, dir))
     Dedup.latestByKey(latestLog, Seq("id"), col("updated_at"),
         payload = latestLog.columns.filter(_ != "id").toSeq)
       .select("id", "name", "email", "address", "phone_number",
         "email_verified", "onboarded", "deleted", "event_timestamp", "lang",
         "created_at", "updated_at")
-      .orderBy("id")
   }
+
+  /** users_api_rmt.pipe:6-7: the FINAL view, ordered by id. */
+  def usersApiRmt(spark: SparkSession, dir: String): DataFrame =
+    usersLatestFinal(spark, dir).orderBy("id")
 
   /** MySQL-dialect variant (kits/users/mysql): timestamps arrive as
     * DateTime (no µs decode), no __deleted meta, __value raw message

@@ -523,15 +523,8 @@ final class ApiServer(spark: SparkSession, sfDir: String,
     val fixture = for (t <- Seq("flights_raw", "passengers_raw",
         "baggage_raw", "users_raw", "users_batch"))
       yield reg(t, graft.fixtures.CdcFixtures.read(spark, t, s"$fx/$t"))
-    val mv = graft.pipes.UsersPipes.usersMv(
-      graft.pipes.UsersPipes.usersRaw(spark, fx))
     val fin = reg("users_latest__final",
-      graft.operators.Dedup.latestByKey(mv, Seq("id"),
-          org.apache.spark.sql.functions.col("updated_at"),
-          mv.columns.filter(_ != "id").toSeq)
-        .select("id", "name", "email", "address", "phone_number",
-          "email_verified", "onboarded", "deleted", "event_timestamp",
-          "lang", "created_at", "updated_at"))
+      graft.pipes.UsersPipes.usersLatestFinal(spark, fx))
     viewsBuilt = true
     base ++ Seq(ev) ++ fixture :+ fin
   }

@@ -81,10 +81,53 @@ class DedupMaintenanceSpec extends SparkSpec {
     (partFiles(dir, "documents.parquet").find(!d0.contains(_)),
       partFiles(dir, "embeddings.parquet").find(!e0.contains(_)))
   }
-  private def writeBase(dir: String): Unit =
-    writeSlice(dir, baseDocs, baseEmbFixed)
   private def appendDelta(dir: String): Unit =
     writeSlice(dir, deltaDocs, deltaEmb)
+
+  /** Copy a directory tree, keeping every file's mtime. */
+  private def copyTree(from: String, to: String): Unit = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val src = Paths.get(from)
+    val walk = Files.walk(src)
+    try walk.forEach { p =>
+      val q = Paths.get(to).resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(q)
+      else Files.copy(p, q, StandardCopyOption.COPY_ATTRIBUTES)
+    } finally walk.close()
+  }
+
+  /** A base corpus and its full artifact build, made ONCE per suite
+    * (on first use) and copied for each test that starts from it. The
+    * copies keep every file's mtime: [[TextDedup.inputFiles]] compares
+    * them, so a copy that lost them would turn an expected
+    * "incremental" path into "full" — each test asserts its copy is
+    * current ("skip") before changing it. `write` lays the corpus out
+    * as slices and returns each slice's (doc, emb) part file. */
+  private final class SharedBase(write: String => Seq[(Option[java.io.File],
+                                                      Option[java.io.File])]) {
+    lazy val (data, art, slices) = {
+      val d = tmp("dm_base_data"); val a = tmp("dm_base_art")
+      val sl = write(d)
+      assert(DedupMaintenance.update(spark, d, a) == "full")
+      (d, a, sl)
+    }
+    /** A fresh (data, art) copy, its slices' part files mapped into it. */
+    def copy(): (String, String, Seq[(Option[java.io.File], Option[java.io.File])]) = {
+      val d = tmp("dm_data"); val a = tmp("dm_art")
+      copyTree(data, d); copyTree(art, a)
+      def moved(f: Option[java.io.File]) = f.map(x => new java.io.File(d,
+        new java.io.File(data).toPath.relativize(x.toPath).toString))
+      (d, a, slices.map { case (x, y) => (moved(x), moved(y)) })
+    }
+  }
+  /** The base corpus as one slice. */
+  private lazy val oneSlice = new SharedBase(d =>
+    Seq(writeSlice(d, baseDocs, baseEmbFixed)))
+  /** The base corpus as two slices (ids 0-19, 20-39), so a
+    * copy-on-write change can touch one file of each table. */
+  private lazy val twoSlices = new SharedBase(d => Seq(
+    writeSlice(d, baseDocs.take(20), baseEmbFixed.take(20)),
+    writeSlice(d, baseDocs.drop(20), baseEmbFixed.drop(20))))
 
   /** Copy-on-write: REPLACE one existing part file's content in place
     * (same path, new bytes) — the lakehouse update/delete shape the
@@ -117,42 +160,18 @@ class DedupMaintenanceSpec extends SparkSpec {
   /** Every artifact surface compared between two staged dirs through
     * the LIVE (tombstone-resolved) views — the only contract v4 makes:
     * physical layout may differ (appends + tombstones vs fresh build),
-    * what readers see may not. */
+    * what readers see may not. The tombstone table is the mechanism,
+    * not a served surface, so it is the one entry not compared. */
   private def assertArtifactsEqual(a: String, b: String): Unit = {
-    assert(rows(TextDedup.stagedPairs(spark, a)) ==
-      rows(TextDedup.stagedPairs(spark, b)), "pairs differ")
-    assert(rows(TextDedup.stagedClusters(spark, a)) ==
-      rows(TextDedup.stagedClusters(spark, b)), "clusters differ")
-    assert(rows(TextDedup.stagedEmbPairs(spark, a)) ==
-      rows(TextDedup.stagedEmbPairs(spark, b)), "emb_pairs differ")
-    assert(rows(TextDedup.stagedEmbClusters(spark, a)) ==
-      rows(TextDedup.stagedEmbClusters(spark, b)), "emb_clusters differ")
-    def layoutRows(d: String) =
-      rows(TextDedup.liveRows(spark, d, "emb_probe_layout", "vec_id")
-        .selectExpr("vec_id", "cast(list_id as long) as list_id"))
-    assert(layoutRows(a) == layoutRows(b), "probe layout assignment differs")
-    assert(rows(TextDedup.readShingleDf(spark, a)) ==
-      rows(TextDedup.readShingleDf(spark, b)), "summed shingle_df differs")
-    assert(rows(TextDedup.readDocStats(spark, a)) ==
-      rows(TextDedup.readDocStats(spark, b)), "doc_stats differs")
-    assert(rows(TextDedup.readShingleIndex(spark, a)) ==
-      rows(TextDedup.readShingleIndex(spark, b)), "shingle_index differs")
-    assert(rows(TextDedup.readDocFiles(spark, a)) ==
-      rows(TextDedup.readDocFiles(spark, b)), "doc_files differs")
-    assert(rows(TextDedup.readVecFiles(spark, a)) ==
-      rows(TextDedup.readVecFiles(spark, b)), "vec_files differs")
-    assert(rows(TextDedup.stagedSpans(spark, a)) ==
-      rows(TextDedup.stagedSpans(spark, b)), "spans differ")
-    assert(rows(TextDedup.readSpanDf(spark, a)) ==
-      rows(TextDedup.readSpanDf(spark, b)), "summed span_df differs")
-    assert(rows(TextDedup.readSpanIndex(spark, a)) ==
-      rows(TextDedup.readSpanIndex(spark, b)), "span_index differs")
-    assert(rows(TextDedup.readDocDigests(spark, a)) ==
-      rows(TextDedup.readDocDigests(spark, b)), "doc_digests differs")
-    assert(rows(TextDedup.readBandIndex(spark, a)) ==
-      rows(TextDedup.readBandIndex(spark, b)), "band_index differs")
-    assert(rows(TextDedup.readDocVerdicts(spark, a)) ==
-      rows(TextDedup.readDocVerdicts(spark, b)), "doc_verdicts differs")
+    // pinned, so no surface can drop out of the comparison unnoticed
+    assert(TextDedup.artifactSurfaces.map(_.name) == Seq("tombstones",
+      "shingle_index", "shingle_df", "doc_stats", "doc_files", "pairs",
+      "clusters", "span_index", "span_df", "spans", "doc_digests",
+      "band_index", "doc_verdicts", "emb_probe_layout", "vec_files",
+      "emb_pairs", "emb_clusters"))
+    for (s <- TextDedup.artifactSurfaces if s != TextDedup.Tombstones)
+      assert(rows(TextDedup.readSurface(spark, a, s)) ==
+        rows(TextDedup.readSurface(spark, b, s)), s"${s.name} differs")
   }
 
   /** Full rebuild of the CURRENT data dir into a fresh artifact dir at
@@ -168,9 +187,8 @@ class DedupMaintenanceSpec extends SparkSpec {
 
   test("incremental(base+delta) equals full-rebuild(base∪delta) on every " +
       "artifact, then skips") {
-    val data = tmp("dm_data"); val art = tmp("dm_art")
-    writeBase(data)
-    assert(DedupMaintenance.update(spark, data, art) == "full")
+    val (data, art, _) = oneSlice.copy()
+    assert(DedupMaintenance.update(spark, data, art) == "skip")
     appendDelta(data)
     assert(DedupMaintenance.update(spark, data, art) == "incremental")
     assert(TextDedup.artifactsCurrent(data, art))
@@ -195,13 +213,17 @@ class DedupMaintenanceSpec extends SparkSpec {
     assert(DedupMaintenance.update(spark, data, art) == "skip")
   }
 
+  test("a full build writes exactly the surface table's directories under " +
+      "<out>, plus _MANIFEST") {
+    assert(new java.io.File(oneSlice.art).list().toSet ==
+      TextDedup.artifactSurfaces.map(_.name).toSet + "_MANIFEST")
+  }
+
   test("copy-on-write UPDATE: rewritten rows retract and reapply — pairs " +
       "appear AND disappear, clusters merge AND split, ≡ full rebuild") {
-    val data = tmp("dm_u_data"); val art = tmp("dm_u_art")
     // two doc files / two emb files so the update touches only one
-    val (docA, _) = writeSlice(data, baseDocs.take(20), baseEmbFixed.take(20))
-    val (_, embB) = writeSlice(data, baseDocs.drop(20), baseEmbFixed.drop(20))
-    assert(DedupMaintenance.update(spark, data, art) == "full")
+    val (data, art, Seq((docA, _), (_, embB))) = twoSlices.copy()
+    assert(DedupMaintenance.update(spark, data, art) == "skip")
     // sanity: the base pairs exist before the update
     assert(TextDedup.stagedPairs(spark, art).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet == Set((5L, 6L)))
@@ -269,11 +291,9 @@ class DedupMaintenanceSpec extends SparkSpec {
 
   test("an mtime-touched (content-identical) file takes the incremental " +
       "retract-and-reapply path and stays rebuild-identical") {
-    val data = tmp("dm_m_data"); val art = tmp("dm_m_art")
-    val (docA, _) = writeSlice(data, baseDocs.take(20), baseEmbFixed.take(20))
-    writeSlice(data, baseDocs.drop(20), baseEmbFixed.drop(20))
+    val (data, art, Seq((docA, _), _)) = twoSlices.copy()
     val baseFile = docA.get
-    assert(DedupMaintenance.update(spark, data, art) == "full")
+    assert(DedupMaintenance.update(spark, data, art) == "skip")
     assert(baseFile.setLastModified(baseFile.lastModified() + 60000))
     // content provably unchanged is indistinguishable from an update:
     // the file's docs retract and reapply (to the same state)
@@ -372,10 +392,8 @@ class DedupMaintenanceSpec extends SparkSpec {
 
   test("compaction folds tombstones away: live views identical, gen reset, " +
       "artifacts still current") {
-    val data = tmp("dm_k_data"); val art = tmp("dm_k_art")
-    val (docA, _) = writeSlice(data, baseDocs.take(20), baseEmbFixed.take(20))
-    writeSlice(data, baseDocs.drop(20), baseEmbFixed.drop(20))
-    assert(DedupMaintenance.update(spark, data, art) == "full")
+    val (data, art, Seq((docA, _), _)) = twoSlices.copy()
+    assert(DedupMaintenance.update(spark, data, art) == "skip")
     rewriteFile(docA.get, baseDocs.take(20).map {
       case (6L, _) => 6L -> words("solo6"); case o => o
     }.toDF("doc_id", "text"))
@@ -407,14 +425,12 @@ class DedupMaintenanceSpec extends SparkSpec {
 
   test("auto-compaction: a long increment chain keeps the read-path " +
       "generation count bounded; _LAST_INC records it; identity preserved") {
-    val data = tmp("dm_ac_data"); val art = tmp("dm_ac_art")
-    val (docA, _) = writeSlice(data, baseDocs.take(20), baseEmbFixed.take(20))
-    writeSlice(data, baseDocs.drop(20), baseEmbFixed.drop(20))
+    val (data, art, Seq((docA, _), _)) = twoSlices.copy()
     // bytes-ratio signal off: at toy scale parquet overhead makes it
     // meaningless — this test pins the GENERATION-count signal
     def upd() = DedupMaintenance.update(spark, data, art,
       autoCompactMaxGen = 2, autoCompactDeadFrac = 0)
-    assert(upd() == "full")
+    assert(upd() == "skip")
     val target = docA.get
     for (round <- 1 to 4) {
       rewriteFile(target, baseDocs.take(20).map {
@@ -435,12 +451,10 @@ class DedupMaintenanceSpec extends SparkSpec {
     assert(upd() == "skip")
   }
 
-  test("_TOMBSTONES_CLEAN marker: present after build/compact (readers skip " +
-      "the probe entirely), absent the moment an increment journals") {
-    val data = tmp("dm_cl_data"); val art = tmp("dm_cl_art")
-    val (docA, _) = writeSlice(data, baseDocs.take(20), baseEmbFixed.take(20))
-    writeSlice(data, baseDocs.drop(20), baseEmbFixed.drop(20))
-    assert(DedupMaintenance.update(spark, data, art) == "full")
+  test("manifest tombstones_clean: set after build/compact (readers skip " +
+      "the probe entirely), cleared the moment an increment writes tombstones") {
+    val (data, art, Seq((docA, _), _)) = twoSlices.copy()
+    assert(DedupMaintenance.update(spark, data, art) == "skip")
     def marked = manifest(art).tombstonesClean
     assert(marked, "fresh build must mark clean")
     // the marker short-circuits BEFORE any tombstone read: with the
@@ -481,9 +495,8 @@ class DedupMaintenanceSpec extends SparkSpec {
 
   test("a crashed increment (journal present) forces the full-rebuild path " +
       "and marks the artifacts stale") {
-    val data = tmp("dm_j_data"); val art = tmp("dm_j_art")
-    writeBase(data)
-    assert(DedupMaintenance.update(spark, data, art) == "full")
+    val (data, art, _) = oneSlice.copy()
+    assert(DedupMaintenance.update(spark, data, art) == "skip")
     appendDelta(data)
     tamperManifest(art)(_.copy(pending = true))
     assert(!TextDedup.artifactsCurrent(data, art),
@@ -495,9 +508,8 @@ class DedupMaintenanceSpec extends SparkSpec {
 
   test("an id collision in a NEW file while the old carrier is untouched " +
       "(two live versions) is not resolvable: full rebuild") {
-    val data = tmp("dm_c_data"); val art = tmp("dm_c_art")
-    writeBase(data)
-    assert(DedupMaintenance.update(spark, data, art) == "full")
+    val (data, art, _) = oneSlice.copy()
+    assert(DedupMaintenance.update(spark, data, art) == "skip")
     Seq((3L, vec(777), 0)).toDF("vec_id", "embedding", "label")
       .write.mode("append").parquet(s"$data/embeddings.parquet")
     assert(DedupMaintenance.update(spark, data, art) == "full")
@@ -506,11 +518,9 @@ class DedupMaintenanceSpec extends SparkSpec {
   test("an update MOVING an anchor vector (vec_id < nLists) is absorbed " +
       "incrementally: affected assignments re-probe, pairs follow the new " +
       "anchor, ≡ full rebuild") {
-    val data = tmp("dm_a_data"); val art = tmp("dm_a_art")
-    val (_, embA) = writeSlice(data, baseDocs.take(20), baseEmbFixed.take(20))
-    writeSlice(data, baseDocs.drop(20), baseEmbFixed.drop(20))
+    val (data, art, Seq((_, embA), _)) = twoSlices.copy()
     assert(DedupMaintenance.update(spark, data, art,
-      autoCompactMaxGen = 0, autoCompactDeadFrac = 0) == "full")
+      autoCompactMaxGen = 0, autoCompactDeadFrac = 0) == "skip")
     // vec 3 sits in the anchor range (nLists >= 8 by the schedule):
     // move it right next to vec 20 — under the new anchor frame the
     // (20, 39) near-pair's neighborhood must re-probe into list 3 and
@@ -533,11 +543,9 @@ class DedupMaintenanceSpec extends SparkSpec {
 
   test("a DELETED anchor vector is absorbed incrementally: its list's " +
       "members re-probe among the remaining anchors, ≡ full rebuild") {
-    val data = tmp("dm_ad_data"); val art = tmp("dm_ad_art")
-    val (_, embA) = writeSlice(data, baseDocs.take(20), baseEmbFixed.take(20))
-    writeSlice(data, baseDocs.drop(20), baseEmbFixed.drop(20))
+    val (data, art, Seq((_, embA), _)) = twoSlices.copy()
     assert(DedupMaintenance.update(spark, data, art,
-      autoCompactMaxGen = 0, autoCompactDeadFrac = 0) == "full")
+      autoCompactMaxGen = 0, autoCompactDeadFrac = 0) == "skip")
     rewriteFile(embA.get,
       baseEmbFixed.take(20).filterNot(_._1 == 3L)
         .toDF("vec_id", "embedding", "label"))
@@ -545,7 +553,7 @@ class DedupMaintenanceSpec extends SparkSpec {
       autoCompactMaxGen = 0, autoCompactDeadFrac = 0) == "incremental")
     // the deleted anchor's rows (own id and any member of list 3) are
     // gone from the live layout
-    assert(TextDedup.liveRows(spark, art, "emb_probe_layout", "vec_id")
+    assert(TextDedup.readSurface(spark, art, TextDedup.EmbProbeLayout)
       .filter(col("vec_id") === 3L).isEmpty)
     assertEqualsFreshRebuild(data, art)
   }

@@ -39,5 +39,4 @@ rm -f /root/repo/target/graft-run.lock
 SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-100g}" \
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
 SPARK_GRAFT_SHUFFLE="${SPARK_GRAFT_SHUFFLE:-auto}" \
-SPARK_GRAFT_INC_DEBUG=1 \
 sbt -batch "runMain graft.tools.IncAtScale $DATA $ART $PERMILLE $ROUNDS $MAXGEN"
