@@ -947,7 +947,7 @@ object DedupMaintenance {
       val geometry =
         if (s.kind == TextDedup.ProbeLayout) VectorOps.readLayoutGeometry(s.path(out))
         else None
-      swapIn(s, s.path(out),
+      swapIn(out, s,
         if (s == Tombstones) TextDedup.emptyTombstones(spark)
         else TextDedup.readSurface(spark, out, s))
       for ((l, p) <- geometry) VectorOps.writeLayoutGeometry(s.path(out), l, p)
@@ -964,7 +964,8 @@ object DedupMaintenance {
     * window (a crash mid-swap → pending → full rebuild). A direct
     * overwrite would be worse: Spark deletes the target before the
     * (lazy) plan reads it. */
-  private def swapIn(s: Surface, path: String, df: DataFrame): Unit = {
+  private def swapIn(out: String, s: Surface, df: DataFrame): Unit = {
+    val path = s.path(out)
     val tmp = path + "__new"
     TextDedup.writeSurface(df, s, tmp, 0, "overwrite")
     graft.sources.Layout.deleteRec(new java.io.File(path))
