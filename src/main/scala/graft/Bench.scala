@@ -1,10 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
-/** Timing sweep of the query registry:
-  * `runMain graft.Bench [<sfDir> [<query>...]]`. With no arguments it
-  * times every registered query over `SPARK_GRAFT_SF_DIR` (default
-  * `/root/testdata/sf0.1`); trailing query names restrict the sweep to
-  * those queries, for iterating on one query's cost. */
+/** Timing sweep of the query registry over `SPARK_GRAFT_SF_DIR`:
+  * `runMain graft.Bench [<query>...]`. With no arguments it times every
+  * registered query; query names restrict the sweep to those queries,
+  * for iterating on one query's cost. */
 object Bench {
   /** GC quiesce run BEFORE each timed query (outside the measured
     * window) so a heavy neighbor's allocation debt cannot land in the
@@ -13,9 +12,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     RunLock.acquireOrDie("Bench")
-    val sfDir = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val names = args.drop(1).toSet
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val names = args.toSet
     // an unknown name must abort, not time a NoSuchElementException as
     // a 0.00 s no-op (the round-6 silent-failure lesson)
     val unknown = names.filterNot(SparkEntry.queries.contains)
