@@ -85,24 +85,20 @@ final class ApiServer(spark: SparkSession, sfDir: String,
 
   def start(): Int = { server.start(); server.getAddress.getPort }
 
-  /** Drain, then tear down: the server stops accepting and waits for
-    * in-flight exchanges to answer, the pool finishes its handlers, and
-    * only then are the serving views those handlers read dropped. Each
+  /** Drain: the server stops accepting and waits for in-flight
+    * exchanges to answer, then the pool finishes its handlers. Each
     * wait is bounded by `ApiServer.DrainSeconds`. */
   def stop(): Unit = {
     server.stop(ApiServer.DrainSeconds)
     pool.shutdown()
     pool.awaitTermination(ApiServer.DrainSeconds, java.util.concurrent.TimeUnit.SECONDS)
-    if (viewsBuilt)
-      servingViews.foreach(n =>
-        spark.catalog.dropGlobalTempView(s"graft_serving_${viewTag}_$n"))
   }
 
   /** One catch discipline for every handler. NOTE: callers must not
     * `return` inside `body` — a non-local return from the closure
     * would be swallowed by the Throwable arm as a 500. An
     * AnalysisException reaching THIS handler is a server-side defect
-    * (e.g. a registry query referencing a dropped serving view) and
+    * (e.g. a registry query over a missing data dir) and
     * is logged as a 500; analysis failures caused by CLIENT input go
     * through [[clientSql]] at the sites where the SQL or params are
     * client-supplied, which remaps them to 400. */
@@ -125,8 +121,8 @@ final class ApiServer(spark: SparkSession, sfDir: String,
     * pipe's text, template params, a `k=-1` that only surfaces at
     * Spark's LIMIT analysis). Wrapping exactly these sites — instead
     * of mapping every AnalysisException in [[guarded]] — keeps a
-    * genuine server defect on the read path (a registry query against
-    * a stale view) as a logged 500 rather than silently blaming the
+    * genuine server defect on the read path (a registry query over a
+    * missing input) as a logged 500 rather than silently blaming the
     * client. */
   private def clientSql[A](body: => A): A =
     try body catch {
@@ -195,7 +191,7 @@ final class ApiServer(spark: SparkSession, sfDir: String,
     * `GET /v0/datafiles` to list. Write verbs require a workspace-admin
     * token (a `*` grant — the reference's admin token manages datafiles
     * and tokens, tb_functions.py:321-354). A POSTed pipe is parsed,
-    * ANALYZED against the serving views (bad SQL 400s at push time, not
+    * ANALYZED in the serving session (bad SQL 400s at push time, not
     * first fetch), its TOKEN declarations become live bearer grants, and
     * it serves immediately at `/v0/pipes/{name}` in every format. */
   private def handleDatafiles(ex: HttpExchange): Unit = guarded(ex) {
@@ -235,9 +231,9 @@ final class ApiServer(spark: SparkSession, sfDir: String,
             val sql = nodes.map(_.sql).mkString("\n")
             val placeholders = ChSqlTranslator.templateParams(sql).map {
               case (p, t) => p -> ApiServer.placeholderFor(t) }
-            clientSql(PipeRunner.runNodes(servingSession(), nodes, placeholders))
+            clientSql(PipeRunner.runNodes(serving, nodes, placeholders))
             if (placeholders.nonEmpty)
-              try clientSql(PipeRunner.runNodes(servingSession(), nodes))
+              try clientSql(PipeRunner.runNodes(serving, nodes))
               catch {
                 case e: IllegalArgumentException
                   if String.valueOf(e.getMessage)
@@ -248,7 +244,7 @@ final class ApiServer(spark: SparkSession, sfDir: String,
             // would silently take the `{% else %}` branch with a 200
             val pushed = ApiServer.Pipe(ChSqlTranslator.declaredParams(sql),
               clientShaped = true,
-              params => PipeRunner.runNodes(servingSession(), nodes, params))
+              params => PipeRunner.runNodes(serving, nodes, params))
             val declared = ApiServer.tokensFromPipes(Seq(pipeName -> body))
             // a REVOKED name stays dead on a datafile push: locally
             // the token NAME is the secret, so re-enabling the
@@ -499,45 +495,26 @@ final class ApiServer(spark: SparkSession, sfDir: String,
   private def liveTokens: Map[String, Set[String]] =
     merge(constructorTokens, dynamicTokens)
 
-  /** The serving views, analyzed ONCE and published as global temp
-    * views (visible to every child session): the harness star schema
-    * under its table names, and the CDC fixture log's datasource tables
-    * (raw logs + the users FINAL view + the copy-job snapshot — the
-    * views the reference kit pipes query). Building these per request
-    * would pay ~15 parquet schema resolutions (driver footer I/O) plus
-    * the users-MV dedup plan on every dynamic-pipe fetch. */
-  // per-instance namespace: two servers over different sfDirs share the
-  // one global_temp catalog, so unprefixed names would cross-wire them
-  private val viewTag = ApiServer.tagCounter.incrementAndGet()
-  @volatile private var viewsBuilt = false
-
-  private lazy val servingViews: Seq[String] = {
-    def reg(name: String, df: DataFrame): String = {
-      df.createOrReplaceGlobalTempView(s"graft_serving_${viewTag}_$name"); name
-    }
-    val base = for (t <- Seq("region", "nation", "customer", "supplier",
-        "part", "orders", "lineitem", "documents", "embeddings"))
-      yield reg(t, spark.read.parquet(s"$sfDir/$t.parquet"))
-    val ev = reg("events", graft.Tables.events(spark, sfDir))
-    val fx = graft.SparkEntry.fixtureDir(spark)
-    val fixture = for (t <- Seq("flights_raw", "passengers_raw",
-        "baggage_raw", "users_raw", "users_batch"))
-      yield reg(t, graft.fixtures.CdcFixtures.read(spark, t, s"$fx/$t"))
-    val fin = reg("users_latest__final",
-      graft.pipes.UsersPipes.usersLatestFinal(spark, fx))
-    viewsBuilt = true
-    base ++ Seq(ev) ++ fixture :+ fin
-  }
-
-  /** A child session per request (own temp-view namespace — concurrent
-    * pipes with colliding node names cannot cross-talk) that aliases
-    * the cached [[servingViews]] under their bare names: per-request
-    * cost is a few catalog entries, not plan/schema rebuilds. */
-  private def servingSession(): SparkSession = {
+  /** The session every pushed pipe runs in, built once per server. It
+    * holds the serving tables as temp views under their bare names: the
+    * harness star schema, `events`, and the CDC fixture log's datasource
+    * tables (raw logs, the users FINAL view and the copy-job snapshot —
+    * the tables the reference kit pipes query). A pipe registers no view
+    * of its own ([[PipeRunner.runNodes]] runs it as one statement), so
+    * concurrent fetches share this session without cross-talk, and no
+    * fetch pays the schema resolutions or the users-MV plan again. */
+  private lazy val serving: SparkSession = {
     val s = spark.newSession()
-    for (n <- servingViews)
-      s.sql(s"CREATE OR REPLACE TEMPORARY VIEW $n AS " +
-        s"SELECT * FROM global_temp.graft_serving_${viewTag}_$n")
+    for (t <- Seq("region", "nation", "customer", "supplier",
+        "part", "orders", "lineitem", "documents", "embeddings"))
+      s.read.parquet(s"$sfDir/$t.parquet").createOrReplaceTempView(t)
+    graft.Tables.events(s, sfDir).createOrReplaceTempView("events")
+    val fx = graft.SparkEntry.fixtureDir(spark)
+    for (t <- Seq("flights_raw", "passengers_raw", "baggage_raw",
+        "users_raw", "users_batch"))
+      graft.fixtures.CdcFixtures.read(s, t, s"$fx/$t").createOrReplaceTempView(t)
+    graft.pipes.UsersPipes.usersLatestFinal(s, fx)
+      .createOrReplaceTempView("users_latest__final")
     s
   }
 
@@ -599,8 +576,6 @@ object ApiServer {
     * declared name IS the bearer credential. Several pipes can share
     * one token (the kits' "Dashboard_Read"). */
   private val TokenRe = """TOKEN\s+"([^"]+)"\s+READ""".r
-
-  private val tagCounter = new java.util.concurrent.atomic.AtomicInteger()
 
   /** A servable pipe: the request params it declares, whether its SQL or
     * params come from the client (analysis errors are then the client's

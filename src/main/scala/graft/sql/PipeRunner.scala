@@ -2,12 +2,18 @@ package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Executes a reference `.pipe` file on this engine: each NODE's SQL is
-  * translated by [[ChSqlTranslator]] and registered as a temp view under
-  * the node's name (node references inline naturally — SURVEY §3.1
-  * step 3); the last node is the endpoint result. Cross-pipe references
+/** Executes a reference `.pipe` file on this engine as ONE Spark SQL
+  * statement: each NODE's SQL is translated by [[ChSqlTranslator]] and
+  * becomes a CTE under the node's name, and the statement selects from
+  * the last node (the endpoint). So node references inline as
+  * subqueries, as in the reference (SURVEY §3.1 step 3), and a pipe's
+  * node names are scoped to its statement: no view is registered, and
+  * concurrent pipes whose nodes share names cannot see each other's.
+  * A node named after the table it reads (`WITH t AS (… FROM t)`)
+  * reads the outer table. Cross-pipe references
   * (active_vs_missed_flights.pipe:10-12) resolve to temp views the
-  * caller registers — typically by running the referenced pipe first.
+  * caller registers — typically by running the referenced pipe first
+  * and registering its result.
   */
 object PipeRunner {
 
@@ -39,9 +45,8 @@ object PipeRunner {
     nodes.result()
   }
 
-  /** Run a pipe file's nodes in order; returns the last node's frame.
-    * Earlier nodes stay registered as temp views (so a later call can
-    * use this pipe's endpoint name: register the result yourself). */
+  /** Run a pipe file; returns the last node's frame. To reference this
+    * pipe from another one, register the result under its name. */
   def run(spark: SparkSession, pipeFile: java.io.File,
           params: Map[String, String] = Map.empty,
           asOf: Option[String] = None): DataFrame = {
@@ -57,18 +62,18 @@ object PipeRunner {
                params: Map[String, String] = Map.empty,
                asOf: Option[String] = None): DataFrame = {
     require(nodes.nonEmpty, "no SQL nodes in pipe")
-    nodes.map { n =>
-      val df = dedupColumns(spark.sql(ChSqlTranslator.translate(n.sql, params, asOf)))
-      df.createOrReplaceTempView(n.name)
-      df
-    }.last
+    def name(n: Node) = "`" + n.name.replace("`", "``") + "`"
+    val ctes = nodes.map(n =>
+      s"${name(n)} AS (\n${ChSqlTranslator.translate(n.sql, params, asOf)}\n)")
+    dedupColumns(spark.sql(
+      ctes.mkString("WITH ", ",\n", s"\nSELECT * FROM ${name(nodes.last)}")))
   }
 
   /** CH tolerates duplicate result-column names and the reference's copy
     * pipe uses that to restamp a column (`SELECT *, x AS batch_max_updated`,
     * users_batch_copy.pipe:66 — the target table is written by name and
-    * the last occurrence wins). Mirror it: keep the LAST occurrence of
-    * each duplicated name. */
+    * the last occurrence wins). Mirror it on the endpoint's columns:
+    * keep the LAST occurrence of each duplicated name. */
   private def dedupColumns(df: DataFrame): DataFrame = {
     val cols = df.columns
     if (cols.distinct.length == cols.length) df

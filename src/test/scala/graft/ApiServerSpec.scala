@@ -289,6 +289,54 @@ class ApiServerSpec extends SparkSpec {
       .exists(_.group(1).toInt > 0), fetched.body())
   }
 
+  test("pushed pipes whose nodes share names stay isolated under concurrent " +
+      "fetches, and a last node's ORDER BY … DESC order is kept") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    def pipe(n0: String, endpoint: String) =
+      s"""NODE n0
+         |SQL >
+         |    $n0
+         |
+         |NODE endpoint
+         |SQL >
+         |    $endpoint
+         |""".stripMargin
+    val pipes = Seq(
+      "iso_by_status" -> pipe(
+        "SELECT o_orderstatus AS k, count() AS n FROM orders GROUP BY o_orderstatus",
+        "SELECT * FROM n0 ORDER BY k"),
+      "iso_by_region" -> pipe(
+        "SELECT n_regionkey AS k, count() AS n FROM nation GROUP BY n_regionkey",
+        "SELECT k, n FROM n0 ORDER BY k DESC"))
+    for ((name, text) <- pipes) {
+      val r = post(s"/v0/datafiles?name=$name.pipe", Some("admin_token"), text)
+      assert(r.statusCode() == 200, r.body())
+    }
+    def fetch(name: String) = {
+      val r = get(s"/v0/pipes/$name.json", Some("admin_token"))
+      assert(r.statusCode() == 200, r.body())
+      r.body()
+    }
+    val sequential = pipes.map { case (name, _) => name -> fetch(name) }.toMap
+    assert(sequential("iso_by_status") != sequential("iso_by_region"))
+    val names = Seq.tabulate(16)(i => pipes(i % 2)._1)
+    val bodies = Await.result(
+      Future.sequence(names.map(n => Future(n -> fetch(n)))), 2.minutes)
+    for ((name, body) <- bodies) assert(body == sequential(name), name)
+    import scala.jdk.CollectionConverters._
+    val ks = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(sequential("iso_by_region")).get("data").elements().asScala
+      .map(_.get("k").asInt()).toSeq
+    assert(ks.length > 1 && ks == ks.sorted.reverse, ks)
+    for ((name, _) <- pipes) http.send(
+      HttpRequest.newBuilder(URI.create(
+          s"http://127.0.0.1:$port/v0/datafiles/$name.pipe"))
+        .header("Authorization", "Bearer admin_token").DELETE().build(),
+      HttpResponse.BodyHandlers.ofString())
+  }
+
   test("control plane: re-POSTing a pipe ROTATES its token grants — a TOKEN " +
       "line removed in v2 cannot keep reading v2 via v1's grant") {
     val v1 =
@@ -622,7 +670,7 @@ class ApiServerSpec extends SparkSpec {
   test("datasource listing tags dir-backed vs definition-only; definition-only " +
       "reads say so instead of a bare 404") {
     import spark.implicits._
-    val qDir = java.nio.file.Files.createTempDirectory("api_ds_tags").toString
+    val qDir = tempDir("api_ds_tags")
     Seq((1L, "x")).toDF("event_id", "note")
       .coalesce(1).write.mode("overwrite").parquet(qDir)
     val srv = new ApiServer(spark, sf, Map("boss" -> Set("*")),
@@ -654,7 +702,7 @@ class ApiServerSpec extends SparkSpec {
 
   test("quarantine datasource: read and truncate over HTTP (tb_functions.py:141-142)") {
     import spark.implicits._
-    val qDir = java.nio.file.Files.createTempDirectory("api_quarantine").toString
+    val qDir = tempDir("api_quarantine")
     Seq((3L, "bad row"), (4L, "worse row")).toDF("event_id", "note")
       .coalesce(1).write.mode("overwrite").parquet(qDir)
     val srv = new ApiServer(spark, sf, Map("boss" -> Set("*"),
@@ -720,7 +768,7 @@ class ApiServerSpec extends SparkSpec {
     import spark.implicits._
     // a private data dir this test owns (the shared sf dir's artifact
     // status depends on sibling tests' builds)
-    val data = java.nio.file.Files.createTempDirectory("api_dm_data").toString
+    val data = tempDir("api_dm_data")
     Tables.documents(spark, sf).filter("doc_id < 300")
       .write.parquet(s"$data/documents.parquet")
     Tables.embeddings(spark, sf).filter("vec_id < 300")
@@ -775,7 +823,7 @@ class ApiServerSpec extends SparkSpec {
       "and POST compact bounds the generation, all over HTTP; admin-gated; " +
       "status honors the artifact's own staging params") {
     import spark.implicits._
-    val data = java.nio.file.Files.createTempDirectory("api_dmx_data").toString
+    val data = tempDir("api_dmx_data")
     Tables.documents(spark, sf).filter("doc_id < 300")
       .write.parquet(s"$data/documents.parquet")
     Tables.embeddings(spark, sf).filter("vec_id < 300")
@@ -831,7 +879,7 @@ class ApiServerSpec extends SparkSpec {
       "actuators keeps the generation bounded (compaction fires inside " +
       "update), stays current, and ends identical to a fresh rebuild") {
     import spark.implicits._
-    val data = java.nio.file.Files.createTempDirectory("api_soak_data").toString
+    val data = tempDir("api_soak_data")
     Tables.documents(spark, sf).filter("doc_id < 200")
       .write.parquet(s"$data/documents.parquet")
     Tables.embeddings(spark, sf).filter("vec_id < 200")
@@ -875,7 +923,7 @@ class ApiServerSpec extends SparkSpec {
       assert(gen(call("GET", "").body()) < 8)
       // end-state identity: the maintained artifacts equal a fresh
       // rebuild of the final corpus (the soak's correctness gate)
-      val art2 = java.nio.file.Files.createTempDirectory("api_soak_fresh").toString
+      val art2 = tempDir("api_soak_fresh")
       val l = graft.operators.VectorOps
         .readLayoutGeometry(s"$art/emb_probe_layout").get._1
       graft.operators.TextDedup.writeDedupArtifacts(spark, data, art2,

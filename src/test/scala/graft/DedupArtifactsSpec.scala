@@ -10,7 +10,7 @@ import graft.operators.{DedupMaintenance, TextDedup, TrainingMix, VectorOps}
 class DedupArtifactsSpec extends SparkSpec {
 
   private lazy val art: String = {
-    val d = java.nio.file.Files.createTempDirectory("dedup_art").toString
+    val d = tempDir("dedup_art")
     TextDedup.writeDedupArtifacts(spark, sf, d)
     d
   }
@@ -19,7 +19,7 @@ class DedupArtifactsSpec extends SparkSpec {
     * its set (an sf build costs far more than the copy). */
   private def copyOfArt(prefix: String): String = {
     import java.nio.file.{Files, Paths}
-    val out = Files.createTempDirectory(prefix).toString
+    val out = tempDir(prefix)
     val src = Paths.get(art)
     val walk = Files.walk(src)
     try walk.forEach { p =>
@@ -111,7 +111,7 @@ class DedupArtifactsSpec extends SparkSpec {
     val np2 = VectorOps.nearDupPairsAuto(spark, sf, art, nprobe = 2)
     assert(!np2.inputFiles.exists(_.contains("emb_probe_layout")))
     // no artifact → self-contained fallback, same result
-    val none = java.nio.file.Files.createTempDirectory("no_art").toString
+    val none = tempDir("no_art")
     val fallback = VectorOps.nearDupPairsAuto(spark, sf, none)
     assert(!fallback.inputFiles.exists(_.contains("emb_probe_layout")))
     assert(rows(fallback) == rows(routed))
@@ -161,7 +161,7 @@ class DedupArtifactsSpec extends SparkSpec {
     assert(!stagedInputs(
       TextDedup.dupClustersAuto(spark, sf, art, maxRounds = 1), "clusters"))
     // no artifact at all → self-contained fallback, same result
-    val none = java.nio.file.Files.createTempDirectory("no_text_art").toString
+    val none = tempDir("no_text_art")
     val fb = TextDedup.dupClustersAuto(spark, sf, none)
     assert(!stagedInputs(fb, "clusters"))
     assert(rows(fb) == rows(clusters))
@@ -203,7 +203,7 @@ class DedupArtifactsSpec extends SparkSpec {
     assert(!stagedInputs(
       VectorOps.dupClustersAuto(spark, sf, art, maxRounds = 63), "emb_clusters"))
     // no artifact → self-contained fallback, same result
-    val none = java.nio.file.Files.createTempDirectory("no_art3").toString
+    val none = tempDir("no_art3")
     assert(!stagedInputs(TextDedup.nearDupPairsAuto(spark, sf, none), "pairs"))
     assert(rows(TextDedup.nearDupPairsAuto(spark, sf, none)) == rows(pairs))
     assert(!stagedInputs(VectorOps.dupClustersAuto(spark, sf, none), "emb_clusters"))
@@ -248,7 +248,7 @@ class DedupArtifactsSpec extends SparkSpec {
     assert(!stagedInputs(
       TextDedup.substringSpansAuto(spark, sf, art, maxDf = 50), "spans"))
     // no artifact → self-contained fallback, same result
-    val none = java.nio.file.Files.createTempDirectory("no_span_art").toString
+    val none = tempDir("no_span_art")
     val fb = TextDedup.substringSpansAuto(spark, sf, none)
     assert(!stagedInputs(fb, "spans"))
     assert(rows(fb) == rows(spans))
@@ -274,7 +274,7 @@ class DedupArtifactsSpec extends SparkSpec {
     assert(stagedInputs(hi, "band_index"))
     assert(rows(hi) == rows(TextDedup.screenIncrement(spark, sf, 0.7)))
     // no artifact → self-contained fallback, same result
-    val none = java.nio.file.Files.createTempDirectory("no_screen_art").toString
+    val none = tempDir("no_screen_art")
     val fb = TextDedup.screenIncrementAuto(spark, sf, none)
     assert(!stagedInputs(fb, "band_index"))
     assert(rows(fb) == rows(routed))
@@ -338,11 +338,11 @@ class DedupArtifactsSpec extends SparkSpec {
   test("fingerprint skip: unchanged inputs reuse the staged artifacts; " +
       "changed inputs or params rebuild") {
     // private input copy — the fixture dirs are read-only and shared
-    val in = java.nio.file.Files.createTempDirectory("dedup_fp_in").toString
+    val in = tempDir("dedup_fp_in")
     for (t <- Seq("documents.parquet", "embeddings.parquet"))
       java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/$t"),
         java.nio.file.Paths.get(s"$in/$t"))
-    val out = java.nio.file.Files.createTempDirectory("dedup_fp_art").toString
+    val out = tempDir("dedup_fp_art")
     assert(TextDedup.writeDedupArtifacts(spark, in, out), "first build runs")
     val firstPairs = rows(TextDedup.stagedPairs(spark, out).orderBy("doc_a", "doc_b"))
     // unchanged input → skip, and the staged results are byte-for-byte live
@@ -457,8 +457,8 @@ class DedupArtifactsSpec extends SparkSpec {
     val boiler = (0 until 22).map(i => s"b$i").mkString(" ")
     def uniq(tag: String) = (0 until 12).map(j => s"${tag}_$j").mkString(" ")
     val texts = (1 to 10).map(i => i.toLong -> s"$boiler ${uniq(s"u$i")}")
-    val in = java.nio.file.Files.createTempDirectory("screen_common_in").toString
-    val out = java.nio.file.Files.createTempDirectory("screen_common_art").toString
+    val in = tempDir("screen_common_in")
+    val out = tempDir("screen_common_art")
     import spark.implicits._
     texts.map { case (id, t) => (id, t, "en", "synthetic", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -525,7 +525,7 @@ class DedupArtifactsSpec extends SparkSpec {
       "never the param-coupled ones") {
     def stagedInputs(df: DataFrame, table: String): Boolean =
       df.inputFiles.exists(_.contains(s"/$table/"))
-    val art2 = java.nio.file.Files.createTempDirectory("paramfree_art").toString
+    val art2 = tempDir("paramfree_art")
     assert(TextDedup.writeDedupArtifacts(spark, sf, art2,
       minJaccard = 0.6, maxDf = 50))
     val spans = TextDedup.substringSpansAuto(spark, sf, art2)
@@ -563,7 +563,7 @@ class DedupArtifactsSpec extends SparkSpec {
     assert(rows(scr) == rows(
       VectorOps.screenIncrementOverLayout(spark, sf, s"$art/emb_probe_layout")))
     // no artifact → the explicit restage-and-join fallback, same result
-    val none = java.nio.file.Files.createTempDirectory("no_ivf_art").toString
+    val none = tempDir("no_ivf_art")
     val fb = VectorOps.nearDupPairsIvfAuto(spark, sf, none)
     assert(rows(fb) == rows(ivf))
     val fbScr = VectorOps.screenIncrementLayoutAuto(spark, sf, none)
@@ -594,7 +594,7 @@ class DedupArtifactsSpec extends SparkSpec {
     assert(rows(cappedAuto) ==
       rows(TextDedup.minhashLshPairs(spark, sf, maxBucket = 4)))
     // no artifact → self-contained fallback, same result
-    val none = java.nio.file.Files.createTempDirectory("no_lsh_art").toString
+    val none = tempDir("no_lsh_art")
     val fb = TextDedup.minhashLshPairsAuto(spark, sf, none)
     assert(!stagedInputs(fb, "band_index"))
     assert(rows(fb) == rows(routed))

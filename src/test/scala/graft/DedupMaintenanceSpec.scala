@@ -14,9 +14,6 @@ import graft.operators.{DedupMaintenance, TextDedup, VectorOps}
 class DedupMaintenanceSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).toString
-
   // ---- synthetic corpus with engineered duplicates ----
   // texts: 25 unique words per doc; a near-dup copies a text and
   // replaces the last 2 words (3-gram jaccard ≈ 0.7)
@@ -106,14 +103,14 @@ class DedupMaintenanceSpec extends SparkSpec {
   private final class SharedBase(write: String => Seq[(Option[java.io.File],
                                                       Option[java.io.File])]) {
     lazy val (data, art, slices) = {
-      val d = tmp("dm_base_data"); val a = tmp("dm_base_art")
+      val d = tempDir("dm_base_data"); val a = tempDir("dm_base_art")
       val sl = write(d)
       assert(DedupMaintenance.update(spark, d, a) == "full")
       (d, a, sl)
     }
     /** A fresh (data, art) copy, its slices' part files mapped into it. */
     def copy(): (String, String, Seq[(Option[java.io.File], Option[java.io.File])]) = {
-      val d = tmp("dm_data"); val a = tmp("dm_art")
+      val d = tempDir("dm_data"); val a = tempDir("dm_art")
       copyTree(data, d); copyTree(art, a)
       def moved(f: Option[java.io.File]) = f.map(x => new java.io.File(d,
         new java.io.File(data).toPath.relativize(x.toPath).toString))
@@ -133,7 +130,7 @@ class DedupMaintenanceSpec extends SparkSpec {
     * (same path, new bytes) — the lakehouse update/delete shape the
     * increment resolves through the staged file maps. */
   private def rewriteFile(target: java.io.File, df0: DataFrame): Unit = {
-    val t = tmp("cow")
+    val t = tempDir("cow")
     // doc frames get the fixture lang the appends carry (the verdict
     // surface reads it); emb frames pass through untouched
     val df =
@@ -179,7 +176,7 @@ class DedupMaintenanceSpec extends SparkSpec {
   private def assertEqualsFreshRebuild(data: String, art: String,
                                        maxDf: Int = 100): Unit = {
     val l = VectorOps.readLayoutGeometry(s"$art/emb_probe_layout").get._1
-    val art2 = tmp("dm_fresh")
+    val art2 = tempDir("dm_fresh")
     TextDedup.writeDedupArtifacts(spark, data, art2, maxDf = maxDf,
       embNLists = l.toInt)
     assertArtifactsEqual(art, art2)
@@ -258,7 +255,7 @@ class DedupMaintenanceSpec extends SparkSpec {
 
   test("copy-on-write DELETE: dropped rows and a removed file retract " +
       "everywhere, ≡ full rebuild") {
-    val data = tmp("dm_d_data"); val art = tmp("dm_d_art")
+    val data = tempDir("dm_d_data"); val art = tempDir("dm_d_art")
     val (docA, _) = writeSlice(data, baseDocs.take(20), baseEmbFixed.take(20))
     val (_, embB) = writeSlice(data, baseDocs.drop(20), baseEmbFixed.drop(20))
     val (docC, embC) = writeSlice(data, deltaDocs, deltaEmb)
@@ -303,7 +300,7 @@ class DedupMaintenanceSpec extends SparkSpec {
 
   test("an UPWARD df-cap crossing (base ≤ maxDf < merged) reclassifies the " +
       "affected docs incrementally: stale pairs retract, ≡ full rebuild") {
-    val data = tmp("dm_x_data"); val art = tmp("dm_x_art")
+    val data = tempDir("dm_x_data"); val art = tempDir("dm_x_art")
     // docs 0,1 share every shingle of words("shared") → df = 2; maxDf=2
     // classifies them rare → pair (0,1) at jaccard 1. One more copy in
     // the delta pushes df to 3 > maxDf: every shared shingle goes
@@ -328,7 +325,7 @@ class DedupMaintenanceSpec extends SparkSpec {
 
   test("a DOWNWARD df-cap crossing (a delete drops df back under maxDf) " +
       "resurrects the pair from STAGED shingles, ≡ full rebuild") {
-    val data = tmp("dm_y_data"); val art = tmp("dm_y_art")
+    val data = tempDir("dm_y_data"); val art = tempDir("dm_y_art")
     // three copies → df = 3 > maxDf = 2 → no pairs; deleting one copy
     // drops df to 2 → docs 0,1 become rare again and the pair (0,1)
     // must APPEAR — discovered purely from the staged index rows of
@@ -351,7 +348,7 @@ class DedupMaintenanceSpec extends SparkSpec {
   test("a SPAN-df crossing (SpanMaxDf is a constant, so 100+ copies of one " +
       "boilerplate) reclassifies span groups in BOTH directions, ≡ full " +
       "rebuild") {
-    val data = tmp("dm_sx_data"); val art = tmp("dm_sx_art")
+    val data = tempDir("dm_sx_data"); val art = tempDir("dm_sx_art")
     // 99 docs share boilerplate prefix B (same offset → one span group
     // per pair, offset_delta 0): every winnowed fp of B has df = 99
     // ≤ SpanMaxDf = 100 → capped → C(99,2) span groups. Appending two
@@ -459,7 +456,7 @@ class DedupMaintenanceSpec extends SparkSpec {
     assert(marked, "fresh build must mark clean")
     // the marker short-circuits BEFORE any tombstone read: with the
     // table directory gone, a probing reader would throw PATH_NOT_FOUND
-    val saved = tmp("dm_cl_saved")
+    val saved = tempDir("dm_cl_saved")
     val tombDir = new java.io.File(art, "tombstones")
     java.nio.file.Files.move(tombDir.toPath,
       new java.io.File(saved, "tombstones").toPath)
@@ -560,7 +557,7 @@ class DedupMaintenanceSpec extends SparkSpec {
 
   test("real corpus (sf0.001): split-append increment equals the merged " +
       "full rebuild") {
-    val data = tmp("dm_r_data"); val art = tmp("dm_r_art")
+    val data = tempDir("dm_r_data"); val art = tempDir("dm_r_art")
     Tables.documents(spark, sf).filter("doc_id < 450")
       .write.parquet(s"$data/documents.parquet")
     Tables.embeddings(spark, sf).filter("vec_id < 450")
@@ -572,7 +569,7 @@ class DedupMaintenanceSpec extends SparkSpec {
       .write.mode("append").parquet(s"$data/embeddings.parquet")
     assert(DedupMaintenance.update(spark, data, art) == "incremental")
     val l = VectorOps.readLayoutGeometry(s"$art/emb_probe_layout").get._1
-    val art2 = tmp("dm_r_art2")
+    val art2 = tempDir("dm_r_art2")
     TextDedup.writeDedupArtifacts(spark, data, art2, embNLists = l.toInt)
     assertArtifactsEqual(art, art2)
     // geometry drift (round-11 advisory): the maintained layout stays
@@ -591,7 +588,7 @@ class DedupMaintenanceSpec extends SparkSpec {
 
   test("real corpus (sf0.001): a copy-on-write update of a corpus slice " +
       "equals the merged full rebuild") {
-    val data = tmp("dm_ru_data"); val art = tmp("dm_ru_art")
+    val data = tempDir("dm_ru_data"); val art = tempDir("dm_ru_art")
     // two files per table so the update touches one
     Tables.documents(spark, sf).filter("doc_id < 300").repartition(1)
       .write.mode("append").parquet(s"$data/documents.parquet")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** THE test session factory — the single place the test session is
@@ -18,10 +19,29 @@ object TestSession {
 }
 
 /** Shared local session for all suites. */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSession.session
 
   val sf = TestSession.sf
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  /** A new dir under `java.io.tmpdir`, deleted when the suite ends with
+    * what graft writes beside it: the `<dir>.lock` an artifact build
+    * takes, and the staged artifact set that routing registered queries
+    * over it as a data dir stages ([[SparkEntry.dedupArtifactsDir]]). */
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDirs.add(d)
+    d
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach { d =>
+      val art = SparkEntry.dedupArtifactsDir(d)
+      Seq(d, s"$d.lock", art, s"$art.lock").foreach(p =>
+        graft.sources.Layout.deleteRec(new java.io.File(p)))
+    } finally super.afterAll()
 
   /** A staged artifact set's manifest, and the one way specs inject
     * the state a crash or a stale build leaves behind: rewrite it. */

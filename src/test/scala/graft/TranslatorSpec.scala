@@ -28,13 +28,7 @@ class TranslatorSpec extends SparkSpec {
     for (t <- Seq("flights_raw", "passengers_raw", "baggage_raw", "users_raw"))
       spark.read.parquet(s"$d/$t").createOrReplaceTempView(t)
     // users_latest FINAL view (ReplacingMergeTree read path)
-    val mv = UsersPipes.usersMv(UsersPipes.usersRaw(spark, d))
-    operators.Dedup.latestByKey(mv, Seq("id"), col("updated_at"),
-        mv.columns.filter(_ != "id").toSeq)
-      .select("id", "name", "email", "address", "phone_number",
-        "email_verified", "onboarded", "deleted", "event_timestamp", "lang",
-        "created_at", "updated_at")
-      .createOrReplaceTempView("users_latest__final")
+    UsersPipes.usersLatestFinal(spark, d).createOrReplaceTempView("users_latest__final")
     // users_batch from the copy job
     UsersPipes.usersBatchCopy(spark, d, s"$d/users_batch")
     spark.read.parquet(s"$d/users_batch").createOrReplaceTempView("users_batch")
@@ -209,10 +203,7 @@ class TranslatorSpec extends SparkSpec {
     // restore the pg-dialect views: the session (and its temp views) is
     // shared across suites, and these names must not leak mysql schemas
     spark.read.parquet(s"$dir/users_raw").createOrReplaceTempView("users_raw")
-    val pgMv = UsersPipes.usersMv(UsersPipes.usersRaw(spark, dir))
-    operators.Dedup.latestByKey(pgMv, Seq("id"), col("updated_at"),
-        pgMv.columns.filter(_ != "id").toSeq)
-      .createOrReplaceTempView("users_latest__final")
+    UsersPipes.usersLatestFinal(spark, dir).createOrReplaceTempView("users_latest__final")
   }
 
   test("CH dialect runs through spark.sql directly via the injected parser") {
