@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import graft.operators.{Dedup, TextDedup, VectorOps}
 
@@ -74,13 +75,25 @@ object CdcStream {
   private[streaming] val valueCents: Column =
     floor(coalesce(col("value"), lit(0.0)) * 100 + 0.5).cast("long")
 
+  /** The writer of every MV stream. Its offset, source, sink and commit
+    * logs commit through [[LocalCheckpointFileManager]]: the writer sets
+    * that manager on the stream's session unless the caller has chosen
+    * one there (DESIGN.md, "Streaming commits"). */
+  private def streamWriter(df: DataFrame): DataStreamWriter[Row] = {
+    val conf = df.sparkSession.conf
+    if (conf.getOption(LocalCheckpointFileManager.Key).isEmpty)
+      conf.set(LocalCheckpointFileManager.Key, classOf[LocalCheckpointFileManager].getName)
+    df.writeStream
+  }
+
   /** The file sink of every projection-only MV: Append output (the log
     * only grows, like MergeTree parts) under an AvailableNow trigger
     * (drain what has arrived, then stop — each start is one incremental
-    * run over the checkpointed offsets). */
+    * run over the checkpointed offsets). Its logs commit through
+    * [[streamWriter]]. */
   private def appendParquet(df: DataFrame, path: String, checkpointDir: String,
                             partitionBy: String*): StreamingQuery =
-    df.writeStream
+    streamWriter(df)
       .format("parquet")
       .partitionBy(partitionBy: _*)
       .option("path", path)
@@ -93,10 +106,10 @@ object CdcStream {
     * `f` gets each micro-batch and its id. Delivery is AT-LEAST-ONCE —
     * a crash between `f`'s writes and the checkpoint commit replays the
     * batch id with the same rows — so every `f` says how it absorbs a
-    * replay. */
+    * replay. Its logs commit through [[streamWriter]]. */
   private def eachBatch(df: DataFrame, checkpointDir: String)
                        (f: (DataFrame, Long) => Unit): StreamingQuery =
-    df.writeStream
+    streamWriter(df)
       .foreachBatch(f)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())

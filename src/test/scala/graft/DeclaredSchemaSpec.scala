@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -19,7 +18,7 @@ import graft.streaming.{CdcStream, Mergeable}
   *    no Spark job once the tables exist. */
 class DeclaredSchemaSpec extends SparkSpec {
 
-  private def tmp(): String = Files.createTempDirectory("graftdecl").toString
+  private def tmp(): String = tempDir("graftdecl")
 
   private def nullable(t: DataType): DataType = t match {
     case s: StructType => StructType(s.fields.map(f =>

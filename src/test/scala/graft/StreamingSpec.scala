@@ -1,9 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-import graft.streaming.{CdcStream, Mergeable}
+import graft.streaming.{CdcStream, LocalCheckpointFileManager, Mergeable}
 import graft.Tables
 
 /** E2E CDC replay (SURVEY §5 test plan #4): events streamed in chunks
@@ -14,7 +15,7 @@ import graft.Tables
   * with its ≤15 s propagation budget. */
 class StreamingSpec extends SparkSpec {
 
-  private def tmp(): String = Files.createTempDirectory("graftstream").toString
+  private def tmp(): String = tempDir("graftstream")
 
   test("file-replay MV pipeline: FINAL view equals batch dedup; within budget") {
     val src = tmp(); val logDir = tmp() + "/log"; val ck = tmp() + "/ck"
@@ -1085,5 +1086,110 @@ class StreamingSpec extends SparkSpec {
     assert(byId(20002L) == ("near_dup", Some(17L)), byId.toString)
     assert(byId(20004L) == ("near_dup", Some(40L)), byId.toString)
     assert(Seq(20001L, 20003L, 20005L).forall(byId(_)._1 == "novel"), byId.toString)
+  }
+
+  /** A checkpoint file manager over a fresh local dir, the dir, and
+    * what the dir holds (temp files included). */
+  private def localManager(): (LocalCheckpointFileManager, String, () => Set[String]) = {
+    val d = tmp()
+    (new LocalCheckpointFileManager(new Path(d), new Configuration()), d,
+      () => new java.io.File(d).list().toSet)
+  }
+  private def commit(fm: LocalCheckpointFileManager, p: Path, text: String,
+                     overwrite: Boolean): Unit = {
+    val out = fm.createAtomic(p, overwrite)
+    out.write(text.getBytes("UTF-8"))
+    out.close()
+  }
+  private def readText(fm: LocalCheckpointFileManager, p: Path): String = {
+    val in = fm.open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  test("checkpoint manager: a first write publishes once; a second one fails and keeps the first") {
+    val (fm, d, entries) = localManager()
+    val p = new Path(d, "0")
+    assert(fm.isLocal)
+    commit(fm, p, "first", overwrite = false)
+    assert(readText(fm, p) == "first")
+    assert(entries() == Set("0"), "the temp file must be gone")
+    // HDFSMetadataLog reads this exception as "batch 0 is already committed"
+    intercept[FileAlreadyExistsException](commit(fm, p, "second", overwrite = false))
+    assert(readText(fm, p) == "first")
+    assert(entries() == Set("0"))
+  }
+
+  test("checkpoint manager: overwrite replaces the bytes and drops a stale .crc; cancel leaves nothing") {
+    val (fm, d, entries) = localManager()
+    val p = new Path(d, "state.delta")
+    // written through Hadoop's checksummed local file system, as Spark's
+    // default manager writes: the file gets a .state.delta.crc sidecar
+    val hadoop = p.getFileSystem(new Configuration())
+    val out = hadoop.create(p)
+    out.write("old bytes".getBytes("UTF-8")); out.close()
+    assert(entries() == Set("state.delta", ".state.delta.crc"))
+    commit(fm, p, "new", overwrite = true)
+    assert(entries() == Set("state.delta"))
+    // read back through the checksummed file system: a stale sidecar
+    // would fail this read
+    assert(readText(fm, p) == "new")
+
+    val q = new Path(d, "1")
+    val cancelled = fm.createAtomic(q, overwriteIfPossible = false)
+    cancelled.write("never".getBytes("UTF-8"))
+    cancelled.cancel()
+    assert(!fm.exists(q))
+    assert(entries() == Set("state.delta"), "cancel must remove the temp file")
+  }
+
+  /** The `.crc` sidecars in the four metadata logs of an MV stream. */
+  private def logCrcs(ck: String, logDir: String): Seq[String] =
+    Seq(s"$ck/offsets", s"$ck/commits", s"$ck/sources/0", s"$logDir/_spark_metadata")
+      .flatMap { d =>
+        val names = new java.io.File(d).list()
+        assert(names != null && names.contains("0"), s"$d holds no batch 0")
+        names.filter(_.endsWith(".crc")).map(n => s"$d/$n")
+      }
+
+  test("MV stream commits its metadata logs through the local checkpoint manager") {
+    val src = tmp(); val logDir = tmp() + "/log"; val ck = tmp() + "/ck"
+    Tables.events(spark, sf).filter(col("event_id") % 5 === 0).write.parquet(s"$src/chunk0")
+    CdcStream.startMv(spark, s"$src/chunk*", logDir, ck).awaitTermination()
+    assert(spark.conf.get(LocalCheckpointFileManager.Key) ==
+      classOf[LocalCheckpointFileManager].getName)
+    // Spark's default manager leaves a .N.crc beside every log file N
+    assert(logCrcs(ck, logDir).isEmpty, logCrcs(ck, logDir).toString)
+  }
+
+  test("MV stream resumes a checkpoint written by Spark's default manager") {
+    val session = spark.newSession()
+    val src = tmp(); val logDir = tmp() + "/log"; val ck = tmp() + "/ck"
+    val events = Tables.events(spark, sf)
+    def ingest(i: Int): Unit = {
+      events.filter(col("event_id") % 3 === i).write.parquet(s"$src/chunk$i")
+      CdcStream.startMv(session, s"$src/chunk*", logDir, ck).awaitTermination()
+    }
+    // a manager the caller chose is kept
+    val default = "org.apache.spark.sql.execution.streaming.checkpointing." +
+      "FileContextBasedCheckpointFileManager"
+    session.conf.set(LocalCheckpointFileManager.Key, default)
+    ingest(0)
+    assert(session.conf.get(LocalCheckpointFileManager.Key) == default)
+    assert(logCrcs(ck, logDir).size == 4)
+    session.conf.unset(LocalCheckpointFileManager.Key)
+    ingest(1)
+    ingest(2)
+    // batches 1 and 2 were committed by the local manager, after batch 0
+    Seq("offsets", "commits").foreach { log =>
+      val names = new java.io.File(s"$ck/$log").list().toSet
+      assert(Set("0", "1", "2").subsetOf(names), s"$log: $names")
+      assert(names.filter(_.endsWith(".crc")) == Set(".0.crc"), s"$log: $names")
+    }
+    // no batch lost or ingested twice: the committed log holds each event once
+    val logged = session.read.schema(CdcStream.logSchema(session)).parquet(logDir)
+      .select("event_id").collect().map(_.getLong(0)).toSeq
+    val all = events.select("event_id").collect().map(_.getLong(0)).toSeq
+    assert(logged.size == logged.distinct.size, "a batch was ingested twice")
+    assert(logged.sorted == all.sorted)
   }
 }

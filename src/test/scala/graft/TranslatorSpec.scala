@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.fixtures.CdcFixtures
@@ -22,7 +21,7 @@ class TranslatorSpec extends SparkSpec {
   private val kits = Kits.root.getPath
   private lazy val gen = CdcFixtures.generate()
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graftsql").toString
+    val d = tempDir("graftsql")
     CdcFixtures.writeAll(spark, gen, d)
     // register raw CDC logs as the datasource tables
     for (t <- Seq("flights_raw", "passengers_raw", "baggage_raw", "users_raw"))
@@ -144,15 +143,15 @@ class TranslatorSpec extends SparkSpec {
     // log, so the next copy genuinely has new events + backfill
     val all = UsersPipes.usersRaw(spark, dir)
     val cut = all.agg(expr("percentile_approx(updated_at, 0.6)")).first().getLong(0)
-    val prefixDir = Files.createTempDirectory("graftpfx").toString
+    val prefixDir = tempDir("graftpfx")
     all.filter(col("updated_at") <= cut).write.parquet(s"$prefixDir/users_raw")
-    val batchMid = Files.createTempDirectory("graftbm").toString + "/users_batch"
+    val batchMid = tempDir("graftbm") + "/users_batch"
     UsersPipes.usersBatchCopy(spark, prefixDir, batchMid)
     // translated pipe sees the mid-stream batch + the full raw log
     spark.read.parquet(batchMid).createOrReplaceTempView("users_batch")
     val translated = runPipe("users/pg", "users_batch_copy")
     // hand-built job appends its generation to a copy of the same state
-    val batch2 = Files.createTempDirectory("graftb2").toString + "/users_batch"
+    val batch2 = tempDir("graftb2") + "/users_batch"
     spark.read.parquet(batchMid).write.parquet(batch2)
     UsersPipes.usersBatchCopy(spark, dir, batch2)
     val appended = spark.read.parquet(batch2)
@@ -170,7 +169,7 @@ class TranslatorSpec extends SparkSpec {
     full.where("false").createOrReplaceTempView("users_batch")
     try {
       val translated = runPipe("users/pg", "users_batch_copy")
-      val fresh = Files.createTempDirectory("graftb0").toString + "/users_batch"
+      val fresh = tempDir("graftb0") + "/users_batch"
       UsersPipes.usersBatchCopy(spark, dir, fresh)
       val handBuilt = spark.read.parquet(fresh)
       assert(handBuilt.count() > 0)
