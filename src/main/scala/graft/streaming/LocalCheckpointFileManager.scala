@@ -76,9 +76,8 @@ object LocalCheckpointFileManager {
     override def mkdirs(p: Path): Unit = Files.createDirectories(local.pathToFile(p).toPath)
 
     override def createTempFile(p: Path): FSDataOutputStream = {
-      val f = local.pathToFile(p)
-      Files.createDirectories(f.getParentFile.toPath)
-      val file = new FileOutputStream(f)
+      mkdirs(p.getParent)
+      val file = new FileOutputStream(local.pathToFile(p))
       val forced = new OutputStream {
         override def write(b: Int): Unit = file.write(b)
         override def write(b: Array[Byte], off: Int, len: Int): Unit = file.write(b, off, len)
