@@ -1,7 +1,8 @@
 package graft.sources
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{CTERelationRef, LeafNode, LogicalPlan}
 import java.net.InetSocketAddress
 import graft.operators.{ArtifactManifest, TextDedup}
 import graft.sql.{ChSqlTranslator, PipeRunner}
@@ -26,7 +27,22 @@ import graft.sql.{ChSqlTranslator, PipeRunner}
   * unknown pipe is 404, and a bad parameter is 400.
   *
   * Status semantics verified against tb_functions.py's strict mode
-  * (raise_for_status on anything non-2xx). */
+  * (raise_for_status on anything non-2xx).
+  *
+  * Serving execution profile: every pipe fetch — built-in,
+  * parameterized or pushed — builds its DataFrame once, as the pipe
+  * defines it. When the leaves of its analyzed plan sum to at most
+  * [[ApiServer.SmallInputBytes]], that analyzed plan runs in a child
+  * session with whole-stage codegen off, expressions interpreted
+  * (`factoryMode=NO_CODEGEN`) and AQE off ([[ApiServer.SmallInputConfs]]):
+  * such a query finishes faster than Janino compiles its classes, and
+  * Spark's 100-entry codegen cache cannot hold the classes of a
+  * dashboard's endpoints, so a compiled request mostly compiles again.
+  * A larger or unsized input (Spark's default size, which is huge)
+  * runs compiled in the session that built it. Nothing is cached:
+  * each request plans and runs its query again. DESIGN.md, "Serving
+  * execution profile", has the measurements behind the three confs
+  * and the constant. */
 final class ApiServer(spark: SparkSession, sfDir: String,
                       tokens: Map[String, Set[String]],
                       rowLimit: Int = 10000,
@@ -162,7 +178,7 @@ final class ApiServer(spark: SparkSession, sfDir: String,
           case Some(p) =>
             val params = queryParams(ex)
             def render(): (Endpoints.Rendered, String) = {
-              val df = p.run(params)
+              val df = profiled(p.run(params))
               format match {
                 case "csv" => (Endpoints.renderCsv(df, rowLimit), "text/csv")
                 case "ndjson" =>
@@ -518,6 +534,24 @@ final class ApiServer(spark: SparkSession, sfDir: String,
     s
   }
 
+  /** The small-input serving profile: a child session of the server's
+    * session with [[ApiServer.SmallInputConfs]] set. */
+  private lazy val smallInput: SparkSession = {
+    val s = spark.newSession()
+    for ((k, v) <- ApiServer.SmallInputConfs) s.conf.set(k, v)
+    s
+  }
+
+  /** `df`'s analyzed plan rebound into [[smallInput]] when its leaf
+    * inputs sum to at most [[ApiServer.SmallInputBytes]]; otherwise
+    * `df` itself, run compiled in the session that built it. */
+  private def profiled(df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.analyzed
+    if (ApiServer.leafBytes(plan) <= ApiServer.SmallInputBytes)
+      GraftColumnBridge.ofRows(smallInput, plan)
+    else df
+  }
+
   private def merge(a: Map[String, Set[String]],
                     b: Map[String, Set[String]]): Map[String, Set[String]] =
     (a.keySet ++ b.keySet).map(k =>
@@ -594,6 +628,30 @@ object ApiServer {
       build(request)
     }
   }
+
+  /** The largest leaf input, in bytes, that a fetch runs in the
+    * small-input profile. Interpreted execution beats compile-and-run
+    * up to about this size and loses beyond it; DESIGN.md, "Serving
+    * execution profile", has the break-even table. */
+  private[graft] val SmallInputBytes: Long = 1L << 20
+
+  /** The small-input profile's runtime confs: no whole-stage codegen,
+    * interpreted expressions (`factoryMode` is an internal conf of
+    * Spark 4.1), and no adaptive execution, whose per-query state only
+    * adds heap for inputs this small. */
+  private[graft] val SmallInputConfs: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+    "spark.sql.adaptive.enabled" -> "false")
+
+  /** The bytes `plan` reads: the sum of its leaves' size estimates,
+    * subqueries included. A CTE reference is skipped, since its
+    * definition's leaves are counted already; a leaf Spark cannot size
+    * reports `spark.sql.defaultSizeInBytes`, which is huge. */
+  private[graft] def leafBytes(plan: LogicalPlan): BigInt =
+    plan.collectWithSubqueries {
+      case l: LeafNode if !l.isInstanceOf[CTERelationRef] => l.stats.sizeInBytes
+    }.sum
 
   /** How long `stop()` lets in-flight requests finish, per wait. */
   private val DrainSeconds = 30

@@ -468,6 +468,133 @@ class ApiServerSpec extends SparkSpec {
     assert(body.contains("""{"id":1,"maybe":null}"""), body)
   }
 
+  private def deletePipe(name: String): Unit = {
+    val r = http.send(HttpRequest.newBuilder(URI.create(
+        s"http://127.0.0.1:$port/v0/datafiles/$name.pipe"))
+      .header("Authorization", "Bearer admin_token").DELETE().build(),
+      HttpResponse.BodyHandlers.ofString())
+    assert(r.statusCode() == 200, r.body())
+  }
+
+  test("serving profile: small-input fetches of every ref_* endpoint and two " +
+      "pushed pipes are byte-identical to the compiled render, in every format") {
+    import graft.sources.Endpoints
+    val pushed = Seq(
+      "profile_users_by_lang" ->
+        """NODE users_by_lang
+          |SQL >
+          |    SELECT lang, uniqExact(id) AS users, countIf(deleted = 1) AS deleted_users,
+          |           max(updated_at) AS last_update
+          |    FROM users_latest__final
+          |    GROUP BY lang
+          |
+          |NODE endpoint
+          |SQL >
+          |    SELECT * FROM users_by_lang ORDER BY lang
+          |""".stripMargin,
+      "profile_flight_changes" ->
+        """NODE changes
+          |SQL >
+          |    SELECT toStartOfHour(updated_at) AS hour, status, count() AS changes,
+          |           uniqExact(id) AS flights
+          |    FROM flights_raw
+          |    GROUP BY hour, status
+          |
+          |NODE endpoint
+          |SQL >
+          |    SELECT * FROM changes ORDER BY hour, status
+          |""".stripMargin)
+    for ((name, text) <- pushed) {
+      val r = post(s"/v0/datafiles?name=$name.pipe", Some("admin_token"), text)
+      assert(r.statusCode() == 200, r.body())
+    }
+    try {
+      val names = SparkEntry.queries.keys.filter(_.startsWith("ref_")).toSeq.sorted ++
+        pushed.map(_._1)
+      for (name <- names) {
+        // the pipe's frame in the session that built it: compiled
+        val df = api.pipe(name).get.run(Map.empty)
+        assert(ApiServer.leafBytes(df.queryExecution.analyzed) <= ApiServer.SmallInputBytes,
+          s"$name is not a small input, so this test would not reach the profile")
+        for ((format, compiled) <- Seq(
+            "json" -> Endpoints.renderJson(df).body,
+            "csv" -> Endpoints.renderCsv(df).body,
+            "ndjson" -> Endpoints.renderNdjson(df).body)) {
+          val r = get(s"/v0/pipes/$name.$format", Some("admin_token"))
+          assert(r.statusCode() == 200, s"$name.$format: ${r.body()}")
+          assert(r.body() == compiled, s"$name.$format differs from the compiled render")
+        }
+      }
+    } finally pushed.foreach(p => deletePipe(p._1))
+  }
+
+  test("serving profile: after one warm round, a second round of the " +
+      "dashboard's refresh endpoints compiles no class") {
+    // the four endpoints one dashboard refresh fetches (dash_airport.py)
+    val refresh = Seq("ref_active_vs_missed_flights", "ref_passengers_by_flight_status",
+      "ref_baggage_by_flight_status", "ref_passenger_activity")
+    def round(): Unit = for (name <- refresh) {
+      val r = get(s"/v0/pipes/$name.json", Some("admin_token"))
+      assert(r.statusCode() == 200, s"$name: ${r.body()}")
+    }
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    round()
+    val before = compiles.getCount
+    round()
+    // fails if Spark stops honouring the internal factoryMode conf
+    assert(compiles.getCount == before,
+      s"${compiles.getCount - before} classes compiled in the second round")
+  }
+
+  test("serving profile: a pipe over a leaf larger than SmallInputBytes runs " +
+      "compiled, a small one interpreted") {
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: SparkListenerSQLExecutionStart => plans.add(s.sparkPlanInfo)
+          case _ =>
+        }
+    }
+    def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+    // the executed plan of the fetch whose Range ends at `end`; the
+    // listener bus delivers events asynchronously
+    def executed(end: Long): Seq[SparkPlanInfo] = {
+      import scala.jdk.CollectionConverters._
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      var found = Option.empty[Seq[SparkPlanInfo]]
+      while (found.isEmpty && System.nanoTime() < deadline) {
+        found = plans.asScala.map(nodes)
+          .find(_.exists(_.simpleString.contains(s"Range (0, $end,")))
+        if (found.isEmpty) Thread.sleep(50)
+      }
+      assert(found.nonEmpty, s"no executed plan over range(0, $end)")
+      found.get
+    }
+    val big = 1L << 40 // 8 TiB of leaf bytes by Range's size estimate
+    val small = 4242L
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for ((name, end) <- Seq("profile_big" -> big, "profile_small" -> small)) {
+        val pushed = post(s"/v0/datafiles?name=$name.pipe", Some("admin_token"),
+          s"""NODE endpoint
+             |SQL >
+             |    SELECT id FROM range(0, $end, 1, 2) LIMIT 3
+             |""".stripMargin)
+        assert(pushed.statusCode() == 200, pushed.body())
+        val r = get(s"/v0/pipes/$name.json", Some("admin_token"))
+        assert(r.statusCode() == 200 && r.body().contains("\"rows\":3"), r.body())
+        deletePipe(name)
+      }
+      def compiled(plan: Seq[SparkPlanInfo]) =
+        plan.exists(_.nodeName.startsWith("WholeStageCodegen"))
+      assert(compiled(executed(big)), "the large input was not whole-stage compiled")
+      assert(!compiled(executed(small)), "the small input was whole-stage compiled")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("control plane: bad pushes 400 at POST time, not first fetch") {
     // unresolvable table
     val bad = "NODE n0\nSQL >\n    SELECT * FROM no_such_table\n"

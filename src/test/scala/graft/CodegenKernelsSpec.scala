@@ -17,6 +17,10 @@ import org.apache.spark.sql.functions._
   *  2. the containing stage IS whole-stage-codegen'd (the point of the
   *     change — a regression back to fallback keeps values green but
   *     kills the fusion).
+  *
+  * It also pins each kernel's interpreted `eval`, VectorDot and
+  * SubspaceDist included, to the same bits as its generated code: the
+  * HTTP server runs small inputs interpreted.
   */
 class CodegenKernelsSpec extends SparkSpec {
   import org.apache.spark.sql.GraftColumnBridge.{column, expression}
@@ -119,6 +123,45 @@ class CodegenKernelsSpec extends SparkSpec {
       "WinnowFingerprints projection fell out of whole-stage codegen")
     assert(wsCodegen(df.select(col("sp"))),
       "WinnowSpans projection fell out of whole-stage codegen")
+  }
+
+  test("every native kernel's eval is bit-identical to its generated code") {
+    // the HTTP server runs small inputs with these confs, so there each
+    // kernel's eval runs instead of its doGenCode
+    val interpreted = spark.newSession()
+    for ((k, v) <- graft.sources.ApiServer.SmallInputConfs) interpreted.conf.set(k, v)
+    // non-foldable float vectors with signs, fractions and a zero
+    val vec =
+      "transform(sequence(0, 7), j -> cast(sin(length(s) * 7 + j) * (j - 3) as float))"
+    val df = corpus.selectExpr("s", s"$vec AS a", s"reverse($vec) AS b",
+        "split(s, ' ') AS t")
+      .select(
+        column(Md5Low64(expression(col("s")))).as("md5_low64"),
+        column(Md5Words32(expression(col("s")))).as("md5_words32"),
+        column(SimHash64(expression(col("t")))).as("simhash64"),
+        column(WinnowFingerprints(expression(col("s")), 5, 4)).as("winnow_fp"),
+        column(WinnowSpans(expression(col("s")), 5, 4)).as("winnow_spans"),
+        column(VectorDot(expression(col("a")), expression(col("b")))).as("vector_dot"),
+        column(SubspaceDist(expression(col("a")), expression(col("b")), 2, 4))
+          .as("subspace_dist"))
+    assert(wsCodegen(df), "the generated-code side fell out of whole-stage codegen")
+    val evaluated = org.apache.spark.sql.GraftColumnBridge
+      .ofRows(interpreted, df.queryExecution.analyzed)
+    assert(evaluated.queryExecution.executedPlan
+      .collectFirst { case w: WholeStageCodegenExec => w }.isEmpty)
+    // doubles compared by bits: == would equate 0.0 with -0.0
+    def bits(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case r: org.apache.spark.sql.Row => r.toSeq.map(bits)
+      case xs: Seq[_] => xs.map(bits)
+      case x => x
+    }
+    val want = df.collect().map(bits)
+    val got = evaluated.collect().map(bits)
+    assert(want.length == 64)
+    for ((name, i) <- df.columns.zipWithIndex)
+      assert(got.map(_.asInstanceOf[Seq[Any]](i)).toSeq ==
+        want.map(_.asInstanceOf[Seq[Any]](i)).toSeq, s"$name: eval differs from doGenCode")
   }
 
   test("the native Column helpers build their expressions without a name lookup") {

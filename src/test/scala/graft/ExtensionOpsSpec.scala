@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.pipes.{CdcPipes, TpchPipes, UsersPipes}
 import graft.operators.{TextAnalysis, TrainingMix}
@@ -14,7 +13,7 @@ import graft.operators.{TextAnalysis, TrainingMix}
 class ExtensionOpsSpec extends SparkSpec {
 
   private lazy val cdcDir: String = {
-    val d = Files.createTempDirectory("graftscd2").toString
+    val d = tempDir("graftscd2")
     graft.fixtures.CdcFixtures.writeAll(spark, graft.fixtures.CdcFixtures.generate(), d)
     d
   }

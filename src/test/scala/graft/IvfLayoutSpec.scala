@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.operators.VectorOps
 
 /** The persisted IVF layout and its partition-pruned search: storage
@@ -10,7 +9,7 @@ import graft.operators.VectorOps
 class IvfLayoutSpec extends SparkSpec {
 
   private lazy val layout: String = {
-    val d = Files.createTempDirectory("graftivf").toString
+    val d = tempDir("graftivf")
     VectorOps.writeIvfLayout(spark, sf, d)
     d
   }

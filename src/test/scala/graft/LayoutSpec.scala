@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.Layout
 import graft.operators.Dedup
@@ -10,7 +9,7 @@ import graft.operators.Dedup
 class LayoutSpec extends SparkSpec {
 
   test("partitioned log: yyyymm predicate prunes partitions in the plan") {
-    val path = Files.createTempDirectory("graftlayout").toString + "/log"
+    val path = tempDir("graftlayout") + "/log"
     val events = Tables.events(spark, sf)
     Layout.writeAppendLog(events, "ts", Seq("user_id", "ts"), path)
     val pruned = Layout.readLog(spark, path).filter(col("yyyymm") === 202401)
@@ -23,7 +22,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("bucketed tables: join and aggregation on the bucket key plan no exchange") {
-    val base = Files.createTempDirectory("graftbucket").toString
+    val base = tempDir("graftbucket")
     spark.sql("DROP TABLE IF EXISTS events_bucketed")
     spark.sql("DROP TABLE IF EXISTS users_bucketed")
     val e = Tables.events(spark, sf).select("event_id", "user_id", "value")
@@ -59,7 +58,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compaction preserves FINAL-view semantics and shrinks the log") {
-    val path = Files.createTempDirectory("graftcompact").toString + "/log"
+    val path = tempDir("graftcompact") + "/log"
     val events = Tables.events(spark, sf)
     Layout.writeAppendLog(events, "ts", Seq("user_id", "ts"), path)
     def finalView(p: String) =
@@ -79,7 +78,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("bloom filters land in the parquet footers for the requested column only") {
-    val path = java.nio.file.Files.createTempDirectory("graftbloom").toString + "/log"
+    val path = tempDir("graftbloom") + "/log"
     Layout.writeAppendLog(Tables.events(spark, sf), "ts", Seq("user_id", "ts"),
       path, mode = "overwrite", bloomNdv = Map("user_id" -> 1000L))
     // read a data file's footer with the bundled parquet-hadoop API:

@@ -24,7 +24,7 @@ class OperatorsSpec extends SparkSpec {
     // pathological corpus: 40 byte-identical boilerplate docs put ~40
     // rows in ONE (band, band_hash) bucket per band — the adversarial
     // shape that makes the uncapped self-join quadratic at 100 TB
-    val dir = java.nio.file.Files.createTempDirectory("lsh_cap").toString
+    val dir = tempDir("lsh_cap")
     val boiler = Seq.fill(3)(
       "the same boilerplate sentence repeated across the flood of pages")
       .mkString(" ")
@@ -60,7 +60,7 @@ class OperatorsSpec extends SparkSpec {
       "(the default serve) — capped staged == capped self-contained on " +
       "the boilerplate flood, still routed") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("lsh_cap_staged").toString
+    val dir = tempDir("lsh_cap_staged")
     val boiler = Seq.fill(3)(
       "the same boilerplate sentence repeated across the flood of pages")
       .mkString(" ")
@@ -82,7 +82,7 @@ class OperatorsSpec extends SparkSpec {
       (i, v.map(_ / n), 0)
     }.toDF("vec_id", "embedding", "label")
       .write.parquet(s"$dir/embeddings.parquet")
-    val art = java.nio.file.Files.createTempDirectory("lsh_cap_art").toString
+    val art = tempDir("lsh_cap_art")
     assert(TextDedup.writeDedupArtifacts(spark, dir, art))
     def stagedInputs(df: org.apache.spark.sql.DataFrame, t: String): Boolean =
       df.inputFiles.exists(_.contains(s"/$t/"))
@@ -170,7 +170,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("staged-shingle near-dup equals the self-contained query, no text scans") {
-    val staged = java.nio.file.Files.createTempDirectory("graftshingle").toString + "/sh"
+    val staged = tempDir("graftshingle") + "/sh"
     TextDedup.stageShingles(spark, sf, staged)
     val viaStage = TextDedup.nearDupPairsStaged(spark, staged)
     assert(viaStage.collect().map(_.toString).toSeq ==

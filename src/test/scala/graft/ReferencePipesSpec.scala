@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.fixtures.CdcFixtures
 import graft.pipes.{AirportPipes, UsersPipes}
@@ -12,7 +11,7 @@ import graft.pipes.{AirportPipes, UsersPipes}
 class ReferencePipesSpec extends SparkSpec {
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graftcdc").toString
+    val d = tempDir("graftcdc")
     CdcFixtures.writeAll(spark, gen, d)
     d
   }
@@ -57,12 +56,12 @@ class ReferencePipesSpec extends SparkSpec {
   }
 
   test("users batch copy + users_api_batch equals non-deleted source state") {
-    val batchDir = Files.createTempDirectory("graftbatch").toString + "/users_batch"
+    val batchDir = tempDir("graftbatch") + "/users_batch"
     // two copy generations: first over a prefix (simulate the hourly
     // cron mid-stream), then over everything
     val all = UsersPipes.usersRaw(spark, dir)
     val cut = all.agg(expr("percentile_approx(updated_at, 0.6)")).first().getLong(0)
-    val prefixDir = Files.createTempDirectory("graftpref").toString
+    val prefixDir = tempDir("graftpref")
     all.filter(col("updated_at") <= cut).write.parquet(s"$prefixDir/users_raw")
     UsersPipes.usersBatchCopy(spark, prefixDir, batchDir)
     UsersPipes.usersBatchCopy(spark, dir, batchDir)

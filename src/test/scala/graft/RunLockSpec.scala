@@ -1,12 +1,10 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The measurement-run lock: second acquirer is refused and told who
   * holds it; release frees it for the next run. (Production mains use
   * acquireOrDie, which is this plus exit 17 — the exit path isn't
   * testable in-JVM, the refusal decision is.) */
-class RunLockSpec extends AnyFunSuite {
+class RunLockSpec extends SparkSpec {
 
   test("second concurrent acquire is refused naming the holder; release frees") {
     // RunLock reads SPARK_GRAFT_LOCK each call; env can't be set in-JVM,
@@ -29,7 +27,7 @@ class RunLockSpec extends AnyFunSuite {
       "clamped to [cores, 2048]") {
     // the contract scale resolves to the core count (figure unchanged)
     assert(Session.shufflePartitionsFor("/root/testdata/sf0.1", 32) == 32)
-    val d = java.nio.file.Files.createTempDirectory("shuf_auto").toFile
+    val d = new java.io.File(tempDir("shuf_auto"))
     assert(Session.shufflePartitionsFor(d.toString, 4) == 4) // empty → cores
     // a sparse 2 GiB input at 128 MB/partition → 16 (scales with bytes)
     val raf = new java.io.RandomAccessFile(new java.io.File(d, "big.bin"), "rw")

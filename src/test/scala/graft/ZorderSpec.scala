@@ -24,8 +24,8 @@ class ZorderSpec extends SparkSpec {
 
   test("z-order clustered write: disjoint morton ranges, tighter boxes than naive layout") {
     val li = Tables.lineitem(spark, sf).select("l_partkey", "l_suppkey")
-    val zPath = java.nio.file.Files.createTempDirectory("zorder").toString
-    val nPath = java.nio.file.Files.createTempDirectory("naive").toString
+    val zPath = tempDir("zorder")
+    val nPath = tempDir("naive")
     Zorder.clusteredWrite(li, "l_partkey", "l_suppkey", zPath, numFiles = 8)
     li.repartition(8).write.mode("overwrite").parquet(nPath)
 
