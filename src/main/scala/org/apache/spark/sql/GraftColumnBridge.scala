@@ -23,7 +23,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * compiles against the image's pinned /opt/spark/jars (4.1.2); on a
   * Spark upgrade this file is the FIRST thing to re-verify — if the
   * converters move again, the public fallback is the extension +
-  * `call_function`, which the five named functions also support.
+  * `call_function`, which the five named functions also support; if
+  * `ofRows` moves, building the frame in the target session is.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
