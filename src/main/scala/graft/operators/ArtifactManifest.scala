@@ -1,16 +1,13 @@
 package graft.operators
 
-import java.nio.ByteBuffer
-import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
-import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
-import java.nio.file.StandardOpenOption.{CREATE, TRUNCATE_EXISTING, WRITE}
 
 /** The state of one staged dedup-artifact set
   * ([[TextDedup.writeDedupArtifacts]]), kept in ONE versioned file
-  * `out/_MANIFEST` and changed only by [[commit]]: write `_MANIFEST.tmp`,
-  * force it to disk, rename it over `_MANIFEST`. A crash therefore
+  * `out/_MANIFEST` and changed only by [[commit]] through
+  * [[graft.AtomicFile]]: write `_MANIFEST.tmp`, force it to disk,
+  * rename it over `_MANIFEST`. A crash therefore
   * leaves manifest N or manifest N+1, never a mix — the offset-log
   * discipline of Structured Streaming's exactly-once sinks. Readers
   * never look at the `.tmp` file.
@@ -76,15 +73,7 @@ object ArtifactManifest {
         s"last_update=${m.lastUpdate.getOrElse("")}") ++
         m.inputs.map(f => s"input=${f.size}\t${f.mtime}\t${f.rel}"))
         .mkString("", "\n", "\n")
-    val tmp = Paths.get(out, "_MANIFEST.tmp")
-    Files.createDirectories(tmp.getParent)
-    val ch = FileChannel.open(tmp, CREATE, WRITE, TRUNCATE_EXISTING)
-    try {
-      val buf = ByteBuffer.wrap(text.getBytes(UTF_8))
-      while (buf.hasRemaining) ch.write(buf)
-      ch.force(true)
-    } finally ch.close()
-    Files.move(tmp, path(out), ATOMIC_MOVE, REPLACE_EXISTING)
+    graft.AtomicFile.commit(path(out), text)
   }
 
   /** Read-modify-commit of an existing manifest. */

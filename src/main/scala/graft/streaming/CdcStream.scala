@@ -120,6 +120,12 @@ object CdcStream {
     * (ENGINE_PARTITION_KEY "toYYYYMM(...)", users_raw.datasource:17):
     * yyyymm directories that partition-prune incremental readers.
     *
+    * Before the stream starts, the log is merged ([[mergeLog]]) when
+    * [[MergeThreshold]] or more sink files are not yet in its merged
+    * part, so [[finalView]] reads one key-bounded part and a short tail
+    * rather than the whole history. The merge runs on the caller's
+    * thread, inside whatever serializes the caller's ingest cycles.
+    *
     * Ingestion observability rides along, the analogue of the
     * reference's per-run ingest stats: `observe` attaches named
     * aggregates (`ingest_stats`: rows_seen, rows_invalid, value_cents)
@@ -129,6 +135,7 @@ object CdcStream {
     * truth). */
   def startMv(spark: SparkSession, srcDir: String, logDir: String,
               checkpointDir: String, partitioned: Boolean = false): StreamingQuery = {
+    merge(spark, logDir, MergeThreshold)
     val mv = materializedView(readEvents(spark, srcDir)
       .observe("ingest_stats",
         count(lit(1)).as("rows_seen"),
@@ -669,11 +676,122 @@ object CdcStream {
   }
 
   /** D2 — FINAL read view over the materialized log (partitioned or
-    * not — the yyyymm layout column is not part of the row payload). */
+    * not — the yyyymm layout column is not part of the row payload).
+    *
+    * It reads the merge manifest first, then lists the log: with a
+    * committed merge it is `latestByKey(merged part ∪ the sink files the
+    * part does not cover)`, so its work is bounded by the number of keys
+    * plus the tail [[startMv]] lets grow to [[MergeThreshold]] files.
+    * With no merge, or a tail too long to list without a Spark job
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold` paths),
+    * it reads the whole log. Both give the same rows, because
+    * max-by-`(ts, event_id)` is associative and idempotent. Building it
+    * starts no Spark job. */
   def finalView(spark: SparkSession, logDir: String): DataFrame = {
-    val log = readDeclared(spark, logSchema(spark), logDir)
-    val base = if (log.columns.contains("yyyymm")) log.drop("yyyymm") else log
-    Dedup.latestByKey(base, Seq("user_id"), version, payload)
+    val rows = readMerge(logDir).flatMap { m =>
+      val base = logBase(spark, logDir)
+      val tail = sinkFiles(spark, logDir, base).filterNot(m.covered)
+      // more root paths than the threshold are listed by a Spark job
+      if (tail.size < spark.sessionState.conf.parallelPartitionDiscoveryThreshold)
+        Some(readMerged(spark, logDir, base, Some(m.part), tail))
+      else None
+    }.getOrElse {
+      val log = readDeclared(spark, logSchema(spark), logDir)
+      if (log.columns.contains("yyyymm")) log.drop("yyyymm") else log
+    }
+    Dedup.latestByKey(rows, Seq("user_id"), version, payload)
+  }
+
+  /** [[startMv]] merges the log once this many sink files are outside
+    * its merged part: the break-even of a merge against the per-read cost
+    * of an uncovered file (DESIGN.md, "Bounded FINAL"). */
+  val MergeThreshold = 8
+
+  /** What the merge manifest names: the committed part under
+    * `<logDir>/_merge`, the part it superseded (kept until the next merge
+    * commits), and the sink files whose rows the part holds, as URIs
+    * relative to the log dir. */
+  private final case class LogMerge(part: String, previous: Option[String],
+                                    covered: Set[String])
+
+  private val MergeVersion = 1
+
+  private def mergeDir(logDir: String): java.nio.file.Path =
+    java.nio.file.Paths.get(logDir, "_merge")
+
+  private def mergeManifest(logDir: String): java.nio.file.Path =
+    mergeDir(logDir).resolve("_MANIFEST")
+
+  /** The committed merge; None before the first merge, and for a
+    * manifest of another version (FINAL then reads the whole log). */
+  private def readMerge(logDir: String): Option[LogMerge] = {
+    val p = mergeManifest(logDir)
+    if (!java.nio.file.Files.exists(p)) return None
+    val kv = new String(java.nio.file.Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8)
+      .linesIterator.map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toSeq
+    val one = kv.toMap
+    if (!one.get("version").contains(MergeVersion.toString)) None
+    else one.get("part").map(LogMerge(_, one.get("previous"),
+      kv.collect { case ("covered", f) => f }.toSet))
+  }
+
+  /** The log dir as a base URI that sink files are named relative to. */
+  private def logBase(spark: SparkSession, logDir: String): java.net.URI = {
+    val p = new org.apache.hadoop.fs.Path(logDir)
+    val q = p.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(p)
+    java.net.URI.create(q.toUri.toString.stripSuffix("/") + "/")
+  }
+
+  /** The files a plain read of the log reads — the file sink's committed
+    * files, or every visible file of a log written without one — relative
+    * to `base`. Hidden `_merge` is never among them. Listing starts no
+    * job. */
+  private def sinkFiles(spark: SparkSession, logDir: String,
+                        base: java.net.URI): Seq[String] =
+    readDeclared(spark, logSchema(spark), logDir).inputFiles.toSeq
+      .map(f => base.relativize(java.net.URI.create(f)).toString)
+
+  /** The rows of a merged part and of the sink files `tail`, through the
+    * log schema (the yyyymm layout column is not read). */
+  private def readMerged(spark: SparkSession, logDir: String, base: java.net.URI,
+                         part: Option[String], tail: Seq[String]): DataFrame =
+    spark.read.schema(logSchema(spark)).parquet(
+      part.map(mergeDir(logDir).resolve(_).toString).toSeq ++
+        tail.map(f => new org.apache.hadoop.fs.Path(base.resolve(f)).toString): _*)
+
+  /** Merge the log: write `latestByKey(merged part ∪ the sink files it
+    * does not cover)` as a new part under `<logDir>/_merge`, then commit a
+    * manifest naming that part and every file it covers
+    * ([[graft.AtomicFile]]). The sink's files are never moved or
+    * deleted, so [[runCopyJob]] and every plain read of the log read what
+    * they read without merges. A part no manifest names (a crash before
+    * the commit) is never read, and the next merge deletes it; a
+    * superseded part is deleted only once a later merge commits, so a
+    * FINAL read planned over it keeps its input. One merge at a time per
+    * log: callers serialize merges as they serialize ingest. No-op when
+    * every sink file is covered. */
+  def mergeLog(spark: SparkSession, logDir: String): Unit = merge(spark, logDir, 1)
+
+  /** [[mergeLog]] when at least `minTail` sink files are uncovered. */
+  private def merge(spark: SparkSession, logDir: String, minTail: Int): Unit = {
+    val prior = readMerge(logDir)
+    val covered = prior.fold(Set.empty[String])(_.covered)
+    val base = logBase(spark, logDir)
+    val tail = sinkFiles(spark, logDir, base).filterNot(covered)
+    if (tail.size < minTail) return
+    val dir = mergeDir(logDir)
+    val keep = Set("_MANIFEST") ++ prior.toSeq.flatMap(m => m.part +: m.previous.toSeq)
+    Option(dir.toFile.listFiles).getOrElse(Array.empty[java.io.File])
+      .filterNot(f => keep(f.getName)).foreach(graft.sources.Layout.deleteRec)
+    val part = f"part-${prior.fold(0)(_.part.stripPrefix("part-").toInt) + 1}%05d"
+    Dedup.latestByKey(readMerged(spark, logDir, base, prior.map(_.part), tail),
+        Seq("user_id"), version, payload)
+      .select(logSchema(spark).fieldNames.map(col): _*)
+      .write.parquet(dir.resolve(part).toString)
+    graft.AtomicFile.commit(mergeManifest(logDir),
+      (Seq(s"version=$MergeVersion", s"part=$part") ++ prior.map(m => s"previous=${m.part}") ++
+        (covered ++ tail).toSeq.sorted.map(f => s"covered=$f")).mkString("", "\n", "\n"))
+    prior.flatMap(_.previous).foreach(p => graft.sources.Layout.deleteRec(dir.resolve(p).toFile))
   }
 
   /** S5/D3 — the scheduled copy job (users_batch_copy.pipe:8-70): read

@@ -14,8 +14,9 @@ import graft.streaming.{CdcStream, Mergeable}
   *  - drift: each declaration equals the footer schema of what its
   *    writer writes (up to nullability, which Spark relaxes on read),
   *    so a writer change fails here, not in a query;
-  *  - jobs: building the fixture endpoints and the FINAL view starts
-  *    no Spark job once the tables exist. */
+  *  - jobs: building the fixture endpoints and the FINAL view, over a
+  *    whole log or a merged part and its tail, starts no Spark job once
+  *    the tables exist. */
 class DeclaredSchemaSpec extends SparkSpec {
 
   private def tmp(): String = tempDir("graftdecl")
@@ -141,5 +142,22 @@ class DeclaredSchemaSpec extends SparkSpec {
     assert(jobsDuring(CdcStream.mergedView(spark, sums, Mergeable.summing)) == 0)
     // the counter does count: an inferred read of the same log is a job
     assert(jobsDuring(spark.read.parquet(plainLog)) >= 1)
+  }
+
+  test("building FINAL over a merged log and its tail starts no Spark job") {
+    for (partitioned <- Seq(false, true)) {
+      val src = tmp(); val log = tmp() + "/log"; val ck = tmp() + "/ck"
+      def ingest(i: Int): Unit = {
+        Tables.events(spark, sf).filter(col("event_id") % 40 === i * 20)
+          .select(CdcStream.eventSchema.fieldNames.map(col): _*)
+          .coalesce(1).write.parquet(s"$src/c$i")
+        CdcStream.startMv(spark, s"$src/c*", log, ck, partitioned).awaitTermination()
+      }
+      ingest(0)
+      CdcStream.mergeLog(spark, log)
+      ingest(1) // a file the merged part does not cover
+      assert(new java.io.File(s"$log/_merge/_MANIFEST").isFile)
+      assert(jobsDuring(CdcStream.finalView(spark, log)) == 0, s"partitioned=$partitioned")
+    }
   }
 }

@@ -1192,4 +1192,199 @@ class StreamingSpec extends SparkSpec {
     assert(logged.size == logged.distinct.size, "a batch was ingested twice")
     assert(logged.sorted == all.sorted)
   }
+
+  /** Seeded CDC batches for the bounded-FINAL tests. Each batch holds
+    * fresh in-order events, redeliveries (an earlier event sent again
+    * unchanged) and late events (a new event whose ts lies up to 30
+    * minutes behind the clock), over 12 users and across a month
+    * boundary, so the partitioned log has two yyyymm directories.
+    * `truth` is the latest event per user by (ts, event_id) of all that
+    * was sent, as the FINAL row. */
+  private class CdcGen(seed: Long) {
+    import StreamingSpec.CdcEv
+    private val rnd = new scala.util.Random(seed)
+    private val t0 = java.time.LocalDateTime.parse("2024-05-31T23:00:00")
+    private var clock = 0L
+    private var nextId = 1L
+    val sent = scala.collection.mutable.ArrayBuffer.empty[CdcEv]
+
+    def event(user: Long, ts: java.time.LocalDateTime, id: Long = nextId): CdcEv = {
+      if (id >= nextId) nextId = id + 1
+      val k = rnd.nextInt(5)
+      CdcEv(id, ts, user, Seq("click", "view", "purchase")(rnd.nextInt(3)),
+        if (rnd.nextInt(10) == 0) None else Some(rnd.nextInt(10000) / 100.0),
+        s"""{"k": $k}""")
+    }
+
+    def batch(n: Int = 40): Seq[CdcEv] = {
+      val out = (0 until n).map { _ =>
+        val kind = rnd.nextDouble()
+        if (kind < 0.1 && sent.nonEmpty) sent(rnd.nextInt(sent.size))
+        else {
+          clock += 1 + rnd.nextInt(60)
+          val late = if (kind < 0.25) rnd.nextInt(1800) else 0
+          event(rnd.nextInt(12), t0.plusSeconds(clock - late))
+        }
+      }
+      sent ++= out
+      out
+    }
+
+    def send(evs: CdcEv*): Seq[CdcEv] = { sent ++= evs; evs }
+
+    def truth: Map[Long, StreamingSpec.FinalRow] = StreamingSpec.latest(sent.toSeq)
+  }
+
+  private def finalRows(df: org.apache.spark.sql.DataFrame): Set[StreamingSpec.FinalRow] =
+    df.select("user_id", "event_id", "ts", "event_type", "value", "prop_k").collect()
+      .map(r => StreamingSpec.FinalRow(r.getLong(0), r.getLong(1),
+        r.getAs[java.time.LocalDateTime](2), r.getString(3), r.getDouble(4), r.getInt(5)))
+      .toSet
+
+  /** FINAL without merges: latest-by-key over a plain read of the log,
+    * which never reads the hidden `_merge` dir. */
+  private def unmergedFinal(logDir: String) = {
+    val log = spark.read.schema(CdcStream.logSchema(spark)).parquet(logDir)
+    operators.Dedup.latestByKey(if (log.columns.contains("yyyymm")) log.drop("yyyymm") else log,
+      Seq("user_id"), struct(col("ts"), col("event_id")),
+      Seq("event_id", "ts", "event_type", "value", "prop_k"))
+  }
+
+  /** One ingest cycle: `evs` land as one source file, then the MV
+    * stream runs once (merging first when the tail is long enough). */
+  private def ingestCycle(src: String, logDir: String, ck: String, cycle: Int,
+                          evs: Seq[StreamingSpec.CdcEv], partitioned: Boolean = false): Unit = {
+    import spark.implicits._
+    evs.toDF().select(CdcStream.eventSchema.fieldNames.map(col): _*)
+      .coalesce(1).write.parquet(f"$src/batch_$cycle%03d")
+    CdcStream.startMv(spark, s"$src/batch_*", logDir, ck, partitioned).awaitTermination()
+  }
+
+  private def parts(logDir: String): Set[String] =
+    Option(new java.io.File(logDir, "_merge").list()).fold(Set.empty[String])(
+      _.filter(_.startsWith("part-")).toSet)
+
+  test("bounded FINAL: with and without merges FINAL equals the generator truth, " +
+      "plain and partitioned, under redelivery, lateness and watermark ties") {
+    import StreamingSpec.FinalRow
+    for (partitioned <- Seq(false, true)) {
+      val gen = new CdcGen(if (partitioned) 2 else 1)
+      val src = tmp(); val logDir = tmp() + "/log"; val ck = tmp() + "/ck"
+      val snapDir = tmp() + "/snap"
+      var replay = Map.empty[Long, FinalRow]
+      var partMax: Option[FinalRow] = None
+      var sinceMerge = 0
+      for (cycle <- 1 to 10) {
+        // after a merge: a late event tying the part's max ts with a
+        // lower event_id (it loses), then one with a higher event_id (it wins)
+        val ties = partMax.toSeq.flatMap { m =>
+          if (sinceMerge == 1) gen.send(gen.event(m.user_id, m.ts, -cycle.toLong))
+          else if (sinceMerge == 2) gen.send(gen.event(m.user_id, m.ts))
+          else Nil
+        }
+        ingestCycle(src, logDir, ck, cycle, gen.batch() ++ ties, partitioned)
+        sinceMerge += 1
+        val truth = gen.truth
+        if (Set(1, 3, 8)(cycle)) {
+          CdcStream.mergeLog(spark, logDir)
+          partMax = Some(truth.values.maxBy(r =>
+            (r.ts.toEpochSecond(java.time.ZoneOffset.UTC), r.event_id)))
+          sinceMerge = 0
+        }
+        val what = s"partitioned=$partitioned cycle $cycle"
+        assert(finalRows(CdcStream.finalView(spark, logDir)) == truth.values.toSet, what)
+        assert(finalRows(unmergedFinal(logDir)) == truth.values.toSet, what)
+        if (cycle % 3 == 0) {
+          // the copy job's watermark rule, replayed over everything sent
+          CdcStream.runCopyJob(spark, logDir, snapDir)
+          replay =
+            if (replay.isEmpty) truth
+            else {
+              val wm = replay.values.map(_.ts).max
+              replay ++ StreamingSpec.latest(gen.sent.toSeq.filter(!_.ts.isBefore(wm)))
+            }
+          assert(finalRows(CdcStream.readSnapshot(spark, snapDir)) == replay.values.toSet, what)
+        }
+      }
+      assert(parts(logDir).nonEmpty)
+      if (partitioned)
+        assert(new java.io.File(logDir).list().count(_.startsWith("yyyymm=")) == 2)
+    }
+  }
+
+  test("bounded FINAL: a part without its manifest commit is never read; " +
+      "the next merge removes it, and a superseded part outlives one later merge") {
+    val gen = new CdcGen(3)
+    val src = tmp(); val logDir = tmp() + "/log"; val ck = tmp() + "/ck"
+    ingestCycle(src, logDir, ck, 1, gen.batch())
+    CdcStream.mergeLog(spark, logDir)
+    assert(parts(logDir) == Set("part-00001"))
+    // a crash after writing the next part, before its manifest commit:
+    // a part with a row that would win, and a torn manifest temp file
+    import spark.implicits._
+    Seq(StreamingSpec.CdcEv(1L << 40, java.time.LocalDateTime.parse("2030-01-01T00:00:00"),
+        0L, "crash", Some(1.0), """{"k": 1}"""))
+      .toDF().transform(CdcStream.materializedView)
+      .select(CdcStream.logSchema(spark).fieldNames.map(col): _*)
+      .write.parquet(s"$logDir/_merge/part-00002")
+    java.nio.file.Files.write(java.nio.file.Paths.get(logDir, "_merge", "_MANIFEST.tmp"),
+      "version=1\npart=part-00002\n".getBytes("UTF-8"))
+    assert(finalRows(CdcStream.finalView(spark, logDir)) == gen.truth.values.toSet)
+
+    // a FINAL read planned over part-00001
+    val inFlight = CdcStream.finalView(spark, logDir)
+    val before = gen.truth.values.toSet
+    ingestCycle(src, logDir, ck, 2, gen.batch())
+    CdcStream.mergeLog(spark, logDir)
+    assert(parts(logDir) == Set("part-00001", "part-00002"))
+    assert(finalRows(CdcStream.finalView(spark, logDir)) == gen.truth.values.toSet)
+    assert(finalRows(inFlight) == before)
+    ingestCycle(src, logDir, ck, 3, gen.batch())
+    CdcStream.mergeLog(spark, logDir)
+    assert(parts(logDir) == Set("part-00002", "part-00003"))
+    assert(finalRows(CdcStream.finalView(spark, logDir)) == gen.truth.values.toSet)
+    // with every sink file covered, a merge writes nothing
+    CdcStream.mergeLog(spark, logDir)
+    assert(parts(logDir) == Set("part-00002", "part-00003"))
+  }
+
+  test("bounded FINAL: 16 concurrent FINAL reads while merges commit each see a committed state") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    val gen = new CdcGen(4)
+    val src = tmp(); val logDir = tmp() + "/log"; val ck = tmp() + "/ck"
+    ingestCycle(src, logDir, ck, 0, gen.batch())
+    CdcStream.mergeLog(spark, logDir)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    try {
+      for (round <- 1 to 3) {
+        val before = gen.truth.values.toSet
+        val reads = Seq.fill(16)(Future(finalRows(CdcStream.finalView(spark, logDir))))
+        ingestCycle(src, logDir, ck, round, gen.batch())
+        CdcStream.mergeLog(spark, logDir)
+        val after = gen.truth.values.toSet
+        for (r <- Await.result(Future.sequence(reads), 5.minutes))
+          assert(r == before || r == after, s"round $round: a read saw no committed state")
+      }
+    } finally pool.shutdown()
+  }
+}
+
+object StreamingSpec {
+  /** A CDC event in the event schema's columns. */
+  final case class CdcEv(event_id: Long, ts: java.time.LocalDateTime, user_id: Long,
+                         event_type: String, value: Option[Double], props: String)
+  /** A FINAL row: the key, then the payload. */
+  final case class FinalRow(user_id: Long, event_id: Long, ts: java.time.LocalDateTime,
+                            event_type: String, value: Double, prop_k: Int)
+
+  /** The FINAL row of each user among `evs`: latest by (ts, event_id). */
+  def latest(evs: Seq[CdcEv]): Map[Long, FinalRow] =
+    evs.groupBy(_.user_id).map { case (u, es) =>
+      val e = es.maxBy(e => (e.ts.toEpochSecond(java.time.ZoneOffset.UTC), e.ts.getNano, e.event_id))
+      u -> FinalRow(u, e.event_id, e.ts, e.event_type,
+        e.value.getOrElse(0.0), e.props.filter(_.isDigit).toInt)
+    }
 }
