@@ -33,10 +33,11 @@ object Dedup {
     */
   def latestByKey(df: DataFrame, keys: Seq[String], version: Column,
                   payload: Seq[String]): DataFrame = {
-    val packed = df.groupBy(keys.map(col): _*)
+    // one select: a withColumn per payload column analyses the plan once
+    // per column, and FINAL builds this on every read
+    df.groupBy(keys.map(col): _*)
       .agg(ChFunctions.argMax(struct(payload.map(col): _*), version).as("__row"))
-    payload.foldLeft(packed)((d, c) => d.withColumn(c, col(s"__row.$c")))
-      .drop("__row")
+      .select(keys.map(col) ++ payload.map(c => col(s"__row.$c").as(c)): _*)
   }
 
   /** D3 — incremental batch snapshot (users_batch_copy.pipe:8-70):

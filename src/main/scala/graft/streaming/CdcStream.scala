@@ -688,15 +688,16 @@ object CdcStream {
     * max-by-`(ts, event_id)` is associative and idempotent. Building it
     * starts no Spark job. */
   def finalView(spark: SparkSession, logDir: String): DataFrame = {
+    val schema = logSchema(spark)
     val rows = readMerge(logDir).flatMap { m =>
       val base = logBase(spark, logDir)
-      val tail = sinkFiles(spark, logDir, base).filterNot(m.covered)
+      val tail = sinkFiles(spark, schema, logDir, base).filterNot(m.covered)
       // more root paths than the threshold are listed by a Spark job
       if (tail.size < spark.sessionState.conf.parallelPartitionDiscoveryThreshold)
-        Some(readMerged(spark, logDir, base, Some(m.part), tail))
+        Some(readMerged(spark, schema, logDir, base, Some(m.part), tail))
       else None
     }.getOrElse {
-      val log = readDeclared(spark, logSchema(spark), logDir)
+      val log = readDeclared(spark, schema, logDir)
       if (log.columns.contains("yyyymm")) log.drop("yyyymm") else log
     }
     Dedup.latestByKey(rows, Seq("user_id"), version, payload)
@@ -746,16 +747,32 @@ object CdcStream {
     * files, or every visible file of a log written without one — relative
     * to `base`. Hidden `_merge` is never among them. Listing starts no
     * job. */
-  private def sinkFiles(spark: SparkSession, logDir: String,
+  private def sinkFiles(spark: SparkSession, schema: StructType, logDir: String,
                         base: java.net.URI): Seq[String] =
-    readDeclared(spark, logSchema(spark), logDir).inputFiles.toSeq
+    readDeclared(spark, schema, logDir).inputFiles.toSeq
       .map(f => base.relativize(java.net.URI.create(f)).toString)
+
+  /** Whether `n` or more visible files under the log dir are outside
+    * `covered`: a walk of the directory, without the sink listing's
+    * Spark relation, so an ingest cycle with nothing to merge pays
+    * almost nothing. It can count a file of a batch the sink has not
+    * committed, which only brings a merge forward: the merge itself
+    * takes the sink's listing. */
+  private def uncoveredAtLeast(logDir: String, covered: Set[String], n: Int): Boolean = {
+    def walk(dir: java.io.File, rel: String): Iterator[String] =
+      Option(dir.listFiles).iterator.flatten
+        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+        .flatMap(f =>
+          if (f.isDirectory) walk(f, s"$rel${f.getName}/") else Iterator(rel + f.getName))
+    walk(new java.io.File(logDir), "").filterNot(covered).take(n).size == n
+  }
 
   /** The rows of a merged part and of the sink files `tail`, through the
     * log schema (the yyyymm layout column is not read). */
-  private def readMerged(spark: SparkSession, logDir: String, base: java.net.URI,
-                         part: Option[String], tail: Seq[String]): DataFrame =
-    spark.read.schema(logSchema(spark)).parquet(
+  private def readMerged(spark: SparkSession, schema: StructType, logDir: String,
+                         base: java.net.URI, part: Option[String],
+                         tail: Seq[String]): DataFrame =
+    spark.read.schema(schema).parquet(
       part.map(mergeDir(logDir).resolve(_).toString).toSeq ++
         tail.map(f => new org.apache.hadoop.fs.Path(base.resolve(f)).toString): _*)
 
@@ -776,17 +793,19 @@ object CdcStream {
   private def merge(spark: SparkSession, logDir: String, minTail: Int): Unit = {
     val prior = readMerge(logDir)
     val covered = prior.fold(Set.empty[String])(_.covered)
+    if (!uncoveredAtLeast(logDir, covered, minTail)) return
+    val schema = logSchema(spark)
     val base = logBase(spark, logDir)
-    val tail = sinkFiles(spark, logDir, base).filterNot(covered)
-    if (tail.size < minTail) return
+    val tail = sinkFiles(spark, schema, logDir, base).filterNot(covered)
+    if (tail.isEmpty) return
     val dir = mergeDir(logDir)
     val keep = Set("_MANIFEST") ++ prior.toSeq.flatMap(m => m.part +: m.previous.toSeq)
     Option(dir.toFile.listFiles).getOrElse(Array.empty[java.io.File])
       .filterNot(f => keep(f.getName)).foreach(graft.sources.Layout.deleteRec)
     val part = f"part-${prior.fold(0)(_.part.stripPrefix("part-").toInt) + 1}%05d"
-    Dedup.latestByKey(readMerged(spark, logDir, base, prior.map(_.part), tail),
+    Dedup.latestByKey(readMerged(spark, schema, logDir, base, prior.map(_.part), tail),
         Seq("user_id"), version, payload)
-      .select(logSchema(spark).fieldNames.map(col): _*)
+      .select(schema.fieldNames.map(col): _*)
       .write.parquet(dir.resolve(part).toString)
     graft.AtomicFile.commit(mergeManifest(logDir),
       (Seq(s"version=$MergeVersion", s"part=$part") ++ prior.map(m => s"previous=${m.part}") ++
